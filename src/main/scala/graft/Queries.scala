@@ -964,14 +964,6 @@ object Queries {
         col("l_linenumber").asc)
       .limit(100)
 
-  /** Triangle count on the co-purchase graph (parts sharing an order),
-    * via DEGREE ORIENTATION: direct every edge toward its higher-
-    * (degree, id) endpoint, enumerate wedges only at each triangle's
-    * π-minimal vertex, close them against the oriented edge set. Out-
-    * degrees are O(√m) under this orientation, so the wedge join is
-    * bounded — the standard trick that keeps triangle counting feasible
-    * when a hub vertex would make naive wedge enumeration quadratic.
-    * The oracle counts the same triangles with the naive a<b<c SQL. */
   /** The part co-occurrence graph (a<b part pairs sharing an order) +
     * its degree table + the degree-oriented triangle count — shared by
     * q78 (triangles) and q84 (clustering coefficient). */
@@ -1112,6 +1104,14 @@ object Queries {
     (deg, triangles)
   }
 
+  /** Triangle count on the co-purchase graph (parts sharing an order),
+    * via DEGREE ORIENTATION: direct every edge toward its higher-
+    * (degree, id) endpoint, enumerate wedges only at each triangle's
+    * π-minimal vertex, close them against the oriented edge set. Out-
+    * degrees are O(√m) under this orientation, so the wedge join is
+    * bounded — the standard trick that keeps triangle counting feasible
+    * when a hub vertex would make naive wedge enumeration quadratic.
+    * The oracle counts the same triangles with the naive a<b<c SQL. */
   def q78Triangles(s: SparkSession, dir: String): DataFrame = {
     val (e, _, triangles) = partGraph(s, dir)
     e.agg(count(lit(1)).as("n_edges")).crossJoin(broadcast(triangles()))

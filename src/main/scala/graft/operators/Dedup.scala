@@ -472,32 +472,35 @@ object Dedup {
     * pairs — the form a dedup pass actually consumes (keep one doc per
     * component). Min-label propagation: every node starts labeled with
     * its own id; each round takes the min of its label and its
-    * neighbors' labels; fixpoint in O(component diameter) rounds. The
+    * neighbors' labels, hooks that minimum onto the node its label
+    * names, and follows labels' own labels (pointer doubling) — a
+    * 3,000-node path converges in a handful of rounds. The
     * convergence check is an `observe()` metric collected on the same
     * job that materializes the round (ONE job per round, no separate
-    * probe); all data stays distributed, each round is two shuffles
-    * (neighbor join + label join), and lineage is truncated per round. The fixpoint is unique, so the
-    * result is deterministic regardless of iteration count. */
+    * probe); all data stays distributed, and lineage is truncated per
+    * round. The fixpoint is unique, so the result is deterministic
+    * regardless of iteration count. Graphs of at most [[DriverMaxEdges]] edges run
+    * union-find on the driver instead, to the same labels. */
   def connectedComponents(nodes: DataFrame, idCol: String,
-      edges: DataFrame, maxIter: Int = 20): DataFrame =
-    connectedComponentsWithRounds(nodes, idCol, edges, maxIter)._1
+      edges: DataFrame): DataFrame =
+    connectedComponents(nodes, idCol, edges, DriverMaxEdges)
 
-  /** As [[connectedComponents]], also reporting the number of executed
-    * double-rounds — the quantity scale probes assert grows
-    * O(log diameter), not O(n). */
-  private[graft] def connectedComponentsWithRounds(
-      nodes: DataFrame, idCol: String,
-      edges: DataFrame, maxIter: Int = 20): (DataFrame, Int) = {
-    val adj = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      // localCheckpoint, NOT persist: r16 profiling caught the cached
-      // adjacency being RECOMPUTED — minhash chain included — on every
-      // per-round exchange despite persist() (nine ~4s map stages per
-      // q52 run; the block-"already exists" WARNs were the racing
-      // re-materializations). The eager checkpoint materializes the
-      // edge list exactly once and every round scans the stored RDD:
-      // q52 4.3 s → 2.5 s, executor task-time 35 s → 1 s.
+  /** The edge count up to which [[connectedComponents]] runs union-find
+    * on the driver instead of the distributed loop (≈ 32 MB collected). */
+  private[graft] val DriverMaxEdges = 1000000L
+
+  /** As [[connectedComponents]], with the driver union-find gate as a
+    * parameter — tests force the distributed loop with -1. */
+  private[graft] def connectedComponents(nodes: DataFrame, idCol: String,
+      edges: DataFrame, driverMaxEdges: Long): DataFrame = {
+    // localCheckpoint, NOT persist: r16 profiling caught the cached
+    // adjacency being RECOMPUTED — minhash chain included — on every
+    // per-round exchange despite persist() (nine ~4s map stages per
+    // q52 run; the block-"already exists" WARNs were the racing
+    // re-materializations). The eager checkpoint materializes the
+    // edge list exactly once and every round scans the stored RDD:
+    // q52 4.3 s → 2.5 s, executor task-time 35 s → 1 s.
+    val adj = Graph.undirected(edges, assumeDistinct = false)
       .localCheckpoint(true)
     // Bounded DRIVER union-find fast path (r17, guide §1.2 step 1):
     // the touched/candidate graphs this fixpoint runs on are usually
@@ -509,50 +512,54 @@ object Dedup {
     // 5 s executor). When the materialized edge list is small enough
     // to state exactly — the same bounded-collect contract as q221's
     // |types|² Markov chain — run union-find on the driver in O(E α)
-    // and skip the loop outright. The threshold is EDGE ROWS
-    // (collected bytes ≈ 32·E), conf-overridable for deployments, and
-    // past it the distributed O(log diameter) loop below runs
-    // unchanged, so corpus-scale graphs never touch the driver.
-    // Labels are identical by construction: union-by-min keeps every
-    // root the minimum member id, exactly the label the loop's
-    // min-propagation converges to (DedupSimilaritySpec pins the
-    // equivalence either side of the threshold).
-    val driverMaxEdges = nodes.sparkSession.conf
-      .getOption("spark.graft.cc.driverMaxEdges").map(_.toLong)
-      .getOrElse(1000000L)
+    // and skip the loop outright. The threshold is the constant
+    // DriverMaxEdges in EDGE ROWS (collected bytes ≈ 32·E), and past it
+    // the distributed loop runs, so corpus-scale graphs never touch the
+    // driver. Labels are identical by
+    // construction: union-by-min keeps every root the minimum member
+    // id, exactly the label the loop's min-propagation converges to
+    // (DedupSimilaritySpec pins the equivalence either side of the
+    // gate).
     val longIds = adj.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
-    if (longIds && driverMaxEdges > 0 && adj.count() <= driverMaxEdges) {
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      adj.collect().foreach { row =>
-        val a = row.getLong(0)
-        val b = row.getLong(1)
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a)
-        val rb = find(b)
-        if (ra < rb) parent.put(rb, ra)
-        else if (rb < ra) parent.put(ra, rb)
-      }
-      import scala.jdk.CollectionConverters._
-      val labelRows = parent.keySet().asScala.iterator
-        .map(id => (id, find(id))).toSeq
-      val labelsDf = nodes.sparkSession.createDataFrame(labelRows)
-        .toDF("id", "component")
-      val result = nodes.select(col(idCol).as("id"))
-        .join(labelsDf, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("component"), col("id")).as("component"))
-      return (result, 0)
-    }
+    val labels =
+      if (longIds && adj.count() <= driverMaxEdges) unionFindLabels(adj)
+      else propagatedLabels(adj)
+    nodes.select(col(idCol).as("id"))
+      .join(labels, Seq("id"), "left")
+      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
+  }
 
+  /** (id, component) for every vertex of the symmetric `adj`, by
+    * union-find over its rows collected to the driver. */
+  private def unionFindLabels(adj: DataFrame): DataFrame = {
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    adj.collect().foreach { row =>
+      val a = row.getLong(0)
+      val b = row.getLong(1)
+      if (!parent.containsKey(a)) parent.put(a, a)
+      if (!parent.containsKey(b)) parent.put(b, b)
+      val ra = find(a)
+      val rb = find(b)
+      if (ra < rb) parent.put(rb, ra)
+      else if (rb < ra) parent.put(ra, rb)
+    }
+    import scala.jdk.CollectionConverters._
+    val labelRows = parent.keySet().asScala.iterator
+      .map(id => (id, find(id))).toSeq
+    adj.sparkSession.createDataFrame(labelRows).toDF("id", "component")
+  }
+
+  /** (id, component) for every vertex of the symmetric `adj`, by the
+    * distributed min-label loop. */
+  private def propagatedLabels(adj: DataFrame): DataFrame = {
     // propagate only over nodes incident to an edge — a dedup candidate
     // graph is overwhelmingly singletons, which are their own component
     // by definition and don't need to ride O(diameter) join rounds.
@@ -572,26 +579,33 @@ object Dedup {
       .select(col("id"), least(col("id"), col("mindst")).as("component"))
       .localCheckpoint(true)
 
-    // One propagation + pointer-doubling pass; any extra columns (the
-    // convergence baseline `old`) pass through untouched. Labels are
-    // monotone non-increasing (least of self and neighbors; the
-    // shortcut follows a label whose own label is ≤ it), so
-    // `component === old` across ANY number of folded passes iff no
-    // pass changed anything — the double-round convergence check below
-    // cannot miss an intermediate change.
+    // One propagation + hooking + pointer-doubling pass; any extra
+    // columns (the convergence baseline `old`) pass through untouched.
+    // Labels are monotone non-increasing (every step takes a least over
+    // labels of the same component), so `component === old` across ANY
+    // number of folded passes iff no pass changed anything — the
+    // double-round convergence check below cannot miss an intermediate
+    // change.
     def pass(cur: DataFrame): DataFrame = {
       val neighborMin = adj
         .join(cur.select(col("id").as("dst"), col("component")), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("component")).as("ncomp"))
-      val propagated = cur.join(neighborMin, Seq("id"), "left")
+      val withMin = cur.join(neighborMin, Seq("id"), "left")
+      // hooking: a node's neighbor minimum is also offered to the node
+      // its label names, so a label's root learns what any of its
+      // members saw in the same pass — without it a smaller label
+      // crosses a region one hop per pass, and a path with shuffled ids
+      // needs O(n) passes (a 3,000-node path: 11,700 Spark jobs and
+      // 210 s on 4 cores, against 115 jobs and 5 s with hooking)
+      val hooks = withMin.groupBy(col("component").as("id"))
+        .agg(min(col("ncomp")).as("hook"))
+      val propagated = withMin.join(hooks, Seq("id"), "left")
         .withColumn("component",
-          least(col("component"), coalesce(col("ncomp"), col("component"))))
-        .drop("ncomp")
+          least(col("component"), col("ncomp"), col("hook")))
+        .drop("ncomp", "hook")
       // path shortcutting (pointer doubling): follow the label's own
-      // label, collapsing chains exponentially — min-propagation alone
-      // needs O(diameter) rounds, which a chain-shaped candidate graph
-      // turns into the whole job; with shortcutting it's O(log diameter)
+      // label, collapsing label chains exponentially
       val mapping = propagated
         .select(col("id").as("component"), col("component").as("cc"))
       propagated.join(mapping, Seq("component"), "left")
@@ -599,36 +613,31 @@ object Dedup {
         .drop("cc")
     }
 
-
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // TWO passes per checkpointed job: each eager localCheckpoint is
-      // a driver-side job round-trip, and at toy scale that fixed cost
-      // — not the shuffles — dominated the bench (driver r3: 35s).
-      // Folding two rounds per job halves the actions; the convergence
-      // metric rides the SAME job via observe() (a separate probe
-      // would double the jobs again).
-      val doubled = pass(pass(labels.withColumn("old", col("component"))))
-      val obs = new org.apache.spark.sql.Observation(s"cc_changed_$iter")
-      val updated = doubled
-        .observe(obs,
-          sum(when(col("component") =!= col("old"), 1L).otherwise(0L))
-            .as("changed"))
+    // TWO passes per checkpointed job: each eager localCheckpoint is a
+    // driver-side job round-trip, and at toy scale that fixed cost — not
+    // the shuffles — dominated the bench (driver r3: 35s). Folding two
+    // rounds per job halves the actions; the convergence count rides
+    // the SAME job (materialize). Labels only decrease, so the loop
+    // always reaches the fixpoint — no round cap, no partial labels.
+    // Each round's labels drop the size estimate the checkpoint
+    // inherits: a double-round references its input dozens of times
+    // through joins, so the inherited estimate compounded round over
+    // round into a number whose computation alone stalled a 200-node
+    // path graph.
+    val changed = sum(when(col("component") =!= col("old"), 1L)
+      .otherwise(0L))
+    var nChanged = 1L
+    var round = 0
+    while (nChanged > 0) {
+      round += 1
+      val (updated, n) = Graph.materialize(
+        pass(pass(labels.withColumn("old", col("component")))),
+        s"cc.round[$round]", changed)
+      labels = org.apache.spark.sql.GraftSql.withoutInheritedStats(updated)
         .select("id", "component")
-        .localCheckpoint(true)
-      // the eager checkpoint IS the action; the metric is free on it
-      // (sum over zero rows is null → 0)
-      val changed = Option(obs.get("changed"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      labels = updated
-      converged = changed == 0
-      iter += 1
+      nChanged = n
     }
-    val result = nodes.select(col(idCol).as("id"))
-      .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component"), col("id")).as("component"))
-    (result, iter)
+    labels
   }
 
   /** Incremental component maintenance — the step that finishes the
@@ -663,7 +672,7 @@ object Dedup {
     * operators' job: min-id keep IS the component label; keep-latest
     * is [[keepLatest]] partitioned by the updated component. */
   def incrementalComponents(assignments: DataFrame, newNodes: DataFrame,
-      idCol: String, batchPairs: DataFrame, maxIter: Int = 20): DataFrame = {
+      idCol: String, batchPairs: DataFrame): DataFrame = {
     val asg = assignments.select(col(idCol).as("id"), col("component"))
     // endpoints → current labels; a missing row means a NEW id (its
     // label is itself). Pairs are batch-bound, so these joins stream
@@ -683,7 +692,7 @@ object Dedup {
     val nodes = edges.select(col("id_a").as("id"))
       .unionByName(edges.select(col("id_b").as("id"))).distinct()
     // CC on the touched-LABEL graph — size ∝ batch collisions
-    val mapping = connectedComponents(nodes, "id", edges, maxIter)
+    val mapping = connectedComponents(nodes, "id", edges)
       .select(col("id").as("oldlab"), col("component").as("newlab"))
       .where(col("oldlab") =!= col("newlab"))
     val full = asg.unionByName(
@@ -718,7 +727,7 @@ object Dedup {
     * docs' cluster sizes, never the corpus (measured in
     * ProbeIncremental). */
   def deleteRepairAssignments(assignments: DataFrame, pairs: DataFrame,
-      deleteIds: DataFrame, idCol: String, maxIter: Int = 20): DataFrame = {
+      deleteIds: DataFrame, idCol: String): DataFrame = {
     val asg = assignments.select(col(idCol).as("id"), col("component"))
     require(deleteIds.columns.length == 1,
       s"deleteIds must be a single id column, got: " +
@@ -747,7 +756,7 @@ object Dedup {
       .join(del.select(col("id").as("id_a")), Seq("id_a"), "left_anti")
       .join(del.select(col("id").as("id_b")), Seq("id_b"), "left_anti")
     val repaired = connectedComponents(members.select(col("id")), "id",
-      touchedEdges, maxIter)
+      touchedEdges)
     untouched.select(col("id").as(idCol), col("component"))
       .unionByName(repaired.select(col("id").as(idCol), col("component")))
   }

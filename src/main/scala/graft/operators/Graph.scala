@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph analytics beyond connected components.
@@ -22,42 +22,83 @@ object Graph {
   val Scale: Long = 1L << 30
 
   /** The session's configured shuffle parallelism — the partition count
-    * to PIN on a pre-checkpoint repartition. An eager localCheckpoint
-    * freezes its input's runtime partitioning, and AQE coalesces a
-    * small exchange to very few partitions (correct for size-
-    * proportional work, disastrous for the expanding joins these
-    * materialized edge lists feed). Pinning to the configured count
-    * keeps the materialized layout as parallel as the session asked
-    * for — scale-adaptive via conf, not a constant. */
+    * to PIN on a pre-checkpoint repartition (see [[pinned]]). */
   private[graft] def shufflePartitions(df: DataFrame): Int =
     df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
 
-  /** Scale-GATED broadcast of a per-vertex loop frame (r17). Every
+  /** Size-GATED broadcast of a per-vertex loop frame (r17). Every
     * iterative operator joins a |V|-bounded frame (ranks, labels,
-    * frontier) against the checkpointed edge list each round, and the
-    * checkpoint's UnknownPartitioning means Spark re-exchanges and
-    * sorts the |E| edge rows per round for a sort-merge join (q86:
-    * a 2.4M-row exchange plus the round's dominant join stage, three
-    * times per query). When the vertex count — measured, not
-    * estimated — is small enough to broadcast, hint it and the edge
-    * side never moves; past the threshold (conf-overridable; default
-    * 4M rows ≈ 64 MB built) the loop keeps the shuffle join, so
-    * billion-vertex graphs never collect anything. A blanket hint
-    * would be the driver-OOM trap the degree-table comment in
-    * orientedTriangles documents; the gate is what makes it safe. */
+    * frontier) against the pinned edge list each round, and a shuffle
+    * join re-exchanges and sorts the |E| edge rows every round (see
+    * [[pinned]]; q86: a 2.4M-row exchange plus the round's dominant
+    * join stage, three times per query). When the frame's size —
+    * measured rows × the schema's row width, not an estimate — fits
+    * Spark's own `spark.sql.autoBroadcastJoinThreshold`, hint it and the
+    * edge side never moves; past it (or with the threshold at -1, which
+    * disables broadcasting as everywhere else in Spark) the loop keeps
+    * the shuffle join, so billion-vertex graphs never collect anything.
+    * A blanket hint would be the driver-OOM trap the degree-table
+    * comment in orientedTriangles documents; the gate is what makes it
+    * safe. */
   private[graft] def vertexSide(df: DataFrame, nRows: Long): DataFrame = {
-    val max = df.sparkSession.conf
-      .getOption("spark.graft.graph.broadcastVerticesMaxRows")
-      .map(_.toLong).getOrElse(4000000L)
-    if (nRows >= 0 && nRows <= max) broadcast(df) else df
+    val max = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (nRows >= 0 && nRows * df.schema.defaultSize <= max) broadcast(df)
+    else df
+  }
+
+  /** The symmetric (src, dst[, extraCols]) adjacency of an UNDIRECTED
+    * edge list (id_a, id_b[, extraCols]): every edge in both
+    * directions, deduplicated unless `assumeDistinct` — the caller
+    * proves the doubled list duplicate-free (distinct a<b pairs, or a
+    * bipartite graph with disjoint key spaces), and the distinct() would
+    * be a full wasted shuffle of the doubled edge list. */
+  private[graft] def undirected(edges: DataFrame, assumeDistinct: Boolean,
+      extraCols: String*): DataFrame = {
+    val extra = extraCols.map(col)
+    val doubled = edges
+      .select(Seq(col("id_a").as("src"), col("id_b").as("dst")) ++ extra: _*)
+      .unionByName(edges
+        .select(Seq(col("id_b").as("src"), col("id_a").as("dst")) ++ extra: _*))
+    if (assumeDistinct) doubled else doubled.distinct()
+  }
+
+  /** Materializes a loop's edge list once, hash-repartitioned on `key`
+    * to the session's shuffle parallelism. localCheckpoint, NOT persist
+    * (r16): a persisted edge list was measured being recomputed —
+    * source scan and distinct included — on every round's exchange
+    * (q82: ten ~7-9 s map stages re-emitting all 268k edges); the eager
+    * checkpoint stores the rows once. The repartition PINS the partition
+    * count: an eager checkpoint freezes its input's runtime layout, and
+    * AQE coalesces a small exchange to very few partitions (right for
+    * size-proportional work, disastrous for the expanding joins these
+    * edge lists feed). It does NOT carry the key partitioning into the
+    * rounds: the checkpointed LogicalRDD reports UnknownPartitioning, so
+    * a per-round shuffle join on `key` re-exchanges the edge rows (the
+    * q82/q86 per-round plans at sf0.01 with broadcasting off show the
+    * `Exchange hashpartitioning(src)` over the checkpoint scan every
+    * round) — which is why the vertex side is broadcast when it fits
+    * ([[vertexSide]]). */
+  private[graft] def pinned(df: DataFrame, key: String): DataFrame =
+    df.repartition(shufflePartitions(df), col(key)).localCheckpoint(true)
+
+  /** Eagerly localCheckpoints `df` (truncating the loop's lineage so
+    * every round plans O(1) work) and returns the long aggregate
+    * `signal` over its rows, observed on that SAME job — a loop's
+    * convergence or normalization scalar costs no extra Spark job. A
+    * null aggregate (a sum over zero rows) reads as 0. `name` is the
+    * round's observation name, `<op>.round[i]`. */
+  private[graft] def materialize(df: DataFrame, name: String,
+      signal: Column): (DataFrame, Long) = {
+    val obs = new Observation(name)
+    val out = df.observe(obs, signal.as("signal")).localCheckpoint(true)
+    (out, Option(obs.get("signal")).fold(0L)(_.asInstanceOf[Long]))
   }
 
   /** Exact integer floor-division for longs (Column./ is always DOUBLE
     * division). Safe because every numerator here is < 2^53: the double
     * quotient m/n can only round across an integer boundary when
     * n·q > 2^53, i.e. m > 2^53 — so cast-truncate ≡ floor exactly. */
-  private def ldiv(a: org.apache.spark.sql.Column,
-      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def ldiv(a: Column, b: Column): Column =
     (a / b).cast("long")
 
   /** `iters` rounds of damped PageRank over a DIRECTED edge list
@@ -70,18 +111,7 @@ object Graph {
       iters: Int = 10, dampingPct: Int = 85): DataFrame = {
     require(dampingPct > 0 && dampingPct < 100)
     val n = nodes.select(col(idCol).as("id")).distinct().localCheckpoint(true)
-    // materialize the edge list PRE-PARTITIONED on the join key:
-    // upstream distinct()s leave it hash-partitioned on (src, dst),
-    // which does NOT satisfy the per-round ranks⋈e join on src.
-    // localCheckpoint, NOT persist (r16): the persisted edge list was
-    // measured being recomputed — lineitem scan and distinct included —
-    // on every round's exchange (q82: ten ~7-9s map stages re-emitting
-    // all 268k edges). The eager checkpoint stores the rows once, and
-    // LogicalRDD carries the repartition's hashpartitioning(src) so the
-    // per-round join still reuses it without a new exchange.
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(shufflePartitions(edges), col("src"))
-      .localCheckpoint(true)
+    val e = pinned(edges.select(col("src"), col("dst")), "src")
     val outDeg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
     // N is a bounded driver scalar (1 row) — a literal in every round's
@@ -93,29 +123,17 @@ object Graph {
       return n.select(col("id"), lit(0L).as("pr_fixed"))
     }
 
-    // the dangling mass rides each round's checkpoint job via
-    // observe() (the kCore pattern) — a separate per-round aggregation
-    // job would double the round's job count for one scalar
-    def danglingObs(name: String) =
-      new org.apache.spark.sql.Observation(name)
-    def withDangling(df: DataFrame,
-        obs: org.apache.spark.sql.Observation): DataFrame =
-      df.observe(obs, coalesce(sum(when(col("outdeg").isNull,
-        col("pr"))), lit(0L)).as("dangling"))
-
+    // the dangling mass rides each round's checkpoint job (materialize)
+    // — a separate per-round aggregation job would double the round's
+    // job count for one scalar
+    val danglingMass = sum(when(col("outdeg").isNull, col("pr")))
     // init: every node starts at 2^30 / N (exact integer division —
     // the tiny floor loss is identical everywhere)
-    var obs = danglingObs("pr_init")
-    var ranks = withDangling(n
+    var (ranks, dangling) = materialize(n
       .select(col("id"), lit(Scale / nNodes).as("pr"))
-      .join(outDeg, Seq("id"), "left"), obs)
-      .localCheckpoint(true)
+      .join(outDeg, Seq("id"), "left"), "pagerank.round[0]", danglingMass)
 
-    var i = 0
-    while (i < iters) {
-      // the previous checkpoint job already computed this round's
-      // dangling mass
-      val dangling: Long = obs.get("dangling").asInstanceOf[Long]
+    for (i <- 1 to iters) {
       // per-edge contribution = floor(pr/outdeg); per-node inflow is an
       // exact long sum — the one shuffle of the round. The rank side is
       // |V|-bounded and nNodes is already measured: the gated broadcast
@@ -132,12 +150,12 @@ object Graph {
         lit((100L - dampingPct) * Scale / (100L * nNodes)) +
           ldiv(lit(dampingPct.toLong) * (coalesce(col("inflow"), lit(0L)) +
             lit(dangling / nNodes)), lit(100L))
-      obs = danglingObs(s"pr_round_$i")
-      ranks = withDangling(ranks
+      val (next, nextDangling) = materialize(ranks
         .join(contrib, Seq("id"), "left")
-        .select(col("id"), prNew.as("pr"), col("outdeg")), obs)
-        .localCheckpoint(true)
-      i += 1
+        .select(col("id"), prNew.as("pr"), col("outdeg")),
+        s"pagerank.round[$i]", danglingMass)
+      ranks = next
+      dangling = nextDangling
     }
     ranks.select(col("id"), col("pr").as("pr_fixed"))
   }
@@ -158,23 +176,11 @@ object Graph {
     * localCheckpoint truncates lineage exactly like pageRank. */
   def labelPropagation(edges: DataFrame, iters: Int,
       assumeDistinct: Boolean = false): DataFrame = {
-    // pre-partitioned on src for the same reason as pageRank's edge
-    // cache: the per-round neighbor-label join keys on src, and the
-    // distinct's (src, dst) partitioning would re-exchange the doubled
-    // edge list every round. assumeDistinct skips the dedup exchange
-    // entirely: when the caller's edges are distinct a<b pairs (q86's
-    // co-occurrence graph), the doubled union cannot contain
-    // duplicates — the distinct() was a full wasted shuffle of the
-    // doubled edge list
-    val doubled = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-    // localCheckpoint, NOT persist (r16): see pageRank — the persisted
-    // doubled edge list was re-derived from source on every round's
-    // join exchange; the checkpoint stores it once and keeps the
-    // src-hashpartitioning via LogicalRDD.
-    val adj = (if (assumeDistinct) doubled else doubled.distinct())
-      .repartition(shufflePartitions(edges), col("src"))
-      .localCheckpoint(true)
+    // pinned on src, the per-round neighbor-label join key.
+    // assumeDistinct: q86's co-occurrence graph is distinct a<b pairs
+    val adj = pinned(undirected(
+      edges.select(col("src").as("id_a"), col("dst").as("id_b")),
+      assumeDistinct), "src")
     var labels = adj.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
       .localCheckpoint(true)
@@ -206,101 +212,42 @@ object Graph {
     labels
   }
 
-  /** The k-core: the maximal subgraph where every vertex has degree ≥ k,
-    * found by iterative peeling — drop sub-k vertices, recompute
-    * degrees, repeat to fixpoint. The fixpoint is unique, so the result
-    * is deterministic regardless of peel order/parallelism. Each round
-    * is one degree aggregate + two semi joins; the edge count rides the
-    * checkpoint job via observe() (no separate probe job), and
-    * convergence = no edge dropped. Returns the surviving vertex ids. */
-  def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    var adj = edges
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"),
-        col("id_a").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var prevEdges = -1L
-    var curEdges = adj.count()
-    var iter = 0
-    while (curEdges != prevEdges && curEdges > 0 && iter < maxIter) {
-      val keep = adj.groupBy("src").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select(col("src").as("v"))
-      val obs = new org.apache.spark.sql.Observation(s"kcore_$iter")
-      val pruned = adj
-        .join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .observe(obs, count(lit(1)).as("n_edges"))
-        .localCheckpoint(true)
-      prevEdges = curEdges
-      curEdges = Option(obs.get("n_edges"))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      adj = pruned
-      iter += 1
-    }
-    adj.select(col("src").as("id")).distinct()
-  }
-
-  /** Bounded-round k-core peeling — `kCore` with a STATIC round count
-    * instead of the data-dependent convergence probe, the q82/q86
-    * treatment that makes the recurrence replayable as chained DuckDB
-    * CTEs (a data-dependent round count would make the oracle SQL's
-    * shape input-dependent). Each round drops every vertex whose
+  /** Bounded-round k-core peeling: each round drops every vertex whose
     * current degree is < k and keeps only edges with both endpoints
     * surviving — pure set logic, so the result is deterministic under
-    * any partitioning. With `rounds` ≥ the peel depth it IS the k-core
-    * fixpoint (GraphSpec proves equality against `kCore` on the
-    * fixture); fewer rounds give the partially-peeled subgraph, still
-    * well-defined. Returns (id, deg): surviving vertices with their
-    * degree in the surviving subgraph. Same per-round shape as kCore —
-    * one degree aggregate + two semi joins, lineage truncated per
-    * round — so the 100 TB story is kCore's. */
+    * any partitioning. The k-core is the unique fixpoint: with `rounds`
+    * ≥ the peel depth the result IS the k-core, fewer rounds give the
+    * partially-peeled subgraph, still well-defined. The round count is
+    * STATIC (the q82/q86 treatment that lets the q165 oracle replay the
+    * recurrence as chained DuckDB CTEs), but the loop stops as soon as a
+    * round drops no edge — the edge count rides each round's checkpoint
+    * job (see materialize), and rounds past the fixpoint are no-ops.
+    * Returns (id, deg): surviving vertices with their degree in the
+    * surviving subgraph. Each round is one degree aggregate + two semi
+    * joins, lineage truncated per round. */
   def kCoreRounds(edges: DataFrame, k: Int, rounds: Int,
       assumeDistinct: Boolean = false): DataFrame = {
-    val doubled = edges
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"),
-        col("id_a").as("dst")))
-    var adj = (if (assumeDistinct) doubled else doubled.distinct())
-      .localCheckpoint(true)
+    val edgeCount = count(lit(1))
+    var (adj, nEdges) = materialize(undirected(edges, assumeDistinct),
+      "kcore.round[0]", edgeCount)
+    var prevEdges = -1L
     var i = 0
-    while (i < rounds) {
+    while (i < rounds && nEdges != prevEdges) {
       val keep = adj.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("v"))
-      adj = adj
+      val (pruned, n) = materialize(adj
         .join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
-        .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
-        .localCheckpoint(true)
+        .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi"),
+        s"kcore.round[${i + 1}]", edgeCount)
+      adj = pruned
+      prevEdges = nEdges
+      nEdges = n
       i += 1
     }
     adj.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("id"), col("deg"))
   }
 
-  /** Bounded-round multi-source BFS hop distance over an UNDIRECTED
-    * edge list (id_a, id_b): each round expands the FRONTIER (nodes
-    * first reached last round) one hop and anti-joins against the
-    * already-settled set, so dist(v) = the exact hop distance for every
-    * v within `rounds` hops of any seed — unreached nodes are absent,
-    * not ∞ rows. Synchronous unweighted BFS is confluent (a node's
-    * settle round is its hop distance regardless of expansion/partition
-    * order), so the result is deterministic AND replayable by plain
-    * SQL: the q179 oracle runs the equivalent min-plus relaxation
-    * (dist_i(v) = min(dist_{i-1}(v), min over in-neighbors u of
-    * dist_{i-1}(u)+1)) as chained DuckDB CTEs — frontier BFS and
-    * min-plus agree round for round on unweighted graphs.
-    *
-    * Scale shape: the adjacency is doubled once, pre-partitioned on src
-    * and cached (the pageRank edge-cache rationale — every round's
-    * expansion joins on src); each round is ONE shuffle (the frontier
-    * join + dst distinct) plus an anti join against the settled set,
-    * and only the frontier — not the whole settled set — drives the
-    * join, so per-round work tracks the frontier size, not the total
-    * reach. Lineage: each frontier is localCheckpoint'd; the settled
-    * set is a union of those materialized frames (leaf scans, no
-    * recursive plan growth). `assumeDistinct` skips the dedup exchange
-    * when the caller proves the doubled edge list duplicate-free
-    * (bipartite disjoint key spaces, as in q165/q179). */
   /** Resource-allocation link prediction over a (node, nbr) incidence
     * list: candidate link (a, b) scores Σ_{shared nbr s} 1/deg(s) — the
     * RA index, the division-free cousin of Adamic–Adar (1/deg instead
@@ -333,30 +280,49 @@ object Graph {
       .limit(topK)
   }
 
+  /** Bounded-round multi-source BFS hop distance over an UNDIRECTED
+    * edge list (id_a, id_b): each round expands the FRONTIER (nodes
+    * first reached last round) one hop and anti-joins against the
+    * already-settled set, so dist(v) = the exact hop distance for every
+    * v within `rounds` hops of any seed — unreached nodes are absent,
+    * not ∞ rows. Synchronous unweighted BFS is confluent (a node's
+    * settle round is its hop distance regardless of expansion/partition
+    * order), so the result is deterministic AND replayable by plain
+    * SQL: the q179 oracle runs the equivalent min-plus relaxation
+    * (dist_i(v) = min(dist_{i-1}(v), min over in-neighbors u of
+    * dist_{i-1}(u)+1)) as chained DuckDB CTEs — frontier BFS and
+    * min-plus agree round for round on unweighted graphs.
+    *
+    * Scale shape: the adjacency is doubled once and pinned on src, the
+    * expansion join key; each round is ONE shuffle (the frontier
+    * join + dst distinct) plus an anti join against the settled set,
+    * and only the frontier — not the whole settled set — drives the
+    * join, so per-round work tracks the frontier size, not the total
+    * reach. Lineage: each frontier is localCheckpoint'd; the settled
+    * set is a union of those materialized frames (leaf scans, no
+    * recursive plan growth). The frontier's size rides its checkpoint
+    * job, so an exhausted frontier stops the loop without a separate
+    * emptiness probe. `assumeDistinct` skips the dedup exchange when
+    * the caller proves the doubled edge list duplicate-free (bipartite
+    * disjoint key spaces, as in q165/q179). */
   def bfsRounds(edges: DataFrame, seeds: DataFrame, rounds: Int,
       assumeDistinct: Boolean = false): DataFrame = {
-    val doubled = edges
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"),
-        col("id_a").as("dst")))
-    // localCheckpoint, NOT persist (r16): see pageRank.
-    val adj = (if (assumeDistinct) doubled else doubled.distinct())
-      .repartition(shufflePartitions(edges), col("src"))
-      .localCheckpoint(true)
-    var dist = seeds.select(col("id")).distinct()
-      .select(col("id"), lit(0L).as("dist"))
-      .localCheckpoint(true)
+    val adj = pinned(undirected(edges, assumeDistinct), "src")
+    val settled = count(lit(1))
+    var (dist, nFrontier) = materialize(seeds.select(col("id")).distinct()
+      .select(col("id"), lit(0L).as("dist")), "bfs.round[0]", settled)
     var frontier = dist
     var i = 0
-    while (i < rounds && !frontier.isEmpty) {
+    while (i < rounds && nFrontier > 0) {
       val reached = frontier
         .join(adj, col("id") === col("src"))
         .select(col("dst").as("id")).distinct()
-      val newly = reached.join(dist, Seq("id"), "left_anti")
-        .select(col("id"), lit(i + 1L).as("dist"))
-        .localCheckpoint(true)
+      val (newly, n) = materialize(reached.join(dist, Seq("id"), "left_anti")
+        .select(col("id"), lit(i + 1L).as("dist")), s"bfs.round[${i + 1}]",
+        settled)
       dist = dist.unionByName(newly)
       frontier = newly
+      nFrontier = n
       i += 1
     }
     dist
@@ -376,9 +342,16 @@ object Graph {
     *
     * Scale shape: the doubled adjacency is min-deduped per (src, dst)
     * once (the cheapest parallel edge dominates any path under
-    * min-plus), pre-partitioned on src and cached; each round is ONE
-    * shuffle (the relax join + min aggregate), lineage truncated per
-    * round. */
+    * min-plus) and pinned on src; each round is ONE shuffle (the relax
+    * join + min aggregate), lineage truncated per round. */
+  def bellmanFordRounds(edges: DataFrame, seeds: DataFrame,
+      rounds: Int): DataFrame = {
+    // parallel edges: only the cheapest can ever matter under min-plus
+    val adj = pinned(undirected(edges, assumeDistinct = true, "w")
+      .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")), "src")
+    minPlusRounds(adj, seeds, 0L, rounds, "dist", col("dist") + col("w"))
+  }
+
   /** Bounded-round TEMPORAL (time-respecting) reachability over a
     * DIRECTED edge list (src, dst, t): earliest-arrival relaxation
     * arr_i(v) = min(arr_{i-1}(v), min over edges (u,v) with
@@ -392,31 +365,36 @@ object Graph {
     * by the q186 oracle as chained CTEs. Unreached nodes are absent.
     *
     * Scale shape: identical to bellmanFordRounds — one relax shuffle
-    * per round against the pre-partitioned cached edge list (the time
-    * constraint is a join residual on the equi-join, not a range
-    * join), lineage truncated per round. Parallel (src, dst) edges at
+    * per round against the pinned edge list (the time constraint is a
+    * join residual on the equi-join, not a range join), lineage
+    * truncated per round. Parallel (src, dst) edges at
     * different times all stay: under the time constraint an earlier
     * edge is not dominated by a cheaper-looking later one. */
   def temporalReachRounds(edges: DataFrame, seeds: DataFrame,
-      startT: Long, rounds: Int): DataFrame = {
-    // localCheckpoint, NOT persist (r16): see pageRank.
-    val adj = edges.select(col("src"), col("dst"), col("t"))
-      .repartition(shufflePartitions(edges), col("src"))
+      startT: Long, rounds: Int): DataFrame =
+    minPlusRounds(pinned(edges.select(col("src"), col("dst"), col("t")),
+      "src"), seeds, startT, rounds, "arr", col("t"), col("t") >= col("arr"))
+
+  /** The synchronous min-plus relaxation shared by bellmanFordRounds and
+    * temporalReachRounds: seeds start at `start`; each round every
+    * reached node u relaxes its out-edges (src = u) that pass `usable`,
+    * offering `candidate` to dst, and value(v) = min(value(v), offers).
+    * One relax shuffle per round against the pinned adjacency, lineage
+    * truncated per round. Returns (id, value). */
+  private def minPlusRounds(adj: DataFrame, seeds: DataFrame, start: Long,
+      rounds: Int, value: String, candidate: Column,
+      usable: Column = lit(true)): DataFrame = {
+    var cur = seeds.select(col("id")).distinct()
+      .select(col("id"), lit(start).as(value))
       .localCheckpoint(true)
-    var arr = seeds.select(col("id")).distinct()
-      .select(col("id"), lit(startT).as("arr"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < rounds) {
-      val relaxed = arr.join(adj, col("id") === col("src"))
-        .where(col("t") >= col("arr"))
-        .select(col("dst").as("id"), col("t").as("arr"))
-      arr = arr.unionByName(relaxed)
-        .groupBy("id").agg(min(col("arr")).as("arr"))
+    for (_ <- 1 to rounds) {
+      val relaxed = cur.join(adj, col("id") === col("src")).where(usable)
+        .select(col("dst").as("id"), candidate.as(value))
+      cur = cur.unionByName(relaxed)
+        .groupBy("id").agg(min(col(value)).as(value))
         .localCheckpoint(true)
-      i += 1
     }
-    arr
+    cur
   }
 
   /** Bounded-round HITS (Kleinberg hubs-and-authorities) over a
@@ -431,99 +409,53 @@ object Graph {
     * rounds (the q82/q165 bounded-round treatment — a convergence test
     * would make the oracle's shape input-dependent).
     *
-    * Scale shape: the edge list is cached TWICE, pre-partitioned on
-    * src and on dst — the authority step joins on src and the hub step
-    * on dst, and a single partitioning would re-exchange the (large)
-    * edge side every half-round; 2× edge storage buys zero per-round
-    * edge shuffles, the pageRank edge-cache rationale applied to an
-    * alternating iteration. Each normalization total rides the
-    * half-round's checkpoint job via observe(). Bound: scores ≤ 2^30
+    * Scale shape: the distinct edge list is pinned once (see pinned)
+    * and both half-rounds join it — the authority step on src, the hub
+    * step on dst. A second copy pinned on dst would buy nothing: the
+    * checkpoint keeps no key partitioning, so a shuffle join re-
+    * exchanges the edge side either way. Each normalization total rides
+    * the half-round's checkpoint job (materialize). Bound: scores ≤ 2^30
     * after each normalization, so raw sums stay under 2^63 for graphs
     * with Σ-degree < 2^33 (~8B edges); the DECIMAL(38,0) product
     * covers the ·2^30 renormalization far beyond that.
     *
     * Returns (id, auth_fixed, hub_fixed), absent scores as 0. */
   def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
-    // localCheckpoint, NOT persist (r16): see pageRank. eD re-shuffles
-    // the MATERIALIZED eS rows instead of re-deriving the distinct, so
-    // the source is scanned once for both layouts.
-    val e = edges.select(col("src"), col("dst")).distinct()
-    val eS = e.repartition(shufflePartitions(edges), col("src"))
-      .localCheckpoint(true)
-    val eD = eS.repartition(shufflePartitions(edges), col("dst"))
-      .localCheckpoint(true)
+    val e = pinned(edges.select(col("src"), col("dst")).distinct(), "src")
 
     // x·2^30 DIV total — SQL's IntegralDivide (exact truncating
     // division; all values nonnegative, so ≡ floor), the product in
     // DECIMAL(38,0) (x ≤ E·2^30 already uses most of int64; ·2^30
     // again needs 38 digits). NOT decimal `/` + cast: Spark's decimal
     // division ROUNDS to the result scale, which can cross an integer
-    // boundary and diverge from the oracle's `//`.
-    def norm(xCol: String, tot: Long): org.apache.spark.sql.Column =
+    // boundary and diverge from the oracle's `//`. Empty/all-zero
+    // guard: DIV 0 would throw under ANSI; with no mass every
+    // normalized score is 0 regardless of divisor.
+    def norm(xCol: String, tot: Long): Column =
       expr(s"CAST((CAST($xCol AS DECIMAL(38,0)) * ${Scale}L)" +
-        s" DIV ${tot}L AS BIGINT)")
+        s" DIV ${math.max(tot, 1L)}L AS BIGINT)")
 
-    var hubs = eS.select(col("src").as("id")).distinct()
+    var hubs = e.select(col("src").as("id")).distinct()
       .select(col("id"), lit(Scale).as("h"))
       .localCheckpoint(true)
     var auths: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      val aObs = new org.apache.spark.sql.Observation(s"hits_a_$i")
-      val araw = eS
+    for (i <- 1 to iters) {
+      val (araw, aTot) = materialize(e
         .join(hubs.select(col("id").as("src"), col("h")), Seq("src"))
-        .groupBy(col("dst")).agg(sum(col("h")).as("ar"))
-        .observe(aObs, sum(col("ar")).as("tot"))
-        .localCheckpoint(true)
-      // empty/all-zero guard: DIV 0 would throw under ANSI; with no
-      // mass every normalized score is 0 regardless of divisor
-      val aTot = Option(aObs.get("tot")).map(_.asInstanceOf[Long])
-        .filter(_ != 0L).getOrElse(1L)
+        .groupBy(col("dst")).agg(sum(col("h")).as("ar")),
+        s"hits.round[$i].auth", sum(col("ar")))
       auths = araw.select(col("dst"), norm("ar", aTot).as("a"))
-      val hObs = new org.apache.spark.sql.Observation(s"hits_h_$i")
-      val hraw = eD
+      val (hraw, hTot) = materialize(e
         .join(auths, Seq("dst"))
-        .groupBy(col("src")).agg(sum(col("a")).as("hr"))
-        .observe(hObs, sum(col("hr")).as("tot"))
-        .localCheckpoint(true)
-      val hTot = Option(hObs.get("tot")).map(_.asInstanceOf[Long])
-        .filter(_ != 0L).getOrElse(1L)
+        .groupBy(col("src")).agg(sum(col("a")).as("hr")),
+        s"hits.round[$i].hub", sum(col("hr")))
       hubs = hraw.select(col("src").as("id"), norm("hr", hTot).as("h"))
-      i += 1
     }
-    val out = auths.select(col("dst").as("id"), col("a").as("auth_fixed"))
+    auths.select(col("dst").as("id"), col("a").as("auth_fixed"))
       .join(hubs.select(col("id"), col("h").as("hub_fixed")),
         Seq("id"), "full_outer")
       .select(col("id"), coalesce(col("auth_fixed"), lit(0L)).as("auth_fixed"),
         coalesce(col("hub_fixed"), lit(0L)).as("hub_fixed"))
       .localCheckpoint(true)
-    out
-  }
-
-  def bellmanFordRounds(edges: DataFrame, seeds: DataFrame,
-      rounds: Int): DataFrame = {
-    val doubled = edges
-      .select(col("id_a").as("src"), col("id_b").as("dst"), col("w"))
-      .unionByName(edges.select(col("id_b").as("src"),
-        col("id_a").as("dst"), col("w")))
-    // parallel edges: only the cheapest can ever matter under min-plus
-    // localCheckpoint, NOT persist (r16): see pageRank.
-    val adj = doubled.groupBy(col("src"), col("dst"))
-      .agg(min(col("w")).as("w"))
-      .repartition(shufflePartitions(edges), col("src"))
-      .localCheckpoint(true)
-    var dist = seeds.select(col("id")).distinct()
-      .select(col("id"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    var i = 0
-    while (i < rounds) {
-      val relaxed = dist.join(adj, col("id") === col("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("id").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    dist
   }
 }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Column ⇄ Expression bridge. Spark 4 moved these conversions into
   * `org.apache.spark.sql.classic.ExpressionUtils` with package-private
@@ -9,4 +10,20 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSql {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** An eagerly checkpointed frame without the size estimate its
+    * LogicalRDD inherited from the plan it materialized. Joins estimate
+    * their size as the product of their children's, so a loop that
+    * joins its own checkpointed output to itself every round compounds
+    * the estimate round over round: its digit count multiplies by the
+    * number of self-references per round until computing the estimate
+    * alone outlasts the job. Without the inherited estimate the frame
+    * counts as Spark's default size (never broadcast by estimate, as the
+    * compounded one never was). */
+  def withoutInheritedStats(checkpointed: DataFrame): DataFrame = {
+    val ds = checkpointed.asInstanceOf[classic.Dataset[Row]]
+    val r = ds.logicalPlan.asInstanceOf[LogicalRDD]
+    classic.Dataset.ofRows(ds.sparkSession, LogicalRDD(r.output, r.rdd,
+      r.outputPartitioning, r.outputOrdering, r.isStreaming)(ds.sparkSession))
+  }
 }

@@ -96,17 +96,21 @@ class DedupSimilaritySpec extends SparkSpec {
   test("connected components: zero edges -> every node its own component") {
     val nodes = (1L to 5L).toDF("id")
     val edges = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
-    // exercises the empty-label loop: the observe() metric is a sum
-    // over zero rows (null) and must read as converged, not crash
-    val cc = Dedup.connectedComponents(nodes, "id", edges)
-      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(cc.toSeq === (1L to 5L).map(i => i -> i))
+    // the distributed side exercises the empty-label loop: the observed
+    // change count is a sum over zero rows (null) and must read as
+    // converged, not crash
+    for (gate <- Seq(Dedup.DriverMaxEdges, -1L)) {
+      val cc = Dedup.connectedComponents(nodes, "id", edges, gate)
+        .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(cc.toSeq === (1L to 5L).map(i => i -> i), s"gate=$gate")
+    }
   }
 
   test("connected components == union-find on seeded random graphs") {
     val rnd = new scala.util.Random(5)
     // sparse (many components, long chains) and denser (few components)
-    for (nEdges <- Seq(80, 400)) {
+    // both sides of the driver gate: -1 forces the distributed loop
+    for (nEdges <- Seq(80, 400); gate <- Seq(Dedup.DriverMaxEdges, -1L)) {
       val n = 300
       val edgePairs = (0 until nEdges).map { _ =>
         val a = rnd.nextInt(n).toLong; val b = rnd.nextInt(n).toLong
@@ -114,7 +118,7 @@ class DedupSimilaritySpec extends SparkSpec {
       }.filter(p => p._1 != p._2).distinct
       val nodes = (0L until n.toLong).toDF("id")
       val edges = edgePairs.toDF("id_a", "id_b")
-      val got = Dedup.connectedComponents(nodes, "id", edges)
+      val got = Dedup.connectedComponents(nodes, "id", edges, gate)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
       // reference: plain union-find with min-label canonicalization
       val parent = Array.tabulate(n)(identity)
@@ -128,7 +132,7 @@ class DedupSimilaritySpec extends SparkSpec {
         val label = members.min.toLong
         members.map(m => m.toLong -> label)
       }
-      assert(got === canon, s"nEdges=$nEdges")
+      assert(got === canon, s"nEdges=$nEdges gate=$gate")
     }
   }
 
@@ -142,14 +146,30 @@ class DedupSimilaritySpec extends SparkSpec {
     }.filter(p => p._1 != p._2).distinct
     val nodes = (0L until n.toLong).toDF("id")
     val edges = edgePairs.toDF("id_a", "id_b")
-    def run(): Map[Long, Long] =
-      Dedup.connectedComponents(nodes, "id", edges)
+    def run(gate: Long): Map[Long, Long] =
+      Dedup.connectedComponents(nodes, "id", edges, gate)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val viaDriver = run() // threshold default far above 300 edges
-    val key = "spark.graft.cc.driverMaxEdges"
-    spark.conf.set(key, "0") // forces the distributed double-round loop
-    try assert(run() === viaDriver)
-    finally spark.conf.unset(key)
+    // the default gate is far above 300 edges; -1 forces the
+    // distributed double-round loop
+    assert(run(-1L) === run(Dedup.DriverMaxEdges))
+  }
+
+  test("connected components: a 3,000-node path with shuffled ids == " +
+    "union-find on both sides of the driver gate") {
+    // a path is the deepest graph for its size: the distributed loop
+    // must run to its fixpoint, not stop at a round cap with partial
+    // labels. Shuffled ids keep the minimum away from the path's end.
+    val n = 3000
+    val ids = new scala.util.Random(13).shuffle((0L until n.toLong).toVector)
+    val edges = ids.sliding(2).map(p => (p(0), p(1))).toSeq
+      .toDF("id_a", "id_b")
+    val nodes = ids.toDF("id")
+    for (gate <- Seq(Dedup.DriverMaxEdges, -1L)) {
+      val got = Dedup.connectedComponents(nodes, "id", edges, gate)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      // union-find over one path: a single component labeled by its min
+      assert(got === ids.map(_ -> 0L).toMap, s"gate=$gate")
+    }
   }
 
   test("deleteRepairAssignments == union-find over the remaining graph " +

@@ -42,13 +42,59 @@ class GraphSpec extends SparkSpec {
     "bit-exact, under 1/8/32-way partitioning") {
     val (nodes, edges) = randomGraph(120, 600, 3)
     val expected = reference(nodes, edges, iters = 8, dampingPct = 85)
-    for (parts <- Seq(1, 8, 32)) {
-      val nDf = nodes.toDF("id").repartition(parts)
-      val eDf = edges.toDF("src", "dst").repartition(parts)
-      val got = Graph.pageRank(nDf, "id", eDf, iters = 8)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === expected, s"parts=$parts")
+    // the last input turns broadcasting off, so the rank side takes the
+    // shuffle join instead of vertexSide's broadcast
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for ((parts, threshold) <- Seq((1, None), (8, None), (32, None),
+        (8, Some("-1")))) {
+      val prev = spark.conf.get(key)
+      threshold.foreach(spark.conf.set(key, _))
+      try {
+        val nDf = nodes.toDF("id").repartition(parts)
+        val eDf = edges.toDF("src", "dst").repartition(parts)
+        val got = Graph.pageRank(nDf, "id", eDf, iters = 8)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got === expected, s"parts=$parts threshold=$threshold")
+        val hinted = Graph.vertexSide(nDf, nodes.size).queryExecution
+          .analyzed.toString.contains("ResolvedHint")
+        assert(hinted === threshold.isEmpty, s"threshold=$threshold")
+      } finally spark.conf.set(key, prev)
     }
+  }
+
+  /** Sequential label propagation reference: every incident vertex
+    * starts labeled with its id; each round it adopts the most frequent
+    * label among its distinct neighbors, ties to the smallest label. */
+  private def lpaRef(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+    val nbrs = edges.flatMap(e => Seq(e, e.swap)).distinct
+      .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    var label = nbrs.map { case (v, _) => v -> v }
+    for (_ <- 1 to iters) {
+      val prev = label
+      label = nbrs.map { case (v, ns) =>
+        v -> ns.groupBy(prev).view.mapValues(_.size).toSeq
+          .minBy { case (l, c) => (-c, l) }._1 }
+    }
+    label
+  }
+
+  test("labelPropagation == sequential mode-of-neighbours reference " +
+    "(ties to the smallest label) under 1/8/32-way partitioning") {
+    // raw directed pairs: both (a, b) and (b, a) may occur, so the
+    // doubled list needs its dedup
+    val (_, edges) = randomGraph(60, 150, 61)
+    for (iters <- Seq(3, 4); parts <- Seq(1, 8, 32)) {
+      val eDf = edges.toDF("src", "dst").repartition(parts)
+      val got = Graph.labelPropagation(eDf, iters)
+        .as[(Long, Long)].collect().toMap
+      assert(got === lpaRef(edges, iters), s"iters=$iters parts=$parts")
+    }
+    // distinct a<b pairs: the doubled list is duplicate-free
+    val ab = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
+      .distinct
+    val got = Graph.labelPropagation(ab.toDF("src", "dst").repartition(8), 3,
+      assumeDistinct = true).as[(Long, Long)].collect().toMap
+    assert(got === lpaRef(ab, 3))
   }
 
   /** Sequential peeling reference for the k-core. */
@@ -65,25 +111,28 @@ class GraphSpec extends SparkSpec {
     adj.map(_._1).toSet
   }
 
-  test("kCore == sequential peeling on seeded random graphs, for " +
-    "several k, under 1/8/32-way partitioning") {
+  test("kCoreRounds(rounds >= peel depth) == sequential peeling on " +
+    "seeded random graphs, for several k, under 1/8/32-way partitioning") {
     val (_, edges0) = randomGraph(80, 300, 17)
     val edges = edges0.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .distinct
+    // every round before the fixpoint drops a vertex, so 80 rounds reach
+    // it; the loop stops as soon as a round drops nothing
+    def core(e: org.apache.spark.sql.DataFrame, k: Int): Set[Long] =
+      Graph.kCoreRounds(e, k, rounds = 80).select("id").as[Long]
+        .collect().toSet
     for (k <- Seq(2, 3, 5); parts <- Seq(1, 8, 32)) {
       val eDf = edges.toDF("id_a", "id_b").repartition(parts)
-      val got = Graph.kCore(eDf, k).as[Long].collect().toSet
-      assert(got === kCoreRef(edges, k), s"k=$k parts=$parts")
+      assert(core(eDf, k) === kCoreRef(edges, k), s"k=$k parts=$parts")
     }
     // known structure: a 4-clique with a pendant tail — the 3-core is
     // exactly the clique
     val clique = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (5L, 6L))
-    val core3 = Graph.kCore(clique.toDF("id_a", "id_b"), 3)
-      .as[Long].collect().toSet
-    assert(core3 === Set(1L, 2L, 3L, 4L))
+    assert(core(clique.toDF("id_a", "id_b"), 3) === Set(1L, 2L, 3L, 4L))
+    assert(kCoreRef(clique, 3) === Set(1L, 2L, 3L, 4L))
     // k above max degree: empty core
-    assert(Graph.kCore(clique.toDF("id_a", "id_b"), 10).count() === 0L)
+    assert(core(clique.toDF("id_a", "id_b"), 10).isEmpty)
   }
 
   test("kCoreRounds with rounds >= peel depth == kCore fixpoint (vertex " +
@@ -106,8 +155,9 @@ class GraphSpec extends SparkSpec {
       assert(fix.subsetOf(oneRound.keySet), s"k=$k")
     }
     // q165's graph shape on the fixture is peeled to ITS fixpoint by 6
-    // rounds — proven at the operator level here: bounded(6) == kCore
-    // on the same edge list (sf0.001 keeps this test fast)
+    // rounds — proven at the operator level here: bounded(6) == the
+    // sequential peel of the same edge list (sf0.001 keeps this test
+    // fast)
     val dir = "/root/testdata/sf0.001"
     val o = graft.sources.Tables(spark, dir, "orders")
       .filter(col("o_orderdate") >= lit("1995-01-01") &&
@@ -121,8 +171,7 @@ class GraphSpec extends SparkSpec {
       .distinct()
     val viaRounds = Graph.kCoreRounds(e, 2, rounds = 6)
       .select("id").as[Long].collect().toSet
-    val viaFixpoint = Graph.kCore(e, 2).as[Long].collect().toSet
-    assert(viaRounds === viaFixpoint)
+    assert(viaRounds === kCoreRef(e.as[(Long, Long)].collect().toSeq, 2))
   }
 
   /** Sequential multi-source BFS reference (hop distances, bounded). */

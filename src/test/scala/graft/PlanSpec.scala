@@ -799,4 +799,21 @@ class PlanSpec extends SparkSpec {
     // no hints: size stats/AQE pick broadcast vs SMJ (the q303 lesson)
     assert(!probe.queryExecution.analyzed.toString.contains("ResolvedHint"))
   }
+
+  test("no operator reads a spark.graft.* setting: the graph and CC " +
+    "size gates compare measured counts with Spark's own broadcast " +
+    "threshold or a constant") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/operators")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val reads = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("spark.graft.")
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(reads.isEmpty, reads.mkString("\n"))
+  }
 }
