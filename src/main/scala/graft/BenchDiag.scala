@@ -1,23 +1,43 @@
 package graft
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
-/** Standing optimization-round diagnosis harness (promoted r17 after
-  * earning its keep across two rounds): Bench's exact loop (one timed
-  * noop run per query, registry order) plus per-query attribution — GC
-  * time delta, job count, executor task-time sum; add
-  * -DgraftBenchDiagStages=true for a per-stage table and
-  * -DgraftBenchDiagJobs=true for job-site counts — to attribute a
-  * query's wall to driver actions vs executor stages vs GC before
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted}
+import org.apache.spark.sql.{GraftSql, SparkSession}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** The diagnostic run: Bench's exact loop (one timed noop write per
+  * query, registry order) plus per-query attribution, to blame a
+  * query's wall on driver actions, executor stages or GC before
   * touching it. Not part of the bench contract: never writes the bench
-  * artifacts. Caveat from the r17 winnowing work: executor task-time
-  * is task WALL, not CPU — a fresh query's first task wave blocks on
-  * the codegen compile KeyLock, so 32-wide stages of a cold query
-  * accrue large task-time with healthy wall; compare task-time only
-  * between variants of the same stage width.
+  * artifacts.
+  *
+  * Prints one summary line per query (wall, build = driver-side plan +
+  * eager actions, GC delta, job count, executor task-time sum) and
+  * writes `<outDir>/<query>.txt`: the formatted physical plan of the
+  * executed write (the final AQE plan), then the top job sites and the
+  * top stages by task-time with their shuffle volume.
+  *
+  * Usage: BenchDiag [outDir, default /tmp/plans]; SPARK_GRAFT_SF_DIR,
+  * SPARK_GRAFT_CPUS and -DgraftBenchOnly as for Bench.
+  *
+  * Caveat: executor task-time is task WALL, not CPU — a fresh query's
+  * first task wave blocks on the codegen compile KeyLock, so wide
+  * stages of a cold query accrue large task-time with healthy wall;
+  * compare task-time only between variants of the same stage width.
   */
 object BenchDiag {
+  private final case class StageRec(id: Int, name: String, tasks: Int,
+      ms: Long, shWkb: Long, shWrec: Long, shRkb: Long)
+
   def main(args: Array[String]): Unit = {
+    val outDir = Paths.get(args.headOption.getOrElse("/tmp/plans"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
@@ -25,45 +45,40 @@ object BenchDiag {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.inMemoryColumnarStorage.compressed",
-        sys.env.getOrElse("GRAFT_CACHE_COMPRESS", "true"))
-      .config("spark.local.dir",
-        sys.env.getOrElse("GRAFT_LOCAL_DIR", "/tmp"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("GRAFT_BYPASS", "200"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Files.createDirectories(outDir)
     val only = sys.props.get("graftBenchOnly")
       .orElse(sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
       .map(_.split(",").map(_.trim).toSet)
-    val clearState = sys.props.get("graftBenchDiagClear").exists(_ == "true")
-    val taskTime = new java.util.concurrent.atomic.AtomicLong
-    val jobCount = new java.util.concurrent.atomic.AtomicLong
-    case class StageRec(id: Int, tasks: Int, ms: Long, shWkb: Long,
-      shWrec: Long, shRkb: Long)
-    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRec]
-    val jobSites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val taskTime = new AtomicLong
+    val stages = new ConcurrentLinkedQueue[StageRec]
+    val jobSites = new ConcurrentLinkedQueue[String]
     spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(): Unit
+      override def onJobStart(j: SparkListenerJobStart): Unit =
         jobSites.add(j.stageInfos.sortBy(_.stageId).lastOption
           .map(_.name.takeWhile(_ != '\n').take(70)).getOrElse("?")): Unit
-      }
       override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
         val si = sc.stageInfo; val m = si.taskMetrics
         taskTime.addAndGet(m.executorRunTime): Unit
-        stages.add(StageRec(si.stageId, si.numTasks, m.executorRunTime,
+        stages.add(StageRec(si.stageId, si.name.takeWhile(_ != '\n').take(70),
+          si.numTasks, m.executorRunTime,
           m.shuffleWriteMetrics.bytesWritten / 1024,
           m.shuffleWriteMetrics.recordsWritten,
           m.shuffleReadMetrics.totalBytesRead / 1024)): Unit
       }
     })
-    val showStages = sys.props.get("graftBenchDiagStages").exists(_ == "true")
-    def gcMs: Long = {
-      import scala.jdk.CollectionConverters._
+    // the noop write is the last execution a query runs, so the last
+    // successful execution holds its final AQE plan
+    val lastExec = new AtomicReference[QueryExecution]
+    spark.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        lastExec.set(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    def gcMs: Long =
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(_.getCollectionTime).sum
-    }
     try {
       Seq("region", "nation", "customer", "supplier", "part", "orders",
         "lineitem", "events", "documents", "embeddings")
@@ -72,39 +87,33 @@ object BenchDiag {
     } catch { case _: Throwable => () }
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(sel => sel.exists(n.startsWith)) }
-    val showJobs = sys.props.get("graftBenchDiagJobs").exists(_ == "true")
     selected.foreach { case (name, fn) =>
-      val gc0 = gcMs; taskTime.set(0); jobCount.set(0); stages.clear()
-      jobSites.clear()
+      GraftSql.drainListenerBus(spark)
+      val gc0 = gcMs; taskTime.set(0); stages.clear(); jobSites.clear()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
       val tBuild = (System.nanoTime() - t0) / 1e9
       df.write.mode("overwrite").format("noop").save()
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(80) // listener drain
-      println(f"$name%-32s wall $sec%7.2f  build $tBuild%6.2f  " +
-        f"gc ${(gcMs - gc0) / 1000.0}%6.2f  jobs ${jobCount.get}%3d  " +
-        f"taskTime ${taskTime.get / 1000.0}%8.1f s")
-      if (showJobs) {
-        import scala.jdk.CollectionConverters._
-        jobSites.asScala.toSeq.groupBy(identity).toSeq
-          .sortBy(-_._2.size).take(15).foreach { case (site, js) =>
-            println(f"  job x${js.size}%3d  $site")
-          }
-      }
-      if (showStages) {
-        import scala.jdk.CollectionConverters._
-        stages.asScala.toSeq.sortBy(-_.ms).take(12).foreach { s =>
-          println(f"  stage ${s.id}%4d tasks ${s.tasks}%3d " +
-            f"ms ${s.ms}%7d  shW ${s.shWkb}%8d KB/${s.shWrec}%9d rec " +
-            f"shR ${s.shRkb}%8d KB")
+      GraftSql.drainListenerBus(spark)
+      val summary = f"$name%-32s wall $sec%7.2f  build $tBuild%6.2f  " +
+        f"gc ${(gcMs - gc0) / 1000.0}%6.2f  jobs ${jobSites.size}%3d  " +
+        f"taskTime ${taskTime.get / 1000.0}%8.1f s"
+      println(summary)
+      val sb = new StringBuilder(s"== $name (sf=$sfDir) ==\n$summary\n\n")
+      sb.append(lastExec.get.explainString(FormattedMode))
+      sb.append("\n\n== top job sites ==\n")
+      jobSites.asScala.toSeq.groupBy(identity).toSeq
+        .sortBy(-_._2.size).take(15).foreach { case (site, js) =>
+          sb.append(f"  job x${js.size}%3d  $site\n")
         }
+      sb.append("\n== top stages by executor task-time ==\n")
+      stages.asScala.toSeq.sortBy(-_.ms).take(15).foreach { s =>
+        sb.append(f"  stage ${s.id}%4d tasks ${s.tasks}%3d " +
+          f"ms ${s.ms}%7d  shW ${s.shWkb}%8d KB/${s.shWrec}%9d rec " +
+          f"shR ${s.shRkb}%8d KB  ${s.name}\n")
       }
-      if (clearState) {
-        spark.sharedState.cacheManager.clearCache()
-        spark.sparkContext.getPersistentRDDs.valuesIterator
-          .foreach(_.unpersist(blocking = false))
-      }
+      Files.writeString(outDir.resolve(s"$name.txt"), sb.toString)
     }
     spark.stop()
   }

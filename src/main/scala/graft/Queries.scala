@@ -1005,9 +1005,9 @@ object Queries {
   }
 
   /** Degree table + degree-oriented triangle-count thunk over an a<b
-    * edge list — partGraph's machinery factored out so ProbeGraph can
-    * drive it on replicated graphs. */
-  private[graft] def orientedTriangles(e: DataFrame)
+    * edge list — partGraph's machinery (SURVEY.md §8 records its wall on
+    * replicated graphs). */
+  private def orientedTriangles(e: DataFrame)
       : (DataFrame, () => DataFrame) = {
     // degree table = |vertices| rows (keys, not edges). No broadcast
     // HINT: a hint overrides autoBroadcastJoinThreshold and would
@@ -8494,7 +8494,7 @@ object Queries {
     * table); the OPERATOR's per-batch cost is two map-only passes over
     * the assignments plus a CC fixpoint on the batch-bound touched-
     * label graph (see incrementalComponents' scaladoc; per-batch wall
-    * measured flat under corpus growth in ProbeIncremental). */
+    * measured flat under corpus growth, SURVEY.md §8). */
   def q305IncrementalSurvivors(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val batch = docs.filter(col("doc_id") % 20 === 7)
@@ -8916,7 +8916,7 @@ object Queries {
     * pruned to the touched components by semi-joins against a
     * request-bounded list; the CC fixpoint runs on the touched
     * neighborhoods only (see deleteRepairAssignments' scaladoc; wall
-    * measured ∝ touched size in ProbeIncremental). The old assignments
+    * measured ∝ touched size, SURVEY.md §8). The old assignments
     * are recomputed here for gate self-containment — a deployment
     * reads its stored table. */
   def q315DeleteRepair(s: SparkSession, dir: String): DataFrame = {
@@ -9028,7 +9028,7 @@ object Queries {
     *
     * Scale shape: identical to q304's (build once + map-only append +
     * pruned scan); the append leg is the part measured flat at
-    * 4×/25×/100× in ProbeAnn after the r11 count-arithmetic fix. */
+    * 4×/25×/100× after the r11 count-arithmetic fix (SURVEY.md §8). */
   def q318IvfAppendScan(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val build = emb.filter(col("vec_id") < 375)
@@ -9276,7 +9276,7 @@ object Queries {
     * arithmetic externally.
     *
     * Scale shape: admission cost is footer counts over ≤ nprobe·|batch|
-    * cell dirs — flat as the corpus grows (ProbeAnn measures the wall);
+    * cell dirs — flat as the corpus grows (wall recorded in SURVEY.md §8);
     * the decision it informs is the one that keeps a 100 TB serving
     * index inside its latency budget. */
   def q324ScanAdmission(s: SparkSession, dir: String): DataFrame = {

@@ -724,8 +724,7 @@ object Dedup {
     * to it is one semi-join each over the stored tables with no
     * corpus-scale shuffle; the CC fixpoint then runs on the touched
     * neighborhoods only — per-batch repair cost tracks the deleted
-    * docs' cluster sizes, never the corpus (measured in
-    * ProbeIncremental). */
+    * docs' cluster sizes, never the corpus (measured; SURVEY.md §8). */
   def deleteRepairAssignments(assignments: DataFrame, pairs: DataFrame,
       deleteIds: DataFrame, idCol: String): DataFrame = {
     val asg = assignments.select(col(idCol).as("id"), col("component"))

@@ -21,7 +21,7 @@ import org.apache.spark.sql.{Column, SparkSession}
   *
   * Compaction triggers on the max data-file count per leaf directory
   * (each append leaves ≥1 fragment per touched dir; probe wall decays
-  * with fragment count — ProbeIncremental measures the curve) and runs
+  * with fragment count — SURVEY.md §8 records the curve) and runs
   * the family's manifest-committed recoverable swap. Plain corpus
   * tables are NOT compacted in place (their rewrite story is
   * [[graft.sinks.PartitionedSink.compact]], source → target, a

@@ -573,7 +573,7 @@ object Similarity {
     * number of true top-k members pushed below a fixed cut grows
     * linearly with the candidate volume nC·nprobe/nlist — recall@10
     * measured 0.950 at 50k vectors but 0.835 at 200k with shortlist
-    * pinned at 50 (ProbeAnn, r8). Holding the shortlist at a constant
+    * pinned at 50 (r8, SURVEY.md §8). Holding the shortlist at a constant
     * FRACTION of the candidate volume holds recall: 1/256 reproduces
     * the proven 50k operating point (12.5k candidates/query → fraction
     * 49, so the 5k=50 floor binds — the floor is what's returned at
@@ -663,9 +663,9 @@ object Similarity {
     * key. Downstream, Spark inserts a partial WindowGroupLimit before
     * the per-query shortlist window, capping shuffle rows at
     * `shortlist` per (query, input partition). Both facts are pinned
-    * in PlanSpec; ProbeAnn prints the per-cell histogram so a corpus
-    * whose skew outgrows this analysis is visible. The residual skew
-    * surface is cell-IMBALANCED candidate COUNTS inflating one
+    * in PlanSpec; SURVEY.md §8 records the per-cell histogram a corpus
+    * whose skew outgrows this analysis would depart from. The residual
+    * skew surface is cell-IMBALANCED candidate COUNTS inflating one
     * query's window — bounded by that query's probed-cell volume, not
     * by any single cell. Intra-cell SELF-joins ([[semanticDedup]])
     * are the family where a hot cell concentrates in one partition —
@@ -961,22 +961,6 @@ object Similarity {
       .where(col("cell").isin(touched.map(Int.box): _*))
     ivfPqScan(encoded, queries, idCol, vecCol, coarse, codebooks,
       nprobe, sl, k)
-  }
-
-  /** The touched cell set a query batch probes against a stored index
-    * — the same computation [[ivfPqScanStored]] prunes with, exposed
-    * package-private so ProbeAnn can measure file-level pruning
-    * (files under probed cell dirs vs total) without duplicating the
-    * probe-cell expression. */
-  private[graft] def storedProbedCells(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      queries: DataFrame, vecCol: String, nprobe: Int): Seq[Int] = {
-    val meta = graft.config.Sidecar.read(spark, path,
-      "Similarity.writeIvfPqIndex")
-    val coarse = graft.config.Sidecar.doubles2(meta, "coarse")
-    queries
-      .select(explode(probeCells(coarse, nprobe)(col(vecCol))).as("cell"))
-      .distinct().collect().map(_.getInt(0)).toSeq
   }
 
   /** ADMISSION CONTROL for the stored-index ANN scan — the ops gate

@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale shape: one tiny file per micro-batch per target — audit
   * volume, not data volume — but the READ paths are linear in FILE
-  * count, so folding is a floor, not an option: the ledger-scale
-  * probe measured `append` FLAT (0.09 s at 10k files, 0.08 s at 25k —
+  * count, so folding is a floor, not an option: SURVEY.md §8
+  * records `append` FLAT (0.09 s at 10k files, 0.08 s at 25k —
   * the exists-check is one getFileStatus, never a listing), while
   * [[read]]/[[audit]] cost ~0.4 ms/file (3.7 s at 10k, 8.5 s at
   * 25k — parquet task scheduling over one-row files) and collapse to
@@ -40,8 +40,8 @@ import org.apache.spark.sql.types.StructType
   * 25k files ≈ a year of four streams at ~17 batches/day — fold at
   * least quarterly.
   *
-  * Under OBJECT-STORE RTT (graft.ProbeLedgerRtt, 10 ms per LIST and
-  * per HEAD, 10k files) the shape holds because the DRIVER-side
+  * Under OBJECT-STORE RTT (10 ms per LIST and per HEAD, 10k files;
+  * the r16 record in SURVEY.md §8) the shape holds because the DRIVER-side
   * metadata calls are CONSTANT per phase — the serial RTTs that
   * would not amortize: append 2 stats + 3 listings (0.17 s), read and
   * audit 1 stat + 2 listings each (8.3 / 8.8 s — the linear term is 2
@@ -54,17 +54,17 @@ import org.apache.spark.sql.types.StructType
   * constant GETs), post-fold read 0.7 s. The explicit-path file
   * index the r15 fix removed would have paid 10k SERIAL driver
   * HEADs — 100 s at this RTT — against the fold's constant 8.
-  * Deletes/creates are not
-  * RTT-modeled (stores batch deletes); counts are measured by the
-  * shim's per-phase call counters, not inferred. A deployment that runs takedown streams
-  * for years folds the old names away with [[compactBefore]] — but
-  * ONLY batches the writing streams' replay horizon has passed: the
-  * file NAME is the idempotence key, so compacting a batch the
-  * checkpoint can still replay would forget its skip state and let
-  * the replay's zeros re-append (the same retention logic as
+  * Deletes/creates are not RTT-modeled (stores batch deletes); counts are
+  * measured by per-phase call counters, not inferred, and LifecycleSpec
+  * pins every phase's driver counts flat in the file count. A deployment
+  * that runs takedown streams for years folds the old names away with
+  * [[compactBefore]] — but ONLY batches the writing streams' replay horizon
+  * has passed: the file NAME is the idempotence key, so compacting a batch
+  * the checkpoint can still replay would forget its skip state and let the
+  * replay's zeros re-append (the same retention logic as
   * [[graft.streaming.Streaming.appendOnce]]'s marker pruning —
-  * `minBatchesToRetain` behind the newest batch is safe; the horizon
-  * is [[compactBefore]]'s explicit argument). */
+  * `minBatchesToRetain` behind the newest batch is safe; the horizon is
+  * [[compactBefore]]'s explicit argument). */
 object ComplianceLog {
 
   /** The (ledger, target, lineage, batchId) addressing of one evidence

@@ -54,7 +54,7 @@ private[graft] object EvidenceCompaction {
   private[sinks] val Lease = "_graft_fold_lease.json"
   /** How long a fold lease may sit before another maintenance process
     * may take it over. 15 min dwarfs every measured fold wall (18 s at
-    * 25k files, ledger-scale probe) while keeping a crashed cron's
+    * 25k files, SURVEY.md §8) while keeping a crashed cron's
     * ledger healable within the same slot. */
   private[sinks] val LeaseStaleMs = 15L * 60 * 1000L
   /** SIBLING lease file suffix for TABLE maintenance windows (see
@@ -664,7 +664,7 @@ private[graft] object EvidenceCompaction {
     // read the whole DIRECTORY and select doomed rows by the file name
     // from input_file_name(), instead of enumerating 10k explicit
     // paths: an explicit-path file index getFileStatus-es every path
-    // on the driver (ledger-scale probe: ~2 ms/file, 21 s at 10k
+    // on the driver (SURVEY.md §8: ~2 ms/file, 21 s at 10k
     // files) where the directory index pays ONE listing. The row
     // filter is the EXACT doomed name set (an InSet hash lookup — 25k
     // names is ~2 MB of driver strings), NOT a re-applied horizon

@@ -11,6 +11,12 @@ object GraftSql {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** Blocks until every event posted so far has reached the session's
+    * listeners (the bus is package-private), so counts a listener keeps
+    * cover everything that ran before the call. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** An eagerly checkpointed frame without the size estimate its
     * LogicalRDD inherited from the plan it materialized. Joins estimate
     * their size as the product of their children's, so a loop that

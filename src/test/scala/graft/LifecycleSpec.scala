@@ -614,6 +614,57 @@ class LifecycleSpec extends SparkSpec {
     assert(err.getMessage.contains("reserved"), err.getMessage)
   }
 
+  test("ledger metadata calls on the driver are flat in the ledger's " +
+    "file count: append, read, audit, fold and the post-fold read pay " +
+    "the same driver LIST/HEAD counts at 8 and 32 files (an object " +
+    "store charges each one a serial round trip)") {
+    import org.apache.spark.sql.functions.{col, lit}
+    import graft.sinks.ComplianceLog
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[CountingLocalFs].getName)
+    /** Per phase, (driver stats, driver lists) over a ledger of n files. */
+    def driverCalls(n: Int): Seq[(String, (Long, Long))] = {
+      val ledger = s"countfs:${tmp(s"ledger-calls-$n")}"
+      for (b <- 0 until n)
+        assert(ComplianceLog.append(spark, ledger, "takedown", "/t", "lin",
+          b.toLong, 1L, 1L))
+      val grid = spark.range(n + 1L)
+        .select(lit("takedown").as("target"), col("id").as("batch_id"))
+      def phase(name: String)(body: => Unit): (String, (Long, Long)) = {
+        CountingLocalFs.stats.reset(); CountingLocalFs.lists.reset()
+        body
+        info(s"$n files, $name: stats ${CountingLocalFs.stats}, " +
+          s"lists ${CountingLocalFs.lists}")
+        name -> ((CountingLocalFs.stats.driver.get,
+          CountingLocalFs.lists.driver.get))
+      }
+      Seq(
+        phase("append") {
+          assert(ComplianceLog.append(spark, ledger, "takedown", "/t", "lin",
+            n.toLong, 1L, 1L))
+        },
+        phase("read") {
+          assert(ComplianceLog.read(spark, ledger).count() === n + 1L)
+        },
+        phase("audit") {
+          assert(ComplianceLog.audit(spark, ledger, grid)
+            .where(col("recorded") === 0L).count() === 0L)
+        },
+        phase("fold") {
+          assert(ComplianceLog.compactBefore(spark, ledger, n - 2L) ===
+            ((n - 2L, n - 2L)))
+        },
+        phase("read after fold") {
+          assert(ComplianceLog.read(spark, ledger).count() === n + 1L)
+        })
+    }
+    val small = driverCalls(8)
+    val large = driverCalls(32)
+    assert(small === large, s"8 files: $small, 32 files: $large")
+    assert(small.head._2._1 >= 1L,
+      s"the append's exists-check is a HEAD: $small")
+  }
+
   test("QuarantineStore schema pin (r14, r13 verdict item 3): the " +
     "first append pins the store's schema, an evolved batch is " +
     "refused loudly instead of mixing shapes under inference, and " +

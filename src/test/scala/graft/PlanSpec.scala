@@ -816,4 +816,21 @@ class PlanSpec extends SparkSpec {
     } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
     assert(reads.isEmpty, reads.mkString("\n"))
   }
+
+  test("the only mains are Bench, Verify and BenchDiag: a measurement " +
+    "belongs in a test or in the diagnostic run, not a new entry point") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val allowed = Set("Bench.scala", "Verify.scala", "BenchDiag.scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val mains = for {
+      f <- files if !allowed(f.getFileName.toString)
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("def main(")
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(mains.isEmpty, mains.mkString("\n"))
+  }
 }

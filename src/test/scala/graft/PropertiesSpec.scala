@@ -286,8 +286,9 @@ class PropertiesSpec extends SparkSpec {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     import graft.operators.Similarity
-    // the kernel under q293/q295/ProbeAnn gets the same arbitrary-input
-    // hardening as the other native expressions: its specification is
+    // the kernel under q293/q295 (and the ANN scale curves recorded in
+    // SURVEY.md §8) gets the same arbitrary-input hardening as the
+    // other native expressions: its specification is
     // the try_element_at chain (null on any null lut/code/slot and on
     // any index past the array — ANSI element_at would throw there)
     val gD = Gen.frequency(
