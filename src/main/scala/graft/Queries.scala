@@ -37,6 +37,23 @@ object Queries {
 
   private val wmEvents = Timestamp.valueOf("2024-01-15 00:00:00")
 
+  /** Runs `body` over fresh local scratch directories, one per prefix
+    * (unique per run, so concurrent runs against one fixture never
+    * share a copy), and deletes them when `body` returns OR throws. A
+    * frame over a scratch directory must be pinned before `body`
+    * returns (each caller's own `localCheckpoint`): the directories
+    * are gone afterwards. */
+  private def scratch[A](s: SparkSession, prefixes: String*)(
+      body: Seq[String] => A): A = {
+    val dirs = prefixes.map(p =>
+      java.nio.file.Files.createTempDirectory(p).toString)
+    try body(dirs)
+    finally dirs.foreach { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    }
+  }
+
   // =======================================================================
   // Reference-parity queries (SURVEY.md §2.1-2.6)
   // =======================================================================
@@ -8464,19 +8481,16 @@ object Queries {
     // concurrent runs against the same sfDir), deleted after the scan
     // materializes — the small result is pinned so the returned frame
     // never re-reads the deleted index
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_idx_").toString
-    Similarity.writeIvfPqIndex(emb, path, "vec_id", "embedding",
-      dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
-    val res = Similarity.ivfPqScanStored(s, path, queries, "vec_id",
-        "embedding", nprobe = 4, k = 10, shortlist = 50)
-      .select(col("query_id"), col("neighbor_id"),
-        f6(col("cos")).as("cos"), col("rank"))
-      .orderBy("query_id", "rank")
-      .localCheckpoint(true)
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_ivfpq_idx_") { case Seq(path) =>
+      Similarity.writeIvfPqIndex(emb, path, "vec_id", "embedding",
+        dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
+      Similarity.ivfPqScanStored(s, path, queries, "vec_id",
+          "embedding", nprobe = 4, k = 10, shortlist = 50)
+        .select(col("query_id"), col("neighbor_id"),
+          f6(col("cos")).as("cos"), col("rank"))
+        .orderBy("query_id", "rank")
+        .localCheckpoint(true)
+    }
   }
 
   /** Incremental SURVIVOR maintenance, ORACLE-PROVEN — the step after
@@ -8990,27 +9004,24 @@ object Queries {
     * self-containment — a deployment deletes in place. */
   def q317PartitionedTakedown(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_part_takedown_").toString
-    docs.select(col("doc_id"), col("lang"), col("n_chars"))
-      .repartition(col("lang"))
-      .write.mode("overwrite").partitionBy("lang").parquet(tbl)
-    val del = docs
-      .filter(col("doc_id") % 7 === 3 && col("lang").isin("de", "fr"))
-      .select("doc_id")
-    PartitionedSink.deletePartitionRowsByKey(s, tbl, "doc_id", del)
-    // explicit schema: an EMPTY corpus writes a partition-less table
-    // root that schema inference refuses; the audit's contract is an
-    // empty aggregate, not a crash
-    val res = s.read.schema("doc_id BIGINT, n_chars BIGINT, lang STRING")
-      .parquet(tbl)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy("lang")
-      .localCheckpoint(true) // pin before the scratch copy is deleted
-    val p = new org.apache.hadoop.fs.Path(tbl)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_part_takedown_") { case Seq(tbl) =>
+      docs.select(col("doc_id"), col("lang"), col("n_chars"))
+        .repartition(col("lang"))
+        .write.mode("overwrite").partitionBy("lang").parquet(tbl)
+      val del = docs
+        .filter(col("doc_id") % 7 === 3 && col("lang").isin("de", "fr"))
+        .select("doc_id")
+      PartitionedSink.deletePartitionRowsByKey(s, tbl, "doc_id", del)
+      // explicit schema: an EMPTY corpus writes a partition-less table
+      // root that schema inference refuses; the audit's contract is an
+      // empty aggregate, not a crash
+      s.read.schema("doc_id BIGINT, n_chars BIGINT, lang STRING")
+        .parquet(tbl)
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .orderBy("lang")
+        .localCheckpoint(true) // pin before the scratch copy is deleted
+    }
   }
 
   /** APPEND-maintained ANN index, ORACLE-PROVEN — the frozen-model
@@ -9034,21 +9045,18 @@ object Queries {
     val build = emb.filter(col("vec_id") < 375)
     val appended = emb.filter(col("vec_id") >= 375)
     val queries = emb.filter(col("vec_id") < 5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_ivfpq_append_idx_").toString
-    Similarity.writeIvfPqIndex(build, path, "vec_id", "embedding",
-      dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
-    Similarity.appendToIvfPqIndex(s, path, appended, "vec_id",
-      "embedding")
-    val res = Similarity.ivfPqScanStored(s, path, queries, "vec_id",
-        "embedding", nprobe = 4, k = 10, shortlist = 50)
-      .select(col("query_id"), col("neighbor_id"),
-        f6(col("cos")).as("cos"), col("rank"))
-      .orderBy("query_id", "rank")
-      .localCheckpoint(true) // pin before the scratch index is deleted
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_ivfpq_append_idx_") { case Seq(path) =>
+      Similarity.writeIvfPqIndex(build, path, "vec_id", "embedding",
+        dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
+      Similarity.appendToIvfPqIndex(s, path, appended, "vec_id",
+        "embedding")
+      Similarity.ivfPqScanStored(s, path, queries, "vec_id",
+          "embedding", nprobe = 4, k = 10, shortlist = 50)
+        .select(col("query_id"), col("neighbor_id"),
+          f6(col("cos")).as("cos"), col("rank"))
+        .orderBy("query_id", "rank")
+        .localCheckpoint(true) // pin before the scratch index is deleted
+    }
   }
 
   /** Partition-DROP retention sweep, ORACLE-PROVEN — the cheapest
@@ -9069,23 +9077,20 @@ object Queries {
     * self-containment. */
   def q319PartitionTtl(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_part_ttl_").toString
-    docs.select(col("doc_id"), col("source"), col("n_chars"))
-      .repartition(col("source"))
-      .write.mode("overwrite").partitionBy("source").parquet(tbl)
-    PartitionedSink.dropPartitionsWhere(s, tbl,
-      substring(col("source"), 4, 10).cast("int") >= 10)
-    val res = s.read
-      .schema("doc_id BIGINT, n_chars BIGINT, source STRING")
-      .parquet(tbl)
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .orderBy("source")
-      .localCheckpoint(true) // pin before the scratch copy is deleted
-    val p = new org.apache.hadoop.fs.Path(tbl)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_part_ttl_") { case Seq(tbl) =>
+      docs.select(col("doc_id"), col("source"), col("n_chars"))
+        .repartition(col("source"))
+        .write.mode("overwrite").partitionBy("source").parquet(tbl)
+      PartitionedSink.dropPartitionsWhere(s, tbl,
+        substring(col("source"), 4, 10).cast("int") >= 10)
+      s.read
+        .schema("doc_id BIGINT, n_chars BIGINT, source STRING")
+        .parquet(tbl)
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .orderBy("source")
+        .localCheckpoint(true) // pin before the scratch copy is deleted
+    }
   }
 
   /** INCREMENTAL cardinality maintenance, ORACLE-PROVEN — the
@@ -9143,16 +9148,13 @@ object Queries {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val batch = docs.filter(col("doc_id") % 20 === 7)
     val corpus = docs.filter(col("doc_id") % 20 =!= 7)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_admission_idx_").toString
-    Dedup.writeBucketIndex(corpus, idx, "text", "doc_id", parts = 16)
-    val res = Dedup.probeAdmission(s, idx, batch, "text", "doc_id",
-        budget = 3L)
-      .orderBy("doc_id")
-      .localCheckpoint(true) // pin before the scratch index is deleted
-    val p = new org.apache.hadoop.fs.Path(idx)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_admission_idx_") { case Seq(idx) =>
+      Dedup.writeBucketIndex(corpus, idx, "text", "doc_id", parts = 16)
+      Dedup.probeAdmission(s, idx, batch, "text", "doc_id",
+          budget = 3L)
+        .orderBy("doc_id")
+        .localCheckpoint(true) // pin before the scratch index is deleted
+    }
   }
 
   /** Record LINKAGE via blocked Jaro–Winkler best-match, ORACLE-PROVEN
@@ -9241,23 +9243,20 @@ object Queries {
         col("l_quantity").cast("bigint").as("qty"),
         year(col("l_shipdate")).as("yr"),
         month(col("l_shipdate")).as("mo"))
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_nested_ttl_").toString
-    li.repartition(col("yr"), col("mo"))
-      .write.mode("overwrite").partitionBy("yr", "mo").parquet(tbl)
-    PartitionedSink.dropPartitionsWhere(s, tbl,
-      col("yr").cast("int") * 12 + col("mo").cast("int") <
-        lit(1995 * 12 + 7))
-    val res = s.read
-      .schema("l_orderkey BIGINT, qty BIGINT, yr INT, mo INT")
-      .parquet(tbl)
-      .groupBy(col("yr"), col("mo"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
-      .orderBy("yr", "mo")
-      .localCheckpoint(true) // pin before the scratch copy is deleted
-    val p = new org.apache.hadoop.fs.Path(tbl)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_nested_ttl_") { case Seq(tbl) =>
+      li.repartition(col("yr"), col("mo"))
+        .write.mode("overwrite").partitionBy("yr", "mo").parquet(tbl)
+      PartitionedSink.dropPartitionsWhere(s, tbl,
+        col("yr").cast("int") * 12 + col("mo").cast("int") <
+          lit(1995 * 12 + 7))
+      s.read
+        .schema("l_orderkey BIGINT, qty BIGINT, yr INT, mo INT")
+        .parquet(tbl)
+        .groupBy(col("yr"), col("mo"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
+        .orderBy("yr", "mo")
+        .localCheckpoint(true) // pin before the scratch copy is deleted
+    }
   }
 
   /** ANN scan ADMISSION CONTROL, ORACLE-PROVEN — the IVF-PQ sibling of
@@ -9282,18 +9281,15 @@ object Queries {
   def q324ScanAdmission(s: SparkSession, dir: String): DataFrame = {
     val emb = t(s, dir, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_scan_admission_").toString
-    Similarity.writeIvfPqIndex(emb, path, "vec_id", "embedding",
-      dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
-    val res = Similarity.scanAdmission(s, path, queries, "vec_id",
-        "embedding", nprobe = 4, budget = 125L)
-      .select(col("query_id"), col("est_rows"), col("admit"))
-      .orderBy("query_id")
-      .localCheckpoint(true) // pin before the scratch index is deleted
-    val p = new org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_scan_admission_") { case Seq(path) =>
+      Similarity.writeIvfPqIndex(emb, path, "vec_id", "embedding",
+        dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
+      Similarity.scanAdmission(s, path, queries, "vec_id",
+          "embedding", nprobe = 4, budget = 125L)
+        .select(col("query_id"), col("est_rows"), col("admit"))
+        .orderBy("query_id")
+        .localCheckpoint(true) // pin before the scratch index is deleted
+    }
   }
 
   /** NESTED-layout takedown BY ID, ORACLE-PROVEN — q317's
@@ -9320,23 +9316,20 @@ object Queries {
         col("l_quantity").cast("bigint").as("qty"),
         year(col("l_shipdate")).as("yr"),
         month(col("l_shipdate")).as("mo"))
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_nested_takedown_").toString
-    li.repartition(col("yr"), col("mo"))
-      .write.mode("overwrite").partitionBy("yr", "mo").parquet(tbl)
-    val del = li.filter(col("l_orderkey") % 13 === 4)
-      .select("l_orderkey")
-    PartitionedSink.deletePartitionRowsByKey(s, tbl, "l_orderkey", del)
-    val res = s.read
-      .schema("l_orderkey BIGINT, qty BIGINT, yr INT, mo INT")
-      .parquet(tbl)
-      .groupBy(col("yr"), col("mo"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
-      .orderBy("yr", "mo")
-      .localCheckpoint(true) // pin before the scratch copy is deleted
-    val p = new org.apache.hadoop.fs.Path(tbl)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_nested_takedown_") { case Seq(tbl) =>
+      li.repartition(col("yr"), col("mo"))
+        .write.mode("overwrite").partitionBy("yr", "mo").parquet(tbl)
+      val del = li.filter(col("l_orderkey") % 13 === 4)
+        .select("l_orderkey")
+      PartitionedSink.deletePartitionRowsByKey(s, tbl, "l_orderkey", del)
+      s.read
+        .schema("l_orderkey BIGINT, qty BIGINT, yr INT, mo INT")
+        .parquet(tbl)
+        .groupBy(col("yr"), col("mo"))
+        .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
+        .orderBy("yr", "mo")
+        .localCheckpoint(true) // pin before the scratch copy is deleted
+    }
   }
 
   /** DATE-partitioned takedown, ORACLE-PROVEN — the r12 DateType swap
@@ -9358,29 +9351,26 @@ object Queries {
       .select(col("o_orderkey"),
         floor(col("o_totalprice") * 100).cast("bigint").as("cents"),
         date_trunc("month", col("o_orderdate")).cast("date").as("d"))
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_date_takedown_").toString
-    ord.repartition(col("d"))
-      .write.mode("overwrite").partitionBy("d").parquet(tbl)
-    val del = ord.filter(col("o_orderkey") % 11 === 7)
-      .select("o_orderkey")
-    PartitionedSink.deletePartitionRowsByKey(s, tbl, "o_orderkey", del)
-    val res = s.read
-      .schema("o_orderkey BIGINT, cents BIGINT, d DATE")
-      .parquet(tbl)
-      .groupBy(col("d"))
-      .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
-      // report the bucket as its ISO string: the driver comparator
-      // normalizes DuckDB DATE to a timestamp, so a DATE column can't
-      // hash-match — the PARTITIONING stays DateType, only the report
-      // column is stringified
-      .select(col("d").cast("string").as("d"), col("n_orders"),
-        col("sum_cents"))
-      .orderBy("d")
-      .localCheckpoint(true) // pin before the scratch copy is deleted
-    val p = new org.apache.hadoop.fs.Path(tbl)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_date_takedown_") { case Seq(tbl) =>
+      ord.repartition(col("d"))
+        .write.mode("overwrite").partitionBy("d").parquet(tbl)
+      val del = ord.filter(col("o_orderkey") % 11 === 7)
+        .select("o_orderkey")
+      PartitionedSink.deletePartitionRowsByKey(s, tbl, "o_orderkey", del)
+      s.read
+        .schema("o_orderkey BIGINT, cents BIGINT, d DATE")
+        .parquet(tbl)
+        .groupBy(col("d"))
+        .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
+        // report the bucket as its ISO string: the driver comparator
+        // normalizes DuckDB DATE to a timestamp, so a DATE column can't
+        // hash-match — the PARTITIONING stays DateType, only the report
+        // column is stringified
+        .select(col("d").cast("string").as("d"), col("n_orders"),
+          col("sum_cents"))
+        .orderBy("d")
+        .localCheckpoint(true) // pin before the scratch copy is deleted
+    }
   }
 
   /** NULL-partition TTL contract, ORACLE-PROVEN — the r13 decision for
@@ -9407,34 +9397,31 @@ object Queries {
       .select(col("doc_id"), col("n_chars"),
         when(col("source") === "src7", lit(null))
           .otherwise(col("source")).as("src"))
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_null_ttl_").toString
-    docs.repartition(col("src"))
-      .write.mode("overwrite").partitionBy("src").parquet(tbl)
-    def survivors(phase: Int) = s.read
-      .schema("doc_id BIGINT, n_chars BIGINT, src STRING")
-      .parquet(tbl)
-      .groupBy(coalesce(col("src"), lit("null")).as("src"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-      .withColumn("phase", lit(phase))
-      .localCheckpoint(true) // pin before the next sweep mutates the dir
-    val (_, _, nulls1) = PartitionedSink.dropPartitionsWhere(s, tbl,
-      substring(col("src"), 4, 10).cast("int") >= 15)
-    require(nulls1 == 1L,
-      s"typed TTL must report the retained null leaf, got $nulls1")
-    val phase1 = survivors(1)
-    val (_, d2, nulls2) = PartitionedSink.dropPartitionsWhere(s, tbl,
-      col("src").isNull)
-    require(d2 == 1L && nulls2 == 0L,
-      s"deliberate isNull sweep must drop the one null leaf: ($d2, $nulls2)")
-    val phase2 = survivors(2)
-    val res = phase1.unionByName(phase2)
-      .select(col("phase"), col("src"), col("n_docs"), col("sum_chars"))
-      .orderBy("phase", "src")
-      .localCheckpoint(true)
-    val p = new org.apache.hadoop.fs.Path(tbl)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_null_ttl_") { case Seq(tbl) =>
+      docs.repartition(col("src"))
+        .write.mode("overwrite").partitionBy("src").parquet(tbl)
+      def survivors(phase: Int) = s.read
+        .schema("doc_id BIGINT, n_chars BIGINT, src STRING")
+        .parquet(tbl)
+        .groupBy(coalesce(col("src"), lit("null")).as("src"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+        .withColumn("phase", lit(phase))
+        .localCheckpoint(true) // pin before the next sweep mutates the dir
+      val (_, _, nulls1) = PartitionedSink.dropPartitionsWhere(s, tbl,
+        substring(col("src"), 4, 10).cast("int") >= 15)
+      require(nulls1 == 1L,
+        s"typed TTL must report the retained null leaf, got $nulls1")
+      val phase1 = survivors(1)
+      val (_, d2, nulls2) = PartitionedSink.dropPartitionsWhere(s, tbl,
+        col("src").isNull)
+      require(d2 == 1L && nulls2 == 0L,
+        s"deliberate isNull sweep must drop the one null leaf: ($d2, $nulls2)")
+      val phase2 = survivors(2)
+      phase1.unionByName(phase2)
+        .select(col("phase"), col("src"), col("n_docs"), col("sum_chars"))
+        .orderBy("phase", "src")
+        .localCheckpoint(true)
+    }
   }
 
   /** COMPLIANCE LEDGER, ORACLE-PROVEN — the unified takedown evidence
@@ -9456,30 +9443,23 @@ object Queries {
   def q328ComplianceLedger(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"), col("source"))
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_ledger_tbl_").toString
-    val log = java.nio.file.Files
-      .createTempDirectory("graft_ledger_log_").toString
-    docs.repartition(col("source"))
-      .write.mode("overwrite").partitionBy("source").parquet(tbl)
-    for (b <- 0 until 3) {
-      val ids = docs
-        .filter(pmod(col("doc_id"), lit(30)) === lit(b * 10 + 3))
-        .select("doc_id")
-      val (r, d) = PartitionedSink.deletePartitionRowsByKey(s, tbl,
-        "doc_id", ids)
-      graft.sinks.ComplianceLog.append(s, log, "corpus", tbl,
-        "q328", b.toLong, r, d): Unit
+    scratch(s, "graft_ledger_tbl_", "graft_ledger_log_") { case Seq(tbl, log) =>
+      docs.repartition(col("source"))
+        .write.mode("overwrite").partitionBy("source").parquet(tbl)
+      for (b <- 0 until 3) {
+        val ids = docs
+          .filter(pmod(col("doc_id"), lit(30)) === lit(b * 10 + 3))
+          .select("doc_id")
+        val (r, d) = PartitionedSink.deletePartitionRowsByKey(s, tbl,
+          "doc_id", ids)
+        graft.sinks.ComplianceLog.append(s, log, "corpus", tbl,
+          "q328", b.toLong, r, d): Unit
+      }
+      graft.sinks.ComplianceLog.read(s, log)
+        .select(col("batch_id"), col("rows_deleted"), col("dirs_rewritten"))
+        .orderBy("batch_id")
+        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
-    val res = graft.sinks.ComplianceLog.read(s, log)
-      .select(col("batch_id"), col("rows_deleted"), col("dirs_rewritten"))
-      .orderBy("batch_id")
-      .localCheckpoint(true) // pin before the scratch dirs are deleted
-    for (path <- Seq(tbl, log)) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    res
   }
 
   /** FOOTER-METADATA statistics, ORACLE-PROVEN — the maintenance
@@ -9506,30 +9486,29 @@ object Queries {
       .select(col("doc_id"),
         when(col("doc_id") % 10 < 5, lit(0L))
           .otherwise(col("doc_id") % 10).as("g"))
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_footer_bal_").toString
-    docs.repartition(col("g"))
-      .write.mode("overwrite").partitionBy("g").parquet(tbl)
-    docs.repartition(col("g"))
-      .write.mode("append").partitionBy("g").parquet(tbl)
-    val rep = graft.operators.Maintenance.run(s, tbl, maxFilesPerDir = 64)
-    require(rep.family == "table" && rep.dataFilesBefore > rep.leafDirs,
-      s"fixture must fragment leaves across appends: $rep")
-    val root = new org.apache.hadoop.fs.Path(tbl)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val leaves = graft.operators.IndexCompact.leafCensus(fs, root)._2
-    val perLeaf = graft.operators.IndexCompact.footerLeafRows(s,
-      leaves.flatMap(l => l.dataFiles.map(f => (l.rel,
-        new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(root, l.rel), f.name).toString,
-        f.len))))
-    // leaf-count-bounded driver frame (6 leaves), the census's own class
-    val rows = perLeaf.toSeq
-      .map { case (rel, n) =>
-        (rel.stripPrefix("g=").toLong, n, rep.balanceMaxOverMean)
-      }
-      .sortBy(_._1)
-    fs.delete(root, true): Unit
+    val rows = scratch(s, "graft_footer_bal_") { case Seq(tbl) =>
+      docs.repartition(col("g"))
+        .write.mode("overwrite").partitionBy("g").parquet(tbl)
+      docs.repartition(col("g"))
+        .write.mode("append").partitionBy("g").parquet(tbl)
+      val rep = graft.operators.Maintenance.run(s, tbl, maxFilesPerDir = 64)
+      require(rep.family == "table" && rep.dataFilesBefore > rep.leafDirs,
+        s"fixture must fragment leaves across appends: $rep")
+      val root = new org.apache.hadoop.fs.Path(tbl)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val leaves = graft.operators.IndexCompact.leafCensus(fs, root)._2
+      val perLeaf = graft.operators.IndexCompact.footerLeafRows(s,
+        leaves.flatMap(l => l.dataFiles.map(f => (l.rel,
+          new org.apache.hadoop.fs.Path(
+            new org.apache.hadoop.fs.Path(root, l.rel), f.name).toString,
+          f.len))))
+      // leaf-count-bounded driver frame (6 leaves), the census's own class
+      perLeaf.toSeq
+        .map { case (rel, n) =>
+          (rel.stripPrefix("g=").toLong, n, rep.balanceMaxOverMean)
+        }
+        .sortBy(_._1)
+    }
     import s.implicits._
     rows.toDF("part_g", "leaf_rows", "balance")
   }
@@ -9561,59 +9540,52 @@ object Queries {
     import s.implicits._
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"), col("source"))
-    val log = java.nio.file.Files
-      .createTempDirectory("graft_audit_log_").toString
     // coverage matrix with deliberate gaps: mirror missed batch 2,
     // archive missed batch 1
     val coverage = Seq(("archive", Seq(0, 2)), ("corpus", Seq(0, 1, 2)),
       ("mirror", Seq(0, 1)))
-    // the three TARGETS are independent maintenance streams (separate
-    // table roots, separate single-writer leases; ledger lines are
-    // distinct (target, batch) files behind the inflight/rename
-    // protocol), and each stream is a serial chain of small driver
-    // actions — so run the streams from a thread pool (guide §2.6,
-    // overlap independent jobs): the next stream's stages back-fill
-    // the scheduler while the current one waits on its action
-    // round-trips. Batches WITHIN a target stay ordered.
-    val pool = java.util.concurrent.Executors
-      .newFixedThreadPool(coverage.size)
-    val tbls = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val futures = coverage.map { case (target, batches) =>
-        scala.concurrent.Future {
-          val tbl = java.nio.file.Files
-            .createTempDirectory(s"graft_audit_${target}_").toString
-          docs.repartition(col("source"))
-            .write.mode("overwrite").partitionBy("source").parquet(tbl)
-          for (b <- batches) {
-            val ids = docs
-              .filter(pmod(col("doc_id"), lit(30)) === lit(b * 10 + 3))
-              .select("doc_id")
-            PartitionedSink.deletePartitionRowsByKey(s, tbl, "doc_id",
-              ids, Some(graft.sinks.ComplianceLog.Key(log, target,
-                "q330", b.toLong))): Unit
+    scratch(s, "graft_audit_log_" +:
+        coverage.map(c => s"graft_audit_${c._1}_"): _*) { case log +: tbls =>
+      // the three TARGETS are independent maintenance streams (separate
+      // table roots, separate single-writer leases; ledger lines are
+      // distinct (target, batch) files behind the inflight/rename
+      // protocol), and each stream is a serial chain of small driver
+      // actions — so run the streams from a thread pool (guide §2.6,
+      // overlap independent jobs): the next stream's stages back-fill
+      // the scheduler while the current one waits on its action
+      // round-trips. Batches WITHIN a target stay ordered.
+      val pool = java.util.concurrent.Executors
+        .newFixedThreadPool(coverage.size)
+      try {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        val futures = coverage.zip(tbls).map { case ((target, batches), tbl) =>
+          scala.concurrent.Future {
+            docs.repartition(col("source"))
+              .write.mode("overwrite").partitionBy("source").parquet(tbl)
+            for (b <- batches) {
+              val ids = docs
+                .filter(pmod(col("doc_id"), lit(30)) === lit(b * 10 + 3))
+                .select("doc_id")
+              PartitionedSink.deletePartitionRowsByKey(s, tbl, "doc_id",
+                ids, Some(graft.sinks.ComplianceLog.Key(log, target,
+                  "q330", b.toLong))): Unit
+            }
           }
-          tbl
         }
-      }
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration.Inf)
-    } finally pool.shutdown()
-    val grid = coverage.map(_._1)
-      .flatMap(target => (0L until 3L).map(b => (target, b)))
-      .toDF("target", "batch_id")
-    // the audit is LIBRARY surface (ComplianceLog.audit), not a
-    // query-local join — a compliance review calls one API
-    val res = graft.sinks.ComplianceLog.audit(s, log, grid)
-      .orderBy("target", "batch_id")
-      .localCheckpoint(true) // pin before the scratch dirs are deleted
-    for (path <- tbls :+ log) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence(futures),
+          scala.concurrent.duration.Duration.Inf)
+      } finally pool.shutdown()
+      val grid = coverage.map(_._1)
+        .flatMap(target => (0L until 3L).map(b => (target, b)))
+        .toDF("target", "batch_id")
+      // the audit is LIBRARY surface (ComplianceLog.audit), not a
+      // query-local join — a compliance review calls one API
+      graft.sinks.ComplianceLog.audit(s, log, grid)
+        .orderBy("target", "batch_id")
+        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
-    res
   }
 
   /** STORED SimHash index lifecycle, ORACLE-PROVEN (r14) — the
@@ -9638,23 +9610,20 @@ object Queries {
     val batchA = docs.filter(pmod(col("doc_id"), lit(20)) === 7)
     val batchB = docs.filter(pmod(col("doc_id"), lit(20)) === 13)
     val corpus = docs.filter(!pmod(col("doc_id"), lit(20)).isin(7, 13))
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_simhash_idx_").toString
-    Dedup.writeSimhashIndex(corpus, idx, "text", "doc_id")
-    def probe(b: DataFrame, phase: Int) =
-      Dedup.incrementalSimhashStored(s, idx, b, "text", "doc_id")
-        .select(lit(phase).as("phase"), col("id_new"), col("id_old"),
-          col("hamming"))
-        .localCheckpoint(true) // pin before the index mutates/deletes
-    val p1 = probe(batchA, 1)
-    Dedup.appendToSimhashIndex(s, idx, batchA, "text")
-    val p2 = probe(batchB, 2)
-    val res = p1.unionByName(p2)
-      .orderBy("phase", "id_new", "id_old")
-      .localCheckpoint(true)
-    val p = new org.apache.hadoop.fs.Path(idx)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_simhash_idx_") { case Seq(idx) =>
+      Dedup.writeSimhashIndex(corpus, idx, "text", "doc_id")
+      def probe(b: DataFrame, phase: Int) =
+        Dedup.incrementalSimhashStored(s, idx, b, "text", "doc_id")
+          .select(lit(phase).as("phase"), col("id_new"), col("id_old"),
+            col("hamming"))
+          .localCheckpoint(true) // pin before the index mutates/deletes
+      val p1 = probe(batchA, 1)
+      Dedup.appendToSimhashIndex(s, idx, batchA, "text")
+      val p2 = probe(batchB, 2)
+      p1.unionByName(p2)
+        .orderBy("phase", "id_new", "id_old")
+        .localCheckpoint(true)
+    }
   }
 
   /** SimHash ADMISSION estimator, ORACLE-PROVEN (r14) — q321's gate
@@ -9670,16 +9639,13 @@ object Queries {
     val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
     val batch = docs.filter(col("doc_id") % 20 === 7)
     val corpus = docs.filter(col("doc_id") % 20 =!= 7)
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_shadm_idx_").toString
-    Dedup.writeSimhashIndex(corpus, idx, "text", "doc_id")
-    val res = Dedup.simhashAdmission(s, idx, batch, "text", "doc_id",
-        budget = 30L)
-      .orderBy("doc_id")
-      .localCheckpoint(true) // pin before the scratch index is deleted
-    val p = new org.apache.hadoop.fs.Path(idx)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
+    scratch(s, "graft_shadm_idx_") { case Seq(idx) =>
+      Dedup.writeSimhashIndex(corpus, idx, "text", "doc_id")
+      Dedup.simhashAdmission(s, idx, batch, "text", "doc_id",
+          budget = 30L)
+        .orderBy("doc_id")
+        .localCheckpoint(true) // pin before the scratch index is deleted
+    }
   }
 
   /** SimHash TAKEDOWN, ORACLE-PROVEN (r15) — the removal step that
@@ -9707,29 +9673,22 @@ object Queries {
     val doomed = docs
       .filter(pmod(col("doc_id"), lit(20)).isin(3, 13))
       .select("doc_id")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft_shtd_idx_").toString
-    val ledger = java.nio.file.Files
-      .createTempDirectory("graft_shtd_ledger_").toString
-    Dedup.writeSimhashIndex(corpus, idx, "text", "doc_id")
-    Dedup.deleteFromSimhashIndex(s, idx, doomed,
-      Some(graft.sinks.ComplianceLog.Key(ledger, "simhash-index",
-        "q334", 0L))): Unit
-    // the gate pins the LEDGER's recorded line, not the return value —
-    // the evidence a compliance officer would actually read
-    val recorded = graft.sinks.ComplianceLog.read(s, ledger)
-      .select("rows_deleted").collect()(0).getLong(0)
-    val res = Dedup.incrementalSimhashStored(s, idx, batch, "text",
-        "doc_id")
-      .select(col("id_new"), col("id_old"), col("hamming"),
-        lit(recorded).as("rows_deleted"))
-      .orderBy("id_new", "id_old")
-      .localCheckpoint(true) // pin before the scratch dirs are deleted
-    for (path <- Seq(idx, ledger)) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    scratch(s, "graft_shtd_idx_", "graft_shtd_ledger_") { case Seq(idx, ledger) =>
+      Dedup.writeSimhashIndex(corpus, idx, "text", "doc_id")
+      Dedup.deleteFromSimhashIndex(s, idx, doomed,
+        Some(graft.sinks.ComplianceLog.Key(ledger, "simhash-index",
+          "q334", 0L))): Unit
+      // the gate pins the LEDGER's recorded line, not the return value —
+      // the evidence a compliance officer would actually read
+      val recorded = graft.sinks.ComplianceLog.read(s, ledger)
+        .select("rows_deleted").collect()(0).getLong(0)
+      Dedup.incrementalSimhashStored(s, idx, batch, "text",
+          "doc_id")
+        .select(col("id_new"), col("id_old"), col("hamming"),
+          lit(recorded).as("rows_deleted"))
+        .orderBy("id_new", "id_old")
+        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
-    res
   }
 
   /** LEDGER FOLD INVARIANCE, ORACLE-PROVEN (r15) — evidence
@@ -9750,32 +9709,25 @@ object Queries {
   def q335LedgerFold(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"), col("source"))
-    val tbl = java.nio.file.Files
-      .createTempDirectory("graft_fold_tbl_").toString
-    val log = java.nio.file.Files
-      .createTempDirectory("graft_fold_log_").toString
-    docs.repartition(col("source"))
-      .write.mode("overwrite").partitionBy("source").parquet(tbl)
-    for (b <- 0 until 6) {
-      val ids = docs
-        .filter(pmod(col("doc_id"), lit(60)) === lit(b * 10 + 5))
-        .select("doc_id")
-      PartitionedSink.deletePartitionRowsByKey(s, tbl, "doc_id", ids,
-        Some(graft.sinks.ComplianceLog.Key(log, "corpus", "q335",
-          b.toLong))): Unit
+    scratch(s, "graft_fold_tbl_", "graft_fold_log_") { case Seq(tbl, log) =>
+      docs.repartition(col("source"))
+        .write.mode("overwrite").partitionBy("source").parquet(tbl)
+      for (b <- 0 until 6) {
+        val ids = docs
+          .filter(pmod(col("doc_id"), lit(60)) === lit(b * 10 + 5))
+          .select("doc_id")
+        PartitionedSink.deletePartitionRowsByKey(s, tbl, "doc_id", ids,
+          Some(graft.sinks.ComplianceLog.Key(log, "corpus", "q335",
+            b.toLong))): Unit
+      }
+      val (ff, _) = graft.sinks.ComplianceLog.compactBefore(s, log, 4L)
+      require(ff == 4L, s"fold must fold the four oldest names, got $ff")
+      graft.sinks.ComplianceLog.read(s, log)
+        .select(col("batch_id"), col("rows_deleted"),
+          col("dirs_rewritten"))
+        .orderBy("batch_id")
+        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
-    val (ff, _) = graft.sinks.ComplianceLog.compactBefore(s, log, 4L)
-    require(ff == 4L, s"fold must fold the four oldest names, got $ff")
-    val res = graft.sinks.ComplianceLog.read(s, log)
-      .select(col("batch_id"), col("rows_deleted"),
-        col("dirs_rewritten"))
-      .orderBy("batch_id")
-      .localCheckpoint(true) // pin before the scratch dirs are deleted
-    for (path <- Seq(tbl, log)) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    res
   }
 
   /** MULTI-LINEAGE AUDIT CELL, ORACLE-PROVEN (r15) — the grid cell
@@ -9800,31 +9752,22 @@ object Queries {
     import s.implicits._
     val docs = t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"), col("source"))
-    val ledger = java.nio.file.Files
-      .createTempDirectory("graft_ml_audit_log_").toString
-    val tbls = Seq("a", "b").map { tag =>
-      val tbl = java.nio.file.Files
-        .createTempDirectory(s"graft_ml_audit_$tag").toString
-      docs.repartition(col("source"))
-        .write.mode("overwrite").partitionBy("source").parquet(tbl)
-      tbl
+    scratch(s, "graft_ml_audit_log_", "graft_ml_audit_a",
+        "graft_ml_audit_b") { case Seq(ledger, tbls @ _*) =>
+      tbls.foreach(tbl => docs.repartition(col("source"))
+        .write.mode("overwrite").partitionBy("source").parquet(tbl))
+      val reps = graft.operators.Maintenance.runAll(s, tbls,
+        maxFilesPerDir = 64,
+        ttl = Some(col("source").substr(4, 10).cast("int") >= 15),
+        evidence = Some((ledger, 5L)), parallelism = 2)
+      require(reps.forall(_._2.ttlEvidenceRecorded),
+        "both windows must record their own lineage-keyed line")
+      val grid = Seq(("ttl-sweep", 5L), ("ttl-sweep", 6L))
+        .toDF("target", "batch_id")
+      graft.sinks.ComplianceLog.audit(s, ledger, grid)
+        .orderBy("batch_id")
+        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
-    val reps = graft.operators.Maintenance.runAll(s, tbls,
-      maxFilesPerDir = 64,
-      ttl = Some(col("source").substr(4, 10).cast("int") >= 15),
-      evidence = Some((ledger, 5L)), parallelism = 2)
-    require(reps.forall(_._2.ttlEvidenceRecorded),
-      "both windows must record their own lineage-keyed line")
-    val grid = Seq(("ttl-sweep", 5L), ("ttl-sweep", 6L))
-      .toDF("target", "batch_id")
-    val res = graft.sinks.ComplianceLog.audit(s, ledger, grid)
-      .orderBy("batch_id")
-      .localCheckpoint(true) // pin before the scratch dirs are deleted
-    for (path <- tbls :+ ledger) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    }
-    res
   }
 
   /** PER-LINEAGE AUDIT DRILL-DOWN, ORACLE-PROVEN (r16, r15 verdict
@@ -9848,42 +9791,39 @@ object Queries {
     import s.implicits._
     val docs = t(s, dir, "documents")
       .select(col("n_chars"), col("lang"), col("source"))
-    val ledger = java.nio.file.Files
-      .createTempDirectory("graft_lin_audit_log_").toString
-    val srcs = Seq("src15", "src16", "src17", "src18", "src19")
-    // the lines a real takedown family would have recorded: per
-    // (lineage, batch) row/dir counts derived from the data so the
-    // oracle can replay them — a bounded 10-row aggregate, collected
-    // only to drive the appends (audit volume, not data volume)
-    // batch keyed off n_chars parity, NOT doc_id: the fixture lays
-    // sources out as doc_id ≡ srcN (mod 20), so any doc_id residue
-    // that factors through 20 is constant per source and would
-    // collapse the multi-lineage cells this query exists to drill
-    val lines = docs
-      .filter(col("source").isin(srcs: _*))
-      .groupBy(col("source"),
-        pmod(col("n_chars"), lit(2)).cast("long").as("batch_id"))
-      .agg(count(lit(1)).as("rows"),
-        countDistinct(col("lang")).as("dirs"))
-      .collect()
-    lines.foreach { r =>
-      require(graft.sinks.ComplianceLog.append(s, ledger, "takedown",
-        "/corpus", r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3)))
+    scratch(s, "graft_lin_audit_log_") { case Seq(ledger) =>
+      val srcs = Seq("src15", "src16", "src17", "src18", "src19")
+      // the lines a real takedown family would have recorded: per
+      // (lineage, batch) row/dir counts derived from the data so the
+      // oracle can replay them — a bounded 10-row aggregate, collected
+      // only to drive the appends (audit volume, not data volume)
+      // batch keyed off n_chars parity, NOT doc_id: the fixture lays
+      // sources out as doc_id ≡ srcN (mod 20), so any doc_id residue
+      // that factors through 20 is constant per source and would
+      // collapse the multi-lineage cells this query exists to drill
+      val lines = docs
+        .filter(col("source").isin(srcs: _*))
+        .groupBy(col("source"),
+          pmod(col("n_chars"), lit(2)).cast("long").as("batch_id"))
+        .agg(count(lit(1)).as("rows"),
+          countDistinct(col("lang")).as("dirs"))
+        .collect()
+      lines.foreach { r =>
+        require(graft.sinks.ComplianceLog.append(s, ledger, "takedown",
+          "/corpus", r.getString(0), r.getLong(1), r.getLong(2),
+          r.getLong(3)))
+      }
+      val grid = (0L until 3L).map(("takedown", _))
+        .toDF("target", "batch_id")
+      graft.sinks.ComplianceLog.auditByLineage(s, ledger, grid)
+        // '' is not a legal lineage name, so it is an unambiguous gap
+        // sentinel that keeps the compare null-free
+        .select(col("target"), col("batch_id"),
+          coalesce(col("lineage"), lit("")).as("lineage"),
+          col("recorded"), col("rows_deleted"), col("dirs_rewritten"))
+        .orderBy("batch_id", "lineage")
+        .localCheckpoint(true) // pin before the scratch ledger is deleted
     }
-    val grid = (0L until 3L).map(("takedown", _))
-      .toDF("target", "batch_id")
-    val res = graft.sinks.ComplianceLog.auditByLineage(s, ledger, grid)
-      // '' is not a legal lineage name, so it is an unambiguous gap
-      // sentinel that keeps the compare null-free
-      .select(col("target"), col("batch_id"),
-        coalesce(col("lineage"), lit("")).as("lineage"),
-        col("recorded"), col("rows_deleted"), col("dirs_rewritten"))
-      .orderBy("batch_id", "lineage")
-      .localCheckpoint(true) // pin before the scratch ledger is deleted
-    val p = new org.apache.hadoop.fs.Path(ledger)
-    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-    res
   }
 
   // =======================================================================

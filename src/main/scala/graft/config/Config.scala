@@ -1,11 +1,12 @@
 package graft.config
 
-import java.nio.file.{Files, Path, Paths}
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
-import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 
 /** Configuration & watermark-state model of the engine.
   *
@@ -62,32 +63,30 @@ case class Settings(connection: Map[String, SystemConn]) {
     connection(system).tableSettings(table)
 }
 
-/** JSON codecs. The reference stores both documents as plain JSON on the
-  * local filesystem next to the data (sync: ingestion.py:143-164;
-  * settings decrypted at startup: bin/ingestion/batch-ingestion.py:58-60 —
-  * the 3DES wrapper is out of data-plane scope, SURVEY.md §7.3). */
+/** The watermark document's codec and its on-disk protocol. The
+  * reference keeps `sync.json` as plain JSON next to the data
+  * (ingestion.py:143-164); here it is read and written through
+  * [[Sidecar]]'s Hadoop-filesystem node I/O, so it works on any Hadoop
+  * filesystem and a write is rename-committed: a crash mid-write leaves
+  * the previous watermark, never a torn file the next step cannot
+  * parse. (The settings document is decrypted at startup in the
+  * reference, bin/ingestion/batch-ingestion.py:58-60 — the 3DES wrapper
+  * is out of data-plane scope, SURVEY.md §7.3.) */
 object Json {
-  private val mapper: ObjectMapper = {
-    val m = new ObjectMapper()
-    m.registerModule(DefaultScalaModule)
-    m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
-    m
-  }
-
   // The on-disk sync document nests under a "sync" key with snake_case
   // fields (ingestion/ingestion.py:149-156).
-  def syncToJson(s: Sync): String = {
-    val node = mapper.createObjectNode()
+  def syncToNode(s: Sync): ObjectNode = {
+    val node = Sidecar.newNode()
     val inner = node.putObject("sync")
     inner.put("system", s.system)
     inner.put("table_name", s.tableName)
     inner.put("ref_column", s.refColumn)
     inner.put("ref_last_value", s.refLastValue)
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
+    node
   }
 
-  def syncFromJson(json: String): Sync = {
-    val n = mapper.readTree(json).get("sync")
+  def syncFromNode(node: JsonNode): Sync = {
+    val n = node.get("sync")
     Sync(
       system = n.get("system").asText(),
       tableName = n.get("table_name").asText(),
@@ -95,22 +94,21 @@ object Json {
       refLastValue = n.get("ref_last_value").asText())
   }
 
-  /** Reads `{table_path}/sync.json` if present; otherwise initializes from
+  /** Reads `{tablePath}/sync.json` if present; otherwise initializes from
     * `ref_first_value` exactly like read_sync_file
     * (ingestion/ingestion.py:143-158). */
-  def readSyncFile(tablePath: Path, system: String, tableName: String,
-      settings: Settings): Sync = {
-    val f = tablePath.resolve("sync.json")
-    if (Files.exists(f)) syncFromJson(Files.readString(f))
-    else {
-      val ts = settings.table(system, tableName)
-      Sync(system, tableName, ts.refColumn, ts.refFirstValue)
+  def readSyncFile(spark: SparkSession, tablePath: String, system: String,
+      tableName: String, settings: Settings): Sync =
+    Sidecar.readNode(spark, new Path(tablePath, "sync.json")) match {
+      case Some(node) => syncFromNode(node)
+      case None =>
+        val ts = settings.table(system, tableName)
+        Sync(system, tableName, ts.refColumn, ts.refFirstValue)
     }
-  }
 
   /** Persists the advanced watermark (ingestion/ingestion.py:161-164). */
-  def writeSyncFile(sync: Sync, tablePath: Path): Unit = {
-    Files.createDirectories(tablePath)
-    Files.writeString(tablePath.resolve("sync.json"), syncToJson(sync))
-  }
+  def writeSyncFile(spark: SparkSession, sync: Sync,
+      tablePath: String): Unit =
+    Sidecar.writeNode(spark, new Path(tablePath, "sync.json"),
+      syncToNode(sync))
 }

@@ -7,8 +7,11 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 
 /** The `_graft_index.json` sidecar shared by the stored-index families
-  * (the LSH bucket index, `Dedup.writeBucketIndex`, and the IVF-PQ
-  * serving index, `Similarity.writeIvfPqIndex`).
+  * (the MinHash-LSH bucket index, `Dedup.writeBucketIndex`, the SimHash
+  * index, `Dedup.writeSimhashIndex`, and the IVF-PQ serving index,
+  * `Similarity.writeIvfPqIndex`), and the repo's one JSON serializer:
+  * the swap and fold manifests and the ingestion watermark
+  * (`sync.json`, [[Json]]) go through the same node I/O.
   *
   * A stored index is only as good as the parameters it was built with:
   * probing with parameters that differ from the build's MISSES results
@@ -113,10 +116,11 @@ object Sidecar {
     node
   }
 
-  /** Generic JSON node write to an explicit path — the shared
-    * serialization the swap manifest ([[graft.operators.IndexCompact]])
-    * reuses so there is exactly one JSON writer in the repo. */
-  /** Rename-committed: the bytes land in a dot-prefixed sibling and
+  /** Generic JSON node write to an explicit path — the one writer the
+    * swap manifests ([[graft.operators.IndexCompact]]) and the
+    * ingestion watermark ([[Json.writeSyncFile]]) share.
+    *
+    * Rename-committed: the bytes land in a dot-prefixed sibling and
     * RENAME onto `p`, so a reader (and a post-crash `recover`) sees the
     * old node or the new one, never a torn file — atomic where the
     * store's rename is atomic (HDFS, local, ABFS; S3-like stores

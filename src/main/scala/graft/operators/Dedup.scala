@@ -1,9 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.config.Sidecar
 import graft.functions.{Expr, Hashing}
 
 /** Deduplication operators for LLM-data pipelines.
@@ -57,14 +60,6 @@ object Dedup {
         .otherwise(array(array_join(toks, " ")))
     }
 
-  /** MinHash signature: for permutation i, min over shingles of
-    * (a_i * md5mod(shingle) + b_i) mod p. Returns array<long> of length
-    * numHashes. Pure per-row expressions → no shuffle to compute.
-    *
-    * Plan-size note: the permutation loop is a `transform` over
-    * `sequence(0, N-1)` with coefficients computed from the lambda
-    * index (Hashing.affineAt), so the tokenize→shingle→md5 subtree
-    * appears exactly ONCE in the plan regardless of numHashes. */
   /** Native tokenize→shingle→hash (see functions.ShingleHashes); the
     * HOF formulation it must match is `transform(shingles(text, n),
     * md5Mod)` (asserted in HashingSpec). */
@@ -84,6 +79,14 @@ object Dedup {
       graft.functions.WinnowFingerprints(
         org.apache.spark.sql.GraftSql.expression(hashes), windowSize, shift))
 
+  /** MinHash signature: for permutation i, min over shingles of
+    * (a_i * md5mod(shingle) + b_i) mod p. Returns array<long> of length
+    * numHashes. Pure per-row expressions → no shuffle to compute.
+    *
+    * Plan-size note: the permutation loop is a `transform` over
+    * `sequence(0, N-1)` with coefficients computed from the lambda
+    * index (Hashing.affineAt), so the tokenize→shingle→md5 subtree
+    * appears exactly ONCE in the plan regardless of numHashes. */
   def minhashSignature(text: Column, shingleSize: Int, numHashes: Int): Column =
     org.apache.spark.sql.GraftSql.column(
       graft.functions.MinHashSignature(
@@ -248,7 +251,88 @@ object Dedup {
       shingleSize: Int = 3, numHashes: Int = 16, bands: Int = 4,
       parts: Int = 64): DataFrame =
     withMinhashBands(docs, textCol, idCol, shingleSize, numHashes, bands)
-      .withColumn("bpart", pmod(col("bucket"), lit(parts)).cast("int"))
+      .withColumn("bpart", Lsh.bpart(parts))
+
+  /** One stored near-dup index family — MinHash LSH ([[Lsh]]) or
+    * SimHash ([[SimHash]]). Everything the stored write, append,
+    * delete, probe front and admission gate need differs between the
+    * two only in these values, so each of those is written once:
+    *  - `builder` names the write API (the sidecar refusal message);
+    *    `kind`, when set, must match the sidecar's `kind` field, which
+    *    makes a cross-family probe a named refusal (`name`) instead of
+    *    a silent miss;
+    *  - `banding` bands a batch under a sidecar's parameters into one
+    *    (idCol, band, `bucketCol`, …) row per (doc, band);
+    *  - `bpart` maps a banded row to its partition directory, given
+    *    the sidecar's `parts`;
+    *  - `bucketCol` names, with `band`, one bucket. */
+  private final case class IndexFamily(builder: String, name: String,
+      kind: Option[String],
+      banding: JsonNode => (DataFrame, String, String) => DataFrame,
+      bpart: Int => Column, bucketCol: String) {
+    /** The sidecar, refused when absent, newer than this reader, or of
+      * another family's kind. */
+    def meta(spark: SparkSession, indexPath: String): JsonNode = {
+      val m = Sidecar.read(spark, indexPath, builder)
+      kind.foreach(k => require(m.has("kind") && Sidecar.str(m, "kind") == k,
+        s"$indexPath is not a $name index — probe it with the API " +
+          "matching its builder (a cross-family probe silently misses " +
+          "every near-dup)"))
+      m
+    }
+  }
+
+  private val Lsh = IndexFamily("Dedup.writeBucketIndex", "MinHash-LSH",
+    None,
+    m => withMinhashBands(_, _, _, Sidecar.int(m, "shingleSize"),
+      Sidecar.int(m, "numHashes"), Sidecar.int(m, "bands")),
+    parts => pmod(col("bucket"), lit(parts)).cast("int"), "bucket")
+
+  /** `bpart` = hash(band, bandval) mod `parts`: raw `bandval` skews
+    * with the corpus's bit distribution, hashing it spreads the dirs. */
+  private val SimHash = IndexFamily("Dedup.writeSimhashIndex", "SimHash",
+    Some("simhash"),
+    m => simhashBandedFrame(_, _, _, Sidecar.int(m, "bands")),
+    parts => pmod(xxhash64(col("band"), col("bandval")), lit(parts))
+      .cast("int"),
+    "bandval")
+
+  /** A batch's stored rows: banded under `meta`'s parameters, with its
+    * `bpart` partition key. */
+  private def indexRows(f: IndexFamily, meta: JsonNode, docs: DataFrame,
+      textCol: String): DataFrame =
+    f.banding(meta)(docs, textCol, Sidecar.str(meta, "idCol"))
+      .withColumn("bpart", f.bpart(Sidecar.int(meta, "parts")))
+
+  /** The one stored-index write: the bpart-partitioned rows, then the
+    * sidecar pinning `meta` (plus the family's `kind`). */
+  private def writeIndex(f: IndexFamily, docs: DataFrame, path: String,
+      textCol: String, meta: ObjectNode): Unit = {
+    f.kind.foreach(meta.put("kind", _))
+    indexRows(f, meta, docs, textCol)
+      .write.mode("overwrite").partitionBy("bpart").parquet(path)
+    Sidecar.write(docs.sparkSession, path, meta)
+  }
+
+  /** The one stored-index append: banding parameters from the sidecar,
+    * never the caller (an append banded differently would poison the
+    * index silently). Cost ∝ |batch|: one banding map + an append into
+    * the bpart directories the batch's buckets land in; the existing
+    * corpus-scale data is never rewritten. */
+  private def appendIndex(f: IndexFamily, spark: SparkSession,
+      indexPath: String, newDocs: DataFrame, textCol: String): Unit =
+    indexRows(f, f.meta(spark, indexPath), newDocs, textCol)
+      .write.mode("append").partitionBy("bpart").parquet(indexPath)
+
+  /** The one stored-index delete: one sidecar read serves both the
+    * refusal check and the pinned idCol, and the layout-generic
+    * [[IndexCompact.deleteMatchingChecked]] rewrites only the bpart
+    * directories holding a doomed row. */
+  private def deleteIndex(f: IndexFamily, spark: SparkSession,
+      indexPath: String, deleteIds: DataFrame,
+      evidence: Option[graft.sinks.ComplianceLog.Key]): (Long, Long) =
+    IndexCompact.deleteMatchingChecked(spark, indexPath,
+      Sidecar.str(f.meta(spark, indexPath), "idCol"), deleteIds, evidence)
 
   /** Writes [[bucketIndex]] as a bpart-partitioned parquet table PLUS
     * a `_graft_index.json` sidecar pinning the banding parameters.
@@ -262,47 +346,32 @@ object Dedup {
   def writeBucketIndex(docs: DataFrame, path: String, textCol: String,
       idCol: String, shingleSize: Int = 3, numHashes: Int = 16,
       bands: Int = 4, parts: Int = 64): Unit = {
-    bucketIndex(docs, textCol, idCol, shingleSize, numHashes, bands,
-      parts).write.mode("overwrite").partitionBy("bpart").parquet(path)
-    val meta = graft.config.Sidecar.newNode()
+    val meta = Sidecar.newNode()
     meta.put("idCol", idCol)
     meta.put("shingleSize", shingleSize)
     meta.put("numHashes", numHashes)
     meta.put("bands", bands)
     meta.put("parts", parts)
-    graft.config.Sidecar.write(docs.sparkSession, path, meta)
+    writeIndex(Lsh, docs, path, textCol, meta)
   }
 
   /** Appends a landed batch to a STORED [[writeBucketIndex]] table —
     * the index-MAINTENANCE half of the per-batch loop (probe with
     * [[incrementalCandidatesStored]], decide, then append the batch so
-    * the NEXT batch's probe sees it). Banding parameters come from the
-    * sidecar, never the caller — an append banded with different
-    * parameters would poison the index silently (same hazard class as
-    * the probe; see [[writeBucketIndex]]). Cost ∝ |batch|: one banding
-    * map + an append into the ≤`parts` bpart directories the batch's
-    * buckets land in; the existing corpus-scale data is never
-    * rewritten. Append-then-probe ≡ rebuild-from-scratch is asserted
-    * in DedupSimilaritySpec (two-batch sequence). */
-  def appendToBucketIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newDocs: DataFrame, textCol: String): Unit = {
-    val meta = graft.config.Sidecar.read(spark, indexPath,
-      "Dedup.writeBucketIndex")
-    import graft.config.Sidecar.{int => intField}
-    val idCol = graft.config.Sidecar.str(meta, "idCol")
-    bucketIndex(newDocs, textCol, idCol, intField(meta, "shingleSize"),
-      intField(meta, "numHashes"), intField(meta, "bands"),
-      intField(meta, "parts"))
-      .write.mode("append").partitionBy("bpart").parquet(indexPath)
-  }
+    * the NEXT batch's probe sees it). Append-then-probe ≡
+    * rebuild-from-scratch is asserted in DedupSimilaritySpec
+    * (two-batch sequence). */
+  def appendToBucketIndex(spark: SparkSession, indexPath: String,
+      newDocs: DataFrame, textCol: String): Unit =
+    appendIndex(Lsh, spark, indexPath, newDocs, textCol)
 
   /** Folds the per-append file fragments back to one file per bpart
     * directory (see [[IndexCompact]]) — layout only, content and
     * sidecar untouched; probe-identity asserted in
     * DedupSimilaritySpec. Returns (filesBefore, filesAfter). */
-  def compactBucketIndex(spark: org.apache.spark.sql.SparkSession,
+  def compactBucketIndex(spark: SparkSession,
       indexPath: String): (Long, Long) =
-    IndexCompact.compact(spark, indexPath, "Dedup.writeBucketIndex")
+    IndexCompact.compact(spark, indexPath, Lsh.builder)
 
   /** Deletes takedown/opt-out docs from a STORED [[writeBucketIndex]]
     * table — the removal step the index lifecycle was missing (build →
@@ -323,15 +392,10 @@ object Dedup {
     * re-emitted by recovery from the manifest if a crash beat it — so
     * a replayed batch can never overwrite real counts with its
     * post-delete zeros (r13 verdict item 2). */
-  def deleteFromBucketIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, deleteIds: DataFrame,
-      evidence: Option[graft.sinks.ComplianceLog.Key] = None): (Long, Long) = {
-    // one sidecar read serves both the refusal check and idCol
-    val meta = graft.config.Sidecar.read(spark, indexPath,
-      "Dedup.writeBucketIndex")
-    IndexCompact.deleteMatchingChecked(spark, indexPath,
-      graft.config.Sidecar.str(meta, "idCol"), deleteIds, evidence)
-  }
+  def deleteFromBucketIndex(spark: SparkSession, indexPath: String,
+      deleteIds: DataFrame,
+      evidence: Option[graft.sinks.ComplianceLog.Key] = None): (Long, Long) =
+    deleteIndex(Lsh, spark, indexPath, deleteIds, evidence)
 
   /** Crash-recovery fsck for a stored [[writeBucketIndex]] table — see
     * [[IndexCompact.recover]]: rolls a crashed compaction/deletion swap
@@ -339,25 +403,49 @@ object Dedup {
     * anything stranded aside, and is idempotent. Run it at the start
     * of a maintenance window (compact/delete already self-heal) or
     * after a known crash. Returns the action log (empty = healthy). */
-  def recoverBucketIndex(spark: org.apache.spark.sql.SparkSession,
+  def recoverBucketIndex(spark: SparkSession,
       indexPath: String): Seq[String] =
     IndexCompact.recover(spark, indexPath)
 
-  /** The stored probes/gates take the BATCH's id column from the
-    * caller but read the STORED INDEX under the sidecar's pinned
-    * `idCol` — the two must be one name. A mismatch refuses with the
-    * family's named error instead of surfacing as an
-    * unresolved-column AnalysisException from the index read (r14
-    * ADVICE): probes read their parameters from the sidecar, and the
-    * id column is a parameter like any other. */
-  private def requireSidecarIdCol(
-      meta: com.fasterxml.jackson.databind.JsonNode, idCol: String,
-      indexPath: String, api: String): Unit = {
-    val pinned = graft.config.Sidecar.str(meta, "idCol")
+  /** The one front of every stored probe and admission gate: the
+    * checked sidecar, the batch banded under the sidecar's parameters
+    * (never the caller's) and pinned — the touched-bpart collect and
+    * the probe both read it — and the stored slice of the batch's
+    * touched `bpart` directories (`None` once every directory is
+    * deleted, a valid zero-result state).
+    *
+    * The caller names the BATCH's id column, but the stored index is
+    * read under the sidecar's pinned `idCol` — the two must be one
+    * name. A mismatch refuses with the family's named error instead of
+    * surfacing as an unresolved-column AnalysisException from the
+    * index read (r14 ADVICE): the id column is a sidecar parameter
+    * like any other. */
+  private def probeFront(f: IndexFamily, spark: SparkSession,
+      indexPath: String, newDocs: DataFrame, textCol: String,
+      idCol: String, api: String): (DataFrame, Option[DataFrame]) = {
+    val meta = f.meta(spark, indexPath)
+    val pinned = Sidecar.str(meta, "idCol")
     require(pinned == idCol,
       s"$api: index $indexPath pins idCol '$pinned' but the caller " +
         s"passed '$idCol' — the sidecar owns the probe's parameters; " +
         "pass the pinned name (the batch must carry that column)")
+    val banded = f.banding(meta)(newDocs, textCol, idCol)
+      .localCheckpoint(false)
+    (banded, IndexCompact.touchedSlice(spark, indexPath, "bpart",
+      banded.select(f.bpart(Sidecar.int(meta, "parts")))))
+  }
+
+  /** The one stored-index admission gate: per batch doc, the sum of
+    * the stored bucket sizes over the doc's own (band, bucket) cells
+    * from the probe's own pruned slice. Returns
+    * (idCol, est_candidates, admit). */
+  private def admission(f: IndexFamily, spark: SparkSession,
+      indexPath: String, newDocs: DataFrame, textCol: String,
+      idCol: String, budget: Long, api: String): DataFrame = {
+    val (banded, slice) = probeFront(f, spark, indexPath, newDocs,
+      textCol, idCol, api)
+    IndexCompact.admission(banded, idCol, Seq("band", f.bucketCol), slice,
+      "bsize", "est_candidates", budget)
   }
 
   /** Per-batch probe against a STORED [[writeBucketIndex]] table:
@@ -369,32 +457,17 @@ object Dedup {
     * are pruned at the file level, so probe I/O tracks the batch's
     * bucket spread, not the corpus. Same candidate contract as
     * [[incrementalCandidates]] (asserted in DedupSimilaritySpec). */
-  def incrementalCandidatesStored(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newDocs: DataFrame, textCol: String,
-      idCol: String, maxBucketSize: Int = 0): DataFrame = {
-    val meta = graft.config.Sidecar.read(spark, indexPath,
-      "Dedup.writeBucketIndex")
-    requireSidecarIdCol(meta, idCol, indexPath,
-      "Dedup.incrementalCandidatesStored")
-    import graft.config.Sidecar.{int => intField}
-    val (shingleSize, numHashes, bands, parts) =
-      (intField(meta, "shingleSize"), intField(meta, "numHashes"),
-        intField(meta, "bands"), intField(meta, "parts"))
-    // a fully-taken-down index (every bpart dir deleted) is a valid
-    // state with zero candidates — not a readable parquet dir
-    if (!IndexCompact.hasPartDirs(spark, indexPath))
-      return newDocs.limit(0)
+  def incrementalCandidatesStored(spark: SparkSession, indexPath: String,
+      newDocs: DataFrame, textCol: String, idCol: String,
+      maxBucketSize: Int = 0): DataFrame =
+    probeFront(Lsh, spark, indexPath, newDocs, textCol, idCol,
+        "Dedup.incrementalCandidatesStored") match {
+      case (_, None) => newDocs.limit(0)
         .select(col(idCol).as("id_a"), col(idCol).as("id_b"))
-    val bNew = withMinhashBands(newDocs, textCol, idCol, shingleSize,
-      numHashes, bands).localCheckpoint(false)
-    val touchedParts = bNew
-      .select(pmod(col("bucket"), lit(parts)).cast("int").as("bpart"))
-      .distinct().collect().map(_.getInt(0)).toSeq // ≤ parts values
-    val idx = spark.read.parquet(indexPath)
-      .where(col("bpart").isin(touchedParts.map(Int.box): _*))
-      .select(col(idCol), col("band"), col("bucket"))
-    incrementalFromBanded(idx, bNew, idCol, maxBucketSize)
-  }
+      case (bNew, Some(stored)) => incrementalFromBanded(
+        stored.select(col(idCol), col("band"), col("bucket")), bNew, idCol,
+        maxBucketSize)
+    }
 
   /** ADMISSION CONTROL for the stored-index probe — the ops gate that
     * runs BEFORE [[incrementalCandidatesStored]]: per batch doc,
@@ -408,35 +481,11 @@ object Dedup {
     * the same column-pruned, bpart-pruned read the probe itself uses
     * (banding parameters from the sidecar, never the caller). Returns
     * (idCol, est_candidates, admit). */
-  def probeAdmission(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newDocs: DataFrame, textCol: String,
-      idCol: String, budget: Long): DataFrame = {
-    val meta = graft.config.Sidecar.read(spark, indexPath,
-      "Dedup.writeBucketIndex")
-    requireSidecarIdCol(meta, idCol, indexPath, "Dedup.probeAdmission")
-    import graft.config.Sidecar.{int => intField}
-    val (shingleSize, numHashes, bands, parts) =
-      (intField(meta, "shingleSize"), intField(meta, "numHashes"),
-        intField(meta, "bands"), intField(meta, "parts"))
-    val bNew = withMinhashBands(newDocs, textCol, idCol, shingleSize,
-      numHashes, bands).localCheckpoint(false)
-    if (!IndexCompact.hasPartDirs(spark, indexPath))
-      return bNew.groupBy(col(idCol))
-        .agg(lit(0L).as("est_candidates"))
-        .withColumn("admit", lit(true))
-    val touchedParts = bNew
-      .select(pmod(col("bucket"), lit(parts)).cast("int").as("bpart"))
-      .distinct().collect().map(_.getInt(0)).toSeq // ≤ parts values
-    // bucket sizes from ONLY the touched bpart dirs, two columns wide
-    val sizes = spark.read.parquet(indexPath)
-      .where(col("bpart").isin(touchedParts.map(Int.box): _*))
-      .groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("bsize"))
-    bNew.join(sizes, Seq("band", "bucket"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(coalesce(col("bsize"), lit(0L))).as("est_candidates"))
-      .withColumn("admit", col("est_candidates") <= lit(budget))
-  }
+  def probeAdmission(spark: SparkSession, indexPath: String,
+      newDocs: DataFrame, textCol: String, idCol: String,
+      budget: Long): DataFrame =
+    admission(Lsh, spark, indexPath, newDocs, textCol, idCol, budget,
+      "Dedup.probeAdmission")
 
   /** Shared tail of the incremental paths: prune the (already banded)
     * corpus side to the batch's touched buckets, cap, and emit
@@ -827,13 +876,6 @@ object Dedup {
   def hammingDistance(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))
 
-  /** SimHash near-dup candidates + verification — the sketch-family
-    * pipeline mirroring minhashCandidates: docs sharing any byte-band
-    * of their 32-bit sketch become candidates (an 8-bit band is
-    * preserved whenever all 8 of its bits survive the perturbation, so
-    * a ≤ maxHamming pair almost always shares a band); candidates are
-    * verified with the exact Hamming distance. Same bucketed-join
-    * shuffle shape as MinHash LSH: collision-bound, never all-pairs. */
   /** One (idCol, sk, band, bandval) row per (doc, band) — the banded
     * SimHash frame [[simhashCandidates]] self-joins and the stored
     * [[writeSimhashIndex]] family persists. The sketch is let-bound:
@@ -858,6 +900,13 @@ object Dedup {
         col("e.bandval").as("bandval"))
   }
 
+  /** SimHash near-dup candidates + verification — the sketch-family
+    * pipeline mirroring minhashCandidates: docs sharing any byte-band
+    * of their 32-bit sketch become candidates (an 8-bit band is
+    * preserved whenever all 8 of its bits survive the perturbation, so
+    * a ≤ maxHamming pair almost always shares a band); candidates are
+    * verified with the exact Hamming distance. Same bucketed-join
+    * shuffle shape as MinHash LSH: collision-bound, never all-pairs. */
   def simhashCandidates(df: DataFrame, textCol: String, idCol: String,
       maxHamming: Int = 2, bands: Int = 4): DataFrame = {
     val banded = simhashBandedFrame(df, textCol, idCol, bands)
@@ -874,52 +923,31 @@ object Dedup {
   }
 
   /** Writes a STORED SimHash near-dup index — the Hamming-sketch
-    * sibling of [[writeBucketIndex]], completing the family: MinHash
-    * LSH had the full build → probe → append → compact → delete
-    * lifecycle while SimHash stopped at batch candidates
-    * ([[simhashCandidates]]). Rows are the banded frame
+    * sibling of [[writeBucketIndex]], with the same build → probe →
+    * append → compact → delete lifecycle. Rows are the banded frame
     * (id, sk, band, bandval) plus `bpart` = hash(band, bandval) mod
-    * `parts` — a uniform partition key (raw `bandval` skews with the
-    * corpus's bit distribution; hashing it spreads the dirs), so a
-    * batch probe reads only its touched `bpart` directories exactly
-    * like the LSH probe. The sidecar pins (bits, bands, parts, idCol)
-    * plus `kind: simhash` — a probe banded differently would MISS
-    * near-dups silently, and the kind field makes cross-family
-    * mistakes (an LSH probe against a SimHash index) fail with a
-    * named error instead of a missing-field parse. Compaction,
-    * deletion and crash recovery come from the layout-generic
-    * [[IndexCompact]] engine unchanged ([[compactBucketIndex]] /
-    * [[deleteFromBucketIndex]] / [[recoverBucketIndex]] all work —
-    * the sidecar carries idCol, and [[graft.operators.Maintenance]]
-    * detects the bands+parts shape as a bucket-family index). */
+    * `parts`, so a batch probe reads only its touched `bpart`
+    * directories exactly like the LSH probe. The sidecar pins (bits,
+    * bands, parts, idCol) plus `kind: simhash` — a probe banded
+    * differently would MISS near-dups silently, and the kind field
+    * makes cross-family mistakes (a SimHash probe against an LSH
+    * index) fail with a named error instead of a missing-field parse.
+    * Compaction, deletion and crash recovery come from the
+    * layout-generic [[IndexCompact]] engine unchanged
+    * ([[compactBucketIndex]] / [[deleteFromBucketIndex]] /
+    * [[recoverBucketIndex]] all work — the sidecar carries idCol, and
+    * [[graft.operators.Maintenance]] detects the bands+parts shape as
+    * a bucket-family index). */
   def writeSimhashIndex(docs: DataFrame, path: String, textCol: String,
       idCol: String, bands: Int = 4, parts: Int = 16): Unit = {
     require(32 % bands == 0 && bands >= 1 && bands <= 32,
       s"bands must divide the 32-bit sketch, got $bands")
-    simhashBandedFrame(docs, textCol, idCol, bands)
-      .withColumn("bpart",
-        pmod(xxhash64(col("band"), col("bandval")), lit(parts))
-          .cast("int"))
-      .write.mode("overwrite").partitionBy("bpart").parquet(path)
-    val meta = graft.config.Sidecar.newNode()
-    meta.put("kind", "simhash")
+    val meta = Sidecar.newNode()
     meta.put("idCol", idCol)
     meta.put("bits", 32)
     meta.put("bands", bands)
     meta.put("parts", parts)
-    graft.config.Sidecar.write(docs.sparkSession, path, meta)
-  }
-
-  private def simhashMeta(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String): com.fasterxml.jackson.databind.JsonNode = {
-    val meta = graft.config.Sidecar.read(spark, indexPath,
-      "Dedup.writeSimhashIndex")
-    require(meta.has("kind") &&
-      graft.config.Sidecar.str(meta, "kind") == "simhash",
-      s"$indexPath is not a SimHash index — probe it with the API " +
-        "matching its builder (a cross-family probe silently misses " +
-        "every near-dup)")
-    meta
+    writeIndex(SimHash, docs, path, textCol, meta)
   }
 
   /** Per-batch near-dup probe against a STORED [[writeSimhashIndex]]
@@ -934,123 +962,68 @@ object Dedup {
     * same verify; asserted in DedupSimilaritySpec and oracle-proven
     * as q331). Cost ∝ the batch's band-bucket spread, not the
     * corpus. */
-  def incrementalSimhashStored(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newDocs: DataFrame, textCol: String,
-      idCol: String, maxHamming: Int = 2): DataFrame = {
-    val meta = simhashMeta(spark, indexPath)
-    requireSidecarIdCol(meta, idCol, indexPath,
-      "Dedup.incrementalSimhashStored")
-    import graft.config.Sidecar.{int => intField}
-    val (bands, parts) =
-      (intField(meta, "bands"), intField(meta, "parts"))
-    // a fully-taken-down index is a valid zero-candidate state
-    if (!IndexCompact.hasPartDirs(spark, indexPath))
-      return newDocs.limit(0).select(col(idCol).as("id_new"),
+  def incrementalSimhashStored(spark: SparkSession, indexPath: String,
+      newDocs: DataFrame, textCol: String, idCol: String,
+      maxHamming: Int = 2): DataFrame =
+    probeFront(SimHash, spark, indexPath, newDocs, textCol, idCol,
+        "Dedup.incrementalSimhashStored") match {
+      case (_, None) => newDocs.limit(0).select(col(idCol).as("id_new"),
         col(idCol).as("id_old"), lit(0).as("hamming"))
-    val bNew = simhashBandedFrame(newDocs, textCol, idCol, bands)
-      .localCheckpoint(false)
-    val touched = bNew
-      .select(pmod(xxhash64(col("band"), col("bandval")), lit(parts))
-        .cast("int").as("bpart"))
-      .distinct().collect().map(_.getInt(0)).toSeq // ≤ parts values
-    val idx = spark.read.parquet(indexPath)
-      .where(col("bpart").isin(touched.map(Int.box): _*))
-      .select(col(idCol).as("id_old"), col("sk").as("sk_old"),
-        col("band"), col("bandval"))
-    bNew.select(col(idCol).as("id_new"), col("sk").as("sk_new"),
-        col("band"), col("bandval"))
-      .join(idx, Seq("band", "bandval"))
-      .where(col("id_new") =!= col("id_old"))
-      .select(col("id_new"), col("id_old"),
-        hammingDistance(col("sk_new"), col("sk_old"))
-          .cast("int").as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
-  }
+      case (bNew, Some(stored)) =>
+        val idx = stored.select(col(idCol).as("id_old"),
+          col("sk").as("sk_old"), col("band"), col("bandval"))
+        bNew.select(col(idCol).as("id_new"), col("sk").as("sk_new"),
+            col("band"), col("bandval"))
+          .join(idx, Seq("band", "bandval"))
+          .where(col("id_new") =!= col("id_old"))
+          .select(col("id_new"), col("id_old"),
+            hammingDistance(col("sk_new"), col("sk_old"))
+              .cast("int").as("hamming"))
+          .distinct()
+          .where(col("hamming") <= maxHamming)
+    }
 
   /** Deletes takedown/opt-out docs from a STORED [[writeSimhashIndex]]
-    * table — the family-checked delete ([[simhashMeta]] refuses a
-    * cross-family path; the engine underneath is the same generic
-    * [[IndexCompact.deleteMatchingChecked]] the LSH family uses:
-    * column-pruned (bpart, id) scan, only the touched bpart
-    * directories rewritten, manifest-committed swap). Sketch banding
-    * is corpus-independent, so the sidecar is untouched. With
-    * `evidence` set, the [[graft.sinks.ComplianceLog]] line rides the
-    * swap manifest exactly like every other evidenced delete — see
-    * [[deleteFromBucketIndex]]. Returns (rowsDeleted, dirsRewritten).
-    * A SimHash doc holds `bands` rows (one per band), so rowsDeleted
-    * = bands × matched docs. */
-  def deleteFromSimhashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, deleteIds: DataFrame,
-      evidence: Option[graft.sinks.ComplianceLog.Key] = None): (Long, Long) = {
-    val meta = simhashMeta(spark, indexPath)
-    IndexCompact.deleteMatchingChecked(spark, indexPath,
-      graft.config.Sidecar.str(meta, "idCol"), deleteIds, evidence)
-  }
+    * table — the family-checked delete (a cross-family path is
+    * refused by kind; the engine underneath is the same
+    * [[IndexCompact.deleteMatchingChecked]] the LSH family uses).
+    * Sketch banding is corpus-independent, so the sidecar is
+    * untouched. With `evidence` set, the [[graft.sinks.ComplianceLog]]
+    * line rides the swap manifest exactly like every other evidenced
+    * delete — see [[deleteFromBucketIndex]]. Returns
+    * (rowsDeleted, dirsRewritten). A SimHash doc holds `bands` rows
+    * (one per band), so rowsDeleted = bands × matched docs. */
+  def deleteFromSimhashIndex(spark: SparkSession, indexPath: String,
+      deleteIds: DataFrame,
+      evidence: Option[graft.sinks.ComplianceLog.Key] = None): (Long, Long) =
+    deleteIndex(SimHash, spark, indexPath, deleteIds, evidence)
 
   /** Appends a landed batch to a STORED [[writeSimhashIndex]] table —
     * banding parameters from the sidecar, never the caller (the same
-    * silent-poisoning hazard as [[appendToBucketIndex]]). Cost
-    * ∝ |batch|: one sketch map + an append into the touched bpart
-    * directories. */
-  def appendToSimhashIndex(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newDocs: DataFrame, textCol: String): Unit = {
-    val meta = simhashMeta(spark, indexPath)
-    import graft.config.Sidecar.{int => intField}
-    simhashBandedFrame(newDocs, textCol,
-        graft.config.Sidecar.str(meta, "idCol"),
-        intField(meta, "bands"))
-      .withColumn("bpart",
-        pmod(xxhash64(col("band"), col("bandval")),
-          lit(intField(meta, "parts"))).cast("int"))
-      .write.mode("append").partitionBy("bpart").parquet(indexPath)
-  }
+    * silent-poisoning hazard as [[appendToBucketIndex]]). */
+  def appendToSimhashIndex(spark: SparkSession, indexPath: String,
+      newDocs: DataFrame, textCol: String): Unit =
+    appendIndex(SimHash, spark, indexPath, newDocs, textCol)
 
   /** ADMISSION CONTROL for the stored-SimHash probe — the gate before
     * [[incrementalSimhashStored]], mirroring [[probeAdmission]]: per
     * batch doc, the candidate-volume upper bound its probe would
     * generate (the sum of stored (band, bandval) bucket sizes over the
-    * doc's own cells), from the same bpart-pruned two-column read the
-    * probe itself pays. The degenerate case this catches is the
+    * doc's own cells), from the same bpart-pruned read the probe
+    * itself pays. The degenerate case this catches is the
     * all-identical-sketch bucket (boilerplate/empty docs vote the same
     * bits), which saturates a band cell exactly like an LSH
     * mega-bucket. Returns (idCol, est_candidates, admit). */
-  def simhashAdmission(spark: org.apache.spark.sql.SparkSession,
-      indexPath: String, newDocs: DataFrame, textCol: String,
-      idCol: String, budget: Long): DataFrame = {
-    val meta = simhashMeta(spark, indexPath)
-    requireSidecarIdCol(meta, idCol, indexPath, "Dedup.simhashAdmission")
-    import graft.config.Sidecar.{int => intField}
-    val (bands, parts) =
-      (intField(meta, "bands"), intField(meta, "parts"))
-    val bNew = simhashBandedFrame(newDocs, textCol, idCol, bands)
-      .localCheckpoint(false)
-    if (!IndexCompact.hasPartDirs(spark, indexPath))
-      return bNew.groupBy(col(idCol))
-        .agg(lit(0L).as("est_candidates"))
-        .withColumn("admit", lit(true))
-    val touched = bNew
-      .select(pmod(xxhash64(col("band"), col("bandval")), lit(parts))
-        .cast("int").as("bpart"))
-      .distinct().collect().map(_.getInt(0)).toSeq // ≤ parts values
-    val sizes = spark.read.parquet(indexPath)
-      .where(col("bpart").isin(touched.map(Int.box): _*))
-      .groupBy(col("band"), col("bandval"))
-      .agg(count(lit(1)).as("bsize"))
-    bNew.join(sizes, Seq("band", "bandval"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(coalesce(col("bsize"), lit(0L))).as("est_candidates"))
-      .withColumn("admit", col("est_candidates") <= lit(budget))
-  }
+  def simhashAdmission(spark: SparkSession, indexPath: String,
+      newDocs: DataFrame, textCol: String, idCol: String,
+      budget: Long): DataFrame =
+    admission(SimHash, spark, indexPath, newDocs, textCol, idCol, budget,
+      "Dedup.simhashAdmission")
 
   // ------------------------------------------------------------------
   // N-gram Jaccard verification
   // ------------------------------------------------------------------
 
-  /** Exact n-gram Jaccard similarity for candidate pairs, computed with
-    * one explode + equi-join + group-by (set semantics via distinct
-    * shingles). `pairs` has (id_a, id_b); `docs` has (idCol, textCol).
-    * Intersection comes from the join; union = |A| + |B| − |A∩B|. */
   /** EXACT set-similarity self-join: all document pairs with word
     * n-gram Jaccard ≥ tauNum/tauDen, found via PPJoin-style PREFIX
     * FILTERING instead of LSH — the third candidate-generation tier
@@ -1155,6 +1128,10 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("inter_size"), col("union_size"))
   }
 
+  /** Exact n-gram Jaccard similarity for candidate pairs, computed with
+    * one explode + equi-join + group-by (set semantics via distinct
+    * shingles). `pairs` has (id_a, id_b); `docs` has (idCol, textCol).
+    * Intersection comes from the join; union = |A| + |B| − |A∩B|. */
   def ngramJaccard(docs: DataFrame, pairs: DataFrame, idCol: String,
       textCol: String, n: Int): DataFrame = {
     val sh = docs.select(col(idCol).as("jid"),

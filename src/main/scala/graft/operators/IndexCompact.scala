@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.functions.{col, count, lit}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum}
 
 /** Serializable carrier for the session's Hadoop `Configuration`
   * (filesystem credentials, scheme implementations) into the footer
@@ -132,15 +132,6 @@ private[graft] object IndexCompact {
     * contract. */
   private val WalkParallelism = 16
 
-  /** All `=`-directories under `root` from ONE listing per directory,
-    * fanned out [[WalkParallelism]]-wide level by level. No layout
-    * validation: the raw view is what [[recover]]'s stranded-dir
-    * restore needs (a half-swapped tree is exactly where consistency
-    * must not be assumed); [[leafCensus]] layers the guards on top.
-    * The root's own loose files are not represented (nothing above the
-    * first `=`-level is partition data). Output is sorted by relative
-    * path so every consumer sees a deterministic order regardless of
-    * listing interleave. */
   /** Shared daemon pool for every walk — a window runs several walks
     * (census, compact temp, post-swap recount) and per-call pool
     * churn, while cheap, is pure waste; `invokeAll` is safe under
@@ -155,6 +146,15 @@ private[graft] object IndexCompact {
         t
       })
 
+  /** All `=`-directories under `root` from ONE listing per directory,
+    * fanned out [[WalkParallelism]]-wide level by level. No layout
+    * validation: the raw view is what [[recover]]'s stranded-dir
+    * restore needs (a half-swapped tree is exactly where consistency
+    * must not be assumed); [[leafCensus]] layers the guards on top.
+    * The root's own loose files are not represented (nothing above the
+    * first `=`-level is partition data). Output is sorted by relative
+    * path so every consumer sees a deterministic order regardless of
+    * listing interleave. */
   private def walkPartTree(fs: FileSystem, root: Path): Seq[PartDir] = {
     import scala.jdk.CollectionConverters._
     // total on a missing root (Nil, like a dir with no =-children):
@@ -271,17 +271,6 @@ private[graft] object IndexCompact {
     (cols, full.map(d => LeafInfo(d.rel, d.dataFiles)))
   }
 
-  /** `num_rows` from one parquet footer, read directly: seek to the
-    * tail (the walk's retained length — no `getFileStatus`), check the
-    * plaintext magic, read the thrift `FileMetaData`. This bypasses
-    * the `ParquetFileReader`/`HadoopInputFile` stack, whose per-open
-    * overhead measured ~6.5 ms/file AND lock-limited a 32-thread pool
-    * to ~10× sequential (wide-layout probe: 16k tiny footers took
-    * ~11 s through the stack vs 0.06 s as raw tail reads); the direct
-    * read is two seeks + one thrift parse per file, through the same
-    * `FileSystem` abstraction every store supports. Encrypted footers
-    * (`PARE` magic) are refused loudly — a row count is not worth
-    * guessing at crypto. */
   /** The 4-byte tail magic of one parquet file — `PAR1` (plaintext
     * footer) or `PARE` (parquet modular encryption with an encrypted
     * footer). The footer fast paths dispatch on the FIRST file's
@@ -300,6 +289,17 @@ private[graft] object IndexCompact {
     } finally in.close()
   }
 
+  /** `num_rows` from one parquet footer, read directly: seek to the
+    * tail (the walk's retained length — no `getFileStatus`), check the
+    * plaintext magic, read the thrift `FileMetaData`. This bypasses
+    * the `ParquetFileReader`/`HadoopInputFile` stack, whose per-open
+    * overhead measured ~6.5 ms/file AND lock-limited a 32-thread pool
+    * to ~10× sequential (wide-layout probe: 16k tiny footers took
+    * ~11 s through the stack vs 0.06 s as raw tail reads); the direct
+    * read is two seeks + one thrift parse per file, through the same
+    * `FileSystem` abstraction every store supports. Encrypted footers
+    * (`PARE` magic) are refused loudly — a row count is not worth
+    * guessing at crypto. */
   private[graft] def footerRowCount(fs: FileSystem, p: Path, len: Long): Long = {
     require(len >= 12, s"not a parquet file (too short, $len bytes): $p")
     val in = fs.open(p)
@@ -532,7 +532,7 @@ private[graft] object IndexCompact {
           s"removal aside failed: $dst -> $aside")
       }
     }
-    pruneEmptyPartDirs(fs, root)
+    pruneEmpty(fs, root)
     require(!fs.exists(old) || fs.delete(old, true),
       s"swap cleanup failed: $old left behind — re-run recover")
     require(!fs.exists(tmp) || fs.delete(tmp, true),
@@ -544,10 +544,7 @@ private[graft] object IndexCompact {
     * directory always holds at least one data file (Spark's writer
     * never emits an empty dir), so an empty subtree is always swap
     * residue. Idempotent, directory-count-bounded. */
-  private[graft] def pruneEmpty(fs: FileSystem, root: Path): Unit =
-    pruneEmptyPartDirs(fs, root)
-
-  private def pruneEmptyPartDirs(fs: FileSystem, root: Path): Unit = {
+  private[graft] def pruneEmpty(fs: FileSystem, root: Path): Unit = {
     def prunable(d: Path): Boolean =
       fs.listStatus(d).forall(st => st.isDirectory &&
         st.getPath.getName.contains("=") && prunable(st.getPath))
@@ -730,12 +727,48 @@ private[graft] object IndexCompact {
     * a VALID state the stored read paths must answer with empty
     * results, not hand to `spark.read.parquet` (which cannot infer a
     * schema from a sidecar-only directory). */
-  private[operators] def hasPartDirs(spark: SparkSession,
-      path: String): Boolean = {
+  private def hasPartDirs(spark: SparkSession, path: String): Boolean = {
     val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(root) && fs.listStatus(root).exists(st =>
-      st.isDirectory && st.getPath.getName.contains("="))
+    val fs = fsOf(spark, root)
+    fs.exists(root) && eqDirs(fs, root).nonEmpty
+  }
+
+  /** The stored slice a batch touches: `touched` holds the batch's
+    * `partCol` values (one int column, duplicates allowed), whose
+    * distinct set — at most the layout's partition count (`parts` /
+    * `nlist`), model-size driver data — becomes an `isin` partition
+    * filter on the stored read, so untouched directories are pruned at
+    * the file level. `None` when the store has no partition directory
+    * left (a fully-taken-down index), which every caller answers with
+    * an empty or zero result. */
+  private[graft] def touchedSlice(spark: SparkSession, path: String,
+      partCol: String, touched: DataFrame): Option[DataFrame] =
+    if (!hasPartDirs(spark, path)) None
+    else {
+      val vals = touched.distinct().collect().map(_.getInt(0)).toSeq
+      Some(spark.read.parquet(path)
+        .where(col(partCol).isin(vals.map(Int.box): _*)))
+    }
+
+  /** ADMISSION estimate against a stored slice ([[touchedSlice]]):
+    * per `id` of `rows` (one row per (id, cell) — a batch doc's
+    * buckets, a query's probe cells), `est` = the sum of the stored
+    * cell sizes over that id's own cells (cells keyed by `cellKeys`,
+    * sizes counted into `sizeCol`), and `admit` = `est` ≤ `budget`. A
+    * missing slice admits every id at 0. Returns (id, est, admit). */
+  private[graft] def admission(rows: DataFrame, id: String,
+      cellKeys: Seq[String], slice: Option[DataFrame], sizeCol: String,
+      est: String, budget: Long): DataFrame = slice match {
+    case None =>
+      rows.groupBy(col(id)).agg(lit(0L).as(est))
+        .withColumn("admit", lit(true))
+    case Some(stored) =>
+      val sizes = stored.groupBy(cellKeys.map(col): _*)
+        .agg(count(lit(1)).as(sizeCol))
+      rows.join(sizes, cellKeys, "left")
+        .groupBy(col(id))
+        .agg(sum(coalesce(col(sizeCol), lit(0L))).as(est))
+        .withColumn("admit", col(est) <= lit(budget))
   }
 
   /** As [[deleteMatching]] for a caller that has ALREADY read (and

@@ -50,7 +50,8 @@ object Ingestion {
       fileFormat: String = "parquet"): StepResult = {
 
     // 1. watermark state (ingestion.py:32)
-    val sync = Json.readSyncFile(tablePath, system, tableName, settings)
+    val syncDir = tablePath.toUri.toString
+    val sync = Json.readSyncFile(spark, syncDir, system, tableName, settings)
     val tableSettings = settings.table(system, tableName)
 
     // 2-5. scan → not-null ref → system prep with strict-> watermark
@@ -89,7 +90,7 @@ object Ingestion {
         val maxTs = metrics("max_ref").asInstanceOf[Timestamp]
         val newSync = sync.advanced(maxTs.toLocalDateTime)
         // 11. persist new sync next to the data (ingestion.py:96,161-164)
-        Json.writeSyncFile(newSync, tablePath)
+        Json.writeSyncFile(spark, newSync, syncDir)
         StepResult(wrote = true, rowCount = n, newSync = newSync)
       }
     } finally cached.unpersist()

@@ -811,13 +811,21 @@ object Similarity {
     // append batch (the delete path's own argument, r10 verdict item 2;
     // build/append/delete all maintain `count` through the same
     // sidecar, so the arithmetic is exact)
-    val n = graft.config.Sidecar.long(meta, "count") + batchCount
-    val updated = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    updated.put("count", n)
-    graft.config.Sidecar.write(spark, path, updated)
+    pinCount(spark, path, meta,
+      graft.config.Sidecar.long(meta, "count") + batchCount)
     require(fs.delete(intentP, false) || !fs.exists(intentP),
       s"append intent-marker cleanup failed: $intentP — run recover")
   }
+
+  /** Rewrites the sidecar `meta` with the corpus `count` that drives
+    * [[ivfPqShortlist]] — the one count update of append, delete and
+    * recovery. */
+  private def pinCount(spark: org.apache.spark.sql.SparkSession,
+      path: String, meta: com.fasterxml.jackson.databind.JsonNode,
+      n: Long): Unit =
+    graft.config.Sidecar.write(spark, path, meta
+      .deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+      .put("count", n))
 
   /** See [[appendToIvfPqIndex]] — present on disk only while an append
     * is between its parquet write and its sidecar count update. */
@@ -865,9 +873,7 @@ object Similarity {
       val meta = graft.config.Sidecar.read(spark, path,
         "Similarity.writeIvfPqIndex")
       val n = IndexCompact.footerRowTotal(spark, path)
-      val updated = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-      updated.put("count", n)
-      graft.config.Sidecar.write(spark, path, updated)
+      pinCount(spark, path, meta, n)
       actions :+ s"repinned sidecar count = $n after recovery"
     } else actions
   }
@@ -910,13 +916,28 @@ object Similarity {
       // every cell dir, corpus-scale metadata I/O on a path whose
       // contract is cost ∝ the delete batch). Build/append maintain
       // `count` through the same sidecar, so the arithmetic is exact.
-      val n = math.max(0L,
-        graft.config.Sidecar.long(meta, "count") - res._1)
-      val updated = meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-      updated.put("count", n)
-      graft.config.Sidecar.write(spark, path, updated)
+      pinCount(spark, path, meta,
+        math.max(0L, graft.config.Sidecar.long(meta, "count") - res._1))
     }
     res
+  }
+
+  /** The sidecar of a STORED [[writeIvfPqIndex]] table and its frozen
+    * coarse model, checked against its `nlist` and `nprobe` — the
+    * front [[ivfPqScanStored]] and [[scanAdmission]] share, so both
+    * expand a query to the same probe cells. */
+  private def storedModel(spark: org.apache.spark.sql.SparkSession,
+      path: String, nprobe: Int)
+      : (com.fasterxml.jackson.databind.JsonNode, Seq[Seq[Double]]) = {
+    val meta = graft.config.Sidecar.read(spark, path,
+      "Similarity.writeIvfPqIndex")
+    val nlist = graft.config.Sidecar.int(meta, "nlist")
+    val coarse = graft.config.Sidecar.doubles2(meta, "coarse")
+    require(coarse.size == nlist,
+      s"sidecar coarse model has ${coarse.size} centroids, nlist=$nlist")
+    require(nprobe >= 1 && nprobe <= nlist,
+      s"nprobe $nprobe out of range for nlist=$nlist")
+    (meta, coarse)
   }
 
   /** Per-query-batch scan against a STORED [[writeIvfPqIndex]] table:
@@ -936,31 +957,21 @@ object Similarity {
   def ivfPqScanStored(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, idCol: String, vecCol: String,
       nprobe: Int, k: Int, shortlist: Int = 0): DataFrame = {
-    val meta = graft.config.Sidecar.read(spark, path,
-      "Similarity.writeIvfPqIndex")
-    val nlist = graft.config.Sidecar.int(meta, "nlist")
-    val count = graft.config.Sidecar.long(meta, "count")
-    val coarse = graft.config.Sidecar.doubles2(meta, "coarse")
+    val (meta, coarse) = storedModel(spark, path, nprobe)
     val codebooks = graft.config.Sidecar.doubles3(meta, "codebooks")
-    require(coarse.size == nlist,
-      s"sidecar coarse model has ${coarse.size} centroids, nlist=$nlist")
-    require(nprobe >= 1 && nprobe <= nlist,
-      s"nprobe $nprobe out of range for nlist=$nlist")
-    // a fully-taken-down index (every cell dir deleted) is a valid
-    // state with zero neighbors — not a readable parquet dir
-    if (!IndexCompact.hasPartDirs(spark, path))
-      return queries.limit(0).select(col(idCol).as("query_id"),
+    val sl = if (shortlist > 0) shortlist
+      else ivfPqShortlist(graft.config.Sidecar.long(meta, "count"),
+        coarse.size, nprobe, k)
+    IndexCompact.touchedSlice(spark, path, "cell", queries
+        .select(explode(probeCells(coarse, nprobe)(col(vecCol))))) match {
+      // a fully-taken-down index (every cell dir deleted) is a valid
+      // state with zero neighbors
+      case None => queries.limit(0).select(col(idCol).as("query_id"),
         col(idCol).as("neighbor_id"), lit(0.0).as("cos"),
         lit(0).as("rank"))
-    val sl = if (shortlist > 0) shortlist
-      else ivfPqShortlist(count, nlist, nprobe, k)
-    val touched = queries
-      .select(explode(probeCells(coarse, nprobe)(col(vecCol))).as("cell"))
-      .distinct().collect().map(_.getInt(0)).toSeq // ≤ nlist values
-    val encoded = spark.read.parquet(path)
-      .where(col("cell").isin(touched.map(Int.box): _*))
-    ivfPqScan(encoded, queries, idCol, vecCol, coarse, codebooks,
-      nprobe, sl, k)
+      case Some(encoded) => ivfPqScan(encoded, queries, idCol, vecCol,
+        coarse, codebooks, nprobe, sl, k)
+    }
   }
 
   /** ADMISSION CONTROL for the stored-index ANN scan — the ops gate
@@ -985,26 +996,12 @@ object Similarity {
   def scanAdmission(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, idCol: String, vecCol: String,
       nprobe: Int, budget: Long): DataFrame = {
-    val meta = graft.config.Sidecar.read(spark, path,
-      "Similarity.writeIvfPqIndex")
-    val nlist = graft.config.Sidecar.int(meta, "nlist")
-    val coarse = graft.config.Sidecar.doubles2(meta, "coarse")
-    require(nprobe >= 1 && nprobe <= nlist,
-      s"nprobe $nprobe out of range for nlist=$nlist")
+    val coarse = storedModel(spark, path, nprobe)._2
     val qc = queries.select(col(idCol).as("query_id"),
       explode(probeCells(coarse, nprobe)(col(vecCol))).as("cell"))
-    if (!IndexCompact.hasPartDirs(spark, path))
-      return queries.select(col(idCol).as("query_id"),
-        lit(0L).as("est_rows"), lit(true).as("admit"))
-    val touched = qc.select(col("cell"))
-      .distinct().collect().map(_.getInt(0)).toSeq // ≤ nlist values
-    val sizes = spark.read.parquet(path)
-      .where(col("cell").isin(touched.map(Int.box): _*))
-      .groupBy(col("cell")).agg(count(lit(1)).as("csize"))
-    qc.join(sizes, Seq("cell"), "left")
-      .groupBy(col("query_id"))
-      .agg(sum(coalesce(col("csize"), lit(0L))).as("est_rows"))
-      .withColumn("admit", col("est_rows") <= lit(budget))
+    IndexCompact.admission(qc, "query_id", Seq("cell"),
+      IndexCompact.touchedSlice(spark, path, "cell", qc.select(col("cell"))),
+      "csize", "est_rows", budget)
   }
 
   /** Model-drift report — the RETRAIN TRIGGER for an append-maintained

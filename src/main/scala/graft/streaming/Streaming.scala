@@ -74,6 +74,20 @@ object Streaming {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
 
+  /** Reference-histogram builder for [[ksDrift]]: bin counts of
+    * `valueCol` under the same (lo, width, nBins) binning, collected
+    * as the model-sized Seq the monitor carries as literals — the one
+    * legitimate driver materialization here (nBins values, not data). */
+  def histogram(df: DataFrame, valueCol: String, lo: Long,
+      binWidth: Long, nBins: Int): Seq[Long] = {
+    val m = df.withColumn("_bin",
+        least(greatest(expr(s"(`$valueCol` - ${lo}L) DIV ${binWidth}L"),
+          lit(0L)), lit(nBins - 1L)))
+      .groupBy(col("_bin")).agg(count(lit(1)).as("n"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    (0 until nBins).map(b => m.getOrElse(b.toLong, 0L))
+  }
+
   /** Streaming distribution-drift monitor: per tumbling event-time
     * window, the BINNED two-sample Kolmogorov–Smirnov statistic of the
     * window's value distribution against a STATIC reference histogram
@@ -100,20 +114,6 @@ object Streaming {
     *
     * `refCounts` is the reference histogram over the same binning
     * (model-sized, rides the plan as literals). */
-  /** Reference-histogram builder for [[ksDrift]]: bin counts of
-    * `valueCol` under the same (lo, width, nBins) binning, collected
-    * as the model-sized Seq the monitor carries as literals — the one
-    * legitimate driver materialization here (nBins values, not data). */
-  def histogram(df: DataFrame, valueCol: String, lo: Long,
-      binWidth: Long, nBins: Int): Seq[Long] = {
-    val m = df.withColumn("_bin",
-        least(greatest(expr(s"(`$valueCol` - ${lo}L) DIV ${binWidth}L"),
-          lit(0L)), lit(nBins - 1L)))
-      .groupBy(col("_bin")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    (0 until nBins).map(b => m.getOrElse(b.toLong, 0L))
-  }
-
   def ksDrift(events: DataFrame, tsCol: String, valueCol: String,
       delay: String, windowDuration: String,
       lo: Long, binWidth: Long, nBins: Int,
@@ -584,7 +584,7 @@ object Streaming {
       quarantine: (DataFrame, Long) => Unit = (_, _) => (),
       quarantineStore: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    bucketFamilyMaintenanceStream(docs, idCol, indexPath,
+    indexMaintenanceStream(docs, idCol, indexPath,
       checkpointPath, admitBudget, quarantine, quarantineStore,
       admission = (s, df, bud) => graft.operators.Dedup.probeAdmission(
         s, indexPath, df, textCol, idCol, bud),
@@ -601,7 +601,7 @@ object Streaming {
     * them to `sink`, then append the batch under the frozen banding so
     * the next batch probes the grown corpus. Exactly-once, admission,
     * and quarantine semantics are IDENTICAL to the LSH loop — one
-    * engine ([[bucketFamilyMaintenanceStream]]) serves both families,
+    * engine ([[indexMaintenanceStream]]) serves all three stored families,
     * so every contract StreamingSpec pins there (marker-guarded
     * appends, callback-before-store, streaming ≡ batch over admitted
     * rows) holds here by construction. */
@@ -611,7 +611,7 @@ object Streaming {
       quarantine: (DataFrame, Long) => Unit = (_, _) => (),
       quarantineStore: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    bucketFamilyMaintenanceStream(docs, idCol, indexPath,
+    indexMaintenanceStream(docs, idCol, indexPath,
       checkpointPath, admitBudget, quarantine, quarantineStore,
       admission = (s, df, bud) => graft.operators.Dedup
         .simhashAdmission(s, indexPath, df, textCol, idCol, bud),
@@ -620,15 +620,16 @@ object Streaming {
       append = (s, df) => graft.operators.Dedup.appendToSimhashIndex(
         s, indexPath, df, textCol))(sink)
 
-  /** The one probe→sink→append maintenance engine behind the
-    * bucket-family streams ([[dedupMaintenanceStream]] MinHash LSH,
-    * [[simhashMaintenanceStream]] SimHash): admission gate (the
-    * family's estimator emits (idCol, est_candidates, admit); docs
-    * over budget are quarantined with evidence and neither probed nor
-    * appended), eager probe materialization BEFORE the append (a probe
-    * must never see its own batch), sink delivery, and the
-    * marker-guarded exactly-once append ([[appendOnce]]). */
-  private def bucketFamilyMaintenanceStream(docs: DataFrame,
+  /** The one probe→sink→append maintenance engine behind every
+    * stored-index stream ([[dedupMaintenanceStream]] MinHash LSH,
+    * [[simhashMaintenanceStream]] SimHash, [[annMaintenanceStream]]
+    * IVF-PQ): admission gate (the family's estimator emits (idCol,
+    * estimate, admit); rows over budget are quarantined with their
+    * estimate as evidence and neither probed nor appended), eager
+    * probe materialization BEFORE the append (a probe must never see
+    * its own batch), sink delivery, and the marker-guarded
+    * exactly-once append ([[appendOnce]]). */
+  private def indexMaintenanceStream(docs: DataFrame,
       idCol: String, indexPath: String, checkpointPath: String,
       admitBudget: Long,
       quarantine: (DataFrame, Long) => Unit,
@@ -646,9 +647,8 @@ object Streaming {
           else {
             val adm = admission(all.sparkSession, all, admitBudget)
               .localCheckpoint(true)
-            val over = all.join(adm.where(!col("admit"))
-              .select(col(idCol), col("est_candidates")), Seq(idCol))
-              .localCheckpoint(true)
+            val over = all.join(adm.where(!col("admit")).drop("admit"),
+              Seq(idCol)).localCheckpoint(true)
             if (over.count() > 0) quarantineStore match {
               case None => quarantine(over, batchId)
               case Some(sp) =>
@@ -709,19 +709,9 @@ object Streaming {
   def takedownMaintenanceStream(requests: DataFrame, indexPath: String,
       checkpointPath: String, complianceLog: Option[String] = None)(
       onBatch: (Long, Long, Long) => Unit): StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val b = batch.toDF().localCheckpoint(true)
-        val (nRows, nDirs) = graft.operators.Dedup.deleteFromBucketIndex(
-          b.sparkSession, indexPath, b,
-          complianceLog.map(lp => graft.sinks.ComplianceLog.Key(lp,
-            "lsh-index",
-            canonicalLineage(b.sparkSession, checkpointPath), batchId)))
-        onBatch(nRows, nDirs, batchId)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .start()
+    takedownStream(requests, checkpointPath, complianceLog, "lsh-index",
+      graft.operators.Dedup.deleteFromBucketIndex(_, indexPath, _, _))(
+      onBatch)
 
   /** Streaming takedown loop against a STORED SimHash index — the
     * fourth takedown target, completing the family symmetry (r14
@@ -740,19 +730,10 @@ object Streaming {
   def simhashTakedownStream(requests: DataFrame, indexPath: String,
       checkpointPath: String, complianceLog: Option[String] = None)(
       onBatch: (Long, Long, Long) => Unit): StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val b = batch.toDF().localCheckpoint(true)
-        val (nRows, nDirs) = graft.operators.Dedup.deleteFromSimhashIndex(
-          b.sparkSession, indexPath, b,
-          complianceLog.map(lp => graft.sinks.ComplianceLog.Key(lp,
-            "simhash-index",
-            canonicalLineage(b.sparkSession, checkpointPath), batchId)))
-        onBatch(nRows, nDirs, batchId)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .start()
+    takedownStream(requests, checkpointPath, complianceLog,
+      "simhash-index",
+      graft.operators.Dedup.deleteFromSimhashIndex(_, indexPath, _, _))(
+      onBatch)
 
   /** Streaming takedown loop for the CORPUS TABLE itself — the third
     * target a compliance stream hits (the LSH index via
@@ -768,7 +749,7 @@ object Streaming {
     * the table's key column; the request stream's single column is
     * matched against it.
     *
-    * Same replay semantics as the other two takedown loops: deletion
+    * Same replay semantics as the other takedown loops: deletion
     * is idempotent (a replayed batch finds nothing left — zero rows,
     * zero dirs) and commutative across disjoint batches, so ANY
     * micro-batch split lands the table in the same state as one batch
@@ -785,16 +766,28 @@ object Streaming {
       idCol: String, checkpointPath: String,
       complianceLog: Option[String] = None)(
       onBatch: (Long, Long, Long) => Unit): StreamingQuery =
+    takedownStream(requests, checkpointPath, complianceLog, "corpus",
+      graft.sinks.PartitionedSink.deletePartitionRowsByKey(_, tablePath,
+        idCol, _, _))(onBatch)
+
+  /** The one engine behind the four takedown streams: each
+    * micro-batch of request ids is pinned, handed to `delete` (with
+    * the [[graft.sinks.ComplianceLog]] key of ledger `target` when
+    * `complianceLog` is set, keyed by checkpoint lineage and batchId),
+    * and its (rowsDeleted, dirsRewritten) reported to `onBatch`. */
+  private def takedownStream(requests: DataFrame, checkpointPath: String,
+      complianceLog: Option[String], target: String,
+      delete: (SparkSession, DataFrame,
+        Option[graft.sinks.ComplianceLog.Key]) => (Long, Long))(
+      onBatch: (Long, Long, Long) => Unit): StreamingQuery =
     requests.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         val b = batch.toDF().localCheckpoint(true)
-        val (nRows, nDirs) = graft.sinks.PartitionedSink
-          .deletePartitionRowsByKey(b.sparkSession, tablePath, idCol,
-            b, complianceLog.map(lp => graft.sinks.ComplianceLog.Key(
-              lp, "corpus",
-              canonicalLineage(b.sparkSession, checkpointPath),
-              batchId)))
+        val (nRows, nDirs) = delete(b.sparkSession, b,
+          complianceLog.map(lp => graft.sinks.ComplianceLog.Key(lp,
+            target, canonicalLineage(b.sparkSession, checkpointPath),
+            batchId)))
         onBatch(nRows, nDirs, batchId)
       }
       .option("checkpointLocation", checkpointPath)
@@ -863,47 +856,17 @@ object Streaming {
       quarantine: (DataFrame, Long) => Unit = (_, _) => (),
       quarantineStore: Option[String] = None)(
       sink: (DataFrame, Long) => Unit): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val all = batch.toDF().localCheckpoint(true)
-        val b =
-          if (admitBudget == Long.MaxValue) all
-          else {
-            val adm = graft.operators.Similarity.scanAdmission(
-              all.sparkSession, indexPath, all, idCol, vecCol, nprobe,
-              admitBudget).localCheckpoint(true)
-            val over = all.join(adm.where(!col("admit"))
-              .select(col("query_id").as(idCol), col("est_rows")),
-              Seq(idCol)).localCheckpoint(true)
-            if (over.count() > 0) quarantineStore match {
-              case None => quarantine(over, batchId)
-              case Some(sp) =>
-                val lin = canonicalLineage(all.sparkSession, checkpointPath)
-                if (!graft.sinks.QuarantineStore.recorded(
-                    all.sparkSession, sp, lin, batchId)) {
-                  // callback FIRST — see dedupMaintenanceStream
-                  quarantine(over, batchId)
-                  graft.sinks.QuarantineStore.append(all.sparkSession,
-                    sp, lin, batchId, over): Unit
-                }
-            }
-            all.join(adm.where(col("admit"))
-              .select(col("query_id").as(idCol)), Seq(idCol),
-              "left_semi").localCheckpoint(true)
-          }
-        val neighbors = graft.operators.Similarity.ivfPqScanStored(
-          b.sparkSession, indexPath, b, idCol, vecCol, nprobe, k,
-          shortlist)
-          .localCheckpoint(true) // probe BEFORE the append lands
-        sink(neighbors, batchId)
-        annAppendOnce(b.sparkSession, indexPath, b, idCol, vecCol,
-          checkpointPath, batchId): Unit
-      }
-      .option("checkpointLocation", checkpointPath)
-      .start()
+    indexMaintenanceStream(vectors, idCol, indexPath,
+      checkpointPath, admitBudget, quarantine, quarantineStore,
+      admission = (s, df, bud) => graft.operators.Similarity
+        .scanAdmission(s, indexPath, df, idCol, vecCol, nprobe, bud)
+        .withColumnRenamed("query_id", idCol),
+      probe = (s, df) => graft.operators.Similarity.ivfPqScanStored(s,
+        indexPath, df, idCol, vecCol, nprobe, k, shortlist),
+      append = (s, df) => graft.operators.Similarity.appendToIvfPqIndex(
+        s, indexPath, df, idCol, vecCol))(sink)
 
-  /** The marker-guarded append behind [[annMaintenanceStream]]:
+  /** The ANN index append exactly as [[annMaintenanceStream]] runs it:
     * appends `batch` unless this (checkpoint lineage, batchId) already
     * committed its marker. Returns whether the append ran. Package-
     * private so StreamingSpec can assert the replay no-op directly. */
@@ -934,8 +897,25 @@ object Streaming {
       spark.conf.get("spark.sql.streaming.minBatchesToRetain", "100")
         .toLong)
 
+  /** Hex of the first 8 bytes of `s`'s SHA-256 — a lineage key. */
+  private def sha8(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s.getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
+
+  /** The canonical checkpoint-lineage key (shared by [[appendOnce]]'s
+    * markers and [[graft.sinks.ComplianceLog]] evidence names):
+    * trailing-slash, relative and scheme-qualified spellings of one
+    * checkpoint map to one lineage. */
+  private[graft] def canonicalLineage(spark: SparkSession,
+      checkpointPath: String): String = {
+    val cp = new org.apache.hadoop.fs.Path(checkpointPath)
+    sha8(cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(cp).toString)
+  }
+
   /** Family-agnostic exactly-once guard for streaming index appends
-    * (shared by [[annAppendOnce]] and [[dedupMaintenanceStream]]):
+    * (the append step of [[indexMaintenanceStream]]):
     * runs `doAppend` unless this (checkpoint lineage, batchId) already
     * committed a marker under `<index>/_graft_batches/`
     * (underscore-prefixed — parquet readers ignore it), committed
@@ -965,22 +945,6 @@ object Streaming {
     * replay them, and the listing this costs is bounded by the
     * retention window itself once pruning has run once. Returns
     * whether the append ran. */
-  private def sha8(s: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-
-  /** The canonical checkpoint-lineage key (shared by [[appendOnce]]'s
-    * markers and [[graft.sinks.ComplianceLog]] evidence names):
-    * trailing-slash, relative and scheme-qualified spellings of one
-    * checkpoint map to one lineage. */
-  private[graft] def canonicalLineage(spark: SparkSession,
-      checkpointPath: String): String = {
-    val cp = new org.apache.hadoop.fs.Path(checkpointPath)
-    sha8(cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .makeQualified(cp).toString)
-  }
-
   private[graft] def appendOnce(spark: SparkSession, indexPath: String,
       checkpointPath: String, batchId: Long)(
       doAppend: () => Unit): Boolean = {
@@ -1042,20 +1006,9 @@ object Streaming {
   def annTakedownStream(requests: DataFrame, indexPath: String,
       checkpointPath: String, complianceLog: Option[String] = None)(
       onBatch: (Long, Long, Long) => Unit): StreamingQuery =
-    requests.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
-        val b = batch.toDF().localCheckpoint(true)
-        val (nRows, nDirs) = graft.operators.Similarity
-          .deleteFromIvfPqIndex(b.sparkSession, indexPath, b,
-            complianceLog.map(lp => graft.sinks.ComplianceLog.Key(lp,
-              "ann-index",
-              canonicalLineage(b.sparkSession, checkpointPath),
-              batchId)))
-        onBatch(nRows, nDirs, batchId)
-      }
-      .option("checkpointLocation", checkpointPath)
-      .start()
+    takedownStream(requests, checkpointPath, complianceLog, "ann-index",
+      graft.operators.Similarity.deleteFromIvfPqIndex(_, indexPath, _, _))(
+      onBatch)
 
   final case class UserEvent(user_id: Long, event_type: String)
   final case class UserTopK(user_id: Long, top: Seq[String])

@@ -18,9 +18,9 @@ class ConfigSpec extends SparkSpec {
 
   test("sync json round-trips through the reference document shape") {
     val s = Sync("lims", "t1", "ref", "2024-01-30T23:57:12.194062Z")
-    val j = Json.syncToJson(s)
-    assert(j.contains("\"ref_last_value\""))
-    assert(Json.syncFromJson(j) === s)
+    val j = graft.config.Sidecar.toBytes(Json.syncToNode(s))
+    assert(new String(j, "UTF-8").contains("\"ref_last_value\""))
+    assert(Json.syncFromNode(graft.config.Sidecar.parseNode(j).get) === s)
   }
 
   test("readSyncFile initializes from ref_first_value when absent") {
@@ -28,12 +28,23 @@ class ConfigSpec extends SparkSpec {
     val settings = Settings(Map("lims" -> SystemConn(dbms = "oracle",
       tableSettings = Map("t1" -> TableSettings(
         refColumn = "ref", refFirstValue = "2024-01-01T00:00:00.000000Z")))))
-    val s = Json.readSyncFile(dir, "lims", "t1", settings)
-    assert(s === Sync("lims", "t1", "ref", "2024-01-01T00:00:00.000000Z"))
-    Json.writeSyncFile(s.advanced(
-      java.time.LocalDateTime.parse("2024-02-01T12:00:00.000001")), dir)
-    val s2 = Json.readSyncFile(dir, "lims", "t1", settings)
-    assert(s2.refLastValue === "2024-02-01T12:00:00.000001Z")
+    // a local path, and the same protocol through the counting
+    // filesystem (`countfs:`): the watermark goes through Hadoop FS, so
+    // its reads are driver metadata calls a store would charge for
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[CountingLocalFs].getName)
+    for (path <- Seq(dir.toString, s"countfs:$dir/counted")) {
+      CountingLocalFs.stats.reset()
+      val s = Json.readSyncFile(spark, path, "lims", "t1", settings)
+      assert(s === Sync("lims", "t1", "ref", "2024-01-01T00:00:00.000000Z"))
+      Json.writeSyncFile(spark, s.advanced(
+        java.time.LocalDateTime.parse("2024-02-01T12:00:00.000001")), path)
+      val s2 = Json.readSyncFile(spark, path, "lims", "t1", settings)
+      assert(s2.refLastValue === "2024-02-01T12:00:00.000001Z")
+      if (path.startsWith("countfs:"))
+        assert(CountingLocalFs.stats.driver.get >= 1L,
+          s"the sync reads are driver HEADs: ${CountingLocalFs.stats}")
+    }
   }
 
   test("property: sync format parse∘format is identity (µs precision)") {

@@ -738,11 +738,10 @@ class PlanSpec extends SparkSpec {
       }
       limited || primitiveInternal
     }
-    val offending = Queries.all.toSeq.flatMap { case (name, fn) =>
+    val offending = TestSession.registry(dir).toSeq.flatMap { case (name, df) =>
       if (boundedDomainAllowlist(name)) None
       else {
-        val plan: LogicalPlan =
-          fn(spark, dir).queryExecution.optimizedPlan
+        val plan: LogicalPlan = df.queryExecution.optimizedPlan
         val bad = plan.collect {
           case w: LWindow if w.partitionSpec.isEmpty &&
             !boundedByConstruction(w) => w
@@ -832,5 +831,22 @@ class PlanSpec extends SparkSpec {
       if line.contains("def main(")
     } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
     assert(mains.isEmpty, mains.mkString("\n"))
+  }
+
+  test("the touched-partition read of a stored index is written once: " +
+    "only IndexCompact asks whether a store still has partition " +
+    "directories") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val sites = for {
+      f <- files if f.getFileName.toString != "IndexCompact.scala"
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("hasPartDirs(")
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(sites.isEmpty, sites.mkString("\n"))
   }
 }

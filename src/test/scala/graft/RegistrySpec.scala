@@ -16,8 +16,8 @@ class RegistrySpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("every registry query has a flat (sortable) output schema") {
-    val offending = Queries.all.toSeq.flatMap { case (name, fn) =>
-      val bad = fn(spark, sfDir).schema.fields.collect {
+    val offending = TestSession.registry(sfDir).toSeq.flatMap { case (name, df) =>
+      val bad = df.schema.fields.collect {
         case f if f.dataType.isInstanceOf[ArrayType] ||
           f.dataType.isInstanceOf[StructType] ||
           f.dataType.isInstanceOf[MapType] ||
@@ -44,8 +44,8 @@ class RegistrySpec extends SparkSpec {
       IntegerType, DoubleType, TimestampType,
       TimestampNTZType) // q46 reads through a SQL view; both tz kinds
                         // land as pandas datetime64 and are gate-green
-    val offending = Queries.all.toSeq.flatMap { case (name, fn) =>
-      fn(spark, sfDir).schema.fields.collect {
+    val offending = TestSession.registry(sfDir).toSeq.flatMap { case (name, df) =>
+      df.schema.fields.collect {
         case f if !allowed.contains(f.dataType) =>
           s"$name.${f.name}: ${f.dataType.sql}"
       }

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all specs (one JVM, one session — specs
@@ -15,6 +17,19 @@ object TestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  private val registries =
+    scala.collection.mutable.Map.empty[String, ListMap[String, DataFrame]]
+
+  /** Every registry query over the fixture in `dir`, by name, built on
+    * the first call for that `dir`. Building a query runs its thunk,
+    * eager driver actions included, so the registry-wide lints
+    * (RegistrySpec's schema and type checks, PlanSpec's window check)
+    * share one build instead of paying it per lint. */
+  def registry(dir: String): ListMap[String, DataFrame] = synchronized {
+    registries.getOrElseUpdate(dir,
+      Queries.all.map { case (name, fn) => name -> fn(spark, dir) })
   }
 }
 
