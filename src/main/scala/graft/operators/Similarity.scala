@@ -18,6 +18,11 @@ import graft.functions.Expr
   *    average. This is the 100 TB path: bucket join shuffles
   *    candidates only.
   *
+  * The trained indexes (IVF, PQ, IVF-PQ, k-means, semantic dedup) share
+  * one pipeline: one seeded trainer (`trainCentroids`), one probe-cell
+  * expression (`probeCells`), one ADC tail (`adcTopK`) and one top-k
+  * tail (`topK`).
+  *
   * All arithmetic folds left-to-right in double precision via the
   * `aggregate`/`zip_with` higher-order functions — deterministic and
   * reproducible in any engine (float addition is not associative; a
@@ -80,15 +85,27 @@ object Similarity {
       vecCol: String, k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qvec")))
-    val scored = corpus.select(col(idCol).as("neighbor_id"), col(vecCol))
+    topK(corpus.select(col(idCol).as("neighbor_id"), col(vecCol))
       .join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qvec"), col(vecCol)))
+      .withColumn("cos", cosine(col("qvec"), col(vecCol))), k)
+  }
+
+  /** The ranking tail of every top-k here (brute force, LSH, IVF and the
+    * ADC re-rank): per query, cosine descending with the smaller
+    * neighbor id first on ties, so the cut is deterministic; rank ≤ k. */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "cos", "rank")
   }
+
+  /** The well-typed empty top-k: an index trained on an empty corpus, or
+    * a stored one taken down to nothing, has no neighbors to rank. */
+  private def emptyTopK(queries: DataFrame, idCol: String): DataFrame =
+    queries.limit(0).select(col(idCol).as("query_id"),
+      col(idCol).as("neighbor_id"), lit(0.0).as("cos"), lit(0).as("rank"))
 
   /** Deterministic pseudo-random hyperplane component for (plane i,
     * dim j): a value in [-0.5, 0.5) derived from md5 — reproducible
@@ -214,9 +231,23 @@ object Similarity {
     * break to the smallest centroid id, mirroring the oracle's cid
     * ASC). */
   private def cellOf(centsHat: Seq[Seq[Double]])(vec: Column): Column =
-    Expr.let(scoreArrCent(centsHat)(vec)) { a =>
-      (array_position(a, array_max(a)) - 1).cast("int")
-    }
+    Expr.let(scoreArrCent(centsHat)(vec))(argmax)
+
+  private def argmax(scores: Column): Column =
+    (array_position(scores, array_max(scores)) - 1).cast("int")
+
+  /** Nearest cell AND the row's cosine to it, from ONE let-bound
+    * evaluation of the cell scores: cos = score / ‖v‖ (score =
+    * dot(v, ĉ), see scoreArrCent). The per-row assignment of
+    * [[kmeansStats]] and [[coarseDriftStats]]; [[cellOf]] is the
+    * cell-only form. */
+  private def cellCos(centsHat: Seq[Seq[Double]], df: DataFrame,
+      vecCol: String): DataFrame =
+    df.select(Expr.let(scoreArrCent(centsHat)(col(vecCol))) { a =>
+        struct(argmax(a).as("cell"), array_max(a).as("score"))
+      }.as("s"), col(vecCol).as("v"))
+      .select(col("s.cell").as("cell"),
+        (col("s.score") / norm(col("v"))).as("cos"))
 
   /** One Lloyd (k-means) refinement step over the current centroids,
     * executed distributed: map-only cell assignment, one groupBy over
@@ -257,11 +288,39 @@ object Similarity {
     }
   }
 
+  /** The one seeded quantized-Lloyd trainer: the (raw, UN-normalized)
+    * centroids after `rounds` refinement steps from deterministic seeds,
+    * the model [[ivfTopK]], [[kmeansStats]], [[semanticDedup]],
+    * [[pqTrain]] and [[trainCoarse]] all build on.
+    *
+    * Seeds are the vectors with ids 0..k−1 (data-deterministic, so any
+    * engine reproduces them: the oracles replay `WHERE id < k`, so the
+    * rule cannot change), read whether their elements are float or
+    * double (both widen exactly to double). Those ids must all be
+    * PRESENT: a corpus with sparse low ids under-seeds, and a Lloyd step
+    * would index past the seed list — fail with the contract instead.
+    * An empty corpus has no model: the result is empty. */
+  private def trainCentroids(corpus: DataFrame, idCol: String,
+      vecCol: String, k: Int, rounds: Int): Seq[Seq[Double]] = {
+    val seeds: Seq[Seq[Double]] = corpus.filter(col(idCol) < k)
+      .orderBy(col(idCol)).select(col(vecCol)).collect()
+      .map(_.getSeq[Any](0).map {
+        case f: Float => f.toDouble
+        case d: Double => d
+      }.toSeq).toSeq
+    if (seeds.isEmpty) return Seq.empty
+    require(seeds.size == k,
+      s"quantized-Lloyd seeding needs ids 0..${k - 1} present " +
+        s"(found ${seeds.size} of $k) — train on the original " +
+        "densely-indexed corpus, or remap ids before training")
+    (0 until rounds).foldLeft(seeds)((c, _) =>
+      lloydStep(corpus, vecCol, c, k))
+  }
+
   /** IVF (inverted-file) ANN top-k — the cell-partitioned alternative
-    * to sign-LSH. Index build: `nlist` seed centroids = the lowest-id
-    * vectors (deterministic init, reproducible by any engine) refined
-    * by `refine` Lloyd iterations (distributed groupBy-mean, see
-    * lloydStep) — actual k-means seeding, not just "first 16 vectors".
+    * to sign-LSH. Index build: `nlist` centroids from the seeded
+    * trainer ([[trainCoarse]]) refined by `refine` Lloyd iterations —
+    * actual k-means, not just "first 16 vectors".
     * Each corpus vector is assigned to its nearest centroid by a pure
     * per-row expression (argmax over a centroid literal — map-only, no
     * shuffle); each query probes its `nprobe` nearest cells; exact
@@ -274,45 +333,16 @@ object Similarity {
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, nlist: Int = 16, nprobe: Int = 4,
       refine: Int = 1): DataFrame = {
-    val seeds: Seq[Seq[Double]] = corpus.filter(col(idCol) < nlist)
-      .orderBy(col(idCol)).select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-    // empty corpus → no index to build and a well-defined empty result
-    // (top-k over nothing); returning it beats crashing in cellOf
-    if (seeds.isEmpty)
-      return queries.limit(0).select(col(idCol).as("query_id"),
-        col(idCol).as("neighbor_id"),
-        lit(0.0).as("cos"), lit(0).as("rank"))
-    val centroids = (0 until refine)
-      .foldLeft(seeds)((c, _) => lloydStep(corpus, vecCol, c, nlist))
-    val centsHat = centroids.map(normalized)
-
-    def cell(vec: Column): Column = cellOf(centsHat)(vec)
-
-    // nprobe nearest cells: sort (−score, idx) structs, take the prefix
-    // (score ordering ≡ cosine ordering, see scoreArrCent)
-    def probeCells(vec: Column): Column =
-      Expr.let(scoreArrCent(centsHat)(vec)) { a =>
-        transform(
-          slice(array_sort(zip_with(a, sequence(lit(0), lit(nlist - 1)),
-            (c, i) => struct((-c).as("negcos"), i.as("idx")))),
-            1, nprobe),
-          s => s.getField("idx"))
-      }
-
+    val coarse = trainCoarse(corpus, idCol, vecCol, nlist, refine)
+    if (coarse.isEmpty) return emptyTopK(queries, idCol)
     val assigned = corpus.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("nvec"), cell(col(vecCol)).as("cell"))
+      col(vecCol).as("nvec"), cellOf(coarse)(col(vecCol)).as("cell"))
     val probes = broadcast(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("qvec"),
-      explode(probeCells(col(vecCol))).as("cell")))
-    val scored = probes.join(assigned, Seq("cell"))
+      explode(probeCells(coarse, nprobe)(col(vecCol))).as("cell")))
+    topK(probes.join(assigned, Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+      .withColumn("cos", cosine(col("qvec"), col("nvec"))), k)
   }
 
   /** Full k-means over an embedding corpus — `rounds` Lloyd iterations
@@ -321,12 +351,12 @@ object Similarity {
     * centroid (cohesion), and the first centroid coordinates.
     *
     * Every piece is oracle-reproducible by construction: seeds are
-    * data-deterministic, each iteration's centroid is the mean of
-    * 2^-20-QUANTIZED member values (exact integer sum → one double
-    * divide; see lloydStep — a raw double mean is shuffle-order-
-    * dependent and can never hash-match another engine), and the
-    * cohesion metric is itself a quantized mean. DuckDB replays the
-    * identical recurrence as `rounds` chained CTE blocks (the q82
+    * data-deterministic ([[trainCentroids]]), each iteration's centroid
+    * is the mean of 2^-20-QUANTIZED member values (exact integer sum →
+    * one double divide; see lloydStep — a raw double mean is
+    * shuffle-order-dependent and can never hash-match another engine),
+    * and the cohesion metric is itself a quantized mean. DuckDB replays
+    * the identical recurrence as `rounds` chained CTE blocks (the q82
     * PageRank proof pattern applied to Lloyd).
     *
     * Scale shape: per round, one map-only assignment pass (argmax over
@@ -338,29 +368,15 @@ object Similarity {
     * test scale). */
   def kmeansStats(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, rounds: Int, coords: Int = 4): DataFrame = {
-    val seeds: Seq[Seq[Double]] = corpus.filter(col(idCol) < k)
-      .orderBy(col(idCol)).select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
+    val cents = trainCentroids(corpus, idCol, vecCol, k, rounds)
     val coordCols = (0 until coords).map(i => s"c$i")
-    // empty corpus → no seeds, no model; a well-typed empty result
-    if (seeds.isEmpty)
+    // empty corpus → no model; a well-typed empty result
+    if (cents.isEmpty)
       return corpus.limit(0).select(lit(0).as("cell") +: lit(0L).as("n") +:
         lit(0.0).as("mean_cos") +: coordCols.map(c => lit(0.0).as(c)): _*)
-    val cents = (0 until rounds)
-      .foldLeft(seeds)((c, _) => lloydStep(corpus, vecCol, c, k))
-    val centsHat = cents.map(normalized)
-    // final assignment: cell + score in ONE let-bound evaluation of the
-    // k scores; cos = score / ‖v‖ (score = dot(v, ĉ), see scoreArrCent)
-    val assigned = corpus.select(
-      Expr.let(scoreArrCent(centsHat)(col(vecCol))) { a =>
-        struct((array_position(a, array_max(a)) - 1).cast("int").as("cell"),
-          array_max(a).as("score"))
-      }.as("s"), col(vecCol).as("v"))
-      .select(col("s.cell").as("cell"),
-        (col("s.score") / norm(col("v"))).as("cos"))
-    val stats = assigned.groupBy("cell").agg(
-      count(lit(1)).as("n"),
-      sum(floor(col("cos") * lit(1048576.0)).cast("long")).as("qc"))
+    val stats = cellCos(cents.map(normalized), corpus, vecCol)
+      .groupBy("cell").agg(count(lit(1)).as("n"),
+        sum(floor(col("cos") * lit(1048576.0)).cast("long")).as("qc"))
     // centroid coords ride as a k×coords literal — map-only, no join
     val centLit = typedLit(cents.map(_.take(coords)))
     stats.select(
@@ -392,8 +408,7 @@ object Similarity {
   def productQuantizeStats(corpus: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int, k: Int, rounds: Int,
       coords: Int = 4): DataFrame = {
-    require(m > 0 && dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sublen = dim / m
+    val sublen = subspaceLen(dim, m)
     (0 until m).map { j =>
       val sub = corpus.select(col(idCol),
         slice(col(vecCol), j * sublen + 1, sublen).as("subv"))
@@ -404,28 +419,10 @@ object Similarity {
     }.reduce(_ unionByName _)
   }
 
-  /** The trained (raw, UN-normalized) centroids of a quantized-Lloyd
-    * run — the model [[kmeansStats]]/[[productQuantizeStats]] report
-    * statistics OF; exposed so an index build can encode against it. */
-  private def trainCentroids(corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int, rounds: Int): Seq[Seq[Double]] = {
-    val seeds: Seq[Seq[Double]] = corpus.filter(col(idCol) < k)
-      .orderBy(col(idCol)).select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toSeq).toSeq
-    if (seeds.isEmpty) Seq.empty // empty corpus → no model to train
-    else {
-      // the deterministic seeding contract is ids 0..k-1 PRESENT (the
-      // oracle replays `WHERE id < k`, so the rule cannot change); a
-      // corpus with sparse low ids under-seeds and lloydStep would die
-      // with a bare ArrayIndexOutOfBounds deep in the fold — fail with
-      // the actual contract instead
-      require(seeds.size == k,
-        s"quantized-Lloyd seeding needs ids 0..${k - 1} present " +
-          s"(found ${seeds.size} of $k) — train on the original " +
-          "densely-indexed corpus, or remap ids before training")
-      (0 until rounds).foldLeft(seeds)((c, _) =>
-        lloydStep(corpus, vecCol, c, k))
-    }
+  /** The length of each of `m` contiguous subspaces of a `dim`-vector. */
+  private def subspaceLen(dim: Int, m: Int): Int = {
+    require(m > 0 && dim % m == 0, s"dim $dim must split into $m subspaces")
+    dim / m
   }
 
   /** PQ ADC (asymmetric-distance) top-k — the QUERY path of the
@@ -459,26 +456,22 @@ object Similarity {
       vecCol: String, dim: Int, m: Int, kCodes: Int, rounds: Int,
       shortlist: Int, k: Int): DataFrame = {
     val codebooks = pqTrain(corpus, idCol, vecCol, dim, m, kCodes, rounds)
-    if (codebooks.exists(_.isEmpty)) // empty corpus → empty top-k
-      return queries.limit(0).select(col(idCol).as("query_id"),
-        col(idCol).as("neighbor_id"), lit(0.0).as("cos"),
-        lit(0).as("rank"))
+    if (codebooks.exists(_.isEmpty)) return emptyTopK(queries, idCol)
     pqAdcScan(pqEncode(corpus, idCol, vecCol, codebooks), queries,
       idCol, vecCol, codebooks, shortlist, k)
   }
 
   /** PQ codebook training alone — the INDEX-BUILD half of
-    * [[pqAdcTopK]] (identical recurrence: per-subspace quantized-Lloyd
-    * from the k lowest-id seeds, normalized). Split out so a
-    * deployment can train + [[pqEncode]] once and serve many query
-    * batches via [[pqAdcScan]] — the stored-index treatment the dedup
-    * bucket index got; a per-query-batch retrain is pure waste and
-    * made the ADC scan look slower than brute force (its wall was
+    * [[pqAdcTopK]]: per subspace, the seeded quantized-Lloyd trainer
+    * ([[trainCentroids]]) on the sliced subvectors, normalized. Split
+    * out so a deployment can train + [[pqEncode]] once and serve many
+    * query batches via [[pqAdcScan]] — the stored-index treatment the
+    * dedup bucket index got; a per-query-batch retrain is pure waste
+    * and made the ADC scan look slower than brute force (its wall was
     * ~2/3 index build). */
   def pqTrain(corpus: DataFrame, idCol: String, vecCol: String,
       dim: Int, m: Int, kCodes: Int, rounds: Int): Seq[Seq[Seq[Double]]] = {
-    require(m > 0 && dim % m == 0, s"dim $dim must split into $m subspaces")
-    val sublen = dim / m
+    val sublen = subspaceLen(dim, m)
     (0 until m).map { j =>
       val subDf = corpus.select(col(idCol),
         slice(col(vecCol), j * sublen + 1, sublen).as("subv"))
@@ -486,19 +479,24 @@ object Similarity {
     }
   }
 
-  /** Empty-codebook guard shared by the split-out encode/scan halves:
+  /** Empty-model guard shared by the split-out encode/scan halves:
     * the monoliths ([[pqAdcTopK]]/[[ivfPqTopK]]) return an empty top-k
     * frame for an empty corpus, but the public halves receive the
     * TRAINED model as an argument — an empty one means the caller
     * trained on an empty corpus and skipped the monolith's guard, and
     * `codebooks.head.head.size` would otherwise surface as a bare
-    * NoSuchElementException deep in plan construction. */
-  private def requireTrained(codebooks: Seq[Seq[Seq[Double]]],
-      op: String): Unit =
+    * NoSuchElementException deep in plan construction. The IVF-PQ
+    * halves pass their `coarse` quantizer too. */
+  private def requireTrained(op: String, codebooks: Seq[Seq[Seq[Double]]],
+      coarse: Option[Seq[Seq[Double]]] = None): Unit = {
     require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
       s"$op needs non-empty trained codebooks (pqTrain on an empty " +
         "corpus yields empty ones — guard the empty corpus at the " +
         "caller as pqAdcTopK does)")
+    require(coarse.forall(_.nonEmpty), s"$op needs a non-empty coarse " +
+      "quantizer (training on an empty corpus yields none — guard the " +
+      "empty corpus at the caller as ivfPqTopK does)")
+  }
 
   /** Map-only PQ encoding of the corpus against trained codebooks:
     * (neighbor_id, nvec, code0..code{m-1}) — the frame a deployment
@@ -507,66 +505,56 @@ object Similarity {
     * back for the shortlist). */
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    requireTrained(codebooks, "pqEncode")
-    val m = codebooks.size
+    requireTrained("pqEncode", codebooks)
     val sublen = codebooks.head.head.size
-    val codeCols = (0 until m).map(j =>
-      cellOf(codebooks(j))(slice(col(vecCol), j * sublen + 1, sublen))
-        .as(s"code$j"))
-    corpus.select(
-      col(idCol).as("neighbor_id") +: col(vecCol).as("nvec") +: codeCols: _*)
+    corpus.select(col(idCol).as("neighbor_id") +: col(vecCol).as("nvec") +:
+      codebooks.indices.map(j =>
+        cellOf(codebooks(j))(slice(col(vecCol), j * sublen + 1, sublen))
+          .as(s"code$j")): _*)
   }
 
-  /** The per-query-batch SCAN half of [[pqAdcTopK]]: LUT build
-    * (query-side, m·kCodes dots per query), fused-ADC score of every
-    * encoded row ([[adcNative]]), per-query shortlist cut, exact
-    * cosine re-rank. Bit-identical composition with
-    * [[pqTrain]]/[[pqEncode]] to the monolithic [[pqAdcTopK]]
-    * (same expressions in the same order). */
+  /** The per-query-batch SCAN half of [[pqAdcTopK]]: every encoded row
+    * is a candidate of every query (a cross join against the broadcast
+    * batch), scored and re-ranked by the ADC tail ([[adcTopK]]).
+    * Bit-identical composition with [[pqTrain]]/[[pqEncode]] to the
+    * monolithic [[pqAdcTopK]] (same expressions in the same order). */
   def pqAdcScan(encoded: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, codebooks: Seq[Seq[Seq[Double]]],
       shortlist: Int, k: Int): DataFrame = {
-    requireTrained(codebooks, "pqAdcScan")
-    val m = codebooks.size
-    val sublen = codebooks.head.head.size
-    val lutCols = (0 until m).map(j =>
-      scoreArrCent(codebooks(j))(
-        slice(col(vecCol), j * sublen + 1, sublen)).as(s"lut$j"))
-    val q = broadcast(queries.select(
-      col(idCol).as("query_id") +: col(vecCol).as("qvec") +: lutCols: _*))
-    val scored = q.crossJoin(encoded)
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", adcNative(
-        (0 until m).map(j => col(s"lut$j")),
-        (0 until m).map(j => col(s"code$j"))))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id").asc)
-    val short = scored.withColumn("srank", row_number().over(wAdc))
-      .filter(col("srank") <= shortlist)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    short.withColumn("cos", cosine(col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    requireTrained("pqAdcScan", codebooks)
+    adcTopK(queries, idCol, vecCol, codebooks, Nil, _.crossJoin(encoded),
+      shortlist, k)
   }
 
-  /** Full IVF-PQ search — the composition the two halves exist for:
-    * [[ivfTopK]]'s coarse quantizer restricts WHICH candidates are
-    * scored (each query probes its `nprobe` nearest of `nlist` cells;
-    * the cell equi-join touches ~nprobe/nlist of the corpus) and
-    * [[pqAdcTopK]]'s product quantizer restricts HOW MUCH each
-    * candidate costs (m LUT lookups + m−1 adds — no per-pair float
-    * loop). Same deterministic training recurrences as q42/q184, same
-    * fold-order-pinned doubles, so the whole index — coarse cells, PQ
-    * codes, LUTs, ADC sums, both top-k cuts — replays in an oracle.
-    * Exact cosine re-ranks the `shortlist` ADC survivors.
-    *
-    * Scale shape: everything before the cell join is map-only against
-    * driver-trained literals (nlist·dim + k·dim doubles of model);
-    * the join shuffles candidates only; the per-query windows are the
-    * standard top-k tail. This is the 100 TB ANN serving plan: prune
-    * by cell, scan by code, verify exactly on a constant-size set. */
+  /** The ADC tail of [[pqAdcScan]] and [[ivfPqScan]], which differ only
+    * in where candidates come from: the query batch gets its LUTs
+    * (m·kCodes dots per query, the trainer's per-subspace score array)
+    * plus the caller's `probe` columns, is broadcast, and meets the
+    * encoded rows in `candidates`; each candidate then costs one fused
+    * ADC sum ([[adcNative]]), the `shortlist` best per query (ties →
+    * smaller id) survive, and exact fixed-fold cosines re-rank them
+    * ([[topK]]). */
+  private def adcTopK(queries: DataFrame, idCol: String, vecCol: String,
+      codebooks: Seq[Seq[Seq[Double]]], probe: Seq[Column],
+      candidates: DataFrame => DataFrame, shortlist: Int,
+      k: Int): DataFrame = {
+    val sublen = codebooks.head.head.size
+    val luts = codebooks.indices.map(j => scoreArrCent(codebooks(j))(
+      slice(col(vecCol), j * sublen + 1, sublen)).as(s"lut$j"))
+    val q = broadcast(queries.select(Seq(col(idCol).as("query_id"),
+      col(vecCol).as("qvec")) ++ probe ++ luts: _*))
+    val scored = candidates(q)
+      .where(col("query_id") =!= col("neighbor_id"))
+      .withColumn("adc", adcNative(
+        codebooks.indices.map(j => col(s"lut$j")),
+        codebooks.indices.map(j => col(s"code$j"))))
+    val wAdc = Window.partitionBy(col("query_id"))
+      .orderBy(col("adc").desc, col("neighbor_id").asc)
+    topK(scored.withColumn("srank", row_number().over(wAdc))
+      .filter(col("srank") <= shortlist)
+      .withColumn("cos", cosine(col("qvec"), col("nvec"))), k)
+  }
+
   /** Scale-aware ADC shortlist depth for [[ivfPqTopK]]. A FIXED
     * shortlist decays with corpus growth: the ADC score mis-ranks a
     * roughly constant fraction of the candidates it orders, so the
@@ -588,16 +576,30 @@ object Similarity {
     math.max(5 * k, math.ceil(candidates / 256).toInt)
   }
 
+  /** Full IVF-PQ search — the composition the two halves exist for:
+    * [[ivfTopK]]'s coarse quantizer restricts WHICH candidates are
+    * scored (each query probes its `nprobe` nearest of `nlist` cells;
+    * the cell equi-join touches ~nprobe/nlist of the corpus) and
+    * [[pqAdcTopK]]'s product quantizer restricts HOW MUCH each
+    * candidate costs (m LUT lookups + m−1 adds — no per-pair float
+    * loop). Same deterministic training recurrences as q42/q184, same
+    * fold-order-pinned doubles, so the whole index — coarse cells, PQ
+    * codes, LUTs, ADC sums, both top-k cuts — replays in an oracle.
+    * Exact cosine re-ranks the `shortlist` ADC survivors.
+    *
+    * Scale shape: everything before the cell join is map-only against
+    * driver-trained literals (nlist·dim + k·dim doubles of model);
+    * the join shuffles candidates only; the per-query windows are the
+    * standard top-k tail. This is the 100 TB ANN serving plan: prune
+    * by cell, scan by code, verify exactly on a constant-size set. */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, dim: Int, m: Int, kCodes: Int, rounds: Int,
       nlist: Int, nprobe: Int, shortlist: Int, k: Int): DataFrame = {
-    require(m > 0 && dim % m == 0, s"dim $dim must split into $m subspaces")
+    subspaceLen(dim, m): Unit // a bad split fails before any training job
     val coarse = trainCoarse(corpus, idCol, vecCol, nlist, rounds)
     val codebooks = pqTrain(corpus, idCol, vecCol, dim, m, kCodes, rounds)
     if (coarse.isEmpty || codebooks.exists(_.isEmpty))
-      return queries.limit(0).select(col(idCol).as("query_id"),
-        col(idCol).as("neighbor_id"), lit(0.0).as("cos"),
-        lit(0).as("rank"))
+      return emptyTopK(queries, idCol)
     ivfPqScan(ivfPqEncode(corpus, idCol, vecCol, coarse, codebooks),
       queries, idCol, vecCol, coarse, codebooks, nprobe, shortlist, k)
   }
@@ -618,40 +620,33 @@ object Similarity {
   def ivfPqEncode(corpus: DataFrame, idCol: String, vecCol: String,
       coarse: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame = {
-    requireTrained(codebooks, "ivfPqEncode")
-    require(coarse.nonEmpty, "ivfPqEncode needs a non-empty coarse " +
-      "quantizer (training on an empty corpus yields none — guard the " +
-      "empty corpus at the caller as ivfPqTopK does)")
-    val m = codebooks.size
-    val sublen = codebooks.head.head.size
-    val codeCols = (0 until m).map(j =>
-      cellOf(codebooks(j))(slice(col(vecCol), j * sublen + 1, sublen))
-        .as(s"code$j"))
-    corpus.select(
-      Seq(col(idCol).as("neighbor_id"), col(vecCol).as("nvec"),
-        cellOf(coarse)(col(vecCol)).as("cell")) ++ codeCols: _*)
+    requireTrained("ivfPqEncode", codebooks, Some(coarse))
+    pqEncode(corpus, idCol, vecCol, codebooks).select(
+      col("neighbor_id") +: col("nvec") +:
+        cellOf(coarse)(col("nvec")).as("cell") +:
+        codebooks.indices.map(j => col(s"code$j")): _*)
   }
 
   /** The `nprobe` nearest coarse cells per vector (cos desc, lower
-    * cell id on ties) — the query-side cell expansion shared by
-    * [[ivfPqScan]] and the touched-cell collection of
-    * [[ivfPqScanStored]]'s partition pruning. */
+    * cell id on ties; score ordering ≡ cosine ordering, see
+    * scoreArrCent) — the one query-side cell expansion: [[ivfTopK]]'s
+    * and [[ivfPqScan]]'s probes, and the touched-cell collection of
+    * [[ivfPqScanStored]]'s partition pruning and [[scanAdmission]]. */
   private def probeCells(coarse: Seq[Seq[Double]], nprobe: Int)(
-      vec: Column): Column = {
-    val nlist = coarse.size
+      vec: Column): Column =
     Expr.let(scoreArrCent(coarse)(vec)) { a =>
       transform(
-        slice(array_sort(zip_with(a, sequence(lit(0), lit(nlist - 1)),
+        slice(array_sort(zip_with(a, sequence(lit(0), lit(coarse.size - 1)),
           (c, i) => struct((-c).as("negcos"), i.as("idx")))),
           1, nprobe),
         s => s.getField("idx"))
     }
-  }
 
   /** The per-query-batch half of [[ivfPqTopK]] against a pre-built
-    * [[ivfPqEncode]] index: probe-cell expansion, cell equi-join,
-    * fused-ADC score, shortlist cut, exact re-rank — bit-identical
-    * composition to the monolith (asserted in DedupSimilaritySpec).
+    * [[ivfPqEncode]] index: probe-cell expansion, then the cell
+    * equi-join as the candidate source of the ADC tail ([[adcTopK]],
+    * shared with [[pqAdcScan]]) — bit-identical composition to the
+    * monolith (asserted in DedupSimilaritySpec).
     *
     * Hot-cell skew (r9 verdict item 4), measured rather than assumed:
     * the cell join BROADCASTS the query batch (deliberate — a serving
@@ -674,34 +669,10 @@ object Similarity {
       vecCol: String, coarse: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]], nprobe: Int,
       shortlist: Int, k: Int): DataFrame = {
-    requireTrained(codebooks, "ivfPqScan")
-    require(coarse.nonEmpty, "ivfPqScan needs a non-empty coarse " +
-      "quantizer (training on an empty corpus yields none — guard the " +
-      "empty corpus at the caller as ivfPqTopK does)")
-    val m = codebooks.size
-    val sublen = codebooks.head.head.size
-    def probeCellsArr(vec: Column): Column = probeCells(coarse, nprobe)(vec)
-    val lutCols = (0 until m).map(j =>
-      scoreArrCent(codebooks(j))(
-        slice(col(vecCol), j * sublen + 1, sublen)).as(s"lut$j"))
-    val q = broadcast(queries.select(
-      Seq(col(idCol).as("query_id"), col(vecCol).as("qvec"),
-        explode(probeCellsArr(col(vecCol))).as("cell")) ++ lutCols: _*))
-    val scored = q.join(encoded, Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc", adcNative(
-        (0 until m).map(j => col(s"lut$j")),
-        (0 until m).map(j => col(s"code$j"))))
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc").desc, col("neighbor_id").asc)
-    val short = scored.withColumn("srank", row_number().over(wAdc))
-      .filter(col("srank") <= shortlist)
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    short.withColumn("cos", cosine(col("qvec"), col("nvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+    requireTrained("ivfPqScan", codebooks, Some(coarse))
+    adcTopK(queries, idCol, vecCol, codebooks,
+      Seq(explode(probeCells(coarse, nprobe)(col(vecCol))).as("cell")),
+      _.join(encoded, Seq("cell")), shortlist, k)
   }
 
   /** Builds and STORES the IVF-PQ serving index — the deployment form
@@ -728,7 +699,7 @@ object Similarity {
   def writeIvfPqIndex(corpus: DataFrame, path: String, idCol: String,
       vecCol: String, dim: Int, m: Int, kCodes: Int, rounds: Int,
       nlist: Int): Unit = {
-    require(m > 0 && dim % m == 0, s"dim $dim must split into $m subspaces")
+    subspaceLen(dim, m): Unit // a bad split fails before any training job
     val coarse = trainCoarse(corpus, idCol, vecCol, nlist, rounds)
     val codebooks = pqTrain(corpus, idCol, vecCol, dim, m, kCodes, rounds)
     require(coarse.nonEmpty && codebooks.forall(_.nonEmpty),
@@ -966,9 +937,7 @@ object Similarity {
         .select(explode(probeCells(coarse, nprobe)(col(vecCol))))) match {
       // a fully-taken-down index (every cell dir deleted) is a valid
       // state with zero neighbors
-      case None => queries.limit(0).select(col(idCol).as("query_id"),
-        col(idCol).as("neighbor_id"), lit(0.0).as("cos"),
-        lit(0).as("rank"))
+      case None => emptyTopK(queries, idCol)
       case Some(encoded) => ivfPqScan(encoded, queries, idCol, vecCol,
         coarse, codebooks, nprobe, sl, k)
     }
@@ -1024,14 +993,8 @@ object Similarity {
     val coarse = trainCoarse(buildCorpus, idCol, vecCol, nlist, rounds)
     require(coarse.nonEmpty,
       "coarseDriftStats needs a non-empty build corpus to train on")
-    def assigned(df: DataFrame, isNew: Boolean): DataFrame = df.select(
-      Expr.let(scoreArrCent(coarse)(col(vecCol))) { a =>
-        struct((array_position(a, array_max(a)) - 1).cast("int")
-          .as("cell"), array_max(a).as("score"))
-      }.as("s"), col(vecCol).as("v"))
-      .select(col("s.cell").as("cell"),
-        (col("s.score") / norm(col("v"))).as("cos"),
-        lit(isNew).as("is_new"))
+    def assigned(df: DataFrame, isNew: Boolean): DataFrame =
+      cellCos(coarse, df, vecCol).withColumn("is_new", lit(isNew))
     val q20 = 1048576.0 // 2^20 fixed point — order-independent sums
     assigned(buildCorpus, isNew = false)
       .unionByName(assigned(appended, isNew = true))
@@ -1059,8 +1022,8 @@ object Similarity {
   }
 
   /** SemDeDup-style semantic deduplication: cluster the corpus with
-    * `rounds` Lloyd iterations from deterministic seeds (the k
-    * lowest-id vectors — exactly kmeansStats' recurrence, so the q180
+    * `rounds` Lloyd iterations from deterministic seeds (the seeded
+    * trainer [[trainCentroids]] kmeansStats also uses, so the q180
     * oracle replays it as the same chained CTEs), then WITHIN each
     * cluster drop every member whose cosine to a LOWER-id member is ≥
     * `threshold` (the greedy keep-first rule — deterministic, no
@@ -1079,18 +1042,11 @@ object Similarity {
     * reproduce bit-identically (see `cosine`). */
   def semanticDedup(corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, rounds: Int, threshold: Double): DataFrame = {
-    val seeds: Seq[Seq[Double]] = corpus.filter(col(idCol) < k)
-      .orderBy(col(idCol)).select(col(vecCol)).collect()
-      .map(_.getSeq[Any](0).map {
-        case f: Float => f.toDouble
-        case d: Double => d
-      }.toSeq).toSeq
-    if (seeds.isEmpty)
+    val centsHat = trainCentroids(corpus, idCol, vecCol, k, rounds)
+      .map(normalized)
+    if (centsHat.isEmpty)
       return corpus.limit(0).select(lit(0).as("cell"), lit(0L).as("n"),
         lit(0L).as("n_dropped"), lit(0L).as("n_kept"))
-    val cents = (0 until rounds)
-      .foldLeft(seeds)((c, _) => lloydStep(corpus, vecCol, c, k))
-    val centsHat = cents.map(normalized)
     // deterministic map-only projection — recomputed per consumer
     // rather than persisted (no cache-lifetime leak; at 100 TB the
     // caller persists the assignment once)
@@ -1135,16 +1091,11 @@ object Similarity {
     val cands = qb.join(cb, Seq("tbl", "bucket"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "neighbor_id").distinct()
-    val scored = cands
+    topK(cands
       .join(corpus.select(col(idCol).as("neighbor_id"),
         col(vecCol).as("nvec")), Seq("neighbor_id"))
       .join(broadcast(queries.select(col(idCol).as("query_id"),
         col(vecCol).as("qvec"))), Seq("query_id"))
-      .withColumn("cos", cosine(col("qvec"), col("nvec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cos", "rank")
+      .withColumn("cos", cosine(col("qvec"), col("nvec"))), k)
   }
 }

@@ -259,13 +259,16 @@ object Streaming {
     * merge must read its own previous output — a cyclic dependency no
     * declarative streaming sink expresses; inside the batch function
     * it's plain batch Spark, so the whole q95 analysis applies
-    * (key-co-partitioned join, tiny change batches broadcast). The
-    * rewrite is atomic-per-batch (write to _staging, swap) so a crash
-    * between batches replays idempotently from the checkpoint: a batch
-    * re-applied over its own output is a no-op because equal values
-    * don't close rows. State table size = history rows, not stream
-    * length. Columns: stream (k, v, change_date); table (k, v,
-    * valid_from, valid_to). */
+    * (key-co-partitioned join, tiny change batches broadcast). Each
+    * batch's new history is written to `<table>_staging`, then copied
+    * over the table by a read-back overwrite — a copy, not a swap, so a
+    * crash DURING the copy leaves a torn table. A crash between batches
+    * replays idempotently from the checkpoint: a batch re-applied over
+    * its own output is a no-op because equal values don't close rows.
+    * The table is found through its path's Hadoop FileSystem, so a
+    * `file:` URI or an object-store path keeps its history. State
+    * table size = history rows, not stream length. Columns: stream
+    * (k, v, change_date); table (k, v, valid_from, valid_to). */
   def applyCdcScd2(changes: DataFrame, tablePath: String,
       checkpointPath: String): StreamingQuery =
     changes.writeStream
@@ -283,8 +286,10 @@ object Streaming {
   private[graft] def mergeScd2Batch(batchDf: DataFrame,
       tablePath: String): Unit = {
         val spark = batchDf.sparkSession
+        val table = new org.apache.hadoop.fs.Path(tablePath)
         val cur =
-          if (new java.io.File(tablePath).exists())
+          if (table.getFileSystem(spark.sparkContext.hadoopConfiguration)
+              .exists(table))
             spark.read.parquet(tablePath)
           else
             spark.createDataFrame(
@@ -326,7 +331,7 @@ object Streaming {
             col("r.valid_from").as("valid_from"),
             col("r.valid_to").as("valid_to"))
         val next = closedHist.unionByName(merged)
-        // atomic-per-batch swap: never read and overwrite in one job
+        // never read and overwrite in one job: stage, then copy back
         val staging = tablePath + "_staging"
         next.write.mode("overwrite").parquet(staging)
         spark.read.parquet(staging).write.mode("overwrite")
@@ -1111,14 +1116,15 @@ object Streaming {
     * (delete + re-register), so at most one live timer per key — state
     * and timer count are both O(live keys).
     *
-    * Out-of-order handling (shared with `sessionize` below): an event
-    * older than the open session's start but within gap of it LOWERS
-    * startMs (min-fold), so the emitted window matches batch; an event
-    * more than a full gap older is emitted as its own closed singleton
-    * session. Residual O(1)-state assumption: if several such stragglers
-    * for the SAME earlier session arrive in DIFFERENT micro-batches,
-    * each is a singleton where batch would merge them — tracking that
-    * would need a session buffer per key instead of one open session. */
+    * Out-of-order handling (`foldSession`, shared with `sessionize`
+    * below): an event older than the open session's start but within
+    * gap of it LOWERS startMs (min-fold), so the emitted window matches
+    * batch; an event more than a full gap older is emitted as its own
+    * closed singleton session. Residual O(1)-state assumption: if
+    * several such stragglers for the SAME earlier session arrive in
+    * DIFFERENT micro-batches, each is a singleton where batch would
+    * merge them — tracking that would need a session buffer per key
+    * instead of one open session. */
   class SessionTimerProcessor(gapMs: Long)
       extends StatefulProcessor[Long, SessionEvent, Session] {
     @transient private var st: ValueState[SessionState] = _
@@ -1132,28 +1138,9 @@ object Streaming {
 
     override def handleInputRows(key: Long, rows: Iterator[SessionEvent],
         timerValues: TimerValues): Iterator[Session] = {
-      var closed = List.empty[Session]
-      var cur = if (st.exists()) Some(st.get()) else None
-      val oldTimer = cur.map(_.lastMs + gapMs)
-      rows.toSeq.sortBy(_.ts.getTime).foreach { e =>
-        val t = e.ts.getTime
-        cur = cur match {
-          case Some(s) if t >= s.lastMs + gapMs => // next session begins
-            closed ::= emit(key, s)
-            Some(SessionState(t, t, 1))
-          case Some(s) if t < s.startMs - gapMs => // out-of-order, disjoint
-            closed ::= emit(key, SessionState(t, t, 1))
-            Some(s)
-          case Some(s) => // in or adjacent to the open session: extend —
-            // taking min(startMs, t) so an out-of-order event older than
-            // the session start (but inside the watermark) yields the
-            // correct window, matching batch sessionization
-            Some(SessionState(math.min(s.startMs, t),
-              math.max(s.lastMs, t), s.n + 1))
-          case None =>
-            Some(SessionState(t, t, 1))
-        }
-      }
+      val prev = if (st.exists()) Some(st.get()) else None
+      val oldTimer = prev.map(_.lastMs + gapMs)
+      val (closed, cur) = foldSession(prev, rows, gapMs)
       cur.foreach { s =>
         st.update(s)
         val newTimer = s.lastMs + gapMs
@@ -1162,7 +1149,7 @@ object Streaming {
           getHandle.registerTimer(newTimer)
         }
       }
-      closed.reverse.iterator
+      closed.iterator.map(emit(key, _))
     }
 
     override def handleExpiredTimer(key: Long, timerValues: TimerValues,
@@ -1194,6 +1181,36 @@ object Streaming {
   final case class Session(user_id: Long, session_start: Timestamp,
       n_events: Long, last_ts: Timestamp)
 
+  /** The session fold both sessionizers share: one key's events in time
+    * order over its open session `cur`. An event a full gap past the
+    * session closes it and opens the next; one more than a gap BEFORE
+    * its start is an out-of-order, disjoint singleton, closed at once;
+    * any other extends it, taking min(startMs, t) so an out-of-order
+    * event older than the start (but inside the watermark) yields the
+    * window batch sessionization would. Returns the closed sessions in
+    * emit order and the open one. */
+  private def foldSession(cur: Option[SessionState],
+      events: Iterator[SessionEvent],
+      gapMs: Long): (List[SessionState], Option[SessionState]) = {
+    var closed = List.empty[SessionState]
+    val open = events.toSeq.sortBy(_.ts.getTime).foldLeft(cur) { (o, e) =>
+      val t = e.ts.getTime
+      o match {
+        case Some(s) if t >= s.lastMs + gapMs =>
+          closed ::= s
+          Some(SessionState(t, t, 1))
+        case Some(s) if t < s.startMs - gapMs =>
+          closed ::= SessionState(t, t, 1)
+          Some(s)
+        case Some(s) =>
+          Some(SessionState(math.min(s.startMs, t), math.max(s.lastMs, t),
+            s.n + 1))
+        case None => Some(SessionState(t, t, 1))
+      }
+    }
+    (closed.reverse, open)
+  }
+
   /** Streaming sessionization with a gap timeout — the stateful
     * generalization of q24's batch `session_window`. Sessions close
     * (and emit) when the event-time watermark passes last_ts + gap;
@@ -1219,29 +1236,12 @@ object Streaming {
             state.remove()
             closed.iterator
           } else {
-            var closed = List.empty[Session]
-            var cur = state.getOption
-            it.toSeq.sortBy(_.ts.getTime).foreach { e =>
-              val t = e.ts.getTime
-              cur = cur match {
-                case Some(s) if t >= s.lastMs + gapMs =>
-                  closed ::= emit(s)
-                  Some(SessionState(t, t, 1))
-                case Some(s) if t < s.startMs - gapMs =>
-                  closed ::= emit(SessionState(t, t, 1))
-                  Some(s)
-                case Some(s) =>
-                  Some(SessionState(math.min(s.startMs, t),
-                    math.max(s.lastMs, t), s.n + 1))
-                case None =>
-                  Some(SessionState(t, t, 1))
-              }
-            }
+            val (closed, cur) = foldSession(state.getOption, it, gapMs)
             cur.foreach { s =>
               state.update(s)
               state.setTimeoutTimestamp(s.lastMs + gapMs)
             }
-            closed.reverse.iterator
+            closed.iterator.map(emit)
           }
       }
   }

@@ -447,6 +447,31 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(ivfMono.nonEmpty)
   }
 
+  test("the seeded trainer reads array<double>: ivfTopK, kmeansStats, " +
+    "pqAdcTopK and ivfPqTopK return the float corpus's rows bit for bit") {
+    val flt = spark.read.parquet(s"$sf/embeddings.parquet")
+      .select($"vec_id", $"embedding")
+    // float → double widens exactly, and every kernel folds in double
+    val dbl = flt.select($"vec_id",
+      $"embedding".cast("array<double>").as("embedding"))
+    def same(op: org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Unit = {
+      val want = op(flt).collect().toSet
+      assert(want.nonEmpty)
+      assert(op(dbl).collect().toSet === want)
+    }
+    def queries(c: org.apache.spark.sql.DataFrame) = c.filter($"vec_id" < 5)
+    same(c => Similarity.ivfTopK(c, queries(c), "vec_id", "embedding", 5,
+      nlist = 8, nprobe = 2))
+    same(c => Similarity.kmeansStats(c, "vec_id", "embedding", k = 4,
+      rounds = 1))
+    same(c => Similarity.pqAdcTopK(c, queries(c), "vec_id", "embedding",
+      dim = 64, m = 4, kCodes = 8, rounds = 1, shortlist = 20, k = 5))
+    same(c => Similarity.ivfPqTopK(c, queries(c), "vec_id", "embedding",
+      dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 8, nprobe = 3,
+      shortlist = 20, k = 5))
+  }
+
   test("stored bucket index ≡ recomputed index: incrementalCandidates" +
     "Stored (partition-pruned parquet probe) and ...Indexed emit " +
     "EXACTLY the recompute path's candidates, incl. under the cap") {

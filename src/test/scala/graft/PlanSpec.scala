@@ -849,4 +849,20 @@ class PlanSpec extends SparkSpec {
     } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
     assert(sites.isEmpty, sites.mkString("\n"))
   }
+
+  test("the seeded quantized-Lloyd trainer is written once: lloydStep( " +
+    "appears only at its definition and in the one trainer") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val sites = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      _ <- 1 until line.split("lloydStep\\(", -1).length
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(sites.size <= 2, sites.mkString("\n"))
+  }
 }

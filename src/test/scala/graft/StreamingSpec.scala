@@ -234,6 +234,33 @@ class StreamingSpec extends SparkSpec {
     assert(replayed.toSeq === expected)
   }
 
+  test("applyCdcScd2 on a file: URI table path keeps the history: the " +
+    "table is found through Hadoop's FileSystem, not java.io.File") {
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("cdc-uri")
+    dir.toFile.deleteOnExit()
+    val table = dir.resolve("dim").toUri.toString
+    assert(table.startsWith("file:"))
+    val mem = MemoryStream[(Long, String, String)]
+    val q = Streaming.applyCdcScd2(
+      mem.toDF().toDF("k", "v", "change_date"), table,
+      dir.resolve("ckpt").toString)
+    mem.addData((1L, "a1", "2024-01-01"), (2L, "b1", "2024-01-01"))
+    q.processAllAvailable()
+    mem.addData((1L, "a2", "2024-02-01"), (2L, "b1", "2024-02-01"),
+      (3L, "c1", "2024-02-01"))
+    q.processAllAvailable()
+    q.stop()
+    val got = spark.read.parquet(table)
+      .select("k", "v", "valid_from", "valid_to")
+      .as[(Long, String, String, String)].collect().sorted
+    assert(got.toSeq === Seq(
+      (1L, "a1", "2024-01-01", "2024-02-01"),
+      (1L, "a2", "2024-02-01", "9999-12-31"),
+      (2L, "b1", "2024-01-01", "9999-12-31"),
+      (3L, "c1", "2024-02-01", "9999-12-31")))
+  }
+
   test("runningTotals (transformWithState): per-key state accumulates " +
     "across micro-batches on the RocksDB store") {
     implicit val sqlCtx = spark.sqlContext
