@@ -67,11 +67,14 @@ case class Settings(connection: Map[String, SystemConn]) {
   * reference keeps `sync.json` as plain JSON next to the data
   * (ingestion.py:143-164); here it is read and written through
   * [[Sidecar]]'s Hadoop-filesystem node I/O, so it works on any Hadoop
-  * filesystem and a write is rename-committed: a crash mid-write leaves
-  * the previous watermark, never a torn file the next step cannot
-  * parse. (The settings document is decrypted at startup in the
-  * reference, bin/ingestion/batch-ingestion.py:58-60 — the 3DES wrapper
-  * is out of data-plane scope, SURVEY.md §7.3.) */
+  * filesystem and a write is rename-committed: a reader never sees a
+  * torn file the next step cannot parse. The overwrite is atomic only
+  * on HDFS; elsewhere it deletes the old file before the rename, and a
+  * crash between the two leaves no `sync.json`, which the next step
+  * reads as `ref_first_value` ([[Sidecar.writeNode]]). (The settings
+  * document is decrypted at startup in the reference,
+  * bin/ingestion/batch-ingestion.py:58-60 — the 3DES wrapper is out of
+  * data-plane scope, SURVEY.md §7.3.) */
 object Json {
   // The on-disk sync document nests under a "sync" key with snake_case
   // fields (ingestion/ingestion.py:149-156).

@@ -121,24 +121,30 @@ object Sidecar {
     * ingestion watermark ([[Json.writeSyncFile]]) share.
     *
     * Rename-committed: the bytes land in a dot-prefixed sibling and
-    * RENAME onto `p`, so a reader (and a post-crash `recover`) sees the
-    * old node or the new one, never a torn file — atomic where the
-    * store's rename is atomic (HDFS, local, ABFS; S3-like stores
-    * emulate rename as copy+delete, and there the guarantee degrades
-    * to the store's own). This matters most for the nodes that serve
-    * as COMMIT POINTS — the swap manifests and the evidence-fold
-    * manifest — where "manifest present" must imply "manifest
-    * complete": a plain create+write could die mid-write and leave
-    * recovery parsing garbage forever (r13 review finding). A crashed
-    * attempt leaves only an ignorable dot-file.
+    * RENAME onto `p`, so a reader (and a post-crash `recover`) never
+    * sees a torn file — only the old node, the new one, or (see below)
+    * none. This matters most for the nodes that serve as COMMIT POINTS
+    * — the swap manifests and the evidence-fold manifest — where
+    * "manifest present" must imply "manifest complete": a plain
+    * create+write could die mid-write and leave recovery parsing
+    * garbage forever (r13 review finding). A crash before the rename
+    * leaves only an ignorable dot-file.
     *
-    * The overwrite-rename goes through `FileContext` where the scheme
-    * binds one (HDFS/local/ABFS ship `AbstractFileSystem` impls);
-    * Hadoop-compatible stores that only implement `FileSystem` (no
-    * `fs.AbstractFileSystem.<scheme>.impl`) fall back to
-    * delete-then-rename — a hair wider crash window (a crash between
-    * the two leaves `p` absent until the next write), the best those
-    * stores offer (r13 ADVICE). */
+    * The overwrite is NOT atomic except on HDFS. It goes through
+    * `FileContext` where the scheme binds an `AbstractFileSystem`, but
+    * only HDFS's `Hdfs` overrides the overwriting
+    * `renameInternal(src, dst, overwrite)` with one atomic namenode
+    * rename. Everywhere else — the local `LocalFs`/`RawLocalFs`, ABFS,
+    * every `DelegateToFileSystem` — Hadoop's default runs
+    * `getFileLinkStatus` on both paths, then `delete(dst)`, then a
+    * plain rename (read from the Hadoop 3.4.2 bytecode). Stores with no
+    * `fs.AbstractFileSystem.<scheme>.impl` fall back to the same
+    * delete-then-rename here; S3-like stores emulate the rename itself
+    * as copy+delete. So a crash between the delete and the rename
+    * leaves NO node at `p` until the next write: a missing `sync.json`
+    * reads as the first value, and the next step re-ingests from there.
+    * Closing that window is the ingestion commit redesign's job (ROADMAP
+    * direction 4). */
   def writeNode(spark: SparkSession, p: Path, node: ObjectNode): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = p.getFileSystem(conf)

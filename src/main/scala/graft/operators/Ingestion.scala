@@ -3,9 +3,8 @@ package graft.operators
 import java.nio.file.Path
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, max}
-import org.apache.spark.storage.StorageLevel
 
 import graft.config.{Json, Settings, Sync}
 import graft.sinks.PartitionedSink
@@ -15,8 +14,8 @@ import graft.sources.Source
   * reference's `ingestion_step` (ingestion/ingestion.py:16-103):
   *
   *   read sync → scan → isNotNull(ref) → prep (system pipeline) →
-  *   persist → isEmpty? → [count] → append-write partitioned → max(ref) →
-  *   advance sync.
+  *   observe(max(ref), count) → append-write partitioned → advance sync
+  *   iff rows landed.
   *
   * Differences that matter at 100 TB (all Spark-idiomatic, none
   * semantic):
@@ -24,11 +23,14 @@ import graft.sources.Source
   *     parallelism comes from the source itself (JDBC partitioned read /
   *     parquet splits); a blind round-robin shuffle of the full increment
   *     is pure cost;
-  *   - `df.isEmpty` instead of `df.rdd.isEmpty()` (ingestion.py:73) —
-  *     avoids RDD conversion and runs a LIMIT 1 plan;
-  *   - the reference's count/write/max trio of jobs (ingestion.py:75-95)
-  *     collapses into ONE write job with `observe()` metrics; the
-  *     MEMORY_AND_DISK persist now only bridges isEmpty → write.
+  *   - the reference's persist / isEmpty / count / write / max sequence
+  *     (ingestion.py:68-95) is ONE write job: `observe()` piggybacks the
+  *     count and the global max onto the write's scan, and the count
+  *     alone says whether anything landed, so there is no emptiness
+  *     probe and no cache to fill and drop. An empty increment writes
+  *     no data file, so the sink must be partitioned (the reference
+  *     always partitions per system): an unpartitioned empty append
+  *     would commit a zero-row file.
   */
 object Ingestion {
 
@@ -48,6 +50,9 @@ object Ingestion {
       partitionColumns: Seq[String],
       counting: Boolean = false,
       fileFormat: String = "parquet"): StepResult = {
+    require(partitionColumns.nonEmpty,
+      "an ingestion sink is partitioned: an empty increment appended " +
+        "to an unpartitioned sink would commit a zero-row file")
 
     // 1. watermark state (ingestion.py:32)
     val syncDir = tablePath.toUri.toString
@@ -65,34 +70,32 @@ object Ingestion {
     }
     val prepared = Prep.bySystem(system)(tableSettings, sync.lastValue)(notNullable)
 
-    // 6. persist across the ≤4 actions below (ingestion.py:68)
-    val cached = prepared.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      // 7. emptiness probe short-circuits write + advance (ingestion.py:73-74)
-      if (cached.isEmpty) {
-        StepResult(wrote = false, rowCount = None, newSync = sync)
-      } else {
-        // 8-10. count + append write + watermark max in ONE pass: the
-        // reference ran three separate jobs over the increment
-        // (ingestion.py:75-95); observe() piggybacks the count and the
-        // global max onto the write job's scan, which at 100 TB saves
-        // two full passes (the persist cache only helps if the
-        // increment fits in cluster memory — observe works regardless).
-        val obs = Observation()
-        val observed = cached.observe(obs,
-          max(col(sync.refColumn)).as("max_ref"),
-          count(lit(1)).as("n_rows"))
-        PartitionedSink.appendIncrement(observed, outputPath,
-          partitionColumns, fileFormat)
-        val metrics = obs.get
-        val n = if (counting) Some(metrics("n_rows").asInstanceOf[Long])
-          else None
-        val maxTs = metrics("max_ref").asInstanceOf[Timestamp]
-        val newSync = sync.advanced(maxTs.toLocalDateTime)
-        // 11. persist new sync next to the data (ingestion.py:96,161-164)
-        Json.writeSyncFile(spark, newSync, syncDir)
-        StepResult(wrote = true, rowCount = n, newSync = newSync)
+    // 6-10. count + append write + watermark max in ONE job (the
+    // reference ran a probe and three passes, ingestion.py:73-95)
+    val obs = Observation()
+    PartitionedSink.appendIncrement(
+      prepared.observe(obs, max(col(sync.refColumn)).as("max_ref"),
+        count(lit(1)).as("n_rows")),
+      outputPath, partitionColumns, fileFormat)
+    val metrics = obs.get
+    val (n, maxRef) =
+      if (metrics.contains("n_rows"))
+        (metrics("n_rows").asInstanceOf[Long], metrics("max_ref"))
+      else {
+        // With AQE on, an empty shuffle under the partitioned write is
+        // replaced by an empty relation and the observation with it
+        // (`obs.get` is empty). One aggregate decides instead, so a
+        // lost observation can never skip a watermark advance.
+        val r = prepared.agg(count(lit(1)), max(col(sync.refColumn))).head()
+        (r.getLong(0), r.get(1))
       }
-    } finally cached.unpersist()
+    if (n == 0) StepResult(wrote = false, rowCount = None, newSync = sync)
+    else {
+      val newSync = sync.advanced(maxRef.asInstanceOf[Timestamp].toLocalDateTime)
+      // 11. persist new sync next to the data (ingestion.py:96,161-164)
+      Json.writeSyncFile(spark, newSync, syncDir)
+      StepResult(wrote = true, rowCount = if (counting) Some(n) else None,
+        newSync = newSync)
+    }
   }
 }

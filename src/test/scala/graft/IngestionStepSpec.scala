@@ -3,7 +3,10 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SaveMode
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftSql, SaveMode}
 
 import graft.config.{Settings, SystemConn, TableSettings}
 import graft.operators.Ingestion
@@ -11,8 +14,10 @@ import graft.sources.ParquetSource
 
 /** End-to-end contract of the incremental-ingestion core (reference
   * ingestion/ingestion.py:16-103): two consecutive runs with an injected
-  * second batch — increment isolation, watermark advance, isEmpty
-  * short-circuit, unpadded partition directory names. */
+  * second batch — increment isolation, watermark advance, an empty
+  * increment that writes nothing, unpadded partition directory names —
+  * and the cost of one step: its Spark jobs and its driver-side
+  * LIST/HEAD calls. */
 class IngestionStepSpec extends SparkSpec {
   import spark.implicits._
 
@@ -31,6 +36,18 @@ class IngestionStepSpec extends SparkSpec {
   private def writeBatch(dir: Path, rows: Seq[(Long, Timestamp)]): Unit =
     rows.toDF("id", "ref").write.mode(SaveMode.Overwrite)
       .parquet(dir.toString)
+
+  /** The data files under a sink (Spark's `_SUCCESS` marker and hidden
+    * checksum files excluded). */
+  private def dataFiles(out: String): Set[String] = {
+    val root = java.nio.file.Paths.get(out)
+    if (!Files.exists(root)) Set.empty
+    else Files.walk(root).iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !p.getFileName.toString.startsWith("_") &&
+        !p.getFileName.toString.startsWith("."))
+      .map(root.relativize(_).toString).toSet
+  }
 
   test("two-run incremental ingestion: isolation, advance, short-circuit") {
     val in = tmp("graft-in")
@@ -66,12 +83,91 @@ class IngestionStepSpec extends SparkSpec {
       .as[Long].collect().sorted.toSeq
     assert(all === Seq(1L, 2L, 3L))
 
-    // run 3: nothing new -> isEmpty short-circuit, sync unchanged
+    // run 3: nothing new -> nothing written, sync unchanged
+    val syncBefore = Files.readAllBytes(table.resolve("sync.json"))
+    val filesBefore = dataFiles(out)
     val r3 = Ingestion.ingestionStep(spark, "lims", "t1",
       ParquetSource(in.toString), table, out, settings,
       partitionColumns = Seq("YEAR", "MONTH"))
     assert(!r3.wrote && r3.rowCount.isEmpty)
     assert(r3.newSync.refLastValue === "2024-01-20T10:00:00.000000Z")
+    assert(Files.readAllBytes(table.resolve("sync.json")).toSeq ===
+      syncBefore.toSeq)
+    assert(dataFiles(out) === filesBefore)
+  }
+
+  test("an empty first increment writes no data file and no sync.json, " +
+    "with adaptive execution on or off") {
+    for (aqe <- Seq("true", "false")) {
+      val in = tmp("graft-empty-in")
+      val table = tmp("graft-empty-table")
+      val out = tmp("graft-empty-out").resolve("data").toString
+      // every row at or before the first value: nothing passes
+      writeBatch(in, Seq(
+        1L -> Timestamp.valueOf("2023-12-31 23:59:59"),
+        2L -> Timestamp.valueOf("2024-01-01 00:00:00")))
+      val r = withConf("spark.sql.adaptive.enabled" -> aqe) {
+        Ingestion.ingestionStep(spark, "lims", "t1",
+          ParquetSource(in.toString), table, out, settings,
+          partitionColumns = Seq("YEAR", "MONTH"), counting = true)
+      }
+      assert(!r.wrote && r.rowCount.isEmpty, s"aqe=$aqe")
+      assert(r.newSync.refLastValue === "2024-01-01T00:00:00.000000Z")
+      assert(!Files.exists(table.resolve("sync.json")), s"aqe=$aqe")
+      assert(dataFiles(out).isEmpty, s"aqe=$aqe")
+    }
+  }
+
+  test("an unpartitioned sink is refused: an empty append to it would " +
+    "commit a zero-row file") {
+    val in = tmp("graft-unpart-in")
+    writeBatch(in, Seq(1L -> Timestamp.valueOf("2024-01-10 08:00:00")))
+    intercept[IllegalArgumentException] {
+      Ingestion.ingestionStep(spark, "lims", "t1",
+        ParquetSource(in.toString), tmp("graft-unpart-table"),
+        tmp("graft-unpart-out").resolve("data").toString, settings,
+        partitionColumns = Nil)
+    }
+  }
+
+  test("a non-empty step runs one observed write: at most the adaptive " +
+    "shuffle-map job and the write job, no schema or LIMIT job, and a " +
+    "pinned count of driver LIST/HEAD calls") {
+    spark.sparkContext.hadoopConfiguration.set("fs.countfs.impl",
+      classOf[CountingLocalFs].getName)
+    val in = tmp("graft-jobs-in")
+    writeBatch(in, Seq(
+      1L -> Timestamp.valueOf("2024-01-10 08:00:00"),
+      2L -> Timestamp.valueOf("2024-02-12 09:30:00")))
+    val table = tmp("graft-jobs-table")
+    val out = s"countfs:${tmp("graft-jobs-out")}/data"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short")))
+          .getOrElse(s"job ${e.jobId}")): Unit
+    }
+    GraftSql.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    CountingLocalFs.stats.reset(); CountingLocalFs.lists.reset()
+    val r = try Ingestion.ingestionStep(spark, "lims", "t1",
+      ParquetSource(s"countfs:$in"), table, out, settings,
+      partitionColumns = Seq("YEAR", "MONTH"), counting = true)
+    finally {
+      GraftSql.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val (lists, stats) =
+      (CountingLocalFs.lists.driver.get, CountingLocalFs.stats.driver.get)
+    info(s"jobs ${jobs.asScala.mkString(", ")}; driver lists $lists, " +
+      s"stats $stats")
+    assert(r.wrote && r.rowCount.contains(2L))
+    assert(jobs.size <= 2, jobs.asScala.mkString("\n"))
+    // the counts of the same step reading through spark.read.parquet:
+    // the driver-side footer read opens the file it picks but adds no
+    // LIST or HEAD, so the landing directory is listed once
+    assert((lists, stats) === ((3L, 7L)))
   }
 
   test("sap system: ref column derived from split date/time strings") {

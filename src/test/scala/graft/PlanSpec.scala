@@ -865,4 +865,18 @@ class PlanSpec extends SparkSpec {
     } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
     assert(sites.size <= 2, sites.mkString("\n"))
   }
+
+  test("an ingestion step is one observed write: operators/Ingestion.scala " +
+    "holds no persist(, cache() or .isEmpty, so no step caches its " +
+    "increment or probes it for emptiness") {
+    import scala.jdk.CollectionConverters._
+    val f = java.nio.file.Paths.get(
+      "src/main/scala/graft/operators/Ingestion.scala")
+    assert(java.nio.file.Files.isRegularFile(f), f.toAbsolutePath)
+    val sites = for {
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      if Seq("persist(", "cache()", ".isEmpty").exists(line.contains)
+    } yield s"Ingestion.scala:${i + 1}: ${line.trim}"
+    assert(sites.isEmpty, sites.mkString("\n"))
+  }
 }

@@ -4,13 +4,122 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+
 import graft.config.SystemConn
-import graft.sources.{BinaryDirSource, CsvSource, JdbcPartitioning, JdbcSource, JdbcUrl, XmlSource}
+import graft.sources.{BinaryDirSource, CsvSource, JdbcPartitioning, JdbcSource, JdbcUrl, ParquetSource, XmlSource}
 
 /** Source layer: dialect URL builders (S2), CSV dictionary scan (S4),
   * JDBC reader option wiring (S1/X5 — asserted on the plan, no DBMS in
-  * the container). */
+  * the container), and ParquetSource's driver-side schema read against
+  * Spark's own inference. */
 class SourcesSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** One parquet file written by parquet-mr itself, so its footer holds
+    * no Spark schema and inference converts the parquet types (the
+    * shape of the nanos fixtures). */
+  private def parquetMrFile(file: java.nio.file.Path, schema: String)(
+      rows: (Group => Unit)*): Unit = {
+    val t = MessageTypeParser.parseMessageType(schema)
+    val w = ExampleParquetWriter.builder(
+      new org.apache.hadoop.fs.Path(file.toUri)).withType(t).build()
+    val groups = new SimpleGroupFactory(t)
+    try rows.foreach { fill =>
+      val g = groups.newGroup(); fill(g); w.write(g)
+    } finally w.close()
+  }
+
+  /** `df` as the single parquet file `file`, written by Spark. */
+  private def sparkFile(df: org.apache.spark.sql.DataFrame,
+      file: java.nio.file.Path): Unit = {
+    val staging = Files.createTempDirectory("graft-pq-staging").resolve("d")
+    df.coalesce(1).write.parquet(staging.toString)
+    val part = Files.list(staging).filter(_.getFileName.toString
+      .endsWith(".parquet")).findFirst().get()
+    Files.move(part, file)
+  }
+
+  /** ParquetSource's frame has `spark.read.parquet`'s schema. */
+  private def assertSameSchema(dir: java.nio.file.Path): Unit = {
+    val ours = ParquetSource(dir.toString).read(spark).schema
+    assert(ours === spark.read.parquet(dir.toString).schema)
+  }
+
+  test("ParquetSource schema: two files with different columns, the " +
+    "first by path wins, as in Spark's inference") {
+    val dir = Files.createTempDirectory("graft-pq-two")
+    sparkFile(Seq((1L, "a")).toDF("id", "x"), dir.resolve("a.parquet"))
+    sparkFile(Seq((2L, 2.5)).toDF("id", "y"), dir.resolve("b.parquet"))
+    assertSameSchema(dir)
+    assert(ParquetSource(dir.toString).read(spark).columns.toSeq ===
+      Seq("id", "x"))
+    // a parquet-mr file sorts first: its converted schema wins
+    parquetMrFile(dir.resolve("0.parquet"),
+      "message m { required int64 id; optional binary s (UTF8); }")(
+      g => { g.add("id", 7L); g.add("s", "z") })
+    assertSameSchema(dir)
+    assert(ParquetSource(dir.toString).read(spark).columns.toSeq ===
+      Seq("id", "s"))
+  }
+
+  test("ParquetSource schema: a _common_metadata summary is read before " +
+    "any data file, as in Spark's inference") {
+    val dir = Files.createTempDirectory("graft-pq-summary")
+    sparkFile(Seq((1L, "a")).toDF("id", "x"), dir.resolve("a.parquet"))
+    sparkFile(Seq((1L, "a", true)).toDF("id", "x", "flag"),
+      dir.resolve("_common_metadata"))
+    assertSameSchema(dir)
+    assert(ParquetSource(dir.toString).read(spark).columns.toSeq ===
+      Seq("id", "x", "flag"))
+  }
+
+  test("ParquetSource schema: a TIMESTAMP(NANOS) file read the way " +
+    "Tables reads the fixtures, and a TIMESTAMP_NTZ file either way") {
+    val nanos = Files.createTempDirectory("graft-pq-nanos")
+    parquetMrFile(nanos.resolve("events.parquet"),
+      "message m { required int64 id; " +
+        "optional int64 ts (TIMESTAMP(NANOS,true)); }")(
+      g => { g.add("id", 1L); g.add("ts", 1705276800000000123L) })
+    withConf("spark.sql.legacy.parquet.nanosAsLong" -> "true") {
+      assertSameSchema(nanos)
+    }
+    val events = graft.sources.Tables(spark, nanos.toString, "events")
+    assert(events.select("ts").head().getTimestamp(0).toInstant ===
+      java.time.Instant.parse("2024-01-15T00:00:00Z"))
+    val ntz = Files.createTempDirectory("graft-pq-ntz")
+    parquetMrFile(ntz.resolve("a.parquet"),
+      "message m { optional int64 ts (TIMESTAMP(MICROS,false)); }")(
+      g => g.add("ts", 1705276800000000L))
+    sparkFile(Seq(java.time.LocalDateTime.parse("2024-01-15T00:00:00"))
+      .toDF("ts"), ntz.resolve("b.parquet"))
+    for (infer <- Seq("true", "false"))
+      withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> infer) {
+        assertSameSchema(ntz)
+      }
+  }
+
+  test("ParquetSource schema: an empty directory fails as Spark's read " +
+    "does, and mergeSchema=true merges as Spark does") {
+    val empty = Files.createTempDirectory("graft-pq-empty")
+    val theirs = intercept[org.apache.spark.sql.AnalysisException](
+      spark.read.parquet(empty.toString))
+    val ours = intercept[org.apache.spark.sql.AnalysisException](
+      ParquetSource(empty.toString).read(spark))
+    assert(ours.getCondition === theirs.getCondition)
+    assert(ours.getMessage === theirs.getMessage)
+    val dir = Files.createTempDirectory("graft-pq-merge")
+    sparkFile(Seq((1L, "a")).toDF("id", "x"), dir.resolve("a.parquet"))
+    sparkFile(Seq((2L, 2.5)).toDF("id", "y"), dir.resolve("b.parquet"))
+    withConf("spark.sql.parquet.mergeSchema" -> "true") {
+      assertSameSchema(dir)
+      assert(ParquetSource(dir.toString).read(spark).columns.toSet ===
+        Set("id", "x", "y"))
+    }
+  }
 
   test("JDBC URL builders match the reference dialects") {
     assert(JdbcUrl.oracleThin("u", "pw", "h", "1521", "svc") ===

@@ -35,4 +35,15 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
+
+  /** Runs `body` with the session settings `kv`, then restores them. */
+  protected def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
