@@ -77,21 +77,17 @@ object Ingestion {
       prepared.observe(obs, max(col(sync.refColumn)).as("max_ref"),
         count(lit(1)).as("n_rows")),
       outputPath, partitionColumns, fileFormat)
+    // With AQE on, an empty shuffle under the partitioned write is
+    // replaced by an empty relation and the observation with it
+    // (`obs.get` is empty): absent metrics mean nothing was written.
+    // A second query must not decide: over a live source it could
+    // count a row committed after the write, and advance past it.
     val metrics = obs.get
-    val (n, maxRef) =
-      if (metrics.contains("n_rows"))
-        (metrics("n_rows").asInstanceOf[Long], metrics("max_ref"))
-      else {
-        // With AQE on, an empty shuffle under the partitioned write is
-        // replaced by an empty relation and the observation with it
-        // (`obs.get` is empty). One aggregate decides instead, so a
-        // lost observation can never skip a watermark advance.
-        val r = prepared.agg(count(lit(1)), max(col(sync.refColumn))).head()
-        (r.getLong(0), r.get(1))
-      }
+    val n = metrics.get("n_rows").fold(0L)(_.asInstanceOf[Long])
     if (n == 0) StepResult(wrote = false, rowCount = None, newSync = sync)
     else {
-      val newSync = sync.advanced(maxRef.asInstanceOf[Timestamp].toLocalDateTime)
+      val newSync = sync.advanced(
+        metrics("max_ref").asInstanceOf[Timestamp].toLocalDateTime)
       // 11. persist new sync next to the data (ingestion.py:96,161-164)
       Json.writeSyncFile(spark, newSync, syncDir)
       StepResult(wrote = true, rowCount = if (counting) Some(n) else None,

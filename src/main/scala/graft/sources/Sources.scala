@@ -1,9 +1,7 @@
 package graft.sources
 
-import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{GraftParquet, ParquetFileFormat}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.parquet.DriverSchemaParquet
 
 import graft.config.SystemConn
 
@@ -20,22 +18,11 @@ trait Source {
   * predicate pushdown reach the parquet footer automatically. Building
   * the frame runs no Spark job: the schema footer is read on the
   * driver ([[DriverSchemaParquet]]), and the schema is the one
-  * `spark.read.parquet(path)` infers. */
+  * `spark.read.parquet(path)` infers; with `mergeSchema` on, Spark's
+  * distributed merge runs unchanged. */
 final case class ParquetSource(path: String) extends Source {
   def read(spark: SparkSession): DataFrame =
     spark.read.format(classOf[DriverSchemaParquet].getName).load(path)
-}
-
-/** Spark's parquet format with `GraftParquet.inferSchema` as its schema
-  * inference. `DataSource` globs, lists and infers partition columns as
-  * it does for `parquet`, and hands the inference the file index it
-  * listed, so the footer choice and the frame share one listing. An
-  * empty directory infers nothing and fails as `parquet` does; with
-  * `mergeSchema` on, Spark's distributed merge runs unchanged. */
-final class DriverSchemaParquet extends ParquetFileFormat {
-  override def inferSchema(spark: SparkSession, options: Map[String, String],
-      files: Seq[FileStatus]): Option[StructType] =
-    GraftParquet.inferSchema(spark, options, files)
 }
 
 /** CSV file source — the offline equivalent of the reference's Excel

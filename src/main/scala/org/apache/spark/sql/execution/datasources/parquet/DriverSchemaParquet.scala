@@ -7,22 +7,26 @@ import org.apache.spark.sql.catalyst.FileSourceOptions
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.types.StructType
 
-/** Parquet schema inference without a Spark job, for
-  * `graft.sources.ParquetSource`. Unless `mergeSchema` is on, Spark's
-  * own inference (`ParquetUtils.inferSchema`) reads ONE footer, yet in
-  * a one-task job: tens of milliseconds of job scheduling for a read of
-  * a few kilobytes. This reads the same footer on the driver through
-  * the same readers (`readParquetFootersInParallel` + `readSchema`,
-  * both package-private, hence the bridge from inside the package, as
-  * `GraftSql` does for Column ⇄ Expression). */
-object GraftParquet {
+/** Spark's parquet format with a schema inference that runs no Spark
+  * job, for `graft.sources.ParquetSource`. Unless `mergeSchema` is on,
+  * Spark's own inference (`ParquetUtils.inferSchema`) reads ONE footer,
+  * yet in a one-task job: tens of milliseconds of job scheduling for a
+  * read of a few kilobytes. This reads the same footer on the driver
+  * through the same readers (`readParquetFootersInParallel` +
+  * `readSchema`, both package-private, hence the package).
+  *
+  * `DataSource` globs, lists and infers partition columns as it does
+  * for `parquet`, and hands the inference the file index it listed, so
+  * the footer choice and the frame share one listing. An empty
+  * directory infers nothing and fails as `parquet` does. */
+final class DriverSchemaParquet extends ParquetFileFormat {
 
   /** The schema `spark.read.parquet` would infer over `files`. The
     * footer is Spark's pick: leaf files sorted by path, then the first
     * `_common_metadata`, then the first `_metadata`, then the first data
     * file. With `mergeSchema` on every footer counts, so Spark's
     * distributed merge runs unchanged. */
-  def inferSchema(spark: SparkSession, options: Map[String, String],
+  override def inferSchema(spark: SparkSession, options: Map[String, String],
       files: Seq[FileStatus]): Option[StructType] =
     if (new ParquetOptions(options, spark.sessionState.conf).mergeSchema)
       ParquetUtils.inferSchema(spark, options, files)
@@ -42,4 +46,3 @@ object GraftParquet {
       }
     }
 }
-

@@ -6,11 +6,27 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{GraftSql, SaveMode}
+import org.apache.spark.sql.{DataFrame, GraftSql, SaveMode, SparkSession}
 
 import graft.config.{Settings, SystemConn, TableSettings}
 import graft.operators.Ingestion
-import graft.sources.ParquetSource
+import graft.sources.{ParquetSource, Source}
+
+/** A live source (a JDBC table, say) that is empty on its first scan
+  * and holds one committed row on every later scan. Each execution of
+  * the frame is a new scan, so a second query over the same frame sees
+  * rows the first did not. */
+private object GrowingSource extends Source {
+  val scans = new java.util.concurrent.atomic.AtomicInteger()
+
+  def read(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(Seq(0), 1).flatMap { _ =>
+      if (scans.getAndIncrement() == 0) Nil
+      else Seq(1L -> Timestamp.valueOf("2024-01-10 08:00:00"))
+    }.toDF("id", "ref")
+  }
+}
 
 /** End-to-end contract of the incremental-ingestion core (reference
   * ingestion/ingestion.py:16-103): two consecutive runs with an injected
@@ -116,6 +132,28 @@ class IngestionStepSpec extends SparkSpec {
       assert(!Files.exists(table.resolve("sync.json")), s"aqe=$aqe")
       assert(dataFiles(out).isEmpty, s"aqe=$aqe")
     }
+  }
+
+  test("an empty increment is decided by the write alone: a row the " +
+    "source commits after the write is left for the next step") {
+    val table = tmp("graft-grow-table")
+    val out = tmp("graft-grow-out").resolve("data").toString
+    GrowingSource.scans.set(0)
+    val r1 = withConf("spark.sql.adaptive.enabled" -> "true") {
+      Ingestion.ingestionStep(spark, "lims", "t1", GrowingSource, table,
+        out, settings, partitionColumns = Seq("YEAR", "MONTH"),
+        counting = true)
+    }
+    assert(!r1.wrote && r1.rowCount.isEmpty)
+    assert(!Files.exists(table.resolve("sync.json")))
+    assert(dataFiles(out).isEmpty)
+    val r2 = Ingestion.ingestionStep(spark, "lims", "t1", GrowingSource,
+      table, out, settings, partitionColumns = Seq("YEAR", "MONTH"),
+      counting = true)
+    assert(r2.wrote && r2.rowCount.contains(1L))
+    assert(r2.newSync.refLastValue === "2024-01-10T08:00:00.000000Z")
+    assert(spark.read.parquet(out).select("id").as[Long].collect().toSeq ===
+      Seq(1L))
   }
 
   test("an unpartitioned sink is refused: an empty append to it would " +
