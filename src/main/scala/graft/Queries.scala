@@ -39,15 +39,16 @@ object Queries {
 
   /** Runs `body` over fresh local scratch directories, one per prefix
     * (unique per run, so concurrent runs against one fixture never
-    * share a copy), and deletes them when `body` returns OR throws. A
-    * frame over a scratch directory must be pinned before `body`
-    * returns (each caller's own `localCheckpoint`): the directories
-    * are gone afterwards. */
-  private def scratch[A](s: SparkSession, prefixes: String*)(
-      body: Seq[String] => A): A = {
+    * share a copy), stores the frame it returns ([[Checkpoint]]) and
+    * deletes the directories when that returns OR throws. Callers do
+    * not pin the returned frame: it is stored before the directories
+    * go. A frame read between two mutations of a directory is the
+    * caller's to pin. */
+  private def scratch(s: SparkSession, prefixes: String*)(
+      body: Seq[String] => DataFrame): DataFrame = {
     val dirs = prefixes.map(p =>
       java.nio.file.Files.createTempDirectory(p).toString)
-    try body(dirs)
+    try Checkpoint(body(dirs))
     finally dirs.foreach { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -687,7 +688,7 @@ object Queries {
       // map-only chain: without a materialization point the
       // presentation sort's range sampler re-executes every PNG
       // encode+decode a second time
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
       .orderBy("doc_id")
 
   /** Test-set decontamination: training docs (every source but src0)
@@ -1016,7 +1017,7 @@ object Queries {
       // (triangles are edge-iterated from the adjacency cache), and
       // every remaining consumer either broadcasts deg or repartitions
       // internally (labelPropagation).
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val (deg, triangles) = orientedTriangles(e)
     (e, deg, triangles)
   }
@@ -4527,7 +4528,7 @@ object Queries {
     // per-query window/vote below is partition-independent)
     val scored = emb.select(col("vec_id"), col("label"), col("embedding"),
         Similarity.norm(col("embedding")).as("qnorm"))
-      .repartition(graft.operators.Graph.shufflePartitions(emb),
+      .repartition(Checkpoint.shufflePartitions(emb),
         col("vec_id"))
       .join(corpus, col("vec_id") =!= col("nid"))
       .withColumn("cos", Similarity.dotNative(col("embedding"),
@@ -5399,7 +5400,7 @@ object Queries {
       // materialized once (r16): fps feeds the df-cap aggregate AND
       // both sides of the overlap self-join — un-pinned, the whole
       // tokenize/hash/window chain re-ran per consumer
-      .localCheckpoint(true)
+      .transform(Checkpoint(_))
     val dfCap = fps.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") <= 100)
     val kept = fps.join(dfCap.select("h"), Seq("h"))
@@ -5553,7 +5554,7 @@ object Queries {
       // consumers) — without it the orders⋈lineitem shuffle join
       // re-executes once per consumer and dominates the query. An
       // |orders|-sized aggregate: exactly what a 100 TB run caches.
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
     val horizon = users.agg(max(col("last_d")).as("h"),
       count(lit(1)).as("n_users"))
     val lives = users.crossJoin(broadcast(horizon))
@@ -5569,7 +5570,7 @@ object Queries {
     // one row per distinct lifetime DAY — calendar-bounded (thousands
     // of rows at any corpus scale), the same boundedness argument as
     // the histogram/contingency operators — so the range-bucketed
-    // machinery was pure fixed cost here: two lazy checkpoints, two
+    // machinery was pure fixed cost here: two checkpoints, two
     // bounds aggregates, four window passes and two offset joins where
     // two single-sort windows over a model-sized frame produce the
     // identical exact integers. Both windows share one ordering, so
@@ -6751,7 +6752,7 @@ object Queries {
       // consumers) — without it the orders⋈lineitem shuffle join
       // re-executes once per consumer and dominates the query. An
       // |orders|-sized aggregate: exactly what a 100 TB run caches.
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
     val horizon = users.agg(max(col("last_d")).as("h"),
       count(lit(1)).as("n_users"))
     val lives = users.crossJoin(broadcast(horizon))
@@ -6806,7 +6807,7 @@ object Queries {
         max(to_date(col("l_shipdate"))).as("last_d"),
         max(when(col("o_orderpriority") === "1-URGENT", 1L)
           .otherwise(0L)).as("grp"))
-      .localCheckpoint(false) // the q224/q282 multi-consumer reuse
+      .transform(Checkpoint(_)) // the q224/q282 multi-consumer reuse
     val horizon = users.agg(max(col("last_d")).as("h"))
     val lives = users.crossJoin(broadcast(horizon))
       .select(datediff(col("last_d"), col("first_d")).cast("long")
@@ -6881,7 +6882,7 @@ object Queries {
   /** Shared daily-revenue frame: exact cent sums per event day. The
     * day grain makes every downstream self-join day²-bounded — a
     * model-sized frame regardless of row count (q261's contract).
-    * Lazily checkpointed: the family's self-joins and multi-consumer
+    * Checkpointed: the family's self-joins and multi-consumer
     * shapes (q278 per-weekday pairs, q262/q263 day-pair sets, q289
     * ranked weeks) otherwise re-aggregate the full events table once
     * per branch — the calendar-bounded frame is the thing to
@@ -6891,7 +6892,7 @@ object Queries {
       .groupBy(to_date(col("ts")).as("d"))
       .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
         .cast("long")).as("x"))
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
 
   /** Theil–Sen robust trend slope of daily revenue — the median of all
     * pairwise slopes, the estimator OLS outliers can't drag. Slopes are
@@ -7613,7 +7614,7 @@ object Queries {
       // consumers) — without it the orders⋈lineitem shuffle join
       // re-executes once per consumer and dominates the query. An
       // |orders|-sized aggregate: exactly what a 100 TB run caches.
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
     val horizon = users.agg(max(col("last_d")).as("h"),
       count(lit(1)).as("n_users"))
     val lives = users.crossJoin(broadcast(horizon))
@@ -7962,7 +7963,7 @@ object Queries {
     // aggregate below reads the collapsed per-value frame instead of
     // re-running the orders⋈lineitem join
     val pv = joined.groupBy(col("v")).agg(slots.head, slots.tail: _*)
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
     val cum = Ranking.globalCumSum(pv, "v", groups.map(k => s"t$k"))
     // per-value doubled dominance: t_j · Σ_{i<j} (2·F_i(v⁻) + t_i(v))
     // with F_i(v⁻) = cum_t_i − t_i, so the inner term is 2·cum − t.
@@ -8329,10 +8330,10 @@ object Queries {
     // jaccardFromShingles are the same chains over the same values).
     val sigs = docs.select(col("doc_id"),
       Dedup.minhashSignature(col("text"), 3, 16).as("sig"))
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
     val sh = docs.select(col("doc_id").as("jid"),
       explode(array_distinct(Dedup.shingles(col("text"), 3))).as("sh"))
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
     val sizes = sh.groupBy("jid").agg(count(lit(1)).as("set_size"))
     Seq(2, 4, 8).map { b =>
       val pairs = Dedup.candidatesFromBanded(
@@ -8479,8 +8480,8 @@ object Queries {
     val queries = emb.filter(col("vec_id") < 5)
     // per-run unique scratch dir (a fixed hash-keyed path raced under
     // concurrent runs against the same sfDir), deleted after the scan
-    // materializes — the small result is pinned so the returned frame
-    // never re-reads the deleted index
+    // materializes — scratch stores the small result, so the returned
+    // frame never re-reads the deleted index
     scratch(s, "graft_ivfpq_idx_") { case Seq(path) =>
       Similarity.writeIvfPqIndex(emb, path, "vec_id", "embedding",
         dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
@@ -8489,7 +8490,6 @@ object Queries {
         .select(col("query_id"), col("neighbor_id"),
           f6(col("cos")).as("cos"), col("rank"))
         .orderBy("query_id", "rank")
-        .localCheckpoint(true)
     }
   }
 
@@ -8671,7 +8671,7 @@ object Queries {
     // raw docs across the configured parallelism first costs one tiny
     // exchange of the 5k texts
     val docs = t(s, dir, "documents")
-      .repartition(graft.operators.Graph.shufflePartitions(
+      .repartition(Checkpoint.shufflePartitions(
         t(s, dir, "documents")), col("doc_id"))
       .select(col("doc_id"), col("source"),
       Dedup.shingles(concat(col("text"), lit(" "), col("source"),
@@ -8936,9 +8936,9 @@ object Queries {
   def q315DeleteRepair(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
     val pairs = Dedup.minhashCandidates(docs, "text", "doc_id")
-      .localCheckpoint(false)
+      .transform(Checkpoint(_))
     val assignments = Dedup.connectedComponents(docs, "doc_id", pairs)
-      .withColumnRenamed("id", "doc_id").localCheckpoint(false)
+      .withColumnRenamed("id", "doc_id").transform(Checkpoint(_))
     val doomed = assignments.groupBy(col("component"))
       .agg(count(lit(1)).as("n")).where(col("n") >= 2)
       .select(col("component").as("doc_id"))
@@ -9020,7 +9020,6 @@ object Queries {
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .orderBy("lang")
-        .localCheckpoint(true) // pin before the scratch copy is deleted
     }
   }
 
@@ -9055,7 +9054,6 @@ object Queries {
         .select(col("query_id"), col("neighbor_id"),
           f6(col("cos")).as("cos"), col("rank"))
         .orderBy("query_id", "rank")
-        .localCheckpoint(true) // pin before the scratch index is deleted
     }
   }
 
@@ -9089,7 +9087,6 @@ object Queries {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .orderBy("source")
-        .localCheckpoint(true) // pin before the scratch copy is deleted
     }
   }
 
@@ -9153,7 +9150,6 @@ object Queries {
       Dedup.probeAdmission(s, idx, batch, "text", "doc_id",
           budget = 3L)
         .orderBy("doc_id")
-        .localCheckpoint(true) // pin before the scratch index is deleted
     }
   }
 
@@ -9202,7 +9198,7 @@ object Queries {
     // in customer.parquet's single scan task (3.3s). Hash the dirty
     // side across the configured parallelism first — the window below
     // partitions by the same key, so no extra exchange downstream.
-    dirty.repartition(graft.operators.Graph.shufflePartitions(dirty),
+    dirty.repartition(Checkpoint.shufflePartitions(dirty),
         col("dirty_key"))
       .join(clean,
         substring(col("dirty_name"), 1, 15) ===
@@ -9255,7 +9251,6 @@ object Queries {
         .groupBy(col("yr"), col("mo"))
         .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
         .orderBy("yr", "mo")
-        .localCheckpoint(true) // pin before the scratch copy is deleted
     }
   }
 
@@ -9288,7 +9283,6 @@ object Queries {
           "embedding", nprobe = 4, budget = 125L)
         .select(col("query_id"), col("est_rows"), col("admit"))
         .orderBy("query_id")
-        .localCheckpoint(true) // pin before the scratch index is deleted
     }
   }
 
@@ -9328,7 +9322,6 @@ object Queries {
         .groupBy(col("yr"), col("mo"))
         .agg(count(lit(1)).as("n_rows"), sum(col("qty")).as("sum_qty"))
         .orderBy("yr", "mo")
-        .localCheckpoint(true) // pin before the scratch copy is deleted
     }
   }
 
@@ -9369,7 +9362,6 @@ object Queries {
         .select(col("d").cast("string").as("d"), col("n_orders"),
           col("sum_cents"))
         .orderBy("d")
-        .localCheckpoint(true) // pin before the scratch copy is deleted
     }
   }
 
@@ -9406,7 +9398,7 @@ object Queries {
         .groupBy(coalesce(col("src"), lit("null")).as("src"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
         .withColumn("phase", lit(phase))
-        .localCheckpoint(true) // pin before the next sweep mutates the dir
+        .transform(Checkpoint(_)) // pinned before the next sweep
       val (_, _, nulls1) = PartitionedSink.dropPartitionsWhere(s, tbl,
         substring(col("src"), 4, 10).cast("int") >= 15)
       require(nulls1 == 1L,
@@ -9420,7 +9412,6 @@ object Queries {
       phase1.unionByName(phase2)
         .select(col("phase"), col("src"), col("n_docs"), col("sum_chars"))
         .orderBy("phase", "src")
-        .localCheckpoint(true)
     }
   }
 
@@ -9458,7 +9449,6 @@ object Queries {
       graft.sinks.ComplianceLog.read(s, log)
         .select(col("batch_id"), col("rows_deleted"), col("dirs_rewritten"))
         .orderBy("batch_id")
-        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
   }
 
@@ -9486,7 +9476,8 @@ object Queries {
       .select(col("doc_id"),
         when(col("doc_id") % 10 < 5, lit(0L))
           .otherwise(col("doc_id") % 10).as("g"))
-    val rows = scratch(s, "graft_footer_bal_") { case Seq(tbl) =>
+    import s.implicits._
+    scratch(s, "graft_footer_bal_") { case Seq(tbl) =>
       docs.repartition(col("g"))
         .write.mode("overwrite").partitionBy("g").parquet(tbl)
       docs.repartition(col("g"))
@@ -9508,9 +9499,8 @@ object Queries {
           (rel.stripPrefix("g=").toLong, n, rep.balanceMaxOverMean)
         }
         .sortBy(_._1)
+        .toDF("part_g", "leaf_rows", "balance")
     }
-    import s.implicits._
-    rows.toDF("part_g", "leaf_rows", "balance")
   }
 
   /** COMPLIANCE-LEDGER AUDIT, ORACLE-PROVEN — the READ path a
@@ -9584,7 +9574,6 @@ object Queries {
       // query-local join — a compliance review calls one API
       graft.sinks.ComplianceLog.audit(s, log, grid)
         .orderBy("target", "batch_id")
-        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
   }
 
@@ -9616,13 +9605,12 @@ object Queries {
         Dedup.incrementalSimhashStored(s, idx, b, "text", "doc_id")
           .select(lit(phase).as("phase"), col("id_new"), col("id_old"),
             col("hamming"))
-          .localCheckpoint(true) // pin before the index mutates/deletes
+          .transform(Checkpoint(_)) // pinned before the append
       val p1 = probe(batchA, 1)
       Dedup.appendToSimhashIndex(s, idx, batchA, "text")
       val p2 = probe(batchB, 2)
       p1.unionByName(p2)
         .orderBy("phase", "id_new", "id_old")
-        .localCheckpoint(true)
     }
   }
 
@@ -9644,7 +9632,6 @@ object Queries {
       Dedup.simhashAdmission(s, idx, batch, "text", "doc_id",
           budget = 30L)
         .orderBy("doc_id")
-        .localCheckpoint(true) // pin before the scratch index is deleted
     }
   }
 
@@ -9687,7 +9674,6 @@ object Queries {
         .select(col("id_new"), col("id_old"), col("hamming"),
           lit(recorded).as("rows_deleted"))
         .orderBy("id_new", "id_old")
-        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
   }
 
@@ -9726,7 +9712,6 @@ object Queries {
         .select(col("batch_id"), col("rows_deleted"),
           col("dirs_rewritten"))
         .orderBy("batch_id")
-        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
   }
 
@@ -9766,7 +9751,6 @@ object Queries {
         .toDF("target", "batch_id")
       graft.sinks.ComplianceLog.audit(s, ledger, grid)
         .orderBy("batch_id")
-        .localCheckpoint(true) // pin before the scratch dirs are deleted
     }
   }
 
@@ -9822,7 +9806,6 @@ object Queries {
           coalesce(col("lineage"), lit("")).as("lineage"),
           col("recorded"), col("rows_deleted"), col("dirs_rewritten"))
         .orderBy("batch_id", "lineage")
-        .localCheckpoint(true) // pin before the scratch ledger is deleted
     }
   }
 

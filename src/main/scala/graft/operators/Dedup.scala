@@ -232,8 +232,8 @@ object Dedup {
       textCol: String, idCol: String, shingleSize: Int = 3,
       numHashes: Int = 16, bands: Int = 4,
       maxBucketSize: Int = 0): DataFrame = {
-    val bNew = withMinhashBands(newDocs, textCol, idCol, shingleSize,
-      numHashes, bands).localCheckpoint(false) // probe + touched keys
+    val bNew = Checkpoint(withMinhashBands(newDocs, textCol, idCol,
+      shingleSize, numHashes, bands)) // probe + touched keys
     incrementalFromBanded(
       index.select(col(idCol), col("band"), col("bucket")),
       bNew, idCol, maxBucketSize)
@@ -429,8 +429,7 @@ object Dedup {
       s"$api: index $indexPath pins idCol '$pinned' but the caller " +
         s"passed '$idCol' — the sidecar owns the probe's parameters; " +
         "pass the pinned name (the batch must carry that column)")
-    val banded = f.banding(meta)(newDocs, textCol, idCol)
-      .localCheckpoint(false)
+    val banded = Checkpoint(f.banding(meta)(newDocs, textCol, idCol))
     (banded, IndexCompact.touchedSlice(spark, indexPath, "bpart",
       banded.select(f.bpart(Sidecar.int(meta, "parts")))))
   }
@@ -549,8 +548,8 @@ object Dedup {
     // re-materializations). The eager checkpoint materializes the
     // edge list exactly once and every round scans the stored RDD:
     // q52 4.3 s → 2.5 s, executor task-time 35 s → 1 s.
-    val adj = Graph.undirected(edges, assumeDistinct = false)
-      .localCheckpoint(true)
+    val (adj, nAdj) =
+      Checkpoint.counted(Graph.undirected(edges, assumeDistinct = false))
     // Bounded DRIVER union-find fast path (r17, guide §1.2 step 1):
     // the touched/candidate graphs this fixpoint runs on are usually
     // MODEL-sized (a dedup batch's collision volume, a takedown's
@@ -572,7 +571,7 @@ object Dedup {
     val longIds = adj.schema.fields.forall(
       _.dataType == org.apache.spark.sql.types.LongType)
     val labels =
-      if (longIds && adj.count() <= driverMaxEdges) unionFindLabels(adj)
+      if (longIds && nAdj <= driverMaxEdges) unionFindLabels(adj)
       else propagatedLabels(adj)
     nodes.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
@@ -623,10 +622,9 @@ object Dedup {
     // would have built the identity labeling performs propagation round
     // one for free (adj is symmetric, so groupBy(src) sees every
     // incident node).
-    var labels = adj.groupBy(col("src").as("id"))
+    var labels = Checkpoint(adj.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("mindst"))
-      .select(col("id"), least(col("id"), col("mindst")).as("component"))
-      .localCheckpoint(true)
+      .select(col("id"), least(col("id"), col("mindst")).as("component")))
 
     // One propagation + hooking + pointer-doubling pass; any extra
     // columns (the convergence baseline `old`) pass through untouched.
@@ -666,24 +664,24 @@ object Dedup {
     // driver-side job round-trip, and at toy scale that fixed cost — not
     // the shuffles — dominated the bench (driver r3: 35s). Folding two
     // rounds per job halves the actions; the convergence count rides
-    // the SAME job (materialize). Labels only decrease, so the loop
-    // always reaches the fixpoint — no round cap, no partial labels.
-    // Each round's labels drop the size estimate the checkpoint
-    // inherits: a double-round references its input dozens of times
-    // through joins, so the inherited estimate compounded round over
-    // round into a number whose computation alone stalled a 200-node
-    // path graph.
+    // the SAME job (Checkpoint.materialize). Labels only decrease, so
+    // the loop always reaches the fixpoint — no round cap, no partial
+    // labels.
+    // Each round's labels are sized by their stored bytes, not by the
+    // estimate the checkpoint would inherit: a double-round references
+    // its input dozens of times through joins, so the inherited
+    // estimate compounded round over round into a number whose
+    // computation alone stalled a 200-node path graph.
     val changed = sum(when(col("component") =!= col("old"), 1L)
       .otherwise(0L))
     var nChanged = 1L
     var round = 0
     while (nChanged > 0) {
       round += 1
-      val (updated, n) = Graph.materialize(
+      val (updated, n) = Checkpoint.materialize(
         pass(pass(labels.withColumn("old", col("component")))),
         s"cc.round[$round]", changed)
-      labels = org.apache.spark.sql.GraftSql.withoutInheritedStats(updated)
-        .select("id", "component")
+      labels = updated.select("id", "component")
       nChanged = n
     }
     labels
@@ -734,10 +732,10 @@ object Dedup {
       .select(coalesce(col("la"), col("id_a")).as("la"),
         coalesce(col("lb"), col("id_b")).as("lb"))
       .where(col("la") =!= col("lb"))
-    val edges = labeled
-      .select(col("la").as("id_a"), col("lb").as("id_b")).distinct()
-      .localCheckpoint(false) // batch-bound; cuts the lookup joins out
-                              // of every CC round's lineage
+    // batch-bound; the checkpoint cuts the lookup joins out of every CC
+    // round's lineage
+    val edges = Checkpoint(labeled
+      .select(col("la").as("id_a"), col("lb").as("id_b")).distinct())
     val nodes = edges.select(col("id_a").as("id"))
       .unionByName(edges.select(col("id_b").as("id"))).distinct()
     // CC on the touched-LABEL graph — size ∝ batch collisions
@@ -782,10 +780,10 @@ object Dedup {
         deleteIds.columns.mkString(", "))
     // read several times below (touched lookup, member/edge pruning);
     // checkpoint so a recomputed delete-set expression can't diverge
-    val del = deleteIds.toDF("id").distinct().localCheckpoint(false)
+    val del = Checkpoint(deleteIds.toDF("id").distinct())
     // components that lost a member — bounded by the delete batch
-    val touchedComps = asg.join(del, Seq("id"), "left_semi")
-      .select(col("component")).distinct().localCheckpoint(false)
+    val touchedComps = Checkpoint(asg.join(del, Seq("id"), "left_semi")
+      .select(col("component")).distinct())
     // untouched components pass through verbatim: nothing in them
     // changed, because edges never cross component boundaries (and
     // every deleted id's own component is by definition touched, so
@@ -1063,21 +1061,19 @@ object Dedup {
     // (localCheckpoint, the graph-operator pattern) instead of
     // re-running tokenize+hash per consumer in one plan (measured 3×
     // the whole query's cost)
-    val toks = docs.select(col(idCol).as("jid"),
+    val toks = Checkpoint(docs.select(col(idCol).as("jid"),
       explode(array_distinct(shingleHashes(col(textCol), n, mod = false)))
-        .as("sh"))
-      .localCheckpoint(true)
+        .as("sh")))
     val dfreq = toks.groupBy("sh").agg(count(lit(1)).as("df"))
     val sizes = toks.groupBy("jid").agg(count(lit(1)).as("set_size"))
     val w = Window.partitionBy(col("jid"))
       .orderBy(col("df").asc, col("sh").asc)
-    val prefix = toks.join(dfreq, Seq("sh"))
+    val prefix = Checkpoint(toks.join(dfreq, Seq("sh"))
       .withColumn("rn", row_number().over(w))
       .join(sizes, Seq("jid"))
       .filter(col("rn") <= col("set_size") -
         expr(s"(set_size * $tauNum + ${tauDen - 1}) DIV $tauDen") + 1)
-      .select(col("sh"), col("jid"), col("rn"), col("set_size"))
-      .localCheckpoint(true)
+      .select(col("sh"), col("jid"), col("rn"), col("set_size")))
     // two more LOSSLESS prunes before the distinct (PPJoin's classic
     // pair): the LENGTH filter (J ≥ τ forces τ·max(|A|,|B|) ≤
     // min(|A|,|B|)) and the POSITIONAL filter — at the FIRST shared
@@ -1107,10 +1103,9 @@ object Dedup {
     // is a plain equi-join the optimizer broadcasts when it fits and
     // shuffles on the candidate key when it doesn't — no hint, per the
     // q78 lesson.
-    val tokArr = toks.groupBy("jid")
+    val tokArr = Checkpoint(toks.groupBy("jid")
       .agg(sort_array(collect_list(col("sh"))).as("tset"),
-        count(lit(1)).as("set_size"))
-      .localCheckpoint(true)
+        count(lit(1)).as("set_size")))
     def intersectCount(a: Column, b: Column): Column =
       org.apache.spark.sql.GraftSql.column(
         graft.functions.SortedIntersectCount(

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+import Checkpoint.{counted, materialize, pinned}
 
 /** Iterative graph analytics beyond connected components.
   *
@@ -21,17 +23,12 @@ object Graph {
 
   val Scale: Long = 1L << 30
 
-  /** The session's configured shuffle parallelism — the partition count
-    * to PIN on a pre-checkpoint repartition (see [[pinned]]). */
-  private[graft] def shufflePartitions(df: DataFrame): Int =
-    df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200").toInt
-
   /** Size-GATED broadcast of a per-vertex loop frame (r17). Every
     * iterative operator joins a |V|-bounded frame (ranks, labels,
     * frontier) against the pinned edge list each round, and a shuffle
     * join re-exchanges and sorts the |E| edge rows every round (see
-    * [[pinned]]; q86: a 2.4M-row exchange plus the round's dominant
-    * join stage, three times per query). When the frame's size —
+    * [[Checkpoint.pinned]]; q86: a 2.4M-row exchange plus the round's
+    * dominant join stage, three times per query). When the frame's size —
     * measured rows × the schema's row width, not an estimate — fits
     * Spark's own `spark.sql.autoBroadcastJoinThreshold`, hint it and the
     * edge side never moves; past it (or with the threshold at -1, which
@@ -62,38 +59,6 @@ object Graph {
     if (assumeDistinct) doubled else doubled.distinct()
   }
 
-  /** Materializes a loop's edge list once, hash-repartitioned on `key`
-    * to the session's shuffle parallelism. localCheckpoint, NOT persist
-    * (r16): a persisted edge list was measured being recomputed —
-    * source scan and distinct included — on every round's exchange
-    * (q82: ten ~7-9 s map stages re-emitting all 268k edges); the eager
-    * checkpoint stores the rows once. The repartition PINS the partition
-    * count: an eager checkpoint freezes its input's runtime layout, and
-    * AQE coalesces a small exchange to very few partitions (right for
-    * size-proportional work, disastrous for the expanding joins these
-    * edge lists feed). It does NOT carry the key partitioning into the
-    * rounds: the checkpointed LogicalRDD reports UnknownPartitioning, so
-    * a per-round shuffle join on `key` re-exchanges the edge rows (the
-    * q82/q86 per-round plans at sf0.01 with broadcasting off show the
-    * `Exchange hashpartitioning(src)` over the checkpoint scan every
-    * round) — which is why the vertex side is broadcast when it fits
-    * ([[vertexSide]]). */
-  private[graft] def pinned(df: DataFrame, key: String): DataFrame =
-    df.repartition(shufflePartitions(df), col(key)).localCheckpoint(true)
-
-  /** Eagerly localCheckpoints `df` (truncating the loop's lineage so
-    * every round plans O(1) work) and returns the long aggregate
-    * `signal` over its rows, observed on that SAME job — a loop's
-    * convergence or normalization scalar costs no extra Spark job. A
-    * null aggregate (a sum over zero rows) reads as 0. `name` is the
-    * round's observation name, `<op>.round[i]`. */
-  private[graft] def materialize(df: DataFrame, name: String,
-      signal: Column): (DataFrame, Long) = {
-    val obs = new Observation(name)
-    val out = df.observe(obs, signal.as("signal")).localCheckpoint(true)
-    (out, Option(obs.get("signal")).fold(0L)(_.asInstanceOf[Long]))
-  }
-
   /** Exact integer floor-division for longs (Column./ is always DOUBLE
     * division). Safe because every numerator here is < 2^53: the double
     * quotient m/n can only round across an integer boundary when
@@ -110,13 +75,13 @@ object Graph {
   def pageRank(nodes: DataFrame, idCol: String, edges: DataFrame,
       iters: Int = 10, dampingPct: Int = 85): DataFrame = {
     require(dampingPct > 0 && dampingPct < 100)
-    val n = nodes.select(col(idCol).as("id")).distinct().localCheckpoint(true)
+    // N is a bounded driver scalar, observed on the node set's own
+    // checkpoint job — a literal in every round's plan beats carrying
+    // an n_nodes column through every row
+    val (n, nNodes) = counted(nodes.select(col(idCol).as("id")).distinct())
     val e = pinned(edges.select(col("src"), col("dst")), "src")
     val outDeg = e.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("outdeg"))
-    // N is a bounded driver scalar (1 row) — a literal in every round's
-    // plan beats carrying an n_nodes column through every row
-    val nNodes: Long = n.count()
     // empty graph → well-defined empty rank table (and Scale/nNodes
     // below would otherwise divide by zero)
     if (nNodes == 0) {
@@ -181,13 +146,12 @@ object Graph {
     val adj = pinned(undirected(
       edges.select(col("src").as("id_a"), col("dst").as("id_b")),
       assumeDistinct), "src")
-    var labels = adj.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label"))
-      .localCheckpoint(true)
-    // measured once (a cheap scan of the just-checkpointed blocks):
-    // |labels| = |incident vertices|, constant across rounds — the
-    // gate for broadcasting the per-round label side (see vertexSide)
-    val nLabels = labels.count()
+    // |labels| = |incident vertices|, observed on the labels' own
+    // checkpoint job and constant across rounds — the gate for
+    // broadcasting the per-round label side (see vertexSide)
+    val (initial, nLabels) = counted(adj.select(col("src").as("id"))
+      .distinct().select(col("id"), col("id").as("label")))
+    var labels = initial
     var i = 0
     while (i < iters) {
       val counts = adj
@@ -206,7 +170,7 @@ object Graph {
       // rounds per materialized job — the q52 pointer-doubling cadence
       // applied here. Plans stay ≤ 2 rounds deep; job count halves.
       labels = if (i % 2 == 1 || i == iters - 1)
-        merged.localCheckpoint(true) else merged
+        Checkpoint(merged) else merged
       i += 1
     }
     labels
@@ -221,24 +185,23 @@ object Graph {
     * STATIC (the q82/q86 treatment that lets the q165 oracle replay the
     * recurrence as chained DuckDB CTEs), but the loop stops as soon as a
     * round drops no edge — the edge count rides each round's checkpoint
-    * job (see materialize), and rounds past the fixpoint are no-ops.
+    * job (see Checkpoint.counted), and rounds past the fixpoint are no-ops.
     * Returns (id, deg): surviving vertices with their degree in the
     * surviving subgraph. Each round is one degree aggregate + two semi
     * joins, lineage truncated per round. */
   def kCoreRounds(edges: DataFrame, k: Int, rounds: Int,
       assumeDistinct: Boolean = false): DataFrame = {
-    val edgeCount = count(lit(1))
-    var (adj, nEdges) = materialize(undirected(edges, assumeDistinct),
-      "kcore.round[0]", edgeCount)
+    var (adj, nEdges) = counted(undirected(edges, assumeDistinct),
+      "kcore.round[0]")
     var prevEdges = -1L
     var i = 0
     while (i < rounds && nEdges != prevEdges) {
       val keep = adj.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select(col("src").as("v"))
-      val (pruned, n) = materialize(adj
+      val (pruned, n) = counted(adj
         .join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi"),
-        s"kcore.round[${i + 1}]", edgeCount)
+        s"kcore.round[${i + 1}]")
       adj = pruned
       prevEdges = nEdges
       nEdges = n
@@ -308,18 +271,16 @@ object Graph {
   def bfsRounds(edges: DataFrame, seeds: DataFrame, rounds: Int,
       assumeDistinct: Boolean = false): DataFrame = {
     val adj = pinned(undirected(edges, assumeDistinct), "src")
-    val settled = count(lit(1))
-    var (dist, nFrontier) = materialize(seeds.select(col("id")).distinct()
-      .select(col("id"), lit(0L).as("dist")), "bfs.round[0]", settled)
+    var (dist, nFrontier) = counted(seeds.select(col("id")).distinct()
+      .select(col("id"), lit(0L).as("dist")), "bfs.round[0]")
     var frontier = dist
     var i = 0
     while (i < rounds && nFrontier > 0) {
       val reached = frontier
         .join(adj, col("id") === col("src"))
         .select(col("dst").as("id")).distinct()
-      val (newly, n) = materialize(reached.join(dist, Seq("id"), "left_anti")
-        .select(col("id"), lit(i + 1L).as("dist")), s"bfs.round[${i + 1}]",
-        settled)
+      val (newly, n) = counted(reached.join(dist, Seq("id"), "left_anti")
+        .select(col("id"), lit(i + 1L).as("dist")), s"bfs.round[${i + 1}]")
       dist = dist.unionByName(newly)
       frontier = newly
       nFrontier = n
@@ -384,15 +345,13 @@ object Graph {
   private def minPlusRounds(adj: DataFrame, seeds: DataFrame, start: Long,
       rounds: Int, value: String, candidate: Column,
       usable: Column = lit(true)): DataFrame = {
-    var cur = seeds.select(col("id")).distinct()
-      .select(col("id"), lit(start).as(value))
-      .localCheckpoint(true)
+    var cur = Checkpoint(seeds.select(col("id")).distinct()
+      .select(col("id"), lit(start).as(value)))
     for (_ <- 1 to rounds) {
       val relaxed = cur.join(adj, col("id") === col("src")).where(usable)
         .select(col("dst").as("id"), candidate.as(value))
-      cur = cur.unionByName(relaxed)
-        .groupBy("id").agg(min(col(value)).as(value))
-        .localCheckpoint(true)
+      cur = Checkpoint(cur.unionByName(relaxed)
+        .groupBy("id").agg(min(col(value)).as(value)))
     }
     cur
   }
@@ -435,9 +394,8 @@ object Graph {
       expr(s"CAST((CAST($xCol AS DECIMAL(38,0)) * ${Scale}L)" +
         s" DIV ${math.max(tot, 1L)}L AS BIGINT)")
 
-    var hubs = e.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(Scale).as("h"))
-      .localCheckpoint(true)
+    var hubs = Checkpoint(e.select(col("src").as("id")).distinct()
+      .select(col("id"), lit(Scale).as("h")))
     var auths: DataFrame = null
     for (i <- 1 to iters) {
       val (araw, aTot) = materialize(e
@@ -451,11 +409,10 @@ object Graph {
         s"hits.round[$i].hub", sum(col("hr")))
       hubs = hraw.select(col("src").as("id"), norm("hr", hTot).as("h"))
     }
-    auths.select(col("dst").as("id"), col("a").as("auth_fixed"))
+    Checkpoint(auths.select(col("dst").as("id"), col("a").as("auth_fixed"))
       .join(hubs.select(col("id"), col("h").as("hub_fixed")),
         Seq("id"), "full_outer")
       .select(col("id"), coalesce(col("auth_fixed"), lit(0L)).as("auth_fixed"),
-        coalesce(col("hub_fixed"), lit(0L)).as("hub_fixed"))
-      .localCheckpoint(true)
+        coalesce(col("hub_fixed"), lit(0L)).as("hub_fixed")))
   }
 }

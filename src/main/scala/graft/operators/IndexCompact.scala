@@ -813,8 +813,7 @@ private[graft] object IndexCompact {
     if (leaves.isEmpty) { record(0L, 0L); return (0L, 0L) }
     // read twice below (touched scan + anti-join); checkpoint so a
     // recomputed delete-set expression can't diverge between the two
-    val del = deleteIds.toDF("__graft_del_id").distinct()
-      .localCheckpoint(false)
+    val del = Checkpoint(deleteIds.toDF("__graft_del_id").distinct())
     // column-pruned scan: which directories hold a doomed row, and how
     // many — the ONLY corpus-scale read, partition cols + id wide.
     // DateType partition values are collected as their ISO strings and

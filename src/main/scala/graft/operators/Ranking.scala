@@ -58,11 +58,11 @@ object Ranking {
     * tiles; differential-tested against the window in RankingSpec). */
   def globalNtile(df: DataFrame, orderCols: Seq[Column], k: Int,
       tileCol: String): DataFrame = {
-    // lazy checkpoint for the same multi-consumer reason as leadKey /
-    // globalCumSum: the indexed frame feeds both the count aggregate
-    // and the crossJoin — un-checkpointed, the sort + zip re-execute
-    // once per consumer.
-    val idx = globalIndexCols(df, orderCols, "_nt_idx").localCheckpoint(false)
+    // stored once for its two consumers, as in leadKey / globalCumSum:
+    // the indexed frame feeds both the count aggregate and the
+    // crossJoin — un-stored, the sort + zip re-execute once per
+    // consumer.
+    val idx = Checkpoint(globalIndexCols(df, orderCols, "_nt_idx"))
     val n = idx.agg(count(lit(1)).as("_nt_n"))
     idx.crossJoin(broadcast(n))
       .withColumn(tileCol, expr(
@@ -85,9 +85,9 @@ object Ranking {
     * [[globalCumSum]]: `(hi−lo)·buckets` must fit a long. */
   def leadKey(df: DataFrame, keyCol: String, nxtCol: String,
       buckets: Int = 256): DataFrame = {
-    // lazy checkpoint for the same three-consumer reason as
-    // globalCumSum (bounds, per-bucket lead, per-bucket mins)
-    val d = df.localCheckpoint(false)
+    // stored once for its three consumers, as in globalCumSum (bounds,
+    // per-bucket lead, per-bucket mins)
+    val d = Checkpoint(df)
     val bounds = d.agg(min(col(keyCol)).as("_lo"), max(col(keyCol)).as("_hi"))
     val b = d.crossJoin(broadcast(bounds))
       .withColumn("_lk_b",
@@ -144,13 +144,13 @@ object Ranking {
     */
   def globalCumSum(df: DataFrame, orderCol: String,
       weightCols: Seq[String], buckets: Int = 256): DataFrame = {
-    // lazy checkpoint: the input feeds the bounds aggregate, the local
-    // running sums, AND the bucket-totals pass — un-checkpointed, a
-    // caller's whole upstream pipeline (often a join + aggregate)
-    // re-executes three times (q290's orders⋈lineitem ran 3× before
-    // this). The input is the collapsed one-row-per-key CDF frame —
-    // the thing to materialize.
-    val d = df.localCheckpoint(false)
+    // stored once: the input feeds the bounds aggregate, the local
+    // running sums, AND the bucket-totals pass — un-stored, a caller's
+    // whole upstream pipeline (often a join + aggregate) re-executes
+    // three times (q290's orders⋈lineitem ran 3× before this). The
+    // input is the collapsed one-row-per-key CDF frame — the thing to
+    // materialize.
+    val d = Checkpoint(df)
     val bounds = d.agg(min(col(orderCol)).as("_lo"),
       max(col(orderCol)).as("_hi"))
     val bucketed = d.crossJoin(broadcast(bounds))

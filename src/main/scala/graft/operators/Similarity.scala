@@ -747,8 +747,7 @@ object Similarity {
     val codebooks = graft.config.Sidecar.doubles3(meta, "codebooks")
     // pin the batch so the count and the write see the same rows even
     // if the caller's frame is non-deterministic
-    val batch = newCorpus.localCheckpoint(false)
-    val batchCount = batch.count()
+    val (batch, batchCount) = Checkpoint.counted(newCorpus)
     // intent marker: a crash between the parquet append and the sidecar
     // count update leaves NO swap leftovers, so [[recoverIvfPqIndex]]
     // would otherwise see a healthy tree and silently keep the

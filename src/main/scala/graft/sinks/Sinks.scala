@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -164,7 +165,7 @@ object PartitionedSink {
     // maintenance process refuses loudly instead of, e.g., compacting
     // the root out from under the two commit renames
     EvidenceCompaction.withMaintenanceLease(spark,
-      new org.apache.hadoop.fs.Path(tablePath)) { lease =>
+      new Path(tablePath)) { lease =>
       deleteRowsLocked(spark, tablePath, idCol, deleteIds,
         partitionColumns, lease)
     }
@@ -174,10 +175,9 @@ object PartitionedSink {
       idCol: String, deleteIds: DataFrame,
       partitionColumns: Seq[String],
       lease: EvidenceCompaction.LeaseHandle): Long = {
-    import org.apache.hadoop.fs.Path
     recoverTable(spark, tablePath) // re-enters this window's lease
-    val del = deleteIds.toDF("__graft_del_id").distinct()
-      .localCheckpoint(false)
+    val del = graft.operators.Checkpoint(
+      deleteIds.toDF("__graft_del_id").distinct())
     val table = spark.read.parquet(tablePath)
     // column-pruned membership count — the cheap gate that makes a
     // no-op takedown cost one scan of one column, not a rewrite
@@ -185,30 +185,63 @@ object PartitionedSink {
       .join(del, col(idCol) === col("__graft_del_id"), "left_semi")
       .count()
     if (nDel == 0L) return 0L
+    val kept = table
+      .join(del, col(idCol) === col("__graft_del_id"), "left_anti")
+    swapRoot(spark, new Path(tablePath), lease) { tmp =>
+      (if (partitionColumns.nonEmpty)
+        kept.repartition(partitionColumns.map(col): _*)
+          .write.partitionBy(partitionColumns: _*)
+      else kept.write).mode("errorifexists").parquet(tmp)
+    }
+    nDel
+  }
+
+  /** Replaces the table at `tablePath` with `next(current)` — `current`
+    * is the table as it stands, None when no table exists yet — as ONE
+    * single-writer window under the table's maintenance lease: heal
+    * first ([[recoverTable]]), then write and commit through the same
+    * whole-root swap as [[deleteRowsByKey]]. A crash at any instant
+    * leaves the old table or the new one once [[recoverTable]] runs,
+    * never neither. */
+  private[graft] def replaceTable(spark: SparkSession, tablePath: String)(
+      next: Option[DataFrame] => DataFrame): Unit = {
     val root = new Path(tablePath)
+    EvidenceCompaction.withMaintenanceLease(spark, root) { lease =>
+      recoverTable(spark, tablePath) // re-enters this window's lease
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val cur = if (fs.exists(root)) Some(spark.read.parquet(tablePath))
+        else None
+      swapRoot(spark, root, lease)(next(cur).write.mode("errorifexists")
+        .parquet(_))
+    }
+  }
+
+  /** The whole-root swap: `write` fills the sibling `.rowdelete_tmp`,
+    * then `root -> .rowdelete_old`, `tmp -> root`, drop old. The commit
+    * point is `.rowdelete_old` appearing, which only happens after the
+    * write completed; a table with no root yet commits by creating an
+    * empty `.rowdelete_old` (the empty table it replaces). See
+    * [[recoverTable]] for the state each crash leaves. */
+  private def swapRoot(spark: SparkSession, root: Path,
+      lease: EvidenceCompaction.LeaseHandle)(write: String => Unit): Unit = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(root.getParent, root.getName + ".rowdelete_tmp")
     val old = new Path(root.getParent, root.getName + ".rowdelete_old")
     fs.delete(tmp, true); fs.delete(old, true)
-    val kept = table
-      .join(del, col(idCol) === col("__graft_del_id"), "left_anti")
-    val writer = (if (partitionColumns.nonEmpty)
-      kept.repartition(partitionColumns.map(col): _*)
-        .write.partitionBy(partitionColumns: _*)
-    else kept.write).mode("errorifexists")
-    writer.parquet(tmp.toString)
-    // the rewrite above is the window's long phase — re-check the
-    // lease before the commit point (the first root rename)
+    write(tmp.toString)
+    // the write above is the window's long phase — re-check the lease
+    // before the commit point
     lease.reassert()
-    require(fs.rename(root, old), s"takedown swap failed: $root -> $old")
-    require(fs.rename(tmp, root), s"takedown swap failed: $tmp -> $root")
+    if (fs.exists(root))
+      require(fs.rename(root, old), s"table swap failed: $root -> $old")
+    else require(fs.mkdirs(old), s"table swap failed: mkdirs $old")
+    require(fs.rename(tmp, root), s"table swap failed: $tmp -> $root")
     // a failed delete leaves a stale full copy beside the table —
     // recoverable (recoverTable drops it) but worth failing loudly in
     // a maintenance job rather than silently doubling storage
     require(fs.delete(old, true),
-      s"takedown cleanup failed: stale copy left at $old — run " +
+      s"table swap cleanup failed: stale copy left at $old — run " +
         "PartitionedSink.recoverTable or remove it manually")
-    nDel
   }
 
   /** Crash-recovery fsck for a corpus table maintained through BOTH
@@ -222,17 +255,23 @@ object PartitionedSink {
     * first (a vanished root must come back before the partition fsck
     * inspects the tree).
     *
-    * Whole-root protocol: the commit point is the rename
-    * `root -> .rowdelete_old` (which only runs after the temp write
-    * completed), so recovery is deterministic from what exists on
-    * disk:
+    * Whole-root protocol ([[deleteRowsByKey]] and [[replaceTable]]):
+    * the commit point is `.rowdelete_old` appearing — the rename
+    * `root -> .rowdelete_old`, or for a table with no root yet the
+    * creation of an empty one — which only happens after the temp
+    * write completed, so recovery is deterministic from what exists
+    * on disk:
     *
     *  - `root` present: no swap was in flight — drop any leftover
     *    `.rowdelete_tmp` (uncommitted rewrite) and `.rowdelete_old`
     *    (stale copy whose final delete failed).
-    *  - `root` missing, `.rowdelete_tmp` present: crashed between the
-    *    two renames — roll FORWARD (rename temp in, drop old),
-    *    completing the delete that had already committed.
+    *  - `root` missing, `.rowdelete_tmp` and `.rowdelete_old` present:
+    *    crashed between the commit point and the rename of the temp —
+    *    roll FORWARD (rename temp in, drop old), completing the
+    *    rewrite that had already committed.
+    *  - `root` missing, `.rowdelete_tmp` present, no `.rowdelete_old`:
+    *    a first write crashed before its commit point — drop the temp
+    *    (it may be partial); there was no table before.
     *  - `root` missing, `.rowdelete_tmp` missing, `.rowdelete_old`
     *    present: not a state this protocol produces (temp is renamed
     *    in before old is dropped), but restore the old copy rather
@@ -254,7 +293,6 @@ object PartitionedSink {
     * Idempotent; same single-writer window as the rewrite itself.
     * Returns the combined action log (empty = healthy). */
   def recoverTable(spark: SparkSession, tablePath: String): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(tablePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(root.getParent, root.getName + ".rowdelete_tmp")
@@ -275,10 +313,9 @@ object PartitionedSink {
   }
 
   private def recoverTableLocked(spark: SparkSession, tablePath: String,
-      root: org.apache.hadoop.fs.Path,
+      root: Path,
       fs: org.apache.hadoop.fs.FileSystem,
       lease: EvidenceCompaction.LeaseHandle): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val tmp = new Path(root.getParent, root.getName + ".rowdelete_tmp")
     val old = new Path(root.getParent, root.getName + ".rowdelete_old")
     val legacyTmp = new Path(root.getParent, root.getName + ".delete_tmp")
@@ -293,11 +330,14 @@ object PartitionedSink {
       if (fs.delete(old, true)) actions += "dropped stale .rowdelete_old copy"
       if (fs.delete(legacyOld, true))
         actions += "dropped stale legacy .delete_old copy"
-    } else if (fs.exists(tmp)) {
+    } else if (fs.exists(tmp) && fs.exists(old)) {
       require(fs.rename(tmp, root),
         s"recovery roll-forward failed: $tmp -> $root")
       fs.delete(old, true)
       actions += "rolled forward crashed root swap from .rowdelete_tmp"
+    } else if (fs.exists(tmp)) {
+      fs.delete(tmp, true)
+      actions += "dropped uncommitted first-write .rowdelete_tmp"
     } else if (fs.exists(legacyTmp) && graft.config.Sidecar.readNode(
         spark, new Path(legacyTmp,
           graft.operators.IndexCompact.SwapManifest)).isEmpty) {
@@ -339,9 +379,8 @@ object PartitionedSink {
     * runId, which would otherwise re-count the remainder as its own
     * evidence and overstate the ledger. */
   private def recoverTtlSweep(spark: SparkSession,
-      root: org.apache.hadoop.fs.Path,
+      root: Path,
       fs: org.apache.hadoop.fs.FileSystem): Seq[String] = {
-    import org.apache.hadoop.fs.Path
     val mp = new Path(root, TtlSweepManifest)
     graft.config.Sidecar.readNode(spark, mp) match {
       case None => Nil
@@ -388,7 +427,7 @@ object PartitionedSink {
     // one lease frame across the whole-root heal AND the partition
     // delete — the nested entry points re-enter it
     EvidenceCompaction.withMaintenanceLease(spark,
-      new org.apache.hadoop.fs.Path(tablePath)) { _ =>
+      new Path(tablePath)) { _ =>
       recoverTable(spark, tablePath)
       graft.operators.IndexCompact.deleteMatchingChecked(spark,
         tablePath, idCol, deleteIds, evidence)
@@ -477,7 +516,7 @@ object PartitionedSink {
     // rewrite leaves this sweep is deleting and resurrect aged-out
     // rows whose evidence was already recorded
     EvidenceCompaction.withMaintenanceLease(spark,
-      new org.apache.hadoop.fs.Path(tablePath)) { lease =>
+      new Path(tablePath)) { lease =>
       dropPartitionsLocked(spark, tablePath, predicate, evidence, lease)
     }
 
@@ -485,7 +524,6 @@ object PartitionedSink {
       tablePath: String, predicate: Column,
       evidence: Option[ComplianceLog.Key],
       lease: EvidenceCompaction.LeaseHandle): (Long, Long, Long, Boolean) = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}

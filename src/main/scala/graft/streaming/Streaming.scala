@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Prep
+import graft.operators.{Checkpoint, Prep}
 
 /** Structured Streaming operators — the streaming upgrade of the
   * reference's batch-emulated incremental consumption (SURVEY.md §2.11).
@@ -260,9 +260,11 @@ object Streaming {
     * declarative streaming sink expresses; inside the batch function
     * it's plain batch Spark, so the whole q95 analysis applies
     * (key-co-partitioned join, tiny change batches broadcast). Each
-    * batch's new history is written to `<table>_staging`, then copied
-    * over the table by a read-back overwrite — a copy, not a swap, so a
-    * crash DURING the copy leaves a torn table. A crash between batches
+    * batch's new history commits through the table's whole-root swap
+    * ([[graft.sinks.PartitionedSink.replaceTable]], under the table's
+    * maintenance lease), so a crash at any instant leaves the old
+    * history or the new one once the next batch's
+    * [[graft.sinks.PartitionedSink.recoverTable]] runs. The batch then
     * replays idempotently from the checkpoint: a batch re-applied over
     * its own output is a no-op because equal values don't close rows.
     * The table is found through its path's Hadoop FileSystem, so a
@@ -284,59 +286,42 @@ object Streaming {
     * idempotency claim (re-applying a batch over its own output is a
     * no-op) is directly testable. */
   private[graft] def mergeScd2Batch(batchDf: DataFrame,
-      tablePath: String): Unit = {
-        val spark = batchDf.sparkSession
-        val table = new org.apache.hadoop.fs.Path(tablePath)
-        val cur =
-          if (table.getFileSystem(spark.sparkContext.hadoopConfiguration)
-              .exists(table))
-            spark.read.parquet(tablePath)
-          else
-            spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              org.apache.spark.sql.types.StructType(Seq(
-                org.apache.spark.sql.types.StructField("k",
-                  org.apache.spark.sql.types.LongType),
-                org.apache.spark.sql.types.StructField("v",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("valid_from",
-                  org.apache.spark.sql.types.StringType),
-                org.apache.spark.sql.types.StructField("valid_to",
-                  org.apache.spark.sql.types.StringType))))
-        // latest change per key within the batch (deterministic)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("k"))
-          .orderBy(col("change_date").desc, col("v").asc)
-        val upd = batchDf
-          .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-          .select(col("k"), col("v").as("new_v"),
-            col("change_date").as("cd"))
-        val open = cur.filter(col("valid_to") === "9999-12-31")
-        val closedHist = cur.filter(col("valid_to") =!= "9999-12-31")
-        val merged = open.join(upd, Seq("k"), "full_outer")
-          .select(col("k"), explode(
-            when(col("new_v").isNotNull && col("v").isNull,
-              // brand-new key: open its first version
-              array(struct(col("new_v").as("v"), col("cd").as("valid_from"),
+      tablePath: String): Unit =
+    graft.sinks.PartitionedSink.replaceTable(batchDf.sparkSession,
+        tablePath) { table =>
+      val cur = table.getOrElse(batchDf.sparkSession.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        StructType.fromDDL(
+          "k BIGINT, v STRING, valid_from STRING, valid_to STRING")))
+      // latest change per key within the batch (deterministic)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("k"))
+        .orderBy(col("change_date").desc, col("v").asc)
+      val upd = batchDf
+        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .select(col("k"), col("v").as("new_v"),
+          col("change_date").as("cd"))
+      val open = cur.filter(col("valid_to") === "9999-12-31")
+      val closedHist = cur.filter(col("valid_to") =!= "9999-12-31")
+      val merged = open.join(upd, Seq("k"), "full_outer")
+        .select(col("k"), explode(
+          when(col("new_v").isNotNull && col("v").isNull,
+            // brand-new key: open its first version
+            array(struct(col("new_v").as("v"), col("cd").as("valid_from"),
+              lit("9999-12-31").as("valid_to"))))
+          .when(col("new_v").isNotNull && col("new_v") =!= col("v"),
+            array(
+              struct(col("v"), col("valid_from"),
+                col("cd").as("valid_to")),
+              struct(col("new_v").as("v"), col("cd").as("valid_from"),
                 lit("9999-12-31").as("valid_to"))))
-            .when(col("new_v").isNotNull && col("new_v") =!= col("v"),
-              array(
-                struct(col("v"), col("valid_from"),
-                  col("cd").as("valid_to")),
-                struct(col("new_v").as("v"), col("cd").as("valid_from"),
-                  lit("9999-12-31").as("valid_to"))))
-            .otherwise(array(struct(col("v"), col("valid_from"),
-              col("valid_to"))))).as("r"))
-          .select(col("k"), col("r.v").as("v"),
-            col("r.valid_from").as("valid_from"),
-            col("r.valid_to").as("valid_to"))
-        val next = closedHist.unionByName(merged)
-        // never read and overwrite in one job: stage, then copy back
-        val staging = tablePath + "_staging"
-        next.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite")
-          .parquet(tablePath)
-  }
+          .otherwise(array(struct(col("v"), col("valid_from"),
+            col("valid_to"))))).as("r"))
+        .select(col("k"), col("r.v").as("v"),
+          col("r.valid_from").as("valid_from"),
+          col("r.valid_to").as("valid_to"))
+      closedHist.unionByName(merged)
+    }
 
   /** Stream–static enrichment: join each micro-batch against a STATIC
     * dimension (the streaming form of q11's broadcast dim join). The
@@ -646,15 +631,15 @@ object Streaming {
     docs.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
-        val all = batch.toDF().localCheckpoint(true)
+        val all = Checkpoint(batch.toDF())
         val b =
           if (admitBudget == Long.MaxValue) all
           else {
-            val adm = admission(all.sparkSession, all, admitBudget)
-              .localCheckpoint(true)
-            val over = all.join(adm.where(!col("admit")).drop("admit"),
-              Seq(idCol)).localCheckpoint(true)
-            if (over.count() > 0) quarantineStore match {
+            val adm = Checkpoint(admission(all.sparkSession, all,
+              admitBudget))
+            val (over, nOver) = Checkpoint.counted(all.join(
+              adm.where(!col("admit")).drop("admit"), Seq(idCol)))
+            if (nOver > 0) quarantineStore match {
               case None => quarantine(over, batchId)
               case Some(sp) =>
                 val lin = canonicalLineage(all.sparkSession, checkpointPath)
@@ -668,11 +653,11 @@ object Streaming {
                     sp, lin, batchId, over): Unit
                 }
             }
-            all.join(adm.where(col("admit")).select(col(idCol)),
-              Seq(idCol), "left_semi").localCheckpoint(true)
+            Checkpoint(all.join(adm.where(col("admit")).select(col(idCol)),
+              Seq(idCol), "left_semi"))
           }
-        val pairs = probe(b.sparkSession, b)
-          .localCheckpoint(true) // probe BEFORE the append lands
+        // probe BEFORE the append lands
+        val pairs = Checkpoint(probe(b.sparkSession, b))
         sink(pairs, batchId)
         appendOnce(b.sparkSession, indexPath, checkpointPath, batchId) {
           () => append(b.sparkSession, b)
@@ -788,7 +773,7 @@ object Streaming {
     requests.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
-        val b = batch.toDF().localCheckpoint(true)
+        val b = Checkpoint(batch.toDF())
         val (nRows, nDirs) = delete(b.sparkSession, b,
           complianceLog.map(lp => graft.sinks.ComplianceLog.Key(lp,
             target, canonicalLineage(b.sparkSession, checkpointPath),

@@ -850,6 +850,27 @@ class PlanSpec extends SparkSpec {
     assert(sites.isEmpty, sites.mkString("\n"))
   }
 
+  test("one checkpoint primitive: localCheckpoint( appears once, in " +
+    "Checkpoint.scala, and no frame drops its size (withoutInheritedStats)") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    def sites(token: String) = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      _ <- 1 until line.split(java.util.regex.Pattern.quote(token), -1).length
+    } yield (f.getFileName.toString,
+      s"${root.relativize(f)}:${i + 1}: ${line.trim}")
+    val cps = sites("localCheckpoint(")
+    assert(cps.map(_._1) == Seq("Checkpoint.scala"),
+      cps.map(_._2).mkString("\n"))
+    val drops = sites("withoutInheritedStats")
+    assert(drops.isEmpty, drops.map(_._2).mkString("\n"))
+  }
+
   test("the seeded quantized-Lloyd trainer is written once: lloydStep( " +
     "appears only at its definition and in the one trainer") {
     import scala.jdk.CollectionConverters._
