@@ -22,7 +22,11 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * eager actions, GC delta, job count, executor task-time sum) and
   * writes `<outDir>/<query>.txt`: the formatted physical plan of the
   * executed write (the final AQE plan), then the top job sites and the
-  * top stages by task-time with their shuffle volume.
+  * top stages by task-time with their shuffle volume. It also writes
+  * `<outDir>/<query>.logical.txt`: the optimized logical plan of the
+  * query's frame with expression, lambda-variable and RDD ids replaced
+  * by placeholders, so two runs (or two builds) of an unchanged query
+  * give byte-equal files where the executed AQE plan may not.
   *
   * Usage: BenchDiag [outDir, default /tmp/plans]; SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_CPUS and -DgraftBenchOnly as for Bench.
@@ -35,6 +39,20 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object BenchDiag {
   private final case class StageRec(id: Int, name: String, tasks: Int,
       ms: Long, shWkb: Long, shWrec: Long, shRkb: Long)
+
+  /** A plan string with its run-specific ids replaced: `#<id>`
+    * expression ids, the counter suffix of lambda variables (`x_12`),
+    * RDD ids (`MapPartitionsRDD[7]`), the `plan_id`s and query stage
+    * numbers of cached physical plans, and JVM lambda class names and
+    * identity hashes (`Queries$$$Lambda$6992/0x00007ff381934c08@3f8a`). */
+  private[graft] def stableIds(plan: String): String =
+    plan.replaceAll("#\\d+", "#N")
+      .replaceAll("\\b(\\w+)_\\d+(?=#N)", "$1_N")
+      .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("QueryStage \\d+", "QueryStage N")
+      .replaceAll("\\$Lambda\\$\\d+/0x\\p{XDigit}+", "\\$Lambda")
+      .replaceAll("(\\w)@\\p{XDigit}+\\b", "$1@N")
 
   def main(args: Array[String]): Unit = {
     val outDir = Paths.get(args.headOption.getOrElse("/tmp/plans"))
@@ -114,6 +132,8 @@ object BenchDiag {
           f"shR ${s.shRkb}%8d KB  ${s.name}\n")
       }
       Files.writeString(outDir.resolve(s"$name.txt"), sb.toString)
+      Files.writeString(outDir.resolve(s"$name.logical.txt"),
+        stableIds(df.queryExecution.optimizedPlan.toString))
     }
     spark.stop()
   }

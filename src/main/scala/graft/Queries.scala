@@ -35,6 +35,22 @@ object Queries {
   /** Bit-deterministic 6-dp truncation (see scaladoc above). */
   private def f6(c: Column): Column = floor(c * lit(1000000L)) / lit(1000000.0)
 
+  /** Exact cents of a 2-decimal double column as a long: the decimal
+    * cast makes `× 100` exact, so every engine (and the DuckDB oracle,
+    * which replays this form) gets the same integer. */
+  private def cents(c: Column): Column =
+    (c.cast(DecimalType(18, 2)) * lit(100)).cast("long")
+
+  /** Exact net line revenue `l_extendedprice × (1 − l_discount)`, as a
+    * decimal. */
+  private def netPrice: Column =
+    col("l_extendedprice").cast(DecimalType(18, 2)) *
+      (lit(1).cast(DecimalType(18, 2)) -
+        col("l_discount").cast(DecimalType(18, 2)))
+
+  /** Net line revenue in whole cents, floored. */
+  private def netCents: Column = floor(netPrice * lit(100)).cast("long")
+
   private val wmEvents = Timestamp.valueOf("2024-01-15 00:00:00")
 
   /** Runs `body` over fresh local scratch directories, one per prefix
@@ -157,8 +173,7 @@ object Queries {
       .agg(
         dsum(col("l_quantity")).as("sum_qty"),
         dsum(col("l_extendedprice")).as("sum_base_price"),
-        sum(col("l_extendedprice").cast(DecimalType(18, 2)) *
-          (lit(1).cast(DecimalType(18, 2)) - col("l_discount").cast(DecimalType(18, 2))))
+        sum(netPrice)
           .cast("double").as("sum_disc_price"),
         count(lit(1)).as("count_order"))
       .withColumn("avg_qty", f6(col("sum_qty") / col("count_order")))
@@ -293,7 +308,7 @@ object Queries {
     t(s, dir, "events")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("value").cast(DecimalType(18, 2))).cast("double").as("total_value"))
+        dsum(col("value")).as("total_value"))
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n"), col("total_value"))
       .orderBy("window_start", "event_type")
@@ -576,15 +591,18 @@ object Queries {
       "user_id", k = 32)
       .orderBy("event_type")
 
+  /** Each document of `docs` with its MinHash near-duplicate
+    * `component` (connected components over the LSH candidate pairs). */
+  private def minhashComponents(docs: DataFrame): DataFrame =
+    Dedup.connectedComponents(docs, "doc_id",
+        Dedup.minhashCandidates(docs, "text", "doc_id"))
+      .withColumnRenamed("id", "doc_id")
+
   /** Near-dup CLUSTERS: connected components over q29's MinHash-LSH
     * candidate pairs — the grouping a dedup pass consumes (one keeper
     * per component). */
   def q52DedupComponents(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val pairs = Dedup.minhashCandidates(docs, "text", "doc_id")
-    Dedup.connectedComponents(docs, "doc_id", pairs)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy("doc_id")
+    minhashComponents(t(s, dir, "documents")).orderBy("doc_id")
   }
 
   /** SimHash band candidates verified by exact Hamming distance — the
@@ -854,8 +872,8 @@ object Queries {
     val agg1 = base.groupBy("doc_id", "term")
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
       .persist()
-    // populate the cache before its three consumers race it (r16 — see
-    // partGraph's e.count() rationale)
+    // populate the cache before its three consumers race it (r16: AQE
+    // launches every consumer exchange of the first action at once)
     agg1.count()
     val stats = agg1.groupBy("doc_id").agg(max(col("dl")).as("dl"))
       .agg(count(lit(1)).as("n_docs"), sum("dl").as("sum_dl"))
@@ -982,157 +1000,25 @@ object Queries {
         col("l_linenumber").asc)
       .limit(100)
 
-  /** The part co-occurrence graph (a<b part pairs sharing an order) +
-    * its degree table + the degree-oriented triangle count — shared by
-    * q78 (triangles) and q84 (clustering coefficient). */
-  private[graft] def partGraph(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, () => DataFrame) = {
-    val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-    // per-order pair expansion beats a lineitem self-join: one groupBy
-    // exchange + an in-memory C(k,2) explode over tiny (≤7-item)
-    // sorted part lists, instead of a sort-merge join over the full
-    // table — the order key never re-sorts. Two FLAT generator steps
-    // (posexplode, then explode of the strict suffix), not the earlier
-    // nested transform/slice/flatten HOF: generators run inside
-    // whole-stage codegen while nested lambda trees evaluate
-    // interpreted per element — the HOF form cost ~29 s of executor
-    // time cold (r16 stage profile) for the same 4M pairs.
-    val e = li.groupBy("l_orderkey")
-      .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-      .select(col("ps"), posexplode(col("ps")))
-      .select(col("col").as("a"),
-        explode(slice(col("ps"), col("pos") + lit(2), size(col("ps"))))
-          .as("b"))
-      .distinct()
-      // materialize BEFORE any consumer runs (r16): AQE launches every
-      // consumer exchange of the first action concurrently, and each
-      // re-ran the basket explode + distinct when the pin was lazy.
-      // r17: eager localCheckpoint instead of persist()+count() — the
-      // columnar cache BUILD of the 1.2M-row edge list was the top
-      // stage of q78's cold profile (~20 s of executor time in
-      // CompressibleColumnBuilder) and the count() a second full pass;
-      // the checkpoint stores the rows once with neither. The
-      // partitioning it loses no longer matters: the r16 close join
-      // that a checkpointed e once flipped to a bad broadcast is gone
-      // (triangles are edge-iterated from the adjacency cache), and
-      // every remaining consumer either broadcasts deg or repartitions
-      // internally (labelPropagation).
-      .transform(Checkpoint(_))
-    val (deg, triangles) = orientedTriangles(e)
-    (e, deg, triangles)
-  }
-
-  /** Degree table + degree-oriented triangle-count thunk over an a<b
-    * edge list — partGraph's machinery (SURVEY.md §8 records its wall on
-    * replicated graphs). */
-  private def orientedTriangles(e: DataFrame)
-      : (DataFrame, () => DataFrame) = {
-    // degree table = |vertices| rows (keys, not edges). No broadcast
-    // HINT: a hint overrides autoBroadcastJoinThreshold and would
-    // collect |V| rows to the driver no matter the graph size — at
-    // billions of vertices that is a driver OOM, not a fallback. Left
-    // unhinted, Spark/AQE broadcasts small degree tables (this fixture
-    // qualifies) and degrades to a shuffle join on a/b past the
-    // threshold, which is the behavior a 100 TB graph needs.
-    val deg = e.select(explode(array(col("a"), col("b"))).as("v"))
-      .groupBy("v").agg(count(lit(1)).as("d"))
-      // persisted LAZILY (callers that take only `e` never pay for it):
-      // deg feeds BOTH sides of the orientation join plus q84's
-      // clustering denominator — uncached it was derived from e twice
-      // per run (2 × ~14 s executor cold, r16 stage profile). The
-      // thunk below populates it before its consumers race; cached
-      // stats also let the optimizer broadcast both orientation joins
-      // on this |V|-row frame instead of sort-merging them (and degrade
-      // gracefully to a shuffle join past the threshold at real graph
-      // scale).
-      .persist()
-    // π-orient each edge by (degree, id) so every triangle survives in
-    // exactly one DAG shape a→b→c with a→c; only (src,dst) is needed —
-    // the edge-iterator count below never orders wedges
-    def orientedFrame() = e
-      .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
-      .select(when(col("da") < col("db") ||
-          (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("s"), col("b").as("t")))
-        .otherwise(struct(col("b").as("s"), col("a").as("t")))
-        .as("e"))
-      .select(col("e.s").as("src"), col("e.t").as("dst"))
-    // EDGE-ITERATOR triangle count (r16 rewrite, guide §1.2 step 1:
-    // fix the distributed algorithm before tuning stages). The previous
-    // plan materialized every π-ordered WEDGE (a src-keyed self-join,
-    // ~34 wedges per edge — 41M rows at sf0.1), shed non-closing ones
-    // through a driver-built bloom over the edge set, then equi-joined
-    // the survivors back against the edges: one wedge exchange, one
-    // eager bloom-build pass, one close join, ~170 s of executor time
-    // and three eager actions cold. Counting per EDGE instead —
-    // Σ_{(u,v)∈E} |N⁺(u) ∩ N⁺(v)| over sorted out-neighbor arrays —
-    // needs one groupBy to build the adjacency arrays and two
-    // edge⋈adjacency equi-joins feeding the native merge-walk
-    // intersect kernel: wedges are never materialized, the bloom (and
-    // its driver round-trip) disappears, and the whole count is ONE
-    // action. Each triangle a→b→c (π-DAG) is counted exactly once, at
-    // its (a,b) edge, since c ∈ N⁺(a) ∩ N⁺(b) and neither other edge
-    // sees it: N⁺ lists of b and c cannot contain a (orientation), so
-    // the sum equals the wedge-close count row for row. At scale the
-    // π-oriented out-lists are O(√m) (the classic arboricity bound),
-    // so the collect_list arrays stay task-sized exactly where the
-    // old wedge expansion went quadratic.
-    // thunked: the bloom build is an eager driver action, and q86
-    // consumes only `e` — callers that never count triangles must not
-    // pay for materializing the oriented edges
-    val triangles = () => {
-      // populate deg's cache before the oriented branches' four join
-      // consumers race concurrent scans of it (one eager tiny action)
-      deg.count()
-      // oriented now has exactly ONE consumer (the adjacency build):
-      // the r17 rewrite below regenerates the edge rows by EXPLODING
-      // the adjacency arrays instead of re-joining oriented against
-      // adj on src — (src, N⁺(src)) exploded over N⁺(src) is row for
-      // row the oriented edge list with na already attached. That
-      // deletes the first adjacency join, oriented's hash(src)
-      // exchange (1.2M rows), and — because adj is now persisted and
-      // populated once — the SECOND full adj derivation the old
-      // two-join shape paid (both join sides rebuilt the
-      // scan→orient→collect_list chain from e; two identical ~14 s
-      // partial-aggregate stages in the r17 cold profile).
-      val adj = orientedFrame().groupBy(col("src"))
-        .agg(sort_array(collect_list(col("dst"))).as("ns"))
-        .persist()
-      adj.count()
-      def intersectCount(a: Column, b: Column): Column =
-        org.apache.spark.sql.GraftSql.column(
-          graft.functions.SortedIntersectCount(
-            org.apache.spark.sql.GraftSql.expression(a),
-            org.apache.spark.sql.GraftSql.expression(b)))
-      // src is dropped before the exchange: only (na, dst) must ride
-      // the shuffle (guide §2.3, project before the exchange). The
-      // nb side is hinted SHUFFLE_HASH: a sort-merge join would SORT
-      // the array-laden edge rows (the one big exchange this count
-      // has left) just to discard the order inside the sum — the
-      // hash build side is the |V|-row adjacency slice per partition,
-      // uniform under vertex hashing, and AQE skew handling still
-      // applies. Results are strategy-invariant (oracle-checked).
-      adj.select(col("ns").as("na"), explode(col("ns")).as("dst"))
-        .join(adj.select(col("src").as("dst"), col("ns").as("nb"))
-          .hint("SHUFFLE_HASH"), Seq("dst"))
-        .agg(coalesce(sum(intersectCount(col("na"), col("nb"))), lit(0L))
-          .as("n_triangles"))
-    }
-    (deg, triangles)
-  }
+  /** The part co-occurrence graph: distinct a<b part pairs sharing an
+    * order ([[Graph.coOccurrence]]), read by q78, q84, q86 and q131. */
+  private def partGraph(s: SparkSession, dir: String): DataFrame =
+    Graph.coOccurrence(
+      t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
+      "l_orderkey", "l_partkey")
 
   /** Triangle count on the co-purchase graph (parts sharing an order),
-    * via DEGREE ORIENTATION: direct every edge toward its higher-
-    * (degree, id) endpoint, enumerate wedges only at each triangle's
-    * π-minimal vertex, close them against the oriented edge set. Out-
-    * degrees are O(√m) under this orientation, so the wedge join is
-    * bounded — the standard trick that keeps triangle counting feasible
-    * when a hub vertex would make naive wedge enumeration quadratic.
-    * The oracle counts the same triangles with the naive a<b<c SQL. */
+    * via DEGREE ORIENTATION ([[Graph.triangles]]): every edge points
+    * toward its higher-(degree, id) endpoint, and each triangle is
+    * counted once at its π-minimal edge. Out-degrees are O(√m) under
+    * this orientation — the standard trick that keeps triangle counting
+    * feasible when a hub vertex would make naive wedge enumeration
+    * quadratic. The oracle counts the same triangles with the naive
+    * a<b<c SQL. */
   def q78Triangles(s: SparkSession, dir: String): DataFrame = {
-    val (e, _, triangles) = partGraph(s, dir)
-    e.agg(count(lit(1)).as("n_edges")).crossJoin(broadcast(triangles()))
+    val e = partGraph(s, dir)
+    e.agg(count(lit(1)).as("n_edges"))
+      .crossJoin(broadcast(Graph.triangles(e, Graph.degrees(e))))
   }
 
   /** Global clustering coefficient = 3·triangles / wedges, where the
@@ -1141,12 +1027,13 @@ object Queries {
     * degree-oriented plan). The coefficient division is a single
     * double op, f6-floored for the portable 6-dp contract. */
   def q84ClusteringCoefficient(s: SparkSession, dir: String): DataFrame = {
-    val (_, deg, triangles) = partGraph(s, dir)
+    val e = partGraph(s, dir)
+    val deg = Graph.degrees(e)
     // per-row C(d,2) is an exact long (d·(d−1) is even); the SUM is
     // then an exact long add — order-independent, unlike a double sum
     val wedges = deg.agg(
       sum((col("d") * (col("d") - 1) / lit(2)).cast("long")).as("n_wedges"))
-    wedges.crossJoin(broadcast(triangles()))
+    wedges.crossJoin(broadcast(Graph.triangles(e, deg)))
       .select(col("n_wedges"), col("n_triangles"),
         f6(lit(3.0) * col("n_triangles") / col("n_wedges"))
           .as("global_coeff"))
@@ -1158,7 +1045,7 @@ object Queries {
     * argmaxes, so DuckDB replays the identical rounds as chained CTEs
     * and the full 2000-row community assignment hash-matches. */
   def q86LabelPropagation(s: SparkSession, dir: String): DataFrame = {
-    val (e, _, _) = partGraph(s, dir)
+    val e = partGraph(s, dir)
     Graph.labelPropagation(
       e.select(col("a").as("src"), col("b").as("dst")), iters = 3,
       // e is distinct a<b pairs: doubling cannot duplicate — skips the
@@ -1183,7 +1070,7 @@ object Queries {
       .select(explode(TextAnalysis.tokens(col("text"))).as("term"))
       .persist() // scanned by the sketch, the N count, and the recount
     // count FIRST (r16): populates the persisted cache before the
-    // sketch and recount consumers race the empty cache (see partGraph)
+    // sketch and recount consumers race the empty cache
     val nTotal = toks.count()
     val sketch = Sketches.countMinSketch(toks, "term", depth, width)
     val slack = 3L * nTotal / width
@@ -1289,8 +1176,8 @@ object Queries {
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("ts"))
       .filter(size(col("ts")) >= 2)
       .persist()
-    // populate the cache before its consumers race it (r16 — see
-    // partGraph's e.count() rationale)
+    // populate the cache before its consumers race it (r16: AQE
+    // launches every consumer exchange of the first action at once)
     docs.count()
     val bi = docs.select(col("doc_id"),
         explode(transform(slice(col("ts"), lit(1), size(col("ts")) - 1),
@@ -1535,10 +1422,10 @@ object Queries {
     * pair of corpus domains shares (the between-domain contamination
     * view of q94's repeated spans): spans → the DISTINCT source set
     * per span (bounded by |sources|, a safe collect_set) → sorted
-    * C(k,2) pair expansion (the partGraph trick — no span self-join,
-    * whose output would be quadratic in per-span source count) → one
-    * count per pair. Scale: the heavy shuffle is the span aggregate;
-    * everything after operates on ≤ |sources|-wide rows. */
+    * C(k,2) pair expansion (as in [[Graph.coOccurrence]] — no span
+    * self-join, whose output would be quadratic in per-span source
+    * count) → one count per pair. Scale: the heavy shuffle is the span
+    * aggregate; everything after operates on ≤ |sources|-wide rows. */
   def q99SourceOverlap(s: SparkSession, dir: String): DataFrame = {
     val sp = t(s, dir, "documents")
       .select(col("source"),
@@ -2310,10 +2197,8 @@ object Queries {
     * map-side-combinable aggregate, one shuffle of 3 rows.
     */
   def q118CorrMoments(s: SparkSession, dir: String): DataFrame = {
-    val ix = (col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
-    val iy = (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
+    val ix = cents(col("l_quantity"))
+    val iy = cents(col("l_extendedprice"))
     val m = t(s, dir, "lineitem")
       .select(col("l_returnflag"), ix.as("ix"), iy.as("iy"))
       .groupBy("l_returnflag")
@@ -2388,8 +2273,7 @@ object Queries {
     val daily = t(s, dir, "orders")
       .groupBy(col("o_orderpriority").as("prio"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+      .agg(sum(cents(col("o_totalprice"))).as("x"))
     // typed per-group fold (KeyValueGroupedDataset): O(days) per group
     // where the aggregate() HOF's copy-on-append accumulator was
     // O(days²) — 2.6s → ~0.5s at sf0.1. Scala Long '/' truncates toward
@@ -2584,8 +2468,7 @@ object Queries {
       .join(t(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_regionkey").as("regionkey"),
         col("n_name").as("nation"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("cents"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
     val w = Window.partitionBy("regionkey")
     rev.withColumn("region_cents", sum(col("cents")).over(w))
       .select(col("regionkey"), col("nation"),
@@ -2628,7 +2511,7 @@ object Queries {
     * end, so the coefficient is engine-exact.
     */
   def q131Assortativity(s: SparkSession, dir: String): DataFrame = {
-    val (e, _, _) = partGraph(s, dir)
+    val e = partGraph(s, dir)
     val both = e.select(col("a").as("x"), col("b").as("y"))
       .unionByName(e.select(col("b").as("x"), col("a").as("y")))
     val deg = both.groupBy(col("x").as("v"))
@@ -2794,8 +2677,7 @@ object Queries {
   def q138WeightedMedian(s: SparkSession, dir: String): DataFrame = {
     val g = t(s, dir, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice").as("v"),
-        (col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("w"))
+        cents(col("l_quantity")).as("w"))
       .groupBy(col("l_returnflag"), col("v")).agg(sum(col("w")).as("w"))
     val w1 = Window.partitionBy("l_returnflag").orderBy("v")
     val tot = Window.partitionBy("l_returnflag")
@@ -2820,8 +2702,7 @@ object Queries {
       .groupBy(col("o_orderpriority").as("prio"),
         datediff(to_date(col("o_orderdate")), lit("1970-01-01"))
           .cast("long").as("x"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("y"))
+      .agg(sum(cents(col("o_totalprice"))).as("y"))
     val m = daily.groupBy("prio")
       .agg(count(lit(1)).as("n"),
         sum(col("x").cast(DecimalType(38, 0))).cast("double").as("sx"),
@@ -2918,8 +2799,7 @@ object Queries {
       .groupBy(col("o_custkey"))
       .agg(max(date_format(col("o_orderdate"), "yyyy-MM-dd")).as("last_od"),
         count(lit(1)).as("freq"),
-        sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long")).as("cents"))
+        sum(cents(col("o_totalprice"))).as("cents"))
     def q(d: DataFrame, c: Column, tile: String) = Ranking.globalNtile(
       d, Seq(c.desc, col("o_custkey").asc), 5, tile)
     val scored = // recent/frequent/high-spend = 1
@@ -3102,10 +2982,9 @@ object Queries {
     * values, so no cross-engine interpolation.
     */
   def q149Mad(s: SparkSession, dir: String): DataFrame = {
-    val cents = (col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
     val o = t(s, dir, "orders")
-      .select(col("o_orderpriority").as("prio"), cents.as("c"))
+      .select(col("o_orderpriority").as("prio"),
+        cents(col("o_totalprice")).as("c"))
     val med = o.groupBy("prio")
       .agg(expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY c)")
         .cast("long").as("m"))
@@ -3125,10 +3004,9 @@ object Queries {
     * bounds broadcast back; the clamped sum stays exact long cents.
     */
   def q150WinsorizedMean(s: SparkSession, dir: String): DataFrame = {
-    val cents = (col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
     val o = t(s, dir, "orders")
-      .select(col("o_orderpriority").as("prio"), cents.as("c"))
+      .select(col("o_orderpriority").as("prio"),
+        cents(col("o_totalprice")).as("c"))
     val bounds = o.groupBy("prio")
       .agg(expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY c)")
         .cast("long").as("lo"),
@@ -3216,10 +3094,10 @@ object Queries {
     val per = t(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(sum(when(col("ts") < cut,
-          (col("value").cast(DecimalType(18, 2)) * lit(100)).cast("long"))
+          cents(col("value")))
           .otherwise(lit(0L))).as("x"),
         sum(when(col("ts") >= cut,
-          (col("value").cast(DecimalType(18, 2)) * lit(100)).cast("long"))
+          cents(col("value")))
           .otherwise(lit(0L))).as("y"))
       .withColumn("arm",
         when(pmod(graft.functions.Hashing.md5Long(
@@ -3270,9 +3148,7 @@ object Queries {
     val l = t(s, dir, "lineitem")
       .filter(date_format(col("l_shipdate"), "yyyy-MM-dd") > cut)
       .select(col("l_orderkey"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) *
-          (lit(1).cast(DecimalType(18, 2)) -
-            col("l_discount").cast(DecimalType(18, 2)))).as("rev"))
+        netPrice.as("rev"))
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_od"), col("o_orderpriority"))
@@ -3289,9 +3165,7 @@ object Queries {
   def q156TpchQ10(s: SparkSession, dir: String): DataFrame = {
     val l = t(s, dir, "lineitem").filter(col("l_returnflag") === "R")
       .select(col("l_orderkey"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) *
-          (lit(1).cast(DecimalType(18, 2)) -
-            col("l_discount").cast(DecimalType(18, 2)))).as("rev"))
+        netPrice.as("rev"))
     val o = t(s, dir, "orders")
       .filter(date_format(col("o_orderdate"), "yyyy-MM-dd") >= "1997-01-01"
         && date_format(col("o_orderdate"), "yyyy-MM-dd") < "1997-04-01")
@@ -3347,8 +3221,7 @@ object Queries {
       .filter(year(col("o_orderdate")) === 1997)
       .groupBy(date_format(date_trunc("week", col("o_orderdate")),
         "yyyy-MM-dd").as("wk"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("cents"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
     val w = Window.orderBy("wk")
     weekly.withColumn("prev", lag(col("cents"), 1).over(w))
       .select(col("wk"),
@@ -3453,8 +3326,7 @@ object Queries {
       val per = t(s, dir, "orders")
         .filter(year(col("o_orderdate")) === yr)
         .groupBy(col("o_custkey"))
-        .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long")).as("cents"))
+        .agg(sum(cents(col("o_totalprice"))).as("cents"))
       // exact ntile(10) semantics without the one-task window (q142)
       Ranking.globalNtile(per,
           Seq(col("cents").desc, col("o_custkey").asc), 10, "d")
@@ -3497,6 +3369,28 @@ object Queries {
       .orderBy("relation", "direction")
   }
 
+  /** Every lineitem of an order placed in 1995-Q1, as `o_custkey` plus
+    * the given lineitem columns: the customer↔part purchase graph the
+    * bounded graph queries (q165, q179, q181, q183, q264, q288) run on. */
+  private def purchases1995Q1(s: SparkSession, dir: String,
+      lineitemCols: String*): DataFrame =
+    t(s, dir, "orders")
+      .filter(col("o_orderdate") >= lit("1995-01-01") &&
+        col("o_orderdate") < lit("1995-04-01"))
+      .select(col("o_orderkey"), col("o_custkey"))
+      .join(t(s, dir, "lineitem").select(
+          ("l_orderkey" +: lineitemCols).map(col): _*),
+        col("o_orderkey") === col("l_orderkey"))
+
+  /** The distinct bipartite customer→part edges of [[purchases1995Q1]]
+    * (`id_a` = customer, `id_b` = part key + 3,000,000, so the two key
+    * spaces are disjoint). */
+  private def custPartEdges(s: SparkSession, dir: String): DataFrame =
+    purchases1995Q1(s, dir, "l_partkey")
+      .select(col("o_custkey").as("id_a"),
+        (col("l_partkey") + lit(3000000L)).as("id_b"))
+      .distinct()
+
   /** Bounded-round k-core peeling over the 1995Q1 customer↔part
     * purchase graph, ORACLE-PROVEN like q82/q86: 6 fixed peel rounds
     * (≥ the graph's peel depth, so this IS the 2-core fixpoint here —
@@ -3507,16 +3401,7 @@ object Queries {
     * genuine cascade rounds (2794→…→2542 edges). Output: surviving
     * vertices with their final in-core degree. */
   def q165KCoreBounded(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") >= lit("1995-01-01") &&
-        col("o_orderdate") < lit("1995-04-01"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val e = o.join(t(s, dir, "lineitem").select(col("l_orderkey"),
-          col("l_partkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("id_a"),
-        (col("l_partkey") + lit(3000000L)).as("id_b"))
-      .distinct()
+    val e = custPartEdges(s, dir)
     // e is distinct and bipartite (disjoint key spaces): the doubled
     // union cannot contain duplicates
     Graph.kCoreRounds(e, k = 2, rounds = 6, assumeDistinct = true)
@@ -3639,8 +3524,7 @@ object Queries {
   def q170TpchQ22(s: SparkSession, dir: String): DataFrame = {
     val c = t(s, dir, "customer").select(col("c_custkey"),
       col("c_nationkey"),
-      (col("c_acctbal").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("cents"))
+      cents(col("c_acctbal")).as("cents"))
     val pos = c.filter(col("cents") > 0)
       .agg(sum(col("cents")).as("sum_cents"), count(lit(1)).as("n_pos"))
     val o = t(s, dir, "orders")
@@ -3653,6 +3537,22 @@ object Queries {
       .groupBy((col("c_nationkey") % 5).cast("string").as("cntrycode"))
       .agg(count(lit(1)).as("numcust"), sum(col("cents")).as("totacctbal_cents"))
       .orderBy("cntrycode")
+  }
+
+  /** Each document joined with `hash` of its synthetic PNG image. Seven
+    * consecutive doc ids share one image (`gid`), so the codec
+    * round-trip and the hash run once per distinct image and the
+    * hashes broadcast back to the documents: the content-keyed decode
+    * dedup a real pipeline runs (q171, q255, q270). */
+  private def imageHashes(s: SparkSession, dir: String)(
+      hash: DataFrame => DataFrame): DataFrame = {
+    val gen = udf((id: Long) => Multimodal.generatePng(id))
+    val gids = t(s, dir, "documents")
+      .select((col("doc_id") - col("doc_id") % 7).as("gid")).distinct()
+      .withColumn("payload", gen(col("gid")))
+    t(s, dir, "documents")
+      .select(col("doc_id"), (col("doc_id") - col("doc_id") % 7).as("gid"))
+      .join(broadcast(hash(gids)), Seq("gid"))
   }
 
   /** Perceptual image hashing, ORACLE-PROVEN through a REAL codec: each
@@ -3668,17 +3568,8 @@ object Queries {
     * `Multimodal.imageNearDupPairs`) is spec-proven on perturbed
     * images. */
   def q171ImageAHash(s: SparkSession, dir: String): DataFrame = {
-    val gen = udf((id: Long) => Multimodal.generatePng(id))
-    // codec round-trip once per DISTINCT image, hashes broadcast back
-    // (the q255 content-keyed decode dedup)
-    val gids = t(s, dir, "documents")
-      .select((col("doc_id") - col("doc_id") % 7).as("gid")).distinct()
-      .withColumn("payload", gen(col("gid")))
-    val hashed = Multimodal.withAHash(gids, "payload")
-      .select(col("gid"), col("ahash_hi"), col("ahash_lo"))
-    val d = t(s, dir, "documents")
-      .select(col("doc_id"), (col("doc_id") - col("doc_id") % 7).as("gid"))
-      .join(broadcast(hashed), Seq("gid"))
+    val d = imageHashes(s, dir)(Multimodal.withAHash(_, "payload")
+      .select(col("gid"), col("ahash_hi"), col("ahash_lo")))
     d.groupBy(col("ahash_hi"), col("ahash_lo"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"),
         max(col("doc_id")).as("max_doc"))
@@ -3698,8 +3589,7 @@ object Queries {
     val o = t(s, dir, "orders").select(col("o_orderkey"),
       col("o_orderpriority"))
     val l = t(s, dir, "lineitem").select(col("l_orderkey"),
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("cents"), col("l_linenumber"))
+      cents(col("l_extendedprice")).as("cents"), col("l_linenumber"))
     val (oBase, oDelta) = (o.filter(col("o_orderkey") % 4 =!= 0),
       o.filter(col("o_orderkey") % 4 === 0))
     val (lBase, lDelta) = (l.filter(col("l_linenumber") <= 3),
@@ -3724,11 +3614,9 @@ object Queries {
     * flagged. One two-level aggregate — the shape that holds at
     * 100 TB. */
   def q173LDiversity(s: SparkSession, dir: String): DataFrame = {
-    val cents = (col("c_acctbal").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
     val d = t(s, dir, "customer")
       .select(col("c_mktsegment"), col("c_nationkey"),
-        floor(cents / lit(100000)).as("bal_band"))
+        floor(cents(col("c_acctbal")) / lit(100000)).as("bal_band"))
     d.groupBy(col("c_mktsegment"), col("c_nationkey"))
       .agg(count(lit(1)).as("n"),
         countDistinct(col("bal_band")).as("l"))
@@ -3749,9 +3637,7 @@ object Queries {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"),
       col("l_suppkey"),
       year(col("l_shipdate")).cast("long").as("l_year"),
-      (col("l_extendedprice").cast(DecimalType(18, 2)) *
-        (lit(1).cast(DecimalType(18, 2)) -
-          col("l_discount").cast(DecimalType(18, 2)))).as("rev"))
+      netPrice.as("rev"))
     val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
     val c = t(s, dir, "customer").select(col("c_custkey"),
       col("c_nationkey"))
@@ -3783,10 +3669,7 @@ object Queries {
       .filter(col("l_shipdate") >= lit("1996-03-01") &&
         col("l_shipdate") < lit("1996-04-01"))
       .select(col("l_partkey"),
-        floor((col("l_extendedprice").cast(DecimalType(18, 2)) *
-          (lit(1).cast(DecimalType(18, 2)) -
-            col("l_discount").cast(DecimalType(18, 2)))) * lit(100))
-          .cast("long").as("cents"))
+        netCents.as("cents"))
     val p = t(s, dir, "part").select(col("p_partkey"), col("p_type"))
     li.join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .agg(
@@ -3808,10 +3691,7 @@ object Queries {
   def q176TpchQ19(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_partkey"),
       col("l_quantity"),
-      floor((col("l_extendedprice").cast(DecimalType(18, 2)) *
-        (lit(1).cast(DecimalType(18, 2)) -
-          col("l_discount").cast(DecimalType(18, 2)))) * lit(100))
-        .cast("long").as("cents"))
+      netCents.as("cents"))
     val p = t(s, dir, "part").select(col("p_partkey"), col("p_brand"),
       col("p_size"))
     val cond =
@@ -3835,10 +3715,7 @@ object Queries {
   def q177TpchQ8(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem").select(col("l_orderkey"),
       col("l_suppkey"),
-      floor((col("l_extendedprice").cast(DecimalType(18, 2)) *
-        (lit(1).cast(DecimalType(18, 2)) -
-          col("l_discount").cast(DecimalType(18, 2)))) * lit(100))
-        .cast("long").as("cents"))
+      netCents.as("cents"))
     val o = t(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
       year(col("o_orderdate")).cast("long").as("o_year"))
     val c = t(s, dir, "customer").select(col("c_custkey"),
@@ -3896,16 +3773,7 @@ object Queries {
     * emitted at dist 0 by both engines; nodes beyond 4 hops are absent
     * rows, not ∞. */
   def q179BfsHops(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") >= lit("1995-01-01") &&
-        col("o_orderdate") < lit("1995-04-01"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val e = o.join(t(s, dir, "lineitem").select(col("l_orderkey"),
-          col("l_partkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("id_a"),
-        (col("l_partkey") + lit(3000000L)).as("id_b"))
-      .distinct()
+    val e = custPartEdges(s, dir)
     val seeds = t(s, dir, "customer")
       .filter(col("c_nationkey") === 3)
       .select(col("c_custkey").as("id"))
@@ -3946,13 +3814,7 @@ object Queries {
     * hub cap never fires on the fixture (max part degree 7) but bounds
     * expansion at scale. */
   def q181LinkPredict(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") >= lit("1995-01-01") &&
-        col("o_orderdate") < lit("1995-04-01"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val inc = o.join(t(s, dir, "lineitem").select(col("l_orderkey"),
-          col("l_partkey")),
-        col("o_orderkey") === col("l_orderkey"))
+    val inc = purchases1995Q1(s, dir, "l_partkey")
       .select(col("o_custkey").as("node"), col("l_partkey").as("nbr"))
       .distinct()
     Graph.linkPredictRA(inc, degCap = 64, topK = 100)
@@ -3980,13 +3842,7 @@ object Queries {
     * may be cheaper), and the 4-round min-plus recurrence replays as
     * chained DuckDB CTEs. */
   def q183CheapestPath(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") >= lit("1995-01-01") &&
-        col("o_orderdate") < lit("1995-04-01"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val e = o.join(t(s, dir, "lineitem").select(col("l_orderkey"),
-          col("l_partkey"), col("l_quantity")),
-        col("o_orderkey") === col("l_orderkey"))
+    val e = purchases1995Q1(s, dir, "l_partkey", "l_quantity")
       .groupBy(col("o_custkey").as("id_a"),
         (col("l_partkey") + lit(3000000L)).as("id_b"))
       .agg(min(col("l_quantity").cast("long")).as("w"))
@@ -4092,10 +3948,7 @@ object Queries {
       .filter(col("l_shipdate") >= lit("1996-01-01") &&
         col("l_shipdate") < lit("1996-04-01"))
       .groupBy(col("l_suppkey"))
-      .agg(sum(floor((col("l_extendedprice").cast(DecimalType(18, 2)) *
-          (lit(1).cast(DecimalType(18, 2)) -
-            col("l_discount").cast(DecimalType(18, 2)))) * lit(100))
-        .cast("long")).as("total_rev_cents"))
+      .agg(sum(netCents).as("total_rev_cents"))
     val mx = rev.agg(max(col("total_rev_cents")).as("mx"))
     val winners = rev.join(broadcast(mx),
       col("total_rev_cents") === col("mx"))
@@ -4122,8 +3975,7 @@ object Queries {
     val daily = t(s, dir, "orders")
       .groupBy(col("o_orderpriority").as("prio"),
         to_date(col("o_orderdate")).as("d"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("cents"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
     val kept = daily.filter(col("cents") % 3 =!= 0)
     val scaffold = kept.groupBy(col("prio"))
       .agg(min(col("d")).as("d0"), max(col("d")).as("d1"))
@@ -4225,8 +4077,7 @@ object Queries {
   private def pseudoPartsupp(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .select(col("l_partkey"), col("l_suppkey"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("ec"),
+        cents(col("l_extendedprice")).as("ec"),
         col("l_quantity").cast("long").as("q"))
       .groupBy(col("l_partkey"), col("l_suppkey"))
       .agg(min(col("ec")).as("ps_cost_cents"), sum(col("q")).as("ps_qty"))
@@ -4244,8 +4095,7 @@ object Queries {
     val ps = pseudoPartsupp(s, dir)
     val sup = t(s, dir, "supplier").select(col("s_suppkey"), col("s_name"),
       col("s_nationkey"),
-      (col("s_acctbal").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("bal_cents"))
+      cents(col("s_acctbal")).as("bal_cents"))
     val nEur = t(s, dir, "nation")
       .join(t(s, dir, "region").filter(col("r_name") === "EUROPE"),
         col("n_regionkey") === col("r_regionkey"))
@@ -4278,8 +4128,7 @@ object Queries {
   def q192TpchQ9(s: SparkSession, dir: String): DataFrame = {
     val p = t(s, dir, "part").filter(col("p_name").like("%gear%"))
       .select(col("p_partkey"),
-        (col("p_retailprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("rc"))
+        cents(col("p_retailprice")).as("rc"))
     val supN = t(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
       .join(broadcast(t(s, dir, "nation")
           .select(col("n_nationkey"), col("n_name"))),
@@ -4287,10 +4136,8 @@ object Queries {
       .select(col("s_suppkey"), col("n_name"))
     val li = t(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"),
       col("l_suppkey"),
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("ec"),
-      (col("l_discount").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("dpct"),
+      cents(col("l_extendedprice")).as("ec"),
+      cents(col("l_discount")).as("dpct"),
       col("l_quantity").cast("long").as("q"))
     val o = t(s, dir, "orders").select(col("o_orderkey"),
       year(col("o_orderdate")).cast("long").as("o_year"))
@@ -4391,8 +4238,7 @@ object Queries {
     val li = t(s, dir, "lineitem")
       .join(broadcast(p23), col("l_partkey") === col("p_partkey"), "left_semi")
       .select(col("l_partkey"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("ec"),
+        cents(col("l_extendedprice")).as("ec"),
         col("l_quantity").cast("long").as("q"))
     val perPart = li.groupBy(col("l_partkey").as("pk"))
       .agg(sum(col("q")).as("sq"), count(lit(1)).as("nq"))
@@ -4779,8 +4625,7 @@ object Queries {
     val daily = t(s, dir, "orders")
       .filter(year(col("o_orderdate")) === 1997)
       .groupBy(col("o_orderdate").as("d"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("cents"))
+      .agg(sum(cents(col("o_totalprice"))).as("cents"))
     val tot = daily.agg(count(lit(1)).as("nd"), sum(col("cents")).as("t"))
     val w = Window.orderBy("d")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4797,6 +4642,36 @@ object Queries {
       .orderBy("day")
   }
 
+  /** Each event as a score `c` (its value in cents) and a 0/1 label `y`
+    * (purchase or not): the frame the calibration and ranking-metric
+    * queries (q206, q210, q212, q215, q226, q228) score. */
+  private def scoredEvents(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events")
+      .select(cents(col("value")).as("c"),
+        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
+
+  /** [[scoredEvents]] with the score range (`lo`, `hi`) and the row's
+    * equi-width `bin` out of `nBins`, in exact integer arithmetic. */
+  private def scoreBins(s: SparkSession, dir: String, nBins: Int)
+      : DataFrame = {
+    val ev = scoredEvents(s, dir)
+    val bounds = ev.agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
+    ev.crossJoin(broadcast(bounds))
+      .withColumn("bin", expr(s"(c - lo) * $nBins DIV (hi - lo + 1)"))
+  }
+
+  /** Per-bin counts `n`/`pos` with their running sums `nl`/`pl` over the
+    * bins in order and the totals `nt`/`pt` on every row. */
+  private def cumulativeBins(bins: DataFrame): DataFrame = {
+    val w = Window.orderBy(col("bin"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val cum = bins
+      .withColumn("nl", sum(col("n")).over(w))
+      .withColumn("pl", sum(col("pos")).over(w))
+    val tot = cum.agg(max(col("nl")).as("nt"), max(col("pl")).as("pt"))
+    cum.crossJoin(broadcast(tot))
+  }
+
   /** Isotonic calibration curve — fit a monotone success-rate curve
     * over integer score bins with the exact max-min characterization
     * of the L2 isotonic (PAVA) solution: fitted_j = max_{i≤j}
@@ -4810,14 +4685,7 @@ object Queries {
     * on the bin table — model-sized work, like the Lloyd step. */
   def q206IsotonicCalibration(s: SparkSession, dir: String): DataFrame = {
     val B = 20
-    val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    val bounds = ev.agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
-    val binned = ev.crossJoin(broadcast(bounds))
-      .withColumn("bin",
-        expr(s"(c - lo) * $B DIV (hi - lo + 1)"))
+    val binned = scoreBins(s, dir, B)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
     val wp = Window.orderBy("bin")
@@ -4907,8 +4775,7 @@ object Queries {
   def q209GiniRevenue(s: SparkSession, dir: String): DataFrame = {
     val rev = t(s, dir, "orders")
       .groupBy(col("o_custkey"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("r"))
+      .agg(sum(cents(col("o_totalprice"))).as("r"))
     val idx = Ranking.globalIndex(rev, Seq("r", "o_custkey"), "i0")
     val a = idx.agg(
       sum((lit(2L) * col("i0") + lit(1L)).cast(DecimalType(38, 0)) *
@@ -4931,13 +4798,7 @@ object Queries {
     * Long bound: pos·W ≤ 10¹²·5·10⁴ ≈ 5·10¹⁶ at 100 TB event counts. */
   def q210CalibrationEce(s: SparkSession, dir: String): DataFrame = {
     val B = 20
-    val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    val bounds = ev.agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
-    val binned = ev.crossJoin(broadcast(bounds))
-      .withColumn("bin", expr(s"(c - lo) * $B DIV (hi - lo + 1)"))
+    val binned = scoreBins(s, dir, B)
       .withColumn("w", col("hi") - col("lo") + lit(1L))
       .groupBy(col("bin"), col("w"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"),
@@ -4984,11 +4845,7 @@ object Queries {
     * DECIMAL(38,0) (HUGEINT in the oracle) up to ~10¹² events per
     * class, and AUC = 2U / (2·P·N) is ONE double division. */
   def q212RocAuc(s: SparkSession, dir: String): DataFrame = {
-    val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    val byScore = ev.groupBy(col("c"))
+    val byScore = scoredEvents(s, dir).groupBy(col("c"))
       .agg(sum(col("y")).as("pos"),
         (count(lit(1)) - sum(col("y"))).as("neg"))
     val cum = Ranking.globalCumSum(byScore, "c", Seq("neg"))
@@ -5019,10 +4876,8 @@ object Queries {
     * linear contrast costs nothing extra. */
   def q213Spearman(s: SparkSession, dir: String): DataFrame = {
     val li = t(s, dir, "lineitem")
-      .select((col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("x"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("y"))
+      .select(cents(col("l_quantity")).as("x"),
+        cents(col("l_extendedprice")).as("y"))
     def ranks2(src: String): DataFrame = {
       val d = li.groupBy(col(src)).agg(count(lit(1)).as("cnt"))
       Ranking.globalCumSum(d, src, Seq("cnt"))
@@ -5076,12 +4931,9 @@ object Queries {
   def q214OlsNormalEq(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val li = t(s, dir, "lineitem").select(
-      (col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("x1"),
-      (col("l_discount").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("x2"),
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("y"))
+      cents(col("l_quantity")).as("x1"),
+      cents(col("l_discount")).as("x2"),
+      cents(col("l_extendedprice")).as("y"))
     def sd(c: Column): Column = sum(c.cast(dec)).cast("double")
     val m = li.agg(count(lit(1)).as("n"),
       sd(col("x1")).as("s1"), sd(col("x2")).as("s2"), sd(col("y")).as("sy"),
@@ -5138,23 +4990,11 @@ object Queries {
   def q215GiniStump(s: SparkSession, dir: String): DataFrame = {
     val B = 20
     val dec = DecimalType(38, 0)
-    val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    val bounds = ev.agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
-    val bins = ev.crossJoin(broadcast(bounds))
-      .withColumn("bin", expr(s"(c - lo) * $B DIV (hi - lo + 1)"))
+    val bins = scoreBins(s, dir, B)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"),
         max(col("lo")).as("lo"), max(col("hi")).as("hi"))
-    val w = Window.orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = bins
-      .withColumn("nl", sum(col("n")).over(w))
-      .withColumn("pl", sum(col("pos")).over(w))
-    val tot = cum.agg(max(col("nl")).as("nt"), max(col("pl")).as("pt"))
-    val cand = cum.crossJoin(broadcast(tot))
+    val cand = cumulativeBins(bins)
       .filter(col("nl") < col("nt")) // inner boundaries only
       .select(
         expr(s"lo + (bin + 1) * (hi - lo + 1) DIV $B").as("thr"),
@@ -5234,11 +5074,9 @@ object Queries {
     * over ≤m rows — bounded by the attribute domain, not by data. */
   def q217TCloseness(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val cents = (col("c_acctbal").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
     val d = t(s, dir, "customer")
       .select(col("c_mktsegment"), col("c_nationkey"),
-        floor(cents / lit(100000)).as("band"))
+        floor(cents(col("c_acctbal")) / lit(100000)).as("band"))
     val globalBand = d.groupBy(col("band")).agg(count(lit(1)).as("cnt_g"))
     val scalars = globalBand.agg(sum(col("cnt_g")).as("n_all"),
       count(lit(1)).as("m"))
@@ -5530,6 +5368,42 @@ object Queries {
         f6(col("rrf_scaled").cast("double") / lit(1000000.0)).as("rrf"))
   }
 
+  /** One row per order of the survival queries (q224, q259, q260,
+    * q282): its lifetime `life` in days from order date to last ship
+    * date, `uncensored` (the last ship lies at least 7 days before the
+    * horizon, the latest ship date of all), the order count `n_users`,
+    * and the `extra` per-order aggregates. The per-order frame is stored:
+    * it feeds both the horizon aggregate and the lifetime projection,
+    * and unstored the orders⋈lineitem shuffle join would run once per
+    * consumer. */
+  private def orderLifetimes(s: SparkSession, dir: String, extra: Column*)
+      : DataFrame = {
+    val users = t(s, dir, "orders")
+      .join(t(s, dir, "lineitem"),
+        col("o_orderkey") === col("l_orderkey"))
+      .groupBy(col("o_orderkey"))
+      .agg(max(to_date(col("o_orderdate"))).as("first_d"),
+        max(to_date(col("l_shipdate"))).as("last_d") +: extra: _*)
+      .transform(Checkpoint(_))
+    val horizon = users.agg(max(col("last_d")).as("h"),
+      count(lit(1)).as("n_users"))
+    // users' columns after o_orderkey, first_d and last_d are `extra`
+    val extraCols = users.columns.drop(3).map(col)
+    users.crossJoin(broadcast(horizon))
+      .select(Seq(datediff(col("last_d"), col("first_d")).cast("long")
+          .as("life"),
+        (col("last_d") <= date_add(col("h"), -7)).as("uncensored"),
+        col("n_users")) ++ extraCols: _*)
+  }
+
+  /** [[orderLifetimes]] per lifetime day: `m` orders, `deaths`
+    * uncensored ones, and `n_users`. */
+  private def lifetimeDays(s: SparkSession, dir: String): DataFrame =
+    orderLifetimes(s, dir).groupBy(col("life"))
+      .agg(count(lit(1)).as("m"),
+        sum(when(col("uncensored"), 1L).otherwise(0L)).as("deaths"),
+        max(col("n_users")).as("n_users"))
+
   /** Nelson–Aalen cumulative hazard of order fulfillment (time from
     * order date to the LAST line shipment), with honest
     * right-censoring: orders whose final receipt lands in the last 7
@@ -5543,29 +5417,7 @@ object Queries {
     * are one orders⋈lineitem join + per-order max; everything after
     * runs on the distinct-day table. */
   def q224CumulativeHazard(s: SparkSession, dir: String): DataFrame = {
-    val users = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderkey"))
-      .agg(max(to_date(col("o_orderdate"))).as("first_d"),
-        max(to_date(col("l_shipdate"))).as("last_d"))
-      // lazy local checkpoint: `users` feeds the horizon aggregate AND
-      // the lives projection (and byDay feeds globalCumSum's three
-      // consumers) — without it the orders⋈lineitem shuffle join
-      // re-executes once per consumer and dominates the query. An
-      // |orders|-sized aggregate: exactly what a 100 TB run caches.
-      .transform(Checkpoint(_))
-    val horizon = users.agg(max(col("last_d")).as("h"),
-      count(lit(1)).as("n_users"))
-    val lives = users.crossJoin(broadcast(horizon))
-      .select(datediff(col("last_d"), col("first_d")).cast("long")
-        .as("life"),
-        (col("last_d") <= date_add(col("h"), -7)).as("uncensored"),
-        col("n_users"))
-    val byDay = lives.groupBy(col("life"))
-      .agg(count(lit(1)).as("m"),
-        sum(when(col("uncensored"), 1L).otherwise(0L)).as("deaths"),
-        max(col("n_users")).as("n_users"))
+    val byDay = lifetimeDays(s, dir)
     // BOUNDED-domain global windows (r17), not globalCumSum: byDay has
     // one row per distinct lifetime DAY — calendar-bounded (thousands
     // of rows at any corpus scale), the same boundedness argument as
@@ -5606,10 +5458,8 @@ object Queries {
   def q225KendallTau(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val cells = t(s, dir, "lineitem")
-      .select((col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("x"),
-        (col("l_discount").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("j"))
+      .select(cents(col("l_quantity")).as("x"),
+        cents(col("l_discount")).as("j"))
       .groupBy(col("x"), col("j")).agg(count(lit(1)).as("f"))
     val b = cells.select(col("x").as("bx"), col("j").as("bj"),
       col("f").as("bf"))
@@ -5650,23 +5500,11 @@ object Queries {
     * calibrates (ECE), this picks the operating point. */
   def q226PrCurve(s: SparkSession, dir: String): DataFrame = {
     val B = 20
-    val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    val bounds = ev.agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
-    val bins = ev.crossJoin(broadcast(bounds))
-      .withColumn("bin", expr(s"(c - lo) * $B DIV (hi - lo + 1)"))
+    val bins = scoreBins(s, dir, B)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"),
         max(col("lo")).as("lo"), max(col("hi")).as("hi"))
-    val w = Window.orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = bins
-      .withColumn("nl", sum(col("n")).over(w))
-      .withColumn("pl", sum(col("pos")).over(w))
-    val tot = cum.agg(max(col("nl")).as("nt"), max(col("pl")).as("pt"))
-    cum.crossJoin(broadcast(tot))
+    cumulativeBins(bins)
       .filter(col("nl") < col("nt"))
       .select(expr(s"lo + (bin + 1) * (hi - lo + 1) DIV $B").as("thr"),
         (col("pt") - col("pl")).as("tp"),
@@ -5694,8 +5532,7 @@ object Queries {
   def q227CohensD(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val m = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
+      .select(cents(col("value")).as("c"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
       .groupBy(col("y"))
       .agg(count(lit(1)).as("n"),
@@ -5728,22 +5565,10 @@ object Queries {
     * end. All curve math happens on the ≤20-row bin table. */
   def q228AveragePrecision(s: SparkSession, dir: String): DataFrame = {
     val B = 20
-    val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
-        when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
-    val bounds = ev.agg(min(col("c")).as("lo"), max(col("c")).as("hi"))
-    val bins = ev.crossJoin(broadcast(bounds))
-      .withColumn("bin", expr(s"(c - lo) * $B DIV (hi - lo + 1)"))
+    val bins = scoreBins(s, dir, B)
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("n"), sum(col("y")).as("pos"))
-    val w = Window.orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = bins
-      .withColumn("nl", sum(col("n")).over(w))
-      .withColumn("pl", sum(col("pos")).over(w))
-    val tot = cum.agg(max(col("nl")).as("nt"), max(col("pl")).as("pt"))
-    val terms = cum.crossJoin(broadcast(tot))
+    val terms = cumulativeBins(bins)
       .select(col("pos"),
         (col("pt") - (col("pl") - col("pos"))).as("tp"),
         (col("nt") - (col("nl") - col("n"))).as("pred"), col("pt"))
@@ -5771,8 +5596,7 @@ object Queries {
     val reps = 30
     val means = t(s, dir, "events")
       .filter(col("event_type") === "purchase")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"), col("event_id"))
+      .select(cents(col("value")).as("c"), col("event_id"))
       .select(col("c"), col("event_id"),
         explode(expr(s"sequence(1, $reps)")).as("rep"))
       .filter(pmod(graft.functions.Hashing.md5Long(
@@ -5811,10 +5635,8 @@ object Queries {
         to_date(col("l_shipdate")).as("d"), col("l_orderkey"),
         col("l_linenumber"),
         when(col("l_returnflag") === "R",
-          -(col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-            .cast("long"))
-          .otherwise((col("l_quantity").cast(DecimalType(18, 2)) *
-            lit(100)).cast("long")).as("x"))
+          -cents(col("l_quantity")))
+          .otherwise(cents(col("l_quantity"))).as("x"))
     val w = Window.partitionBy(col("l_partkey"))
       .orderBy(col("d"), col("l_orderkey"), col("l_linenumber"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -5874,8 +5696,7 @@ object Queries {
   def q232DecayedValue(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders")
       .select(col("o_custkey"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("cents"),
+        cents(col("o_totalprice")).as("cents"),
         to_date(col("o_orderdate")).as("d"))
     val horizon = o.agg(max(col("d")).as("h"))
     val aged = o.crossJoin(broadcast(horizon))
@@ -5939,8 +5760,7 @@ object Queries {
   def q234LorenzCurve(s: SparkSession, dir: String): DataFrame = {
     val rev = t(s, dir, "orders")
       .groupBy(col("o_custkey"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("r"))
+      .agg(sum(cents(col("o_totalprice"))).as("r"))
     val n = rev.agg(count(lit(1)).as("n_cust"))
     val dec = Ranking.globalIndex(rev, Seq("r", "o_custkey"))
       .crossJoin(broadcast(n))
@@ -5959,6 +5779,15 @@ object Queries {
       .orderBy(col("decile"))
   }
 
+  /** Each lineitem's price in cents, named `value`, and a 0/1 label
+    * `y` (returned or not): the two samples of the returned-vs-kept
+    * price tests (q235, q236, q241, q252, q256). */
+  private def returnedPrices(s: SparkSession, dir: String, value: String)
+      : DataFrame =
+    t(s, dir, "lineitem").select(
+      cents(col("l_extendedprice")).as(value),
+      when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+
   /** Two-sample Kolmogorov–Smirnov: does the price distribution of
     * RETURNED line items differ from the rest? [[Stats.ksTwoSample]]
     * evaluates D = sup|F̂_A − F̂_B| exactly at every distinct pooled
@@ -5968,10 +5797,7 @@ object Queries {
     * tie-broken smallest-first by one max(struct) over exact ints, D
     * as ONE terminal double division. */
   def q235KsTest(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("cents"),
-      when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+    val li = returnedPrices(s, dir, "cents")
     Stats.ksTwoSample(li, col("cents"), col("y"))
       .select(col("n_a"), col("n_b"), col("v_at_max"),
         f6(col("ks_d")).as("ks_d"))
@@ -5986,10 +5812,7 @@ object Queries {
     * are correctly rounded under IEEE-754, so both hash identically
     * in DuckDB; ln/exp would not). */
   def q236MannWhitney(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("cents"),
-      when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+    val li = returnedPrices(s, dir, "cents")
     Stats.mannWhitneyU(li, col("cents"), col("y"))
       .select(col("n_a"), col("n_b"), f6(col("cles")).as("cles"),
         f6(col("z")).as("z"))
@@ -6012,6 +5835,15 @@ object Queries {
       .limit(20)
   }
 
+  /** Daily event revenue: one row per day `d` with its exact cents `x`
+    * and any `extra` aggregates. Not stored; [[dailyCents]] is the
+    * stored form for the queries that read it more than once. */
+  private def dailyRevenue(s: SparkSession, dir: String, extra: Column*)
+      : DataFrame =
+    t(s, dir, "events")
+      .groupBy(to_date(col("ts")).as("d"))
+      .agg(sum(cents(col("value"))).as("x"), extra: _*)
+
   /** Autocorrelation of daily event revenue at lags 1–7 — the
     * seasonality probe every time-series pipeline starts with. Exact
     * to the final division: with S = Σx and N days, the deviation is
@@ -6027,10 +5859,7 @@ object Queries {
     * revenue, all in DECIMAL(38,0). */
   private def acfMoments(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+    val daily = dailyRevenue(s, dir)
     val tot = daily.agg(count(lit(1)).as("n"),
       sum(col("x")).as("sx"))
     val w = Window.orderBy(col("d"))
@@ -6082,8 +5911,7 @@ object Queries {
       .join(t(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"))
       .join(t(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name"), col("s_suppkey"))
-      .agg(sum((col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("r"))
+      .agg(sum(cents(col("l_extendedprice"))).as("r"))
     rev.groupBy(col("r_name"))
       .agg(count(lit(1)).as("n_sup"),
         sum(col("r").cast(dec) * col("r").cast(dec)).as("num"),
@@ -6107,8 +5935,7 @@ object Queries {
   def q240KruskalWallis(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val ord = t(s, dir, "orders").select(
-      (col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("v"),
+      cents(col("o_totalprice")).as("v"),
       col("o_orderpriority").as("g"))
     val byGV = ord.groupBy(col("v"), col("g"))
       .agg(count(lit(1)).as("cnt"))
@@ -6159,10 +5986,7 @@ object Queries {
     * spread across the whole range that a single max gap understates. */
   def q241CramerVonMises(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val li = t(s, dir, "lineitem").select(
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("v"),
-      when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+    val li = returnedPrices(s, dir, "v")
     val byV = li.groupBy(col("v"))
       .agg(sum(col("y")).as("ca"),
         (count(lit(1)) - sum(col("y"))).as("cb"))
@@ -6192,8 +6016,7 @@ object Queries {
     val dec = DecimalType(38, 0)
     val ev = t(s, dir, "events")
       .filter(col("event_type").isin("purchase", "click"))
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
+      .select(cents(col("value")).as("c"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"))
     val m = ev.agg(
       sum(col("y")).as("n_a"),
@@ -6252,10 +6075,7 @@ object Queries {
     * reverse. Window over the post-aggregation daily frame only. */
   def q244CrossCorr(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"), count(lit(1)).as("y"))
+    val daily = dailyRevenue(s, dir, count(lit(1)).as("y"))
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
       sum(col("y")).as("sy"))
     val w = Window.orderBy(col("d"))
@@ -6345,10 +6165,7 @@ object Queries {
     * is engine-exact. MASE < 1 ⇒ the weekly pattern beats the naive
     * random walk. */
   def q246Mase(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+    val daily = dailyRevenue(s, dir)
     val w = Window.orderBy(col("d"))
     val lagged = daily
       .withColumn("x1", lag(col("x"), 1).over(w))
@@ -6405,8 +6222,7 @@ object Queries {
     * without a million-row result. */
   def q248LooEncoding(s: SparkSession, dir: String): DataFrame = {
     val o = t(s, dir, "orders").select(col("o_orderpriority").as("g"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("y"))
+      cents(col("o_totalprice")).as("y"))
     val st = o.groupBy(col("g"))
       .agg(sum(col("y")).as("sy"), count(lit(1)).as("n"))
     o.join(broadcast(st), Seq("g"))
@@ -6484,10 +6300,7 @@ object Queries {
     * order-independent (max, unlike sum, is safe to take over
     * distributed doubles). */
   def q251MaxDrawdown(s: SparkSession, dir: String): DataFrame = {
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+    val daily = dailyRevenue(s, dir)
     val w = Window.orderBy(col("d"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = daily.select(col("d"), sum(col("x")).over(w).as("cum"))
@@ -6507,10 +6320,7 @@ object Queries {
     * must equal the standalone queries' by construction (identical
     * arithmetic; the oracle is the three CTE pipelines merged). */
   def q252TwoSampleSummary(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("cents"),
-      when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+    val li = returnedPrices(s, dir, "cents")
     Stats.twoSampleSummary(li, col("cents"), col("y"))
       .select(col("n_a"), col("n_b"), col("v_at_max"),
         f6(col("ks_d")).as("ks_d"), f6(col("cles")).as("cles"),
@@ -6528,10 +6338,7 @@ object Queries {
     * significance exponent term 6K²/(N³+N²) as one terminal double. */
   def q253Pettitt(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+    val daily = dailyRevenue(s, dir)
     // doubled midrank of each day's value within the daily frame:
     // 2r = 2·below + cnt + 1 from per-value counts (exact under ties)
     val byV = daily.groupBy(col("x")).agg(count(lit(1)).as("cnt"))
@@ -6575,10 +6382,7 @@ object Queries {
     * means the weekly profile explains the variance; → 0 means none. */
   def q254DowSeasonality(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+    val daily = dailyRevenue(s, dir)
       .select(col("x"), dayofweek(col("d")).cast("long").as("dow"))
     val tot = daily.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
       sum(col("x").cast(dec) * col("x").cast(dec)).as("sxx"))
@@ -6615,19 +6419,8 @@ object Queries {
     * channels (PNG lossless ⇒ decode-then-hash ≡ formula-then-hash
     * bit-for-bit). Groups collapse to exact-dup clusters of 7. */
   def q255ImageDHash(s: SparkSession, dir: String): DataFrame = {
-    val gen = udf((id: Long) => Multimodal.generatePng(id))
-    // encode+decode once per DISTINCT image (gid), not per doc — the
-    // hash of an identical payload is identical, so the 7-member
-    // groups pay one codec round-trip and the hashes broadcast back
-    // (the content-keyed decode dedup a real pipeline runs)
-    val gids = t(s, dir, "documents")
-      .select((col("doc_id") - col("doc_id") % 7).as("gid")).distinct()
-      .withColumn("payload", gen(col("gid")))
-    val hashed = Multimodal.withDHash(gids, "payload")
-      .select(col("gid"), col("dhash"))
-    t(s, dir, "documents")
-      .select(col("doc_id"), (col("doc_id") - col("doc_id") % 7).as("gid"))
-      .join(broadcast(hashed), Seq("gid"))
+    imageHashes(s, dir)(Multimodal.withDHash(_, "payload")
+        .select(col("gid"), col("dhash")))
       .groupBy(col("dhash"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"),
         max(col("doc_id")).as("max_doc"))
@@ -6642,10 +6435,7 @@ object Queries {
     * conditional MINs in ONE aggregate pass over the shared CDF, then
     * unpivoted to (decile, v_returned, v_kept, gap_cents) rows. */
   def q256QqDeciles(s: SparkSession, dir: String): DataFrame = {
-    val li = t(s, dir, "lineitem").select(
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("v"),
-      when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
+    val li = returnedPrices(s, dir, "v")
     val byV = li.groupBy(col("v"))
       .agg(sum(col("y")).as("ca"),
         (count(lit(1)) - sum(col("y"))).as("cb"))
@@ -6712,8 +6502,7 @@ object Queries {
   def q258EffectiveSampleSize(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val w = t(s, dir, "orders")
-      .select((col("o_totalprice").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("w"))
+      .select(cents(col("o_totalprice")).as("w"))
     w.agg(count(lit(1)).as("n"),
       sum(col("w").cast(dec)).as("sw"),
       sum(col("w").cast(dec) * col("w").cast(dec)).as("sww"))
@@ -6741,29 +6530,7 @@ object Queries {
     * init-vs-first-element fold shapes equal). Data passes: the q224
     * join/groupBy only. */
   def q259KaplanMeier(s: SparkSession, dir: String): DataFrame = {
-    val users = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderkey"))
-      .agg(max(to_date(col("o_orderdate"))).as("first_d"),
-        max(to_date(col("l_shipdate"))).as("last_d"))
-      // lazy local checkpoint: `users` feeds the horizon aggregate AND
-      // the lives projection (and byDay feeds globalCumSum's three
-      // consumers) — without it the orders⋈lineitem shuffle join
-      // re-executes once per consumer and dominates the query. An
-      // |orders|-sized aggregate: exactly what a 100 TB run caches.
-      .transform(Checkpoint(_))
-    val horizon = users.agg(max(col("last_d")).as("h"),
-      count(lit(1)).as("n_users"))
-    val lives = users.crossJoin(broadcast(horizon))
-      .select(datediff(col("last_d"), col("first_d")).cast("long")
-        .as("life"),
-        (col("last_d") <= date_add(col("h"), -7)).as("uncensored"),
-        col("n_users"))
-    val byDay = lives.groupBy(col("life"))
-      .agg(count(lit(1)).as("m"),
-        sum(when(col("uncensored"), 1L).otherwise(0L)).as("deaths"),
-        max(col("n_users")).as("n_users"))
+    val byDay = lifetimeDays(s, dir)
     val ev = Ranking.globalCumSum(byDay, "life", Seq("m"))
       .select(col("life"),
         (col("n_users") - (col("cum_m") - col("m"))).as("n_risk"),
@@ -6799,22 +6566,10 @@ object Queries {
     * double expression. Per-group at-risk counts ride the SAME
     * range-bucketed prefix-sum pass (4 weight columns, one shuffle). */
   def q260LogRank(s: SparkSession, dir: String): DataFrame = {
-    val users = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderkey"))
-      .agg(max(to_date(col("o_orderdate"))).as("first_d"),
-        max(to_date(col("l_shipdate"))).as("last_d"),
+    val byDay = orderLifetimes(s, dir,
         max(when(col("o_orderpriority") === "1-URGENT", 1L)
           .otherwise(0L)).as("grp"))
-      .transform(Checkpoint(_)) // the q224/q282 multi-consumer reuse
-    val horizon = users.agg(max(col("last_d")).as("h"))
-    val lives = users.crossJoin(broadcast(horizon))
-      .select(datediff(col("last_d"), col("first_d")).cast("long")
-        .as("life"),
-        (col("last_d") <= date_add(col("h"), -7)).as("uncensored"),
-        col("grp"))
-    val byDay = lives.groupBy(col("life"))
+      .groupBy(col("life"))
       .agg(sum(col("grp")).as("ma"),
         (count(lit(1)) - sum(col("grp"))).as("mb"),
         sum(when(col("uncensored"), col("grp")).otherwise(0L)).as("da"),
@@ -6857,10 +6612,7 @@ object Queries {
     * and the continuity-corrected z as the one terminal double. */
   def q261MannKendall(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val daily = t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+    val daily = dailyRevenue(s, dir)
     val pairs = daily.as("a").join(daily.as("b"), col("a.d") < col("b.d"))
       .agg(sum(when(col("b.x") > col("a.x"), 1L)
         .when(col("b.x") < col("a.x"), -1L).otherwise(0L)).as("s_stat"))
@@ -6888,11 +6640,7 @@ object Queries {
     * per branch — the calendar-bounded frame is the thing to
     * materialize, the event scan is the thing to do once. */
   private def dailyCents(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "events")
-      .groupBy(to_date(col("ts")).as("d"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
-      .transform(Checkpoint(_))
+    dailyRevenue(s, dir).transform(Checkpoint(_))
 
   /** Theil–Sen robust trend slope of daily revenue — the median of all
     * pairwise slopes, the estimator OLS outliers can't drag. Slopes are
@@ -6920,8 +6668,7 @@ object Queries {
     * the discrete median reuses q262's collapsed-CDF element pick. */
   def q263HodgesLehmann(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
+      .select(cents(col("value")).as("c"),
         to_date(col("ts")).as("d"),
         pmod(graft.functions.Hashing.md5Long(
           col("event_id").cast("string")), lit(2)).as("arm"))
@@ -6949,13 +6696,7 @@ object Queries {
     * evidence), degrees counted over the SAME capped incidence so the
     * score is internally consistent; TakeOrderedAndProject top-k. */
   def q264NeighborhoodJaccard(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") >= lit("1995-01-01") &&
-        col("o_orderdate") < lit("1995-04-01"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val inc = o.join(t(s, dir, "lineitem").select(col("l_orderkey"),
-          col("l_partkey")),
-        col("o_orderkey") === col("l_orderkey"))
+    val inc = purchases1995Q1(s, dir, "l_partkey")
       .select(col("o_custkey").as("node"), col("l_partkey").as("nbr"))
       .distinct()
     val capped = inc.groupBy(col("nbr")).agg(count(lit(1)).as("dn"))
@@ -7057,8 +6798,7 @@ object Queries {
   def q267BrierScore(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
+      .select(cents(col("value")).as("c"),
         when(col("event_type") === "purchase", 1L).otherwise(0L).as("y"),
         pmod(graft.functions.Hashing.md5Long(
           col("event_id").cast("string")), lit(2)).as("arm"))
@@ -7165,17 +6905,8 @@ object Queries {
     * SAME basis constants — lossless PNG makes decode-then-transform
     * ≡ formula-then-transform bit-for-bit. */
   def q270ImagePHash(s: SparkSession, dir: String): DataFrame = {
-    val gen = udf((id: Long) => Multimodal.generatePng(id))
-    // codec round-trip once per DISTINCT image, hashes broadcast back
-    // (the q255 content-keyed decode dedup)
-    val gids = t(s, dir, "documents")
-      .select((col("doc_id") - col("doc_id") % 7).as("gid")).distinct()
-      .withColumn("payload", gen(col("gid")))
-    val hashed = Multimodal.withPHash(gids, "payload")
-      .select(col("gid"), col("phash_hi"), col("phash_lo"))
-    val d = t(s, dir, "documents")
-      .select(col("doc_id"), (col("doc_id") - col("doc_id") % 7).as("gid"))
-      .join(broadcast(hashed), Seq("gid"))
+    val d = imageHashes(s, dir)(Multimodal.withPHash(_, "payload")
+      .select(col("gid"), col("phash_hi"), col("phash_lo")))
     d.groupBy(col("phash_hi"), col("phash_lo"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc"),
         max(col("doc_id")).as("max_doc"))
@@ -7192,8 +6923,7 @@ object Queries {
   def q271HoltSmoothing(s: SparkSession, dir: String): DataFrame = {
     val daily = t(s, dir, "events")
       .groupBy(date_format(col("ts"), "yyyy-MM-dd").as("day"))
-      .agg(sum((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long")).as("x"))
+      .agg(sum(cents(col("value"))).as("x"))
     import s.implicits._
     daily.select(col("day"), col("x")).as[(String, Long)]
       .groupByKey(_ => 0)
@@ -7233,8 +6963,7 @@ object Queries {
     val orders = t(s, dir, "lineitem")
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("cx"),
-        sum((col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long")).as("cents"))
+        sum(cents(col("l_extendedprice"))).as("cents"))
     val cells = orders
       .groupBy(col("cx"), expr("cents div 2500000").as("cy"))
       .agg(count(lit(1)).as("n"))
@@ -7378,10 +7107,8 @@ object Queries {
   def q276SomersD(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val cells = t(s, dir, "lineitem")
-      .select((col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("x"),
-        (col("l_discount").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("j"))
+      .select(cents(col("l_quantity")).as("x"),
+        cents(col("l_discount")).as("j"))
       .groupBy(col("x"), col("j")).agg(count(lit(1)).as("f"))
     val b = cells.select(col("x").as("bx"), col("j").as("bj"),
       col("f").as("bf"))
@@ -7417,8 +7144,7 @@ object Queries {
     * can't. */
   def q277DiffInDiff(s: SparkSession, dir: String): DataFrame = {
     val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"),
+      .select(cents(col("value")).as("c"),
         pmod(graft.functions.Hashing.md5Long(
           col("user_id").cast("string")), lit(2)).as("arm"),
         when(to_date(col("ts")) < lit("2024-01-16"), 0L).otherwise(1L)
@@ -7560,12 +7286,9 @@ object Queries {
     * tree too. */
   def q281PartialCorr(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
-    val ix = (col("l_quantity").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
-    val iy = (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
-    val iz = (col("l_discount").cast(DecimalType(18, 2)) * lit(100))
-      .cast("long")
+    val ix = cents(col("l_quantity"))
+    val iy = cents(col("l_extendedprice"))
+    val iz = cents(col("l_discount"))
     val m = t(s, dir, "lineitem")
       .select(ix.as("x"), iy.as("y"), iz.as("z"))
       .agg(count(lit(1)).as("n"),
@@ -7603,29 +7326,7 @@ object Queries {
     * s_{i−1} for the first step is the empty-slice fold = 1. */
   def q282Rmst(s: SparkSession, dir: String): DataFrame = {
     val tau = 60L
-    val users = t(s, dir, "orders")
-      .join(t(s, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .groupBy(col("o_orderkey"))
-      .agg(max(to_date(col("o_orderdate"))).as("first_d"),
-        max(to_date(col("l_shipdate"))).as("last_d"))
-      // lazy local checkpoint: `users` feeds the horizon aggregate AND
-      // the lives projection (and byDay feeds globalCumSum's three
-      // consumers) — without it the orders⋈lineitem shuffle join
-      // re-executes once per consumer and dominates the query. An
-      // |orders|-sized aggregate: exactly what a 100 TB run caches.
-      .transform(Checkpoint(_))
-    val horizon = users.agg(max(col("last_d")).as("h"),
-      count(lit(1)).as("n_users"))
-    val lives = users.crossJoin(broadcast(horizon))
-      .select(datediff(col("last_d"), col("first_d")).cast("long")
-        .as("life"),
-        (col("last_d") <= date_add(col("h"), -7)).as("uncensored"),
-        col("n_users"))
-    val byDay = lives.groupBy(col("life"))
-      .agg(count(lit(1)).as("m"),
-        sum(when(col("uncensored"), 1L).otherwise(0L)).as("deaths"),
-        max(col("n_users")).as("n_users"))
+    val byDay = lifetimeDays(s, dir)
     val ev = Ranking.globalCumSum(byDay, "life", Seq("m"))
       .select(col("life"),
         (col("n_users") - (col("cum_m") - col("m"))).as("n_risk"),
@@ -7747,8 +7448,7 @@ object Queries {
   def q285Wasserstein(s: SparkSession, dir: String): DataFrame = {
     val dec = DecimalType(38, 0)
     val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("v"),
+      .select(cents(col("value")).as("v"),
         pmod(graft.functions.Hashing.md5Long(
           col("user_id").cast("string")), lit(2)).as("arm"))
     val byV = ev.groupBy(col("v"))
@@ -7811,8 +7511,7 @@ object Queries {
     val reps = 30
     val dec = DecimalType(38, 0)
     val ev = t(s, dir, "events")
-      .select((col("value").cast(DecimalType(18, 2)) * lit(100))
-        .cast("long").as("c"), col("event_id"),
+      .select(cents(col("value")).as("c"), col("event_id"),
         pmod(graft.functions.Hashing.md5Long(
           col("user_id").cast("string")), lit(2)).as("arm"))
     def diffOf(armCol: String): Column =
@@ -7853,16 +7552,7 @@ object Queries {
     * smallest nation-3 customer keys (deterministic; the 3-row
     * collect is model-sized). Oracle replays three q179 CTE chains. */
   def q288HarmonicCentrality(s: SparkSession, dir: String): DataFrame = {
-    val o = t(s, dir, "orders")
-      .filter(col("o_orderdate") >= lit("1995-01-01") &&
-        col("o_orderdate") < lit("1995-04-01"))
-      .select(col("o_orderkey"), col("o_custkey"))
-    val e = o.join(t(s, dir, "lineitem").select(col("l_orderkey"),
-          col("l_partkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("id_a"),
-        (col("l_partkey") + lit(3000000L)).as("id_b"))
-      .distinct()
+    val e = custPartEdges(s, dir)
     val seedIds = t(s, dir, "customer")
       .filter(col("c_nationkey") === 3)
       .select(col("c_custkey")).orderBy(col("c_custkey")).limit(3)
@@ -7948,8 +7638,7 @@ object Queries {
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .select(substring(col("o_orderpriority"), 1, 1).cast("long")
         .as("g"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("v"))
+        cents(col("l_extendedprice")).as("v"))
     val groups = 1 to 5 // TPC-H o_orderpriority '1-URGENT'..'5-LOW'
     // pivot straight to one row per value (r17): the old
     // groupBy(g, v).count → groupBy(v) two-step exchanged the ~|rows|
@@ -8007,8 +7696,7 @@ object Queries {
     val dec = DecimalType(38, 0)
     val daily = t(s, dir, "events")
       .select(to_date(col("ts")).as("d"),
-        (col("value").cast(DecimalType(18, 2)) * lit(100))
-          .cast("long").as("c"),
+        cents(col("value")).as("c"),
         pmod(graft.functions.Hashing.md5Long(
           col("user_id").cast("string")), lit(2)).as("arm"))
       .groupBy(col("d"))
@@ -8064,6 +7752,13 @@ object Queries {
           .as("dw"))
   }
 
+  /** The ANN search result: `(query_id, neighbor_id, cos, rank)` with
+    * the cosine f6-truncated, in (query, rank) order. */
+  private def annResult(df: DataFrame): DataFrame =
+    df.select(col("query_id"), col("neighbor_id"),
+        f6(col("cos")).as("cos"), col("rank"))
+      .orderBy("query_id", "rank")
+
   /** IVF-PQ ADC search, ORACLE-PROVEN end to end: the QUERY path the
     * q184 codebooks exist for. Corpus vectors ENCODE to 4 codes
     * (nearest codeword per 16-dim subspace — map-only, the index
@@ -8079,9 +7774,7 @@ object Queries {
     val queries = emb.filter(col("vec_id") < 5)
     Similarity.pqAdcTopK(emb, queries, "vec_id", "embedding",
         dim = 64, m = 4, kCodes = 8, rounds = 1, shortlist = 50, k = 10)
-      .select(col("query_id"), col("neighbor_id"),
-        f6(col("cos")).as("cos"), col("rank"))
-      .orderBy("query_id", "rank")
+      .transform(annResult)
   }
 
   /** Incremental near-dup ingestion, ORACLE-PROVEN: the reference's
@@ -8116,9 +7809,7 @@ object Queries {
     Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
         dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16, nprobe = 4,
         shortlist = 50, k = 10)
-      .select(col("query_id"), col("neighbor_id"),
-        f6(col("cos")).as("cos"), col("rank"))
-      .orderBy("query_id", "rank")
+      .transform(annResult)
   }
 
   /** MinHash-estimator calibration: for every LSH candidate pair, the
@@ -8487,9 +8178,7 @@ object Queries {
         dim = 64, m = 4, kCodes = 8, rounds = 1, nlist = 16)
       Similarity.ivfPqScanStored(s, path, queries, "vec_id",
           "embedding", nprobe = 4, k = 10, shortlist = 50)
-        .select(col("query_id"), col("neighbor_id"),
-          f6(col("cos")).as("cos"), col("rank"))
-        .orderBy("query_id", "rank")
+        .transform(annResult)
     }
   }
 
@@ -8862,9 +8551,7 @@ object Queries {
     * story, not this operator's. */
   def q313QualitySurvivors(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val comp = Dedup.connectedComponents(docs, "doc_id",
-        Dedup.minhashCandidates(docs, "text", "doc_id"))
-      .withColumnRenamed("id", "doc_id")
+    val comp = minhashComponents(docs)
     val q = TextAnalysis.withQuality(docs, "text")
       .select(col("doc_id"), col("quality_score"))
     val w = Window.partitionBy(col("component"))
@@ -8897,9 +8584,7 @@ object Queries {
     * beyond q52's. */
   def q314TakedownExpansion(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val comp = Dedup.connectedComponents(docs, "doc_id",
-        Dedup.minhashCandidates(docs, "text", "doc_id"))
-      .withColumnRenamed("id", "doc_id")
+    val comp = minhashComponents(docs)
     val seedComps = comp.where(col("doc_id") % 50 === 3)
       .select(col("component")).distinct()
     comp.join(seedComps, Seq("component"), "left_semi")
@@ -8966,9 +8651,7 @@ object Queries {
     * the cap filter is a post-window predicate. */
   def q316ClusterCapSample(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val comp = Dedup.connectedComponents(docs, "doc_id",
-        Dedup.minhashCandidates(docs, "text", "doc_id"))
-      .withColumnRenamed("id", "doc_id")
+    val comp = minhashComponents(docs)
     val q = TextAnalysis.withQuality(docs, "text")
       .select(col("doc_id"), col("quality_score"))
     val w = Window.partitionBy(col("component"))
@@ -9051,9 +8734,7 @@ object Queries {
         "embedding")
       Similarity.ivfPqScanStored(s, path, queries, "vec_id",
           "embedding", nprobe = 4, k = 10, shortlist = 50)
-        .select(col("query_id"), col("neighbor_id"),
-          f6(col("cos")).as("cos"), col("rank"))
-        .orderBy("query_id", "rank")
+        .transform(annResult)
     }
   }
 

@@ -35,7 +35,7 @@ object Graph {
     * disables broadcasting as everywhere else in Spark) the loop keeps
     * the shuffle join, so billion-vertex graphs never collect anything.
     * A blanket hint would be the driver-OOM trap the degree-table
-    * comment in orientedTriangles documents; the gate is what makes it
+    * comment on [[degrees]] documents; the gate is what makes it
     * safe. */
   private[graft] def vertexSide(df: DataFrame, nRows: Long): DataFrame = {
     val max = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
@@ -65,6 +65,82 @@ object Graph {
     * n·q > 2^53, i.e. m > 2^53 — so cast-truncate ≡ floor exactly. */
   private def ldiv(a: Column, b: Column): Column =
     (a / b).cast("long")
+
+  /** The distinct co-occurrence edges `(a, b)`, a < b, between the
+    * `item` values that share a `basket` in `df`, stored.
+    *
+    * Each basket's sorted item set expands to its C(k,2) pairs in memory
+    * after one groupBy exchange, where a self-join on `basket` would
+    * sort-merge the full input. The expansion is two flat generator
+    * steps (posexplode, then explode of the strict suffix) rather than a
+    * nested transform/slice/flatten: generators run inside whole-stage
+    * codegen, nested lambdas are interpreted per element. The edges are
+    * stored before any consumer runs because AQE launches every
+    * consumer exchange of the first action at once, and each would
+    * re-run the expansion and its distinct. */
+  def coOccurrence(df: DataFrame, basket: String, item: String): DataFrame =
+    Checkpoint(df.groupBy(basket)
+      .agg(sort_array(collect_set(col(item))).as("ps"))
+      .select(col("ps"), posexplode(col("ps")))
+      .select(col("col").as("a"),
+        explode(slice(col("ps"), col("pos") + lit(2), size(col("ps"))))
+          .as("b"))
+      .distinct())
+
+  /** The degree table `(v, d)` of an undirected a<b edge list, persisted
+    * lazily: it feeds both sides of the orientation join in
+    * [[triangles]] and any caller's own aggregate, and a caller that
+    * never reads it pays nothing. Not broadcast-hinted: a hint would
+    * collect |V| rows to the driver at any graph size, while unhinted
+    * Spark broadcasts a small table and shuffles a large one. */
+  def degrees(e: DataFrame): DataFrame =
+    e.select(explode(array(col("a"), col("b"))).as("v"))
+      .groupBy("v").agg(count(lit(1)).as("d"))
+      .persist()
+
+  /** The triangle count `n_triangles` (one row) of an undirected a<b
+    * edge list `e` with degree table `deg` ([[degrees]]). Eager: it
+    * populates `deg` and the adjacency cache before their consumers
+    * race concurrent scans of them.
+    *
+    * Each edge points from its lower to its higher (degree, id)
+    * endpoint, so every triangle is one DAG a→b→c with a→c, and it is
+    * counted once, at its (a, b) edge, as |N⁺(a) ∩ N⁺(b)| over sorted
+    * out-neighbor arrays (the edge-iterator count). No wedge is ever
+    * materialized, and under this orientation out-lists are O(√m), so
+    * the arrays stay task-sized where a hub would make wedge
+    * enumeration quadratic. */
+  def triangles(e: DataFrame, deg: DataFrame): DataFrame = {
+    deg.count()
+    val oriented = e
+      .join(deg.select(col("v").as("a"), col("d").as("da")), Seq("a"))
+      .join(deg.select(col("v").as("b"), col("d").as("db")), Seq("b"))
+      .select(when(col("da") < col("db") ||
+          (col("da") === col("db") && col("a") < col("b")),
+        struct(col("a").as("s"), col("b").as("t")))
+        .otherwise(struct(col("b").as("s"), col("a").as("t")))
+        .as("e"))
+      .select(col("e.s").as("src"), col("e.t").as("dst"))
+    // (src, N⁺(src)) exploded over N⁺(src) is the oriented edge list
+    // with its source's out-list attached: one adjacency build serves
+    // both sides of the count
+    val adj = oriented.groupBy(col("src"))
+      .agg(sort_array(collect_list(col("dst"))).as("ns"))
+      .persist()
+    adj.count()
+    def intersectCount(a: Column, b: Column): Column =
+      org.apache.spark.sql.GraftSql.column(
+        graft.functions.SortedIntersectCount(
+          org.apache.spark.sql.GraftSql.expression(a),
+          org.apache.spark.sql.GraftSql.expression(b)))
+    // SHUFFLE_HASH: a sort-merge join would sort the array-laden edge
+    // rows only for the sum to discard the order
+    adj.select(col("ns").as("na"), explode(col("ns")).as("dst"))
+      .join(adj.select(col("src").as("dst"), col("ns").as("nb"))
+        .hint("SHUFFLE_HASH"), Seq("dst"))
+      .agg(coalesce(sum(intersectCount(col("na"), col("nb"))), lit(0L))
+        .as("n_triangles"))
+  }
 
   /** `iters` rounds of damped PageRank over a DIRECTED edge list
     * (src, dst). Dangling mass (nodes with no out-edges) redistributes

@@ -83,18 +83,69 @@ class GraphSpec extends SparkSpec {
     // raw directed pairs: both (a, b) and (b, a) may occur, so the
     // doubled list needs its dedup
     val (_, edges) = randomGraph(60, 150, 61)
-    for (iters <- Seq(3, 4); parts <- Seq(1, 8, 32)) {
-      val eDf = edges.toDF("src", "dst").repartition(parts)
-      val got = Graph.labelPropagation(eDf, iters)
-        .as[(Long, Long)].collect().toMap
-      assert(got === lpaRef(edges, iters), s"iters=$iters parts=$parts")
-    }
-    // distinct a<b pairs: the doubled list is duplicate-free
     val ab = edges.map { case (a, b) => (math.min(a, b), math.max(a, b)) }
       .distinct
-    val got = Graph.labelPropagation(ab.toDF("src", "dst").repartition(8), 3,
-      assumeDistinct = true).as[(Long, Long)].collect().toMap
-    assert(got === lpaRef(ab, 3))
+    // the second pass turns broadcasting off, so each round's label side
+    // takes vertexSide's shuffle join instead of its broadcast
+    for (threshold <- Seq(None, Some("-1"))) {
+      val conf = threshold.map("spark.sql.autoBroadcastJoinThreshold" -> _)
+      withConf(conf.toSeq: _*) {
+        val labels = Seq(1L -> 1L).toDF("id", "label")
+        val hinted = Graph.vertexSide(labels, 1).queryExecution.analyzed
+          .toString.contains("ResolvedHint")
+        assert(hinted === threshold.isEmpty, s"threshold=$threshold")
+        for (iters <- Seq(3, 4); parts <- Seq(1, 8, 32)) {
+          val eDf = edges.toDF("src", "dst").repartition(parts)
+          val got = Graph.labelPropagation(eDf, iters)
+            .as[(Long, Long)].collect().toMap
+          assert(got === lpaRef(edges, iters),
+            s"iters=$iters parts=$parts threshold=$threshold")
+        }
+        // distinct a<b pairs: the doubled list is duplicate-free
+        val got = Graph.labelPropagation(ab.toDF("src", "dst")
+          .repartition(8), 3, assumeDistinct = true)
+          .as[(Long, Long)].collect().toMap
+        assert(got === lpaRef(ab, 3), s"threshold=$threshold")
+      }
+    }
+  }
+
+  test("coOccurrence, degrees and triangles == brute-force references " +
+    "on seeded random baskets under 1/8/32-way partitioning, and on an " +
+    "empty input") {
+    val rnd = new scala.util.Random(17)
+    // (basket, item) rows, repeats included
+    val rows = Seq.fill(240)((rnd.nextInt(40).toLong, rnd.nextInt(30).toLong))
+    // the distinct a<b self-join on the basket
+    val pairs = (for {
+      (b1, x) <- rows; (b2, y) <- rows if b1 == b2 && x < y
+    } yield (x, y)).toSet
+    val degs = pairs.toSeq.flatMap { case (a, b) => Seq(a, b) }
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val vs = degs.keys.toSeq.sorted
+    val nTriangles = (for {
+      a <- vs; b <- vs if a < b && pairs((a, b))
+      c <- vs if b < c && pairs((b, c)) && pairs((a, c))
+    } yield 1L).sum
+    assert(nTriangles > 0)
+    for (parts <- Seq(1, 8, 32)) {
+      val e = Graph.coOccurrence(rows.toDF("basket", "item")
+        .repartition(parts), "basket", "item")
+      assert(e.as[(Long, Long)].collect().toSeq.sorted === pairs.toSeq.sorted,
+        s"parts=$parts")
+      val deg = Graph.degrees(e)
+      assert(deg.as[(Long, Long)].collect().toMap === degs, s"parts=$parts")
+      assert(Graph.triangles(e, deg).as[Long].collect().toSeq ===
+        Seq(nTriangles), s"parts=$parts")
+      deg.unpersist()
+    }
+    val e0 = Graph.coOccurrence(Seq.empty[(Long, Long)].toDF("basket", "item"),
+      "basket", "item")
+    assert(e0.isEmpty)
+    val deg0 = Graph.degrees(e0)
+    assert(deg0.isEmpty)
+    assert(Graph.triangles(e0, deg0).as[Long].collect().toSeq === Seq(0L))
+    deg0.unpersist()
   }
 
   /** Sequential peeling reference for the k-core. */

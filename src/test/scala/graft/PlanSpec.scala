@@ -887,6 +887,26 @@ class PlanSpec extends SparkSpec {
     assert(sites.size <= 2, sites.mkString("\n"))
   }
 
+  test("Queries.scala writes each shared frame once: no normalized " +
+    "4-line code window occurs 3 or more times") {
+    import scala.jdk.CollectionConverters._
+    val f = java.nio.file.Paths.get("src/main/scala/graft/Queries.scala")
+    assert(java.nio.file.Files.isRegularFile(f), f.toAbsolutePath)
+    // (code, line number): trimmed with whitespace runs collapsed, blank
+    // and comment lines dropped, trailing // comments stripped
+    val code = java.nio.file.Files.readAllLines(f).asScala.toSeq.zipWithIndex
+      .map { case (l, i) => (l.trim.replaceAll("\\s+", " "), i + 1) }
+      .filterNot { case (l, _) =>
+        l.isEmpty || Seq("//", "*", "/*").exists(l.startsWith) }
+      .map { case (l, i) => (l.replaceAll("\\s+//.*$", ""), i) }
+    assert(code.size > 1000, code.size)
+    val repeated = code.sliding(4).toSeq.groupBy(_.map(_._1))
+      .filter(_._2.size >= 3).toSeq.sortBy(_._2.head.head._2)
+    assert(repeated.isEmpty, repeated.map { case (w, at) =>
+      s"lines ${at.map(_.head._2).mkString(", ")}:\n  " +
+        w.mkString("\n  ") }.mkString("\n"))
+  }
+
   test("an ingestion step is one observed write: operators/Ingestion.scala " +
     "holds no persist(, cache() or .isEmpty, so no step caches its " +
     "increment or probes it for emptiness") {
